@@ -53,10 +53,8 @@ object Bench {
       .groupBy("n_regionkey").count()
       .write.mode("overwrite").parquet(s"$sinkRoot/_warmup")
     // dev-only: SPARK_GRAFT_ONLY=q50,q51 times just those queries while
-    // iterating on one family (unset → all, which is what the driver runs)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+    // iterating on one family
+    val ordered = SparkEntry.selectedQueries()
     // failures are RECORDED, never silent: a query that throws still
     // contributes a timing sample (the cost was paid), but its name
     // lands in the JSON's "errors" list — r17's q166 fixture threw at

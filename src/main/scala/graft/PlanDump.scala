@@ -36,16 +36,8 @@ object PlanDump {
     // same untimed warmup as Bench
     spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
-    // ONLY entries match a full name, or a prefix up to the "_" after
-    // the qNN tag (so ONLY=q5 no longer silently selects q50/q51/...);
-    // the selected list is printed so a typo in the env var is visible
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected(name: String): Boolean = only.forall(_.exists(p =>
-      name == p || (name.startsWith(p) && name.charAt(p.length) == '_')))
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected(name) }
-    println(s"PlanDump: ${ordered.size} queries selected" +
-      (if (only.isDefined) s" by ONLY=${only.get.mkString(",")}: ${ordered.map(_._1).mkString(", ")}" else ""))
+    val ordered = SparkEntry.selectedQueries()
+    println(s"PlanDump: ${ordered.size} queries selected")
     val planDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(planDir)
     val out = new StringBuilder

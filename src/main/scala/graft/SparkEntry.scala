@@ -12,4 +12,21 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     graft.queries.Catalog.oracleSql
+
+  /** The queries a dev-time `SPARK_GRAFT_ONLY=q51,q54` list selects,
+    * sorted by name (unset → all). An
+    * entry names a query in full or by its number: `q5` selects
+    * `q5_*`, never `q50_*`. A set list and its selection are printed
+    * to stderr, so a typo selects visibly nothing. */
+  def selectedQueries(): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val names = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val picked = queries.toSeq.sortBy(_._1).filter { case (name, _) =>
+      names.forall(_.exists(p =>
+        name == p || (name.startsWith(p) && name.charAt(p.length) == '_')))
+    }
+    names.foreach(ns => System.err.println(s"SPARK_GRAFT_ONLY=${ns.mkString(",")} " +
+      s"selects ${picked.size} queries: ${picked.map(_._1).mkString(", ")}"))
+    picked
+  }
 }

@@ -30,11 +30,7 @@ object StageProf {
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected(name: String): Boolean = only.forall(_.exists(p =>
-      name == p || (name.startsWith(p) && name.charAt(p.length) == '_')))
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected(name) }
+    val ordered = SparkEntry.selectedQueries()
 
     case class St(var name: String, var wall: Long = 0, var task: Long = 0,
       var gc: Long = 0, var sr: Long = 0, var sw: Long = 0, var in: Long = 0,

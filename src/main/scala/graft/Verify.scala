@@ -18,18 +18,15 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev-only: SPARK_GRAFT_ONLY=q51,q54 restricts the dump to queries
-    // whose name starts with one of the prefixes (unset → all, which is
-    // what the driver runs)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected(name: String) = only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    // dev-only: SPARK_GRAFT_ONLY=q51,q54 restricts the dump to those
+    // queries
+    val picked = SparkEntry.selectedQueries()
+    picked.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -43,7 +40,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    val names = picked.map(_._1).toSet
+    val json = SparkEntry.oracleSql
+      .filter(kv => sys.env.get("SPARK_GRAFT_ONLY").isEmpty || names(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -54,10 +54,6 @@ object Readers {
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** S2 discovery mode: header + full type inference, like pandas. */
-  def csvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
   /** S3: array-of-records JSON (pandas' default orientation). */
   def jsonRecords(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("multiLine", "true").schema(schema).json(path)

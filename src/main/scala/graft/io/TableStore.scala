@@ -12,6 +12,14 @@ import org.apache.spark.sql.types.StructType
   * rejected. */
 final class ConcurrentCommitException(msg: String) extends java.io.IOException(msg)
 
+/** Thrown when a committed manifest holds a line its reader cannot
+  * parse (a truncated or garbled write): names the table, the
+  * manifest version and the offending line. */
+final class CorruptManifestException(val table: String, val version: Int, val line: String,
+    cause: Throwable)
+    extends java.io.IOException(
+      s"graft table '$table' manifest v$version has an unparseable line: '$line'", cause)
+
 /** Warehouse abstraction over the reference's three MySQL tables
   * (/root/reference/lambda.py:171-190). The reference talks JDBC; the
   * test environment has no database, so the store is a trait with a
@@ -461,8 +469,65 @@ class SnapshotBucketedStore(
     }
   }
 
-  private def writeDir(df: DataFrame, dest: String): Unit =
-    sortedForWrite(df).write.mode(SaveMode.Overwrite).format(fmt).save(dest)
+  /** Write one generation dir; returns its observed metadata. */
+  private def writeDir(df: DataFrame, dest: String): DirMeta =
+    observedWrite(sortedForWrite(df), grouped = false)(
+      _.write.mode(SaveMode.Overwrite).format(fmt).save(dest))(0L)
+
+  /** Stage a bucketed generation in ONE write pass and move each
+    * staged bucket dir to its immutable home `rel(b)`: `laid` carries
+    * [[BucketCol]] and is already laid out (and sorted) for the write,
+    * and `ids` are the buckets it may hold, whose metadata the same
+    * pass observes. A bucket the write left empty has no staged dir
+    * and is absent from the result — the stage's directory existence
+    * is the truth a caller drops it from the manifest on. */
+  private def writeBuckets(name: String, v: Int, laid: DataFrame, ids: Seq[Long],
+      rel: Long => String): Map[Long, (String, DirMeta)] = {
+    if (ids.isEmpty) return Map.empty
+    val stage = new Path(tableDir(name), s"stage-$v")
+    val f = fs(stage)
+    val meta = observedWrite(laid, grouped = true)(_.write.mode(SaveMode.Overwrite)
+      .partitionBy(BucketCol).format(fmt).save(stage.toString))
+    f.mkdirs(new Path(tableDir(name), "data"))
+    val moved = ids.flatMap { b =>
+      val src = new Path(stage, s"$BucketCol=$b")
+      if (f.exists(src)) {
+        val dst = new Path(tableDir(name), rel(b))
+        // a dir at THIS version can only be an orphan of a crashed
+        // attempt (no committed manifest references version v yet) —
+        // clear it so the rename can't silently fail
+        if (f.exists(dst)) f.delete(dst, true)
+        if (!f.rename(src, dst))
+          throw new java.io.IOException(s"bucket move failed: $src -> $dst")
+        Some(b -> (rel(b), meta(b)))
+      } else None
+    }.toMap
+    f.delete(stage, true)
+    moved
+  }
+
+  /** The bucket-aligned layout of a keep-last merge: a write-group id
+    * (the touched bucket's index, round-robin over min(touched,
+    * defaultParallelism) tasks) to shuffle on ONCE, so each touched
+    * bucket lands in one task and becomes one file. Returns the task
+    * count and the group-id column, a function of the bucket. */
+  private def bucketLayout(fan: Int, touched: Seq[Long]): (Int, org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions.{col, element_at, typedLit}
+    val parts = math.max(1, math.min(touched.size, spark.sparkContext.defaultParallelism))
+    val slot = Array.fill(fan)(0)
+    touched.zipWithIndex.foreach { case (b, i) => slot(b.toInt) = i % parts }
+    (parts, element_at(typedLit(slot.toSeq), col(BucketCol).cast("int") + 1))
+  }
+
+  /** `df` bucketed for a stage write with no keep-last step ([[delete]],
+    * [[rebuild]]): Spark's rebalance on the bucket, so AQE sizes the
+    * write tasks from the actual shuffle bytes — a bucket within
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` is one task and
+    * one file, a larger one splits into several. */
+  private def rebalanced(df: DataFrame, key: String, fan: Int): DataFrame =
+    sortedForWrite(withBucketN(df, key, fan)
+      .hint("rebalance", org.apache.spark.sql.functions.col(BucketCol)))
+
   private val BucketCol = "graft_bucket"
   private def tableDir(name: String) = new Path(s"$root/$name")
   private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -494,6 +559,15 @@ class SnapshotBucketedStore(
       org.apache.spark.sql.functions.pmod(
         org.apache.spark.sql.functions.xxhash64(bucketOf),
         org.apache.spark.sql.functions.lit(fan.toLong)))
+  }
+
+  /** The sorted buckets `df`'s rows hash into (≤ fan values,
+    * driver-safe): each task reports its own distinct set, so the
+    * probe is one job with no shuffle. */
+  private def touchedBuckets(df: DataFrame, key: String, fan: Int): Seq[Long] = {
+    import org.apache.spark.sql.Encoders.scalaLong
+    withBucketN(df, key, fan).select(BucketCol).as(scalaLong)
+      .mapPartitions(_.toSet.iterator)(scalaLong).collect().distinct.sorted.toSeq
   }
 
   /** The bucket fan-out keyed writes against this table MUST use: the
@@ -604,78 +678,85 @@ class SnapshotBucketedStore(
     val in = f.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     val entries = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    val buckets = entries.collect { case s if s.startsWith("bucket:") =>
+    // a truncated or garbled line fails its own parse — raise it by
+    // table, version and line instead of a bare MatchError
+    def parsed[T](line: String)(f: => T): T =
+      try f catch {
+        case e @ (_: MatchError | _: NumberFormatException) =>
+          throw new CorruptManifestException(name, v, line, e)
+      }
+    val buckets = entries.collect { case s if s.startsWith("bucket:") => parsed(s) {
       val Array(b, d) = s.stripPrefix("bucket:").split("=", 2)
       b.toLong -> d
-    }.toMap
+    }}.toMap
     val logs = entries.collect { case s if s.startsWith("log:") => s.stripPrefix("log:") }
     val lastBatch = entries.collectFirst { case s if s.startsWith("batch:") =>
-      s.stripPrefix("batch:").toLong }
-    val stats = entries.collect { case s if s.startsWith("stats:") =>
+      parsed(s)(s.stripPrefix("batch:").toLong) }
+    val stats = entries.collect { case s if s.startsWith("stats:") => parsed(s) {
       val Array(d, cs) = s.stripPrefix("stats:").split("=", 2)
       d -> cs.split(",").toSeq.map { t =>
         val Array(c, mn, mx) = t.split(":", 3); (c, mn, mx)
       }
-    }.toMap
+    }}.toMap
     // keys lines: `keys:<dir>=<col>:<base64>,...` — base64's standard
     // alphabet contains no ':' or ',', column names are [A-Za-z0-9_],
     // so the same delimiter discipline as stats lines holds
-    val keyLines = entries.collect { case s if s.startsWith("keys:") =>
+    val keyLines = entries.collect { case s if s.startsWith("keys:") => parsed(s) {
       val Array(d, cs) = s.stripPrefix("keys:").split("=", 2)
       d -> cs.split(",").toSeq.map { t =>
         val Array(c, b) = t.split(":", 2); (c, b)
       }
-    }.toMap
+    }}.toMap
     // stats format version: absent (pre-versioning manifest) → 1,
     // whose float-column stats may be float-shortest strings that
     // underestimate the double-promoted value — [[survives]] widens
     // v1 bounds by a relative epsilon so a double probe inside the
     // float-string gap can never wrongly skip a dir
     val statsVer = entries.collectFirst { case s if s.startsWith("statsver:") =>
-      s.stripPrefix("statsver:").toInt }.getOrElse(1)
-    val rowLines = entries.collect { case s if s.startsWith("rows:") =>
+      parsed(s)(s.stripPrefix("statsver:").toInt) }.getOrElse(1)
+    val rowLines = entries.collect { case s if s.startsWith("rows:") => parsed(s) {
       val Array(d, n) = s.stripPrefix("rows:").split("=", 2)
       d -> n.toLong
-    }.toMap
+    }}.toMap
     // per-dir data-file byte totals (X258) — absent on legacy
     // manifests, whose scan sizing degrades to a per-dir listing
     // until any commit (or CALL system.analyze) backfills them
-    val byteLines = entries.collect { case s if s.startsWith("bytes:") =>
+    val byteLines = entries.collect { case s if s.startsWith("bytes:") => parsed(s) {
       val Array(d, n) = s.stripPrefix("bytes:").split("=", 2)
       d -> n.toLong
-    }.toMap
-    val ndvLines = entries.collect { case s if s.startsWith("ndv:") =>
+    }}.toMap
+    val ndvLines = entries.collect { case s if s.startsWith("ndv:") => parsed(s) {
       val Array(d, cs) = s.stripPrefix("ndv:").split("=", 2)
       d -> cs.split(",").toSeq.map { t =>
         val Array(c, b) = t.split(":", 2); (c, b)
       }
-    }.toMap
-    val qskLines = entries.collect { case s if s.startsWith("qsk:") =>
+    }}.toMap
+    val qskLines = entries.collect { case s if s.startsWith("qsk:") => parsed(s) {
       val Array(d, cs) = s.stripPrefix("qsk:").split("=", 2)
       d -> cs.split(",").toSeq.map { t =>
         val Array(c, b) = t.split(":", 2); (c, b)
       }
-    }.toMap
+    }}.toMap
     // tomb lines: `tomb:<dir>=<k1>:<t1>,<k2>:<t2>` — each sidecar
     // carries its own key column ([A-Za-z0-9_]+); dir rels carry no
     // ':' or ',', the same delimiter discipline as stats/keys lines
-    val tombLines = entries.collect { case s if s.startsWith("tomb:") =>
+    val tombLines = entries.collect { case s if s.startsWith("tomb:") => parsed(s) {
       val Array(d, rest) = s.stripPrefix("tomb:").split("=", 2)
       d -> rest.split(",").toSeq.filter(_.nonEmpty).map { t =>
         val Array(k, rel) = t.split(":", 2); (k, rel)
       }
-    }.toMap
+    }}.toMap
     // commit wall-clock stamp (epoch millis) — absent on legacy
     // manifests, which time travel then cannot resolve BY TIME (only
     // by version); never guessed
     val tsLine = entries.collectFirst { case s if s.startsWith("ts:") =>
-      s.stripPrefix("ts:").toLong }
+      parsed(s)(s.stripPrefix("ts:").toLong) }
     // recorded bucket FAN-OUT: the modulus rows were hashed into dirs
     // with — keyed writes adopt it over the store's configured
     // numBuckets, so a store opened with a different default can never
     // silently mis-target buckets (absent on legacy manifests)
     val fanLine = entries.collectFirst { case s if s.startsWith("fanout:") =>
-      s.stripPrefix("fanout:").toInt }
+      parsed(s)(s.stripPrefix("fanout:").toInt) }
     // dropped-column marker (X259) — ALWAYS explicit on a parsed
     // manifest (absent line ≡ nothing dropped), so a restore of a
     // pre-drop version resurrects the column rather than carrying a
@@ -914,16 +995,13 @@ class SnapshotBucketedStore(
   /** Everything the manifest records about ONE generation dir:
     * per-column min/max range stats plus per-column key membership
     * Blooms (base64 of the serialized filter over xxhash64(column)).
-    * Both come out of the SAME aggregate job over the dir. */
+    * All of it comes out of ONE aggregate pass ([[MetaAggs]]). */
   private final case class DirMeta(
       stats: Seq[(String, String, String)],
       keys: Seq[(String, String)],
-      rows: Option[Long] = None,
-      ndv: Seq[(String, String)] = Nil,
-      qsk: Seq[(String, String)] = Nil) {
-    def isEmpty: Boolean =
-      stats.isEmpty && keys.isEmpty && rows.isEmpty && ndv.isEmpty && qsk.isEmpty
-  }
+      rows: Long,
+      ndv: Seq[(String, String)],
+      qsk: Seq[(String, String)])
 
   /** Key columns eligible for a membership Bloom: equality probing
     * compares xxhash64 of the column's NATIVE value against xxhash64
@@ -933,76 +1011,104 @@ class SnapshotBucketedStore(
   private def keyColsOf(df: DataFrame): Seq[String] =
     keyColumns.filter(df.columns.contains)
 
-  /** One Bloom-building aggregate column — the engine's own
-    * codegen'd [[org.apache.spark.sql.catalyst.expressions.aggregate
-    * .BloomFilterAggregate]] over xxhash64(col), the same machinery
-    * behind [[graft.ops.Bloom]] and AQE runtime filters. Sized by
-    * `keyExpectedItems` (fixed bits — an over-full dir degrades to
-    * higher false-positive rate, i.e. fewer skips, never wrong). */
-  private def bloomAgg(c: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.GraftBridge.{toColumn, toExpr}
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    toColumn(new org.apache.spark.sql.catalyst.expressions.aggregate
-      .BloomFilterAggregate(toExpr(xxhash64(col(c))), keyExpectedItems)
-      .toAggregateExpression()).as(s"graft_kb_$c")
-  }
-
   private def encodeBloom(bytes: Array[Byte]): String =
     java.util.Base64.getEncoder.encodeToString(bytes)
 
-  /** Min/max of the declared stats columns plus key Blooms over one
-    * frame, ONE agg job, map-side combinable, reading ONLY the
-    * declared columns (columnar pruning makes this footer-cheap).
-    * All-null stats columns record nothing (such a dir is
-    * conservatively KEPT — absence of stats never lies). */
-  private def metaOf(df: DataFrame): DirMeta = {
-    import org.apache.spark.sql.functions.{count, lit, min, max}
-    val cols = statsColumns.filter(c =>
+  /** THE metadata aggregate of a generation — row count, min/max of
+    * the declared stats columns, key Blooms, HLL NDV and KLL quantile
+    * sketches — built once for both ways a commit learns it: riding
+    * the write pass as an observation ([[observedWrite]]) or, for
+    * [[analyzeTable]]'s backfill of older dirs, one aggregate over a
+    * read ([[metaOf]]). Rows and min/max are one
+    * [[graft.expr.RowStatsAgg]]; each sketch is its own aggregate.
+    * `grouped`, every aggregate is a [[graft.expr.PerGroupAgg]] over
+    * [[BucketCol]], so one pass yields each written bucket's entry and
+    * a task allocates and ships buffers only for the buckets it
+    * holds; ungrouped, the single entry is keyed 0. All-null stats
+    * columns record nothing (such a dir is conservatively KEPT —
+    * absence of stats never lies). Rows are ALWAYS counted (X214
+    * metadata-only aggregates). */
+  private final class MetaAggs(df: DataFrame, grouped: Boolean) {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.GraftBridge.{toColumn, toExpr}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{
+      BloomFilterAggregate, HllSketchAgg, TypedImperativeAggregate}
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    private val cols = statsColumns.filter(c =>
       df.columns.contains(c) && statType(df.schema(c).dataType))
-    val kCols = keyColsOf(df)
-    val nCols = ndvColumns.filter(df.columns.contains)
-    val qCols = quantileColsOf(df)
-    // rows are ALWAYS counted (X214 metadata-only aggregates): for a
-    // store with no stats/key columns this is one count-only job —
-    // parquet answers it from footer metadata, no column scan
-    val aggs = cols.flatMap(c => Seq(
-      min(statInput(df, c)).cast("string").as(s"graft_mn_$c"),
-      max(statInput(df, c)).cast("string").as(s"graft_mx_$c"))) ++
-      kCols.map(bloomAgg) ++
-      nCols.map(c => org.apache.spark.sql.functions
-        .hll_sketch_agg(ndvInput(df, c), NdvLgK)
-        .as(s"graft_nv_$c")) ++
-      qCols.map(c => graft.expr.KllSketchAgg.kllSketch(
-        org.apache.spark.sql.functions.col(c).cast("double"))
-        .as(s"graft_qs_$c")) :+ count(lit(1)).as("graft_cnt_")
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val stats = cols.zipWithIndex.flatMap { case (c, i) =>
-      val mn = row.getString(2 * i); val mx = row.getString(2 * i + 1)
-      if (mn == null || mx == null ||
-        !parsesAsDecimal(mn) || !parsesAsDecimal(mx)) None
-      else Some((c, mn, mx))
+    private val kCols = keyColsOf(df)
+    private val nCols = ndvColumns.filter(df.columns.contains)
+    private val qCols = quantileColsOf(df)
+    // (output name, aggregate). Key Blooms are the engine's own
+    // BloomFilterAggregate over xxhash64(col) — the machinery behind
+    // graft.ops.Bloom and AQE runtime filters — sized by
+    // `keyExpectedItems` (fixed bits: an over-full dir degrades to a
+    // higher false-positive rate, i.e. fewer skips, never wrong)
+    private val aggs: Seq[(String, TypedImperativeAggregate[_])] =
+      ("graft_rs" -> graft.expr.RowStatsAgg(cols.map(c => toExpr(statInput(df, c))))) +:
+        (kCols.map(c => s"graft_kb_$c" ->
+          new BloomFilterAggregate(toExpr(xxhash64(col(c))), keyExpectedItems)) ++
+        nCols.map(c => s"graft_nv_$c" -> new HllSketchAgg(toExpr(ndvInput(df, c)), NdvLgK)) ++
+        qCols.map(c => s"graft_qs_$c" -> graft.expr.KllSketchAgg(
+          toExpr(col(c).cast("double")), graft.expr.KllSketchAgg.DefaultK)))
+
+    val columns: Seq[Column] = aggs.map { case (name, fn) =>
+      (if (grouped) graft.expr.PerGroupAgg.perGroup(col(BucketCol), fn)
+       else toColumn(fn.toAggregateExpression())).as(name)
     }
-    val base = 2 * cols.size
-    // a ZERO-ROW generation (a streaming epoch whose batch deduped to
-    // nothing still commits, to advance the batch mark) records an
-    // EMPTY Bloom per key column — it provably contains no key, so
-    // membership probes always skip it; leaving it unBloomed would
-    // conservatively keep it forever
-    val rowCount = row.getLong(base + kCols.size + nCols.size + qCols.size)
-    val keys =
-      if (rowCount == 0L && kCols.nonEmpty) kCols.map(_ -> encodeBloom(emptyBloomBytes))
-      else kCols.zipWithIndex.flatMap { case (c, i) =>
-        Option(row.getAs[Array[Byte]](base + i)).map(b => (c, encodeBloom(b)))
+
+    def decode(row: Row): Map[Long, DirMeta] = {
+      def per[T](name: String): Map[Long, T] =
+        if (grouped) row.getMap[Long, T](row.fieldIndex(name)).toMap
+        else Option(row.getAs[T](name)).map(0L -> _).toMap
+      val images = aggs.tail.map { case (name, _) => name -> per[Array[Byte]](name) }.toMap
+      per[Row]("graft_rs").map { case (g, rs) =>
+        def sketches(tag: String, cs: Seq[String]) = cs.flatMap(c =>
+          images(s"graft_${tag}_$c").get(g).flatMap(Option(_)).map(b => (c, encodeBloom(b))))
+        val rows = rs.getLong(0)
+        val (mns, mxs) = (rs.getSeq[String](1), rs.getSeq[String](2))
+        val stats = cols.indices.flatMap { i =>
+          val (mn, mx) = (mns(i), mxs(i))
+          if (mn == null || mx == null || !parsesAsDecimal(mn) || !parsesAsDecimal(mx)) None
+          else Some((cols(i), mn, mx))
+        }
+        // a ZERO-ROW generation (a streaming epoch whose batch deduped
+        // to nothing still commits, to advance the batch mark) records
+        // an EMPTY Bloom per key column — it provably contains no key,
+        // so membership probes always skip it; leaving it unBloomed
+        // would conservatively keep it forever
+        val keys =
+          if (rows == 0L) kCols.map(_ -> encodeBloom(emptyBloomBytes))
+          else sketches("kb", kCols)
+        g -> DirMeta(stats, keys, rows, sketches("nv", nCols), sketches("qs", qCols))
       }
-    val ndv = nCols.zipWithIndex.flatMap { case (c, i) =>
-      Option(row.getAs[Array[Byte]](base + kCols.size + i))
-        .map(b => (c, encodeBloom(b)))
     }
-    val qsk = qCols.zipWithIndex.flatMap { case (c, i) =>
-      Option(row.getAs[Array[Byte]](base + kCols.size + nCols.size + i))
-        .map(b => (c, encodeBloom(b)))
-    }
-    DirMeta(stats, keys, Some(rowCount), ndv, qsk)
+  }
+
+  /** Metadata of an already-written generation, recomputed from a
+    * read — only [[analyzeTable]] needs this (it backfills dirs that
+    * earlier shapes wrote); every commit observes its own write. */
+  private def metaOf(df: DataFrame): DirMeta = {
+    val aggs = new MetaAggs(df, grouped = false)
+    aggs.decode(df.agg(aggs.columns.head, aggs.columns.tail: _*).head())(0L)
+  }
+
+  /** Write one generation and learn its metadata on the SAME pass:
+    * the [[MetaAggs]] ride an [[org.apache.spark.sql.Observation]] on
+    * `df`, the exact frame handed to the writer (already laid out and
+    * sorted) — the result stage, where each partition's update is
+    * applied exactly once — so the recorded rows/stats/Blooms/sketches
+    * describe precisely the committed rows, and no job reads the
+    * generation back. The metrics arrive through the listener bus once
+    * the write returns; a bounded wait turns a lost delivery into a
+    * failed (uncommitted) write instead of a hang. */
+  private def observedWrite(df: DataFrame, grouped: Boolean)(
+      write: DataFrame => Unit): Map[Long, DirMeta] = {
+    val aggs = new MetaAggs(df, grouped)
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, aggs.columns.head, aggs.columns.tail: _*))
+    aggs.decode(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(5, "min")))
   }
 
   /** The NDV sketch input for a column: `hll_sketch_agg` accepts
@@ -1029,21 +1135,15 @@ class SnapshotBucketedStore(
     bos.toByteArray
   }
 
-  /** Meta for one freshly-written generation dir, computed by
-    * reading it back (never by re-running the caller's plan). */
-  private def metaForDir(name: String, rel: String): Map[String, DirMeta] = {
-    val m = metaOf(readDirs(Seq(new Path(tableDir(name), rel).toString)))
-    if (m.isEmpty) Map.empty else Map(rel -> m)
-  }
-
-  private def statsPart(m: Map[String, DirMeta]): Map[String, Seq[(String, String, String)]] =
-    m.collect { case (d, dm) if dm.stats.nonEmpty => d -> dm.stats }
-  private def rowsPart(m: Map[String, DirMeta]): Map[String, Long] =
-    m.collect { case (d, dm) if dm.rows.isDefined => d -> dm.rows.get }
-  private def ndvPart(m: Map[String, DirMeta]): Map[String, Seq[(String, String)]] =
-    m.collect { case (d, dm) if dm.ndv.nonEmpty => d -> dm.ndv }
-  private def qskPart(m: Map[String, DirMeta]): Map[String, Seq[(String, String)]] =
-    m.collect { case (d, dm) if dm.qsk.nonEmpty => d -> dm.qsk }
+  /** A manifest with per-dir metadata merged over its own (entries of
+    * superseded dirs drop at commit via the live-filtered maps). */
+  private def withMeta(m: Manifest, dm: Map[String, DirMeta]): Manifest =
+    m.copy(
+      stats = m.stats ++ dm.collect { case (d, x) if x.stats.nonEmpty => d -> x.stats },
+      keys = m.keys ++ dm.collect { case (d, x) if x.keys.nonEmpty => d -> x.keys },
+      rows = m.rows ++ dm.map { case (d, x) => d -> x.rows },
+      ndv = m.ndv ++ dm.collect { case (d, x) if x.ndv.nonEmpty => d -> x.ndv },
+      qsk = m.qsk ++ dm.collect { case (d, x) if x.qsk.nonEmpty => d -> x.qsk })
 
   /** Quantile-sketch eligibility: declared, present, and NUMERIC —
     * the sketch is over the double promotion, a visible cast
@@ -1051,87 +1151,6 @@ class SnapshotBucketedStore(
   private def quantileColsOf(df: DataFrame): Seq[String] =
     quantileColumns.filter(c => df.columns.contains(c) &&
       df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-  private def keysPart(m: Map[String, DirMeta]): Map[String, Seq[(String, String)]] =
-    m.collect { case (d, dm) if dm.keys.nonEmpty => d -> dm.keys }
-
-  /** Per-bucket meta of a staged upsert/delete write, ONE job: the
-    * staged dir is partitioned by the bucket column, so a grouped
-    * min/max + Bloom aggregate yields every bucket's entry at once
-    * (≤ numBuckets result rows — driver-safe). */
-  private def metaForStage(stagePath: String): Map[Long, DirMeta] = {
-    import org.apache.spark.sql.functions.{col, count, lit, min, max}
-    // (no early-out on empty stats/key columns: per-bucket row counts
-    // are recorded for every store — X214 metadata-only aggregates)
-    // An empty staged write (empty-delta upsertWithBatch that only
-    // advances the batch mark, or a delete that emptied every touched
-    // bucket) has no data files — schema inference would throw and
-    // fail the whole commit. Checked EXPLICITLY by listing the stage
-    // for data files: a blanket AnalysisException catch here would
-    // also swallow genuine read failures (corrupt footer, bad format
-    // options) and silently commit a generation without stats or
-    // Blooms. No files → no stats to record; any other failure
-    // propagates and fails the commit loudly, as it should.
-    val stageP = new Path(stagePath)
-    val f = fs(stageP)
-    val hasDataFiles = f.exists(stageP) && {
-      val it = f.listFiles(stageP, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith(".") && !n.startsWith("_")) found = true
-      }
-      found
-    }
-    if (!hasDataFiles) return Map.empty
-    val df = spark.read.option("mergeSchema", "true").format(fmt).load(stagePath)
-    val cols = statsColumns.filter(c =>
-      df.columns.contains(c) && statType(df.schema(c).dataType))
-    val kCols = keyColsOf(df)
-    val nCols = ndvColumns.filter(df.columns.contains)
-    val qCols = quantileColsOf(df)
-    // rows counted per bucket unconditionally (X214) — a staged
-    // bucket dir always holds >= 1 row, and the count rides the same
-    // grouped job as the stats/Blooms (footer-cheap when it is alone)
-    val aggs = cols.flatMap(c => Seq(
-      min(statInput(df, c)).cast("string").as(s"graft_mn_$c"),
-      max(statInput(df, c)).cast("string").as(s"graft_mx_$c"))) ++
-      kCols.map(bloomAgg) ++
-      nCols.map(c => org.apache.spark.sql.functions
-        .hll_sketch_agg(ndvInput(df, c), NdvLgK).as(s"graft_nv_$c")) ++
-      qCols.map(c => graft.expr.KllSketchAgg.kllSketch(
-        col(c).cast("double")).as(s"graft_qs_$c")) :+
-      count(lit(1)).as("graft_cnt_")
-    // the partition-dir read infers graft_bucket as INT — normalize
-    df.groupBy(col(BucketCol).cast("long").as(BucketCol))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { row =>
-        val b = row.getLong(0)
-        val stats = cols.zipWithIndex.flatMap { case (c, i) =>
-          val mn = row.getString(2 * i + 1); val mx = row.getString(2 * i + 2)
-          if (mn == null || mx == null ||
-            !parsesAsDecimal(mn) || !parsesAsDecimal(mx)) None
-          else Some((c, mn, mx))
-        }
-        val base = 1 + 2 * cols.size
-        val keys = kCols.zipWithIndex.flatMap { case (c, i) =>
-          Option(row.getAs[Array[Byte]](base + i)).map(x => (c, encodeBloom(x)))
-        }
-        val ndv = nCols.zipWithIndex.flatMap { case (c, i) =>
-          Option(row.getAs[Array[Byte]](base + kCols.size + i))
-            .map(x => (c, encodeBloom(x)))
-        }
-        val qsk = qCols.zipWithIndex.flatMap { case (c, i) =>
-          Option(row.getAs[Array[Byte]](base + kCols.size + nCols.size + i))
-            .map(x => (c, encodeBloom(x)))
-        }
-        b -> DirMeta(stats, keys,
-          Some(row.getLong(base + kCols.size + nCols.size + qCols.size)), ndv, qsk)
-      }
-      .filter(!_._2.isEmpty)
-      .toMap
-  }
 
   /** Does a dir's recorded range intersect [lower, upper]? Missing
     * stats (no line, or the column not recorded) keep the dir —
@@ -2361,17 +2380,10 @@ class SnapshotBucketedStore(
       val pred = col(column) >= lit(lower) && col(column) <= lit(upper)
       var bucketMap = m.buckets
       var logList = m.logs
-      var statsMap = m.stats
-      var keysMap = m.keys
-      var rowsMap = m.rows
-      var ndvMap = m.ndv
-      var qskMap = m.qsk
-      dropped.foreach { case (ob, d) =>
-        ob match {
-          case Some(b) => bucketMap -= b
-          case None => logList = logList.filterNot(_ == d)
-        }
-        statsMap -= d; keysMap -= d; rowsMap -= d; ndvMap -= d; qskMap -= d
+      val written = scala.collection.mutable.ArrayBuffer[(String, DirMeta)]()
+      dropped.foreach {
+        case (Some(b), _) => bucketMap -= b
+        case (None, d) => logList = logList.filterNot(_ == d)
       }
       rewrites.zipWithIndex.foreach { case ((ob, d), i) =>
         // tombstone-aware read: the rewrite applies outstanding
@@ -2382,23 +2394,15 @@ class SnapshotBucketedStore(
           case Some(b) => s"data/b$b-g$v"
           case None => s"data/del$i-g$v"
         }
-        writeDir(kept, new Path(tableDir(name), rel).toString)
-        val dm = metaForDir(name, rel)
+        written += rel -> writeDir(kept, new Path(tableDir(name), rel).toString)
         ob match {
           case Some(b) => bucketMap += b -> rel
           case None => logList = logList.map(x => if (x == d) rel else x)
         }
-        statsMap -= d; keysMap -= d; rowsMap -= d; ndvMap -= d; qskMap -= d
-        statsMap = statsMap ++ statsPart(dm)
-        keysMap = keysMap ++ keysPart(dm)
-        rowsMap = rowsMap ++ rowsPart(dm)
-        ndvMap = ndvMap ++ ndvPart(dm)
-        qskMap = qskMap ++ qskPart(dm)
       }
-      commit(name, Manifest(v, bucketMap, logList, m.lastBatch,
-        statsMap, keysMap, carriedStatsVersion(Some(m)), rowsMap, ndvMap,
-        qskMap, m.tombs, // liveTombs drops entries of rewritten/dropped dirs
-        fanout = m.fanout))
+      // entries of rewritten/dropped dirs drop via the live filters
+      commit(name, withMeta(m.copy(version = v, buckets = bucketMap, logs = logList,
+        statsVersion = carriedStatsVersion(Some(m))), written.toMap))
       (dropped.size, rewrites.size, disjoint.size)
     }
   }
@@ -2520,12 +2524,10 @@ class SnapshotBucketedStore(
         s"${prev.flatMap(_.lastBatch)} → $batchId")
     val v = prev.map(_.version + 1).getOrElse(0)
     val rel = s"data/log-$v"
-    writeDir(df, new Path(tableDir(name), rel).toString)
-    val dm = metaForDir(name, rel)
-    commit(name, Manifest(v, Map.empty, Seq(rel), Some(batchId),
-      statsPart(dm), keysPart(dm), rows = rowsPart(dm), ndv = ndvPart(dm),
-      qsk = qskPart(dm), fanout = prev.flatMap(_.fanout),
-      dropped = Some(Nil))) // full rewrite = the new schema truth
+    val dm = writeDir(df, new Path(tableDir(name), rel).toString)
+    commit(name, withMeta(Manifest(v, Map.empty, Seq(rel), Some(batchId),
+      fanout = prev.flatMap(_.fanout),
+      dropped = Some(Nil)), Map(rel -> dm))) // full rewrite = the new schema truth
   }
 
   /** K2 append as a committed log generation: new dir + new manifest.
@@ -2552,18 +2554,11 @@ class SnapshotBucketedStore(
     refuseDroppedWrite(name, prev, df)
     val v = prev.map(_.version + 1).getOrElse(0)
     val rel = s"data/log-$v"
-    writeDir(df, new Path(tableDir(name), rel).toString)
-    val dm = metaForDir(name, rel)
-    commit(name, Manifest(v, prev.map(_.buckets).getOrElse(Map.empty),
-      prev.map(_.logs).getOrElse(Nil) :+ rel,
-      batchId.orElse(prev.flatMap(_.lastBatch)),
-      fanout = prev.flatMap(_.fanout),
-      stats = prev.map(_.stats).getOrElse(Map.empty) ++ statsPart(dm),
-      keys = prev.map(_.keys).getOrElse(Map.empty) ++ keysPart(dm),
-      statsVersion = carriedStatsVersion(prev),
-      rows = prev.map(_.rows).getOrElse(Map.empty) ++ rowsPart(dm),
-      ndv = prev.map(_.ndv).getOrElse(Map.empty) ++ ndvPart(dm),
-      qsk = prev.map(_.qsk).getOrElse(Map.empty) ++ qskPart(dm)))
+    val dm = writeDir(df, new Path(tableDir(name), rel).toString)
+    val base = prev.getOrElse(Manifest(v, Map.empty, Nil))
+    commit(name, withMeta(base.copy(version = v, logs = base.logs :+ rel,
+      lastBatch = batchId.orElse(base.lastBatch),
+      statsVersion = carriedStatsVersion(prev)), Map(rel -> dm)))
   }
 
   /** Log-structured compaction for append-mode tables: fold the
@@ -2603,14 +2598,12 @@ class SnapshotBucketedStore(
       // any dropped column the old log dirs still carried
       val merged = transform(dropSuppressed(base,
         readDirs(dirsOf(name, base, base.logs))))
-      writeDir(merged, new Path(tableDir(name), rel).toString)
+      val dm = writeDir(merged, new Path(tableDir(name), rel).toString)
       // CAS: commit only if nothing advanced the table while we wrote
       if (latestManifest(name).exists(_.version == base.version)) {
         try {
-          val dm = metaForDir(name, rel)
-          commit(name, Manifest(v, Map.empty, Seq(rel), base.lastBatch,
-            statsPart(dm), keysPart(dm), rows = rowsPart(dm),
-            ndv = ndvPart(dm), qsk = qskPart(dm), fanout = base.fanout))
+          commit(name, withMeta(Manifest(v, Map.empty, Seq(rel), base.lastBatch,
+            fanout = base.fanout), Map(rel -> dm)))
           return true
         } catch { case _: ConcurrentCommitException => () } // lost the race
       }
@@ -2630,12 +2623,10 @@ class SnapshotBucketedStore(
     // (SketchIntake.compact) rewrites content between streaming
     // commits, and dropping the mark there would let a crash-replayed
     // epoch re-apply after a compact.
-    writeDir(df, new Path(tableDir(name), rel).toString)
-    val dm = metaForDir(name, rel)
-    commit(name, Manifest(v, Map.empty, Seq(rel), prev.flatMap(_.lastBatch),
-      statsPart(dm), keysPart(dm), rows = rowsPart(dm), ndv = ndvPart(dm),
-      qsk = qskPart(dm), fanout = prev.flatMap(_.fanout),
-      dropped = Some(Nil))) // full rewrite = the new schema truth
+    val dm = writeDir(df, new Path(tableDir(name), rel).toString)
+    commit(name, withMeta(Manifest(v, Map.empty, Seq(rel), prev.flatMap(_.lastBatch),
+      fanout = prev.flatMap(_.fanout),
+      dropped = Some(Nil)), Map(rel -> dm))) // full rewrite = the new schema truth
   }
 
   override def upsert(name: String, incoming: DataFrame, key: String)(implicit s: SparkSession): Unit =
@@ -2693,14 +2684,11 @@ class SnapshotBucketedStore(
       }
     }
     val v = prev.map(_.version + 1).getOrElse(0)
-    val stage = new Path(tableDir(name), s"stage-$v")
-    val f = fs(stage)
     // the RECORDED fan-out wins over this store's configured default —
     // a mismatched modulus would hash keys into the wrong dirs
     val fan = fanoutFor(prev)
     // buckets the batch touches: ≤ fan values, driver-safe
-    val touched = withBucketN(incoming, key, fan)
-      .select(BucketCol).distinct().collect().map(_.getLong(0)).sorted
+    val touched = touchedBuckets(incoming, key, fan)
     // manifest-level pruning: ONLY the touched buckets' dirs are even
     // named, let alone listed or read. Tombstone-aware: the merge must
     // not resurrect rows a lazy delete already removed — the rewrite
@@ -2712,50 +2700,48 @@ class SnapshotBucketedStore(
       if (existingRels.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], incoming.schema)
       else readDataDirs(name, prev.get, existingRels)
-    val merged = withBucketN(graft.ops.Upsert.upsert(existing, incoming, key), key, fan)
-    sortedForWrite(merged).write.mode(SaveMode.Overwrite).partitionBy(BucketCol).format(fmt).save(stage.toString)
-    // per-bucket data-skipping stats + key Blooms, ONE grouped agg
-    // over the stage (before the renames — the staged layout still
-    // carries the bucket partition column)
-    val stageMeta = metaForStage(stage.toString)
-    // move each staged bucket dir to its immutable generation home
-    f.mkdirs(new Path(tableDir(name), "data"))
-    val newBuckets = touched.flatMap { b =>
-      val src = new Path(stage, s"$BucketCol=$b")
-      if (f.exists(src)) {
-        val rel = s"data/b$b-g$v"
-        val dst = new Path(tableDir(name), rel)
-        // a dir at THIS version can only be an orphan of a crashed
-        // attempt (no committed manifest references version v yet) —
-        // clear it so the rename can't silently fail
-        if (f.exists(dst)) f.delete(dst, true)
-        if (!f.rename(src, dst))
-          throw new java.io.IOException(s"bucket move failed: $src -> $dst")
-        Some(b -> rel)
-      } else None
-    }.toMap
-    f.delete(stage, true)
-    commit(name, Manifest(v,
-      prev.map(_.buckets).getOrElse(Map.empty) ++ newBuckets, Nil,
-      batchId.orElse(prev.flatMap(_.lastBatch)),
-      prev.map(_.stats).getOrElse(Map.empty) ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.stats.nonEmpty).map(rel -> _.stats) },
-      prev.map(_.keys).getOrElse(Map.empty) ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.keys.nonEmpty).map(rel -> _.keys) },
-      carriedStatsVersion(prev),
-      prev.map(_.rows).getOrElse(Map.empty) ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).flatMap(_.rows).map(rel -> _) },
-      prev.map(_.ndv).getOrElse(Map.empty) ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.ndv.nonEmpty).map(rel -> _.ndv) },
-      prev.map(_.qsk).getOrElse(Map.empty) ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.qsk.nonEmpty).map(rel -> _.qsk) },
-      prev.map(_.tombs).getOrElse(Map.empty), // untouched buckets keep theirs
-      fanout = Some(fan)))
+    val newBuckets = writeBuckets(name, v,
+      merged(prev, existing, incoming, key, fan, touched), touched, b => s"data/b$b-g$v")
+    // untouched buckets keep their metadata and tombstones
+    val base = prev.getOrElse(Manifest(v, Map.empty, Nil))
+    commit(name, withMeta(base.copy(version = v,
+      buckets = base.buckets ++ newBuckets.map { case (b, (rel, _)) => b -> rel },
+      lastBatch = batchId.orElse(base.lastBatch),
+      statsVersion = carriedStatsVersion(prev), fanout = Some(fan)),
+      newBuckets.values.toMap))
+  }
+
+  /** Keep-last merge of `incoming` over `existing`, bucketed, laid
+    * out and sorted for the stage write. When every touched bucket
+    * fits one task — its recorded bytes plus the incoming plan's
+    * whole size estimate within Spark's
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` — the merge
+    * shuffles once, on [[bucketLayout]]'s write group, and the
+    * keep-last window partitions by (group, key): the same groups as
+    * by key alone, since the group is a function of the key. Each
+    * touched bucket is then one file. A larger merge, or any merge on
+    * a cluster-bucketed store (a key's old and new rows may sit in
+    * different buckets), keeps last by key over the shuffle
+    * partitions, and a bucket spans one file per task. */
+  private def merged(prev: Option[Manifest], existing: DataFrame, incoming: DataFrame,
+      key: String, fan: Int, touched: Seq[Long]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val target = org.apache.spark.sql.internal.SQLConf.get
+      .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val incomingBytes = incoming.queryExecution.optimizedPlan.stats.sizeInBytes
+    val fits = clusterColumn.isEmpty && touched.forall { b =>
+      prev.flatMap(m => m.buckets.get(b).flatMap(m.bytes.get)).getOrElse(0L) +
+        incomingBytes <= target
+    }
+    if (!fits)
+      return sortedForWrite(withBucketN(graft.ops.Upsert.upsert(existing, incoming, key), key, fan))
+    val (parts, group) = bucketLayout(fan, touched)
+    val (src, g) = ("_graft_src", "graft_group_")
+    val tagged = existing.withColumn(src, lit(0L))
+      .unionByName(incoming.withColumn(src, lit(1L)), allowMissingColumns = true)
+    sortedForWrite(graft.ops.Upsert.keepLast(
+      withBucketN(tagged, key, fan).withColumn(g, group).repartitionById(parts, col(g)),
+      Seq(g, key), col(src)).drop(src, g))
   }
 
   /** Atomic FULL REBUILD of a bucketed-upsert table: every bucket of
@@ -2773,43 +2759,16 @@ class SnapshotBucketedStore(
   def rebuild(name: String, df: DataFrame, key: String): Unit = {
     val prev = latestManifest(name)
     val v = prev.map(_.version + 1).getOrElse(0)
-    val stage = new Path(tableDir(name), s"stage-$v")
-    val f = fs(stage)
-    val bucketed = withBucket(df, key)
-    val touched = bucketed
-      .select(BucketCol).distinct().collect().map(_.getLong(0)).sorted
-    sortedForWrite(bucketed).write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-      .format(fmt).save(stage.toString)
-    val stageMeta = metaForStage(stage.toString)
-    f.mkdirs(new Path(tableDir(name), "data"))
-    val newBuckets = touched.flatMap { b =>
-      val src = new Path(stage, s"$BucketCol=$b")
-      if (f.exists(src)) {
-        val rel = s"data/b$b-g$v"
-        val dst = new Path(tableDir(name), rel)
-        if (f.exists(dst)) f.delete(dst, true)
-        if (!f.rename(src, dst))
-          throw new java.io.IOException(s"bucket move failed: $src -> $dst")
-        Some(b -> rel)
-      } else None
-    }.toMap
-    f.delete(stage, true)
-    commit(name, Manifest(v, newBuckets, Nil,
+    // every bucket may fill: the write pass itself says which did
+    val newBuckets = writeBuckets(name, v, rebalanced(df, key, numBuckets),
+      (0 until numBuckets).map(_.toLong), b => s"data/b$b-g$v")
+    commit(name, withMeta(Manifest(v, newBuckets.map { case (b, (rel, _)) => b -> rel }, Nil,
       prev.flatMap(_.lastBatch),
-      newBuckets.flatMap { case (b, rel) =>
-        stageMeta.get(b).filter(_.stats.nonEmpty).map(rel -> _.stats) }.toMap,
-      newBuckets.flatMap { case (b, rel) =>
-        stageMeta.get(b).filter(_.keys.nonEmpty).map(rel -> _.keys) }.toMap,
-      rows = newBuckets.flatMap { case (b, rel) =>
-        stageMeta.get(b).flatMap(_.rows).map(rel -> _) }.toMap,
-      ndv = newBuckets.flatMap { case (b, rel) =>
-        stageMeta.get(b).filter(_.ndv.nonEmpty).map(rel -> _.ndv) }.toMap,
-      qsk = newBuckets.flatMap { case (b, rel) =>
-        stageMeta.get(b).filter(_.qsk.nonEmpty).map(rel -> _.qsk) }.toMap,
       // rebuild is the fan-out MIGRATION point: the whole table was
       // just rehashed under this store's configured modulus
       fanout = Some(numBuckets),
-      dropped = Some(Nil))) // full rewrite = the new schema truth
+      dropped = Some(Nil)), // full rewrite = the new schema truth
+      newBuckets.values.toMap))
   }
 
   /** Z-ORDER CLUSTERING REWRITE (X253 — the store surface for
@@ -2881,38 +2840,14 @@ class SnapshotBucketedStore(
     }
     val clustered = graft.ops.ZOrder.layout(df, dims, bits, slabs)
       .withColumn(BucketCol, spark_partition_id().cast("long"))
-    val stage = new Path(tableDir(name), s"stage-$v")
-    val f = fs(stage)
-    clustered.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-      .format(fmt).save(stage.toString)
-    val stageMeta = metaForStage(stage.toString)
-    f.mkdirs(new Path(tableDir(name), "data"))
-    val written = (0 until slabs).flatMap { i =>
-      val src = new Path(stage, s"$BucketCol=$i")
-      if (f.exists(src)) {
-        val rel = s"data/z$i-g$v"
-        val dst = new Path(tableDir(name), rel)
-        if (f.exists(dst)) f.delete(dst, true)
-        if (!f.rename(src, dst))
-          throw new java.io.IOException(s"slab move failed: $src -> $dst")
-        Some(i.toLong -> rel)
-      } else None
-    }
-    f.delete(stage, true)
-    commit(name, Manifest(v, Map.empty, written.map(_._2),
-      prev.lastBatch,
-      written.flatMap { case (i, rel) =>
-        stageMeta.get(i).filter(_.stats.nonEmpty).map(rel -> _.stats) }.toMap,
-      written.flatMap { case (i, rel) =>
-        stageMeta.get(i).filter(_.keys.nonEmpty).map(rel -> _.keys) }.toMap,
-      carriedStatsVersion(Some(prev)),
-      rows = written.flatMap { case (i, rel) =>
-        stageMeta.get(i).flatMap(_.rows).map(rel -> _) }.toMap,
-      ndv = written.flatMap { case (i, rel) =>
-        stageMeta.get(i).filter(_.ndv.nonEmpty).map(rel -> _.ndv) }.toMap,
-      qsk = written.flatMap { case (i, rel) =>
-        stageMeta.get(i).filter(_.qsk.nonEmpty).map(rel -> _.qsk) }.toMap,
-      fanout = prev.fanout))
+    // each slab is one range partition, so the stage writes one file
+    // per slab without a further shuffle; the rows keep the Morton
+    // order the layout gave them (no sortColumns re-sort)
+    val written = writeBuckets(name, v, clustered, (0 until slabs).map(_.toLong),
+      i => s"data/z$i-g$v").toSeq.sortBy(_._1).map(_._2)
+    commit(name, withMeta(Manifest(v, Map.empty, written.map(_._1), prev.lastBatch,
+      statsVersion = carriedStatsVersion(Some(prev)), fanout = prev.fanout),
+      written.toMap))
     written.size
   }
 
@@ -2943,50 +2878,20 @@ class SnapshotBucketedStore(
     // Tombstone-aware: the rewrite also applies outstanding
     // merge-on-read sidecars (physical erasure rides along).
     val existing = readDataDirs(name, prev.get, touchedDirs.map(_._2))
-    val remaining = withBucketN(
+    val fan = prev.get.fanout.getOrElse(numBuckets)
+    val touched = touchedDirs.map(_._1)
+    val remaining = rebalanced(
       existing.join(
         org.apache.spark.sql.functions.broadcast(keyFrame), Seq(keyCol), "left_anti"),
-      keyCol, prev.get.fanout.getOrElse(numBuckets))
-    val stage = new Path(tableDir(name), s"stage-$v")
-    val f = fs(stage)
-    sortedForWrite(remaining).write.mode(SaveMode.Overwrite).partitionBy(BucketCol).format(fmt).save(stage.toString)
-    val stageMeta = metaForStage(stage.toString)
-    f.mkdirs(new Path(tableDir(name), "data"))
+      keyCol, fan)
     // a touched bucket may become empty (every row deleted): it then
     // has no staged dir and simply drops out of the manifest
-    val newBuckets = touchedDirs.flatMap { case (b, _) =>
-      val src = new Path(stage, s"$BucketCol=$b")
-      if (f.exists(src)) {
-        val rel = s"data/b$b-g$v"
-        val dst = new Path(tableDir(name), rel)
-        if (f.exists(dst)) f.delete(dst, true)
-        if (!f.rename(src, dst))
-          throw new java.io.IOException(s"bucket move failed: $src -> $dst")
-        Some(b -> rel)
-      } else None
-    }.toMap
-    f.delete(stage, true)
-    commit(name, Manifest(v,
-      prev.get.buckets -- touchedDirs.map(_._1) ++ newBuckets, Nil,
-      prev.get.lastBatch,
-      prev.get.stats ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.stats.nonEmpty).map(rel -> _.stats) },
-      prev.get.keys ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.keys.nonEmpty).map(rel -> _.keys) },
-      carriedStatsVersion(prev),
-      prev.get.rows ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).flatMap(_.rows).map(rel -> _) },
-      prev.get.ndv ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.ndv.nonEmpty).map(rel -> _.ndv) },
-      prev.get.qsk ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.qsk.nonEmpty).map(rel -> _.qsk) },
-      prev.get.tombs, // rewritten dirs' tombstones drop via liveTombs
-      fanout = prev.get.fanout.orElse(Some(numBuckets))))
+    val newBuckets = writeBuckets(name, v, remaining, touched, b => s"data/b$b-g$v")
+    // rewritten dirs' tombstones drop via liveTombs
+    commit(name, withMeta(prev.get.copy(version = v,
+      buckets = prev.get.buckets -- touched ++ newBuckets.map { case (b, (rel, _)) => b -> rel },
+      statsVersion = carriedStatsVersion(prev), fanout = Some(fan)),
+      newBuckets.values.toMap))
   }
 
   /** ONE-COMMIT row-level delta (X244 — what SQL MERGE INTO / UPDATE
@@ -3017,9 +2922,8 @@ class SnapshotBucketedStore(
         "indexes are append+delete surfaces (re-embed = delete + insert)")
     val delKeys = deleteKeys.select(col(deleteKeys.columns.head).as(key)).distinct()
     val fan = prev.fanout.getOrElse(numBuckets)
-    val touched = withBucketN(
+    val touched = touchedBuckets(
       upserts.select(col(key)).union(delKeys.select(col(key))), key, fan)
-      .select(BucketCol).distinct().collect().map(_.getLong(0)).sorted
     if (touched.isEmpty) return
     val v = prev.version + 1
     val existingRels = touched.flatMap(b => prev.buckets.get(b)).toSeq
@@ -3029,46 +2933,14 @@ class SnapshotBucketedStore(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], upserts.schema)
       else readDataDirs(name, prev, existingRels)
     val kept = existing.join(delKeys, Seq(key), "left_anti")
-    val merged = withBucketN(graft.ops.Upsert.upsert(kept, upserts, key), key, fan)
-    val stage = new Path(tableDir(name), s"stage-$v")
-    val f = fs(stage)
-    sortedForWrite(merged).write.mode(SaveMode.Overwrite)
-      .partitionBy(BucketCol).format(fmt).save(stage.toString)
-    val stageMeta = metaForStage(stage.toString)
-    f.mkdirs(new Path(tableDir(name), "data"))
-    val newBuckets = touched.flatMap { b =>
-      val src = new Path(stage, s"$BucketCol=$b")
-      if (f.exists(src)) {
-        val rel = s"data/b$b-g$v"
-        val dst = new Path(tableDir(name), rel)
-        if (f.exists(dst)) f.delete(dst, true)
-        if (!f.rename(src, dst))
-          throw new java.io.IOException(s"bucket move failed: $src -> $dst")
-        Some(b -> rel)
-      } else None // the merge emptied this bucket: it drops out
-    }.toMap
-    f.delete(stage, true)
-    commit(name, Manifest(v,
-      prev.buckets -- touched ++ newBuckets, Nil,
-      prev.lastBatch,
-      prev.stats ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.stats.nonEmpty).map(rel -> _.stats) },
-      prev.keys ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.keys.nonEmpty).map(rel -> _.keys) },
-      carriedStatsVersion(Some(prev)),
-      prev.rows ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).flatMap(_.rows).map(rel -> _) },
-      prev.ndv ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.ndv.nonEmpty).map(rel -> _.ndv) },
-      prev.qsk ++
-        newBuckets.flatMap { case (b, rel) =>
-          stageMeta.get(b).filter(_.qsk.nonEmpty).map(rel -> _.qsk) },
-      prev.tombs, // rewritten dirs' tombstones drop via liveTombs
-      fanout = Some(fan)))
+    // the merge may empty a bucket: it then drops out
+    val newBuckets = writeBuckets(name, v,
+      merged(Some(prev), kept, upserts, key, fan, touched), touched, b => s"data/b$b-g$v")
+    // rewritten dirs' tombstones drop via liveTombs
+    commit(name, withMeta(prev.copy(version = v,
+      buckets = prev.buckets -- touched ++ newBuckets.map { case (b, (rel, _)) => b -> rel },
+      statsVersion = carriedStatsVersion(Some(prev)), fanout = Some(fan)),
+      newBuckets.values.toMap))
   }
 
   /** ALTER TABLE ADD COLUMNS, metadata-only (X247): commit a ZERO-ROW
@@ -3103,19 +2975,13 @@ class SnapshotBucketedStore(
     val extended = StructType(cur.fields ++ cols.map(_.copy(nullable = true)))
     val v = prev.version + 1
     val rel = s"data/schema-g$v"
-    writeDir(spark.createDataFrame(
+    // the observed zero-row count is what lets delete targeting skip
+    // this dir and keeps metadata counts exact
+    val dm = writeDir(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], extended)
       .repartition(1), new Path(tableDir(name), rel).toString)
-    val dm = metaForDir(name, rel)
-    commit(name, Manifest(v, prev.buckets + (SchemaBucket -> rel), prev.logs,
-      prev.lastBatch,
-      prev.stats ++ statsPart(dm), prev.keys ++ keysPart(dm),
-      carriedStatsVersion(Some(prev)),
-      // rows: 0 recorded explicitly — the zero-row record is what lets
-      // delete targeting skip this dir and metadata counts stay exact
-      prev.rows ++ rowsPart(dm) + (rel -> 0L),
-      prev.ndv ++ ndvPart(dm), prev.qsk ++ qskPart(dm),
-      prev.tombs, fanout = prev.fanout))
+    commit(name, withMeta(prev.copy(version = v, buckets = prev.buckets + (SchemaBucket -> rel),
+      statsVersion = carriedStatsVersion(Some(prev))), Map(rel -> dm)))
   }
 
   /** The reserved bucket id of zero-row schema generations —
@@ -3239,9 +3105,8 @@ class SnapshotBucketedStore(
     // candidate and only the Blooms (when this column has them) narrow
     val bucketDirs: Seq[(Long, String)] =
       (if (targetByKeyHash && typeSafe && clusterColumn.isEmpty) {
-        val touched = withBucketN(keyFrame, keyCol, m.fanout.getOrElse(numBuckets))
-          .select(BucketCol).distinct().collect().map(_.getLong(0)).sorted
-        touched.toSeq.flatMap(b => m.buckets.get(b).map(b -> _))
+        touchedBuckets(keyFrame, keyCol, m.fanout.getOrElse(numBuckets))
+          .flatMap(b => m.buckets.get(b).map(b -> _))
       } else m.buckets.toSeq.sortBy(_._1))
         // a dir RECORDED as zero rows provably holds no doomed key —
         // skipping is exact, and keeps the conservative all-bucket path
@@ -3343,41 +3208,30 @@ class SnapshotBucketedStore(
     val v = m.version + 1
     val relToBucket = m.buckets.map(_.swap)
     var buckets = m.buckets
-    var stats = m.stats; var keysM = m.keys; var rows = m.rows
-    var ndv = m.ndv; var qsk = m.qsk
-    tombed.keys.toSeq.sorted.foreach { d =>
+    val written = tombed.keys.toSeq.sorted.flatMap { d =>
       val b = relToBucket(d)
       val rel = s"data/b$b-g$v"
       val dst = new Path(tableDir(name), rel)
       val f = fs(dst)
       if (f.exists(dst)) f.delete(dst, true) // crash orphan at this version
-      writeDir(readDataDirs(name, m, Seq(d)), dst.toString)
-      stats -= d; keysM -= d; rows -= d; ndv -= d; qsk -= d
+      val dm = writeDir(readDataDirs(name, m, Seq(d)), dst.toString)
       // an all-deleted dir drops its bucket out of the manifest —
-      // decided by the REWRITTEN frame's row count, not by probing for
-      // part files: the eager non-partitioned writer leaves a
-      // footer-only file for an empty frame (the same behavior
-      // GraftCatalog.createTable relies on), which a file probe would
-      // mis-read as live data and retain empty generations forever
-      val hasFiles = f.exists(dst) && f.listStatus(dst).exists { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith(".") && !n.startsWith("_")
-      }
-      val dm = if (hasFiles) metaForDir(name, rel) else Map.empty[String, DirMeta]
-      if (dm.get(rel).flatMap(_.rows).getOrElse(0L) == 0L) {
+      // decided by the OBSERVED row count, not by probing for part
+      // files: the non-partitioned writer leaves a footer-only file
+      // for an empty frame (the same behavior GraftCatalog.createTable
+      // relies on), which a file probe would mis-read as live data
+      if (dm.rows == 0L) {
         f.delete(dst, true)
         buckets -= b
+        None
       } else {
         buckets += b -> rel
-        stats = stats ++ statsPart(dm); keysM = keysM ++ keysPart(dm)
-        rows = rows ++ rowsPart(dm); ndv = ndv ++ ndvPart(dm)
-        qsk = qsk ++ qskPart(dm)
+        Some(rel -> dm)
       }
     }
-    commit(name, Manifest(v, buckets, m.logs, m.lastBatch, stats, keysM,
-      carriedStatsVersion(Some(m)), rows, ndv, qsk,
-      m.tombs, // all applied dirs left `buckets` → liveTombs drops them
-      fanout = m.fanout))
+    // all applied dirs left `buckets` → liveTombs drops their tombstones
+    commit(name, withMeta(m.copy(version = v, buckets = buckets,
+      statsVersion = carriedStatsVersion(Some(m))), written.toMap))
     tombed.size
   }
 
@@ -3419,10 +3273,7 @@ class SnapshotBucketedStore(
     // backfills them (commit's bytesFilled lists each exactly once)
     val bytesMissing = live.exists(d => !m.bytes.contains(d))
     if (targets.isEmpty && !bytesMissing) return 0
-    val computed = targets.flatMap { d =>
-      val dm = metaOf(readDirs(Seq(resolveDir(name, d))))
-      if (dm.isEmpty) None else Some(d -> dm)
-    }.toMap
+    val computed = targets.map(d => d -> metaOf(readDirs(Seq(resolveDir(name, d))))).toMap
     val v = m.version + 1
     // a full recompute upgrades the stats format; a partial one keeps
     // the sticky minimum (one legacy float-string survivor must keep
@@ -3439,20 +3290,10 @@ class SnapshotBucketedStore(
     // wrongly prune the dir. A partial recompute merges (untargeted
     // dirs keep their entries) and the sticky version keeps the
     // read-side widening honest.
-    val next =
-      if (full) Manifest(v, m.buckets, m.logs, m.lastBatch,
-        statsPart(computed), keysPart(computed), statsVer,
-        rowsPart(computed), ndvPart(computed), qskPart(computed),
-        m.tombs, fanout = m.fanout)
-      else Manifest(v, m.buckets, m.logs, m.lastBatch,
-        m.stats ++ statsPart(computed),
-        m.keys ++ keysPart(computed),
-        statsVer,
-        m.rows ++ rowsPart(computed),
-        m.ndv ++ ndvPart(computed),
-        m.qsk ++ qskPart(computed),
-        m.tombs,
-        fanout = m.fanout)
+    val next = withMeta(
+      if (full) Manifest(v, m.buckets, m.logs, m.lastBatch, statsVersion = statsVer,
+        tombs = m.tombs, fanout = m.fanout)
+      else m.copy(version = v, statsVersion = statsVer), computed)
     // nothing recomputable changed (e.g. an all-null stats column that
     // can never record): skip the commit instead of minting identical
     // history forever — unless a byte backfill still needs to land

@@ -107,22 +107,6 @@ object Dedup {
     base.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH band keys: the signature cut into `bands` slices of
-    * `rowsPerBand`, each slice joined into one string key. Two docs
-    * become candidates iff they agree on an entire slice. */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b =>
-        array_join(
-          transform(
-            slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-            x => x.cast("string"),
-          ),
-          "_",
-        ),
-    )
-
   /** Exact word-n-gram Jaccard between two shingle-set columns. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /

@@ -59,27 +59,19 @@ object LangId {
   def canon(text: Column): Column =
     trim(regexp_replace(lower(text), "[^\\p{L}]+", " "))
 
-  /** All character n-grams (n = 1..maxN, with multiplicity) of the
-    * canonicalized text padded with one leading/trailing space — the
-    * padding makes word-initial/final shapes (" th", "ng ") first-class
-    * evidence, the Cavnar–Trenkle trick. Empty canonical text yields
-    * an empty array (→ `und` downstream). Pure map-side projection.
+  /** All character n-grams (n = 1..maxN, with multiplicity) of an
+    * ALREADY padded-canonical column: [[canon]] output with one
+    * leading and one trailing space, which makes word-initial/final
+    * shapes (" th", "ng ") first-class evidence, the Cavnar–Trenkle
+    * trick. A padded length < 3 means the canonical text was empty →
+    * empty array (→ `und` downstream). Pure map-side projection.
     *
     * PERFORMANCE: expressions referenced inside a `transform` lambda
     * are re-evaluated PER ELEMENT — with `canon`'s regex in the
     * lambda, that is one regex execution per n-gram (~720 per doc;
     * measured 24 s of q108's 26 at sf0.1). [[fit]]/[[predict]]
     * therefore materialize the padded canonical text as a real
-    * column first and call [[ngramsOfPadded]], whose lambda touches
-    * only an attribute; this form is kept for single-expression
-    * call sites and the spec that pins the two equal. */
-  def charNgrams(text: Column, maxN: Int = DefaultMaxN): Column =
-    ngramsOfPadded(concat(lit(" "), canon(text), lit(" ")), maxN)
-
-  /** N-grams over an ALREADY padded-canonical column (one leading +
-    * one trailing space around [[canon]] output). The lambda reads
-    * the column value only — no per-element recomputation. A padded
-    * length < 3 means the canonical text was empty → empty array. */
+    * column first; this lambda reads only that attribute. */
   def ngramsOfPadded(padded: Column, maxN: Int = DefaultMaxN): Column = {
     val grams = (1 to maxN).map { n =>
       // sequence(1, 0) counts DOWN in Spark — guard short texts

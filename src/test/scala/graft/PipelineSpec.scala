@@ -189,4 +189,44 @@ class PipelineSpec extends SparkSpec {
     assert(nd.count() == 3 && arr.count() == 3)
     assert(nd.select("uuid").collect().toSet == arr.select("uuid").collect().toSet)
   }
+
+  test("a warm run of a 1k-row file runs a pinned number of Spark jobs") {
+    val root = tmpDir("pipe_jobs")
+    val (pipe, _) = newPipeline(root)
+    TestSales.writeCsv(s"$root/warm.csv", 1000)
+    assert(pipe.run(spark, s"$root/warm.csv").isInstanceOf[PipelineResult.Success])
+    // job starts of one group, flushed by a marker job: the listener
+    // bus delivers in order, so once the marker is seen every job of
+    // the measured run has been counted
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("pinned-run") => jobs.incrementAndGet()
+          case Some("pinned-marker") => marker.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      TestSales.writeCsv(s"$root/b.csv", 1000, r => r.replace("Atlantis", "Lemuria"))
+      sc.setJobGroup("pinned-run", "measured run")
+      assert(pipe.run(spark, s"$root/b.csv").isInstanceOf[PipelineResult.Success])
+      sc.setJobGroup("pinned-marker", "listener flush")
+      spark.range(1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // every store commit observes its metadata on its own write pass;
+    // a read-back job creeping back into a commit shows up here
+    assert(jobs.get == PinnedWarmJobs, s"jobs of a warm 1k-row run: ${jobs.get}")
+  }
+
+  /** Jobs of one warm 1k-row run (read, validate, lake write, append,
+    * upsert, summary replace). A change that moves it must say why. */
+  private val PinnedWarmJobs = 16
 }

@@ -93,4 +93,70 @@ class AnalyzeSpec extends SparkSpec {
       "stale v entries must be gone: with no recorded stats every dir " +
         "is conservatively kept")
   }
+
+  /** The exact per-dir metadata lines of the latest manifest. */
+  private def exactMeta(root: String, t: String): Set[String] = {
+    val mf = new java.io.File(s"$root/$t").listFiles()
+      .filter(_.getName.matches("manifest-\\d+\\.txt"))
+      .maxBy(_.getName.stripPrefix("manifest-").stripSuffix(".txt").toInt)
+    val src = scala.io.Source.fromFile(mf, "UTF-8")
+    try src.getLines().filter(l => Seq("rows:", "stats:", "keys:").exists(l.startsWith)).toSet
+    finally src.close()
+  }
+
+  test("every commit family records the metadata analyze recomputes from its data") {
+    val root = tmpDir("graft_an_obs_")
+    implicit val s = spark
+    val store = new SnapshotBucketedStore(root, numBuckets = 4,
+      statsColumns = Seq("v", "uuid"), keyColumns = Seq("uuid"),
+      ndvColumns = Seq("v"), quantileColumns = Seq("v"))
+    // rows, min/max and Bloom bytes match exactly; NDV and quantile
+    // sketches within their error (KLL compaction flips coins, so the
+    // two quantile sets are each held to the exact ranks of the data)
+    def agrees(t: String, what: String): Unit = {
+      val exact = exactMeta(root, t)
+      val ndv = store.metadataApproxDistinct(t, "v")
+      val probs = Seq(0.1, 0.5, 0.9)
+      val qs = store.metadataApproxQuantiles(t, "v", probs)
+      store.analyzeTable(t, onlyMissing = false)
+      assert(exactMeta(root, t) == exact, s"$what: rows/stats/keys")
+      (ndv, store.metadataApproxDistinct(t, "v")) match {
+        case (Some(a), Some(b)) => assert(math.abs(a - b) <= 0.05 * b + 2, s"$what: ndv $a vs $b")
+        case (a, b) => assert(a == b, s"$what: ndv $a vs $b")
+      }
+      val vs = store.read(t).get.select("v").as[Long].collect().sorted
+      def rankOk(q: Seq[Double]) = probs.zip(q).forall { case (p, x) =>
+        math.abs(vs.count(_ <= x).toDouble / vs.length - p) <= 0.03 + 1.0 / vs.length
+      }
+      val recomputed = store.metadataApproxQuantiles(t, "v", probs)
+      assert(qs.isDefined == recomputed.isDefined, s"$what: quantiles $qs vs $recomputed")
+      assert((qs ++ recomputed).forall(rankOk), s"$what: quantiles $qs vs $recomputed")
+    }
+    def keys(r: Range) = r.map(_.toLong).toDF("k")
+
+    store.upsert("k", rows(0 until 300), "uuid"); agrees("k", "upsert")
+    store.upsertWithBatch("k", rows(200 until 400), "uuid", 1L); agrees("k", "upsertWithBatch")
+    store.upsertWithBatch("k", rows(0 until 0), "uuid", 2L); agrees("k", "empty upsertWithBatch")
+    assert(store.lastAppliedBatch("k").contains(2L), "an empty delta still commits its mark")
+    store.delete("k", "uuid", keys(0 until 50)); agrees("k", "delete")
+    store.applyDelta("k", rows(350 until 450), keys(60 until 80), "uuid"); agrees("k", "applyDelta")
+    store.deleteLazy("k", "uuid", keys(100 until 120))
+    assert(store.applyDeletes("k") > 0); agrees("k", "applyDeletes")
+    store.deleteRange("k", "v", 400L, 500L); agrees("k", "deleteRange (bucketed)")
+    store.addColumns("k", Seq(org.apache.spark.sql.types.StructField(
+      "extra", org.apache.spark.sql.types.StringType))); agrees("k", "addColumns")
+    store.rebuild("k", rows(0 until 200), "uuid"); agrees("k", "rebuild")
+    assert(store.read("k").get.count() == 200)
+
+    (0 until 3).foreach(g => store.append("l", rows(g * 100 until (g + 1) * 100)))
+    agrees("l", "append")
+    assert(store.appendIfNew("l", rows(300 until 350), 5L)); agrees("l", "appendIfNew")
+    assert(store.compactLogs("l")); agrees("l", "compactLogs")
+    assert(store.rewriteClustered("l", Seq("v"), slabs = 4) > 1); agrees("l", "rewriteClustered")
+    store.deleteRange("l", "v", 0L, 99L); agrees("l", "deleteRange (log)")
+    store.replace("l", rows(0 until 80)); agrees("l", "replace")
+    store.replaceWithBatch("l", rows(0 until 0), 6L); agrees("l", "zero-row replaceWithBatch")
+    assert(exactMeta(root, "l").exists(_.matches("keys:.*=uuid:.+")),
+      "a zero-row generation records an empty Bloom")
+  }
 }

@@ -411,4 +411,84 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(store.appendIfNew("raw", rows(20 until 25, "b2"), 2L))
     assert(store.read("raw").get.count() == 15)
   }
+
+  /** Data files per generation dir written at version `v`. */
+  private def filesAt(root: String, t: String, v: Int): Map[String, Int] =
+    new File(s"$root/$t/data").listFiles().filter(_.getName.endsWith(s"-g$v"))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
+  test("bucketed stages write each touched bucket as one file") {
+    val root = tmpDir("graft_onefile_")
+    implicit val s = spark
+    val store = new SnapshotBucketedStore(root, numBuckets = 8)
+    def oneEach(what: String): Unit = {
+      val files = filesAt(root, "t", store.snapshots("t").last)
+      assert(files.nonEmpty && files.values.forall(_ == 1), s"$what: $files")
+    }
+    // inputs spread over more partitions than there are write tasks
+    store.upsert("t", rows(0 until 2000, "a").repartition(7), "uuid")
+    oneEach("first upsert")
+    store.upsert("t", rows(1000 until 3000, "b").repartition(5), "uuid")
+    oneEach("merging upsert")
+    store.delete("t", "uuid", (0L until 500L).toDF("k"))
+    oneEach("delete")
+    store.applyDelta("t", rows(2500 until 3500, "c").repartition(3),
+      (600L until 700L).toDF("k"), "uuid")
+    oneEach("applyDelta")
+    val got = store.read("t").get
+    assert(got.count() == 3500 - 500 - 100)
+    assert(got.filter($"uuid" >= 2500).select("val").distinct().as[String].collect().toSeq == Seq("c"))
+    store.rebuild("t", rows(0 until 1500, "d").repartition(6), "uuid")
+    oneEach("rebuild")
+    assert(store.read("t").get.count() == 1500)
+  }
+
+  test("a bucket above the advisory partition size splits into several files") {
+    val root = tmpDir("graft_split_")
+    implicit val s = spark
+    // AQE sizes partitions by the advisory size, without the 1 MB
+    // coalescing floor (which would merge this small test's partitions)
+    val conf = Map("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4k",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k")
+    val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val store = new SnapshotBucketedStore(root, numBuckets = 2)
+    def split(what: String): Unit = {
+      val files = filesAt(root, "t", store.snapshots("t").last)
+      assert(files.size == 2 && files.values.forall(_ > 1), s"$what: $files")
+    }
+    store.upsert("t", rows(0 until 4000, "a"), "uuid")
+    try {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      // a merge too large for one task keeps last over the shuffle
+      // partitions
+      store.upsert("t", rows(3000 until 5000, "b").repartition(4), "uuid")
+      split("merge")
+      val got = store.read("t").get
+      assert(got.count() == 5000)
+      assert(got.filter($"uuid" >= 3000).select("val").distinct().as[String].collect().toSeq == Seq("b"))
+      assert(got.filter($"uuid" < 3000).select("val").distinct().as[String].collect().toSeq == Seq("a"))
+      // a rebuild rebalances: AQE splits each bucket by its shuffle bytes
+      store.rebuild("t", rows(0 until 4000, "c").repartition(4), "uuid")
+      split("rebuild")
+      assert(store.read("t").get.count() == 4000)
+    } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("a truncated manifest line raises a named error") {
+    val root = tmpDir("graft_badmf_")
+    implicit val s = spark
+    val store = new SnapshotBucketedStore(root, numBuckets = 4)
+    store.upsert("t", rows(0 until 10, "a"), "uuid")
+    val mf = new File(s"$root/t/manifest-0.txt")
+    val text = new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
+    val bucketLine = text.linesIterator.find(_.startsWith("bucket:")).get
+    val cut = bucketLine.take(bucketLine.indexOf('='))
+    java.nio.file.Files.write(mf.toPath,
+      text.replace(bucketLine, cut).getBytes("UTF-8"))
+    val e = intercept[CorruptManifestException](store.read("t"))
+    assert(e.table == "t" && e.version == 0 && e.line == cut, e.getMessage)
+    assert(e.getMessage.contains("'t'") && e.getMessage.contains("v0") &&
+      e.getMessage.contains(cut), e.getMessage)
+  }
 }
