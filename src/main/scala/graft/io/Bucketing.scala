@@ -7,9 +7,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * with NO Exchange on either side — at 100 TB this turns the nightly
   * fact⋈fact join from a full two-sided shuffle into a zip of
   * pre-sorted buckets. (The run-time analogue of
-  * [[BucketedParquetDirStore]]'s write-time layout, but through the
-  * session catalog, which is what lets Catalyst TRUST the layout and
-  * elide the Exchange — a bare parquet directory can't promise that.)
+  * [[SnapshotBucketedStore]]'s write-time key bucketing, but through
+  * the session catalog, which is what lets Catalyst TRUST the layout
+  * and elide the Exchange — a bare parquet directory can't promise
+  * that.)
   *
   * Spark requires `bucketBy` writes to go through `saveAsTable`
   * (the bucket spec lives in catalog metadata, not the files), so this

@@ -61,8 +61,8 @@ trait TableStore {
   /** Keyed upsert of a batch into `name`. Default = the reference's
     * literal semantics (read whole table, merge, rewrite whole table —
     * lambda.py:175-181). Stores with physical key-partitioning override
-    * this to rewrite ONLY the partitions the batch touches
-    * ([[BucketedParquetDirStore]]) — the O(batch) shape that survives
+    * this to rewrite ONLY the buckets the batch touches
+    * ([[SnapshotBucketedStore]]) — the O(batch) shape that survives
     * 100 TB, behind the same interface. */
   def upsert(name: String, incoming: DataFrame, key: String)(implicit spark: SparkSession): Unit = {
     val existing = readOrEmpty(name, incoming.schema)
@@ -106,12 +106,6 @@ class FileDirStore(root: String, fmt: String)(implicit spark: SparkSession)
 /** Parquet table store (the default lake format). */
 final class ParquetDirStore(root: String)(implicit spark: SparkSession)
     extends FileDirStore(root, "parquet")
-
-/** ORC table store — same layout/semantics, ORC files (the other
-  * bundled columnar format; useful when downstream consumers are
-  * ORC-native, e.g. Hive-lineage warehouses). */
-final class OrcDirStore(root: String)(implicit spark: SparkSession)
-    extends FileDirStore(root, "orc")
 
 /** Avro table store (X165) — the same directory-per-table seam over
   * [[AvroIo]]'s splittable containers (this container ships no
@@ -166,95 +160,12 @@ final class AvroDirStore(root: String)(implicit spark: SparkSession)
   }
 }
 
-/** Key-bucketed parquet store: each table is laid out as
-  * `<root>/<name>/graft_bucket=<b>/` with b = pmod(xxhash64(key), n).
-  * [[upsert]] rewrites ONLY the buckets the incoming batch touches —
-  * an O(batch)-cost upsert against an O(table)-size target, which is
-  * the difference between "works" and "melts" at 100 TB (docs/SCALE.md
-  * §2). Everything else behaves like [[ParquetDirStore]]; the bucket
-  * column is internal and never surfaces to readers.
-  *
-  * NOTE: the touched-bucket swap loop commits one rename per bucket —
-  * a crash mid-loop leaves a mixed old/new state (the reference has
-  * the same window, lambda.py:172-181). [[SnapshotBucketedStore]] is
-  * the manifest-committed successor whose commit is ONE rename; prefer
-  * it for anything a crash may interrupt. This class remains for
-  * plain Hive-partition-dir layout compatibility. */
-final class BucketedParquetDirStore(root: String, numBuckets: Int = 64)(implicit spark: SparkSession)
-    extends TableStore {
-
-  private val BucketCol = "graft_bucket"
-  private def path(name: String) = s"$root/$name"
-  private def fs(p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def exists(name: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(name))
-    fs(p).exists(p)
-  }
-  private def withBucket(df: DataFrame, key: String): DataFrame =
-    df.withColumn(BucketCol,
-      org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.xxhash64(org.apache.spark.sql.functions.col(key)),
-        org.apache.spark.sql.functions.lit(numBuckets.toLong)))
-
-  override def read(name: String): Option[DataFrame] =
-    if (exists(name)) Some(spark.read.parquet(path(name)).drop(BucketCol)) else None
-
-  /** Append-only tables (the raw log) are scan-only — plain unbucketed
-    * layout; only [[upsert]] targets need the key partitioning. */
-  override def append(name: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(path(name))
-
-  override def replace(name: String, df: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path(name))
-    val stage = new org.apache.hadoop.fs.Path(path(name) + "_stage")
-    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val f = fs(p)
-    if (f.exists(p)) f.delete(p, true)
-    f.rename(stage, p)
-  }
-
-  override def upsert(name: String, incoming: DataFrame, key: String)(implicit s: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.col
-    val p = path(name)
-    if (!exists(name)) {
-      withBucket(incoming, key)
-        .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(p)
-      return
-    }
-    // buckets the batch touches: ≤ numBuckets values, driver-safe
-    val touched = withBucket(incoming, key)
-      .select(BucketCol).distinct().collect().map(_.getLong(0)).sorted
-    // partition-pruned read of ONLY those buckets (.explain shows
-    // PartitionFilters on graft_bucket)
-    val existing = spark.read.parquet(p)
-      .filter(col(BucketCol).isin(touched.toIndexedSeq: _*))
-      .drop(BucketCol)
-    val merged = withBucket(
-      graft.ops.Upsert.upsert(existing, incoming, key), key)
-    // stage the merged touched buckets, then swap just those partition
-    // dirs — untouched buckets are never read, never rewritten
-    val stagePath = new org.apache.hadoop.fs.Path(p + "_upsert_stage")
-    val f = fs(stagePath)
-    merged.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(stagePath.toString)
-    touched.foreach { b =>
-      val dest = new org.apache.hadoop.fs.Path(s"$p/$BucketCol=$b")
-      val src = new org.apache.hadoop.fs.Path(s"$stagePath/$BucketCol=$b")
-      if (f.exists(dest)) f.delete(dest, true)
-      if (f.exists(src)) f.rename(src, dest)
-    }
-    f.delete(stagePath, true)
-  }
-}
-
-/** Snapshot-isolated key-bucketed parquet store: the atomic-commit
-  * successor to [[BucketedParquetDirStore]], whose touched-bucket swap
-  * loop has a crash window (kill between two bucket renames → readers
-  * see a MIX of old and new buckets; the reference shares the flaw —
-  * lambda.py:172-181 rewrites the live table in place). A 100 TB
+/** Snapshot-isolated key-bucketed parquet store. The reference
+  * rewrites the live table in place (lambda.py:172-181), so a crash
+  * mid-write leaves readers a MIX of old and new rows. A 100 TB
   * engine's flagship sink needs a commit point, so this store
-  * hand-rolls the manifest pattern Delta/Iceberg use (no such lib in
-  * this sandbox):
+  * hand-rolls the manifest pattern Delta/Iceberg use (neither library
+  * ships with this build):
   *
   *   - Data lives in immutable generation dirs
   *     `<table>/data/b<bucket>-g<version>/` (bucketed upsert targets)
@@ -580,194 +491,15 @@ class SnapshotBucketedStore(
   private def fanoutFor(prev: Option[Manifest]): Int =
     prev.flatMap(_.fanout).getOrElse(numBuckets)
 
-  /** A committed snapshot: bucket → live data dir (table-relative),
-    * plus append-log dirs, plus the highest streaming batch id applied
-    * (rides in the same manifest so data + marker commit in ONE
-    * rename — the exactly-once hinge for [[appendIfNew]]), plus
-    * per-dir column min/max statistics (dir → (col, min, max) — the
-    * data-skipping index; stats COMMIT IN THE SAME RENAME as the dirs
-    * they describe, so a reader can never see a dir without its stats
-    * or stats without their dir). */
-  private final case class Manifest(
-      version: Int,
-      buckets: Map[Long, String],
-      logs: Seq[String],
-      lastBatch: Option[Long] = None,
-      stats: Map[String, Seq[(String, String, String)]] = Map.empty,
-      keys: Map[String, Seq[(String, String)]] = Map.empty,
-      statsVersion: Int = SnapshotBucketedStore.CurrentStatsVersion,
-      rows: Map[String, Long] = Map.empty,
-      ndv: Map[String, Seq[(String, String)]] = Map.empty,
-      qsk: Map[String, Seq[(String, String)]] = Map.empty,
-      tombs: Map[String, Seq[(String, String)]] = Map.empty,
-      commitMillis: Option[Long] = None,
-      fanout: Option[Int] = None,
-      bytes: Map[String, Long] = Map.empty,
-      dropped: Option[Seq[String]] = None) {
-    /** Columns DROPPED from this snapshot (X259, ALTER TABLE DROP
-      * COLUMN): name-suppressed at read over every generation that
-      * still physically carries them; rewrites shed them for real.
-      * `None` means "not specified by this commit's builder" — the
-      * commit point carries the previous manifest's marker forward,
-      * so the 17 commit families stay oblivious; a parsed manifest
-      * and the few semantics-bearing commits (drop itself, replace/
-      * rebuild resetting to the new schema truth, restore) pass an
-      * explicit `Some`. */
-    def droppedNames: Seq[String] = dropped.getOrElse(Nil)
-    /** Stats restricted to dirs this manifest still references — the
-      * carry-forward rule every commit applies to its predecessor's
-      * stats (superseded generations take their stats with them). */
-    def liveStats: Map[String, Seq[(String, String, String)]] = {
-      val live = buckets.values.toSet ++ logs
-      stats.filter { case (d, _) => live(d) }
-    }
-    /** Same carry-forward rule for the per-dir key membership stats
-      * (dir → (column, base64 Bloom of xxhash64(column))). */
-    def liveKeys: Map[String, Seq[(String, String)]] = {
-      val live = buckets.values.toSet ++ logs
-      keys.filter { case (d, _) => live(d) }
-    }
-    /** Per-dir row counts, live-filtered like stats/keys (X214). */
-    def liveRows: Map[String, Long] = {
-      val live = buckets.values.toSet ++ logs
-      rows.filter { case (d, _) => live(d) }
-    }
-    /** Per-dir data-file byte totals (X258), live-filtered alike —
-      * recorded at commit so plan-time scan sizing is a manifest
-      * fold, never a per-dir file listing (generation dirs are
-      * immutable, so a recorded figure can never go stale). */
-    def liveBytes: Map[String, Long] = {
-      val live = buckets.values.toSet ++ logs
-      bytes.filter { case (d, _) => live(d) }
-    }
-    /** Per-dir HLL sketches (X216), live-filtered like stats/keys. */
-    def liveNdv: Map[String, Seq[(String, String)]] = {
-      val live = buckets.values.toSet ++ logs
-      ndv.filter { case (d, _) => live(d) }
-    }
-    /** Per-dir KLL quantile sketches (X218), live-filtered alike. */
-    def liveQsk: Map[String, Seq[(String, String)]] = {
-      val live = buckets.values.toSet ++ logs
-      qsk.filter { case (d, _) => live(d) }
-    }
-    /** Outstanding MERGE-ON-READ key tombstones (X234): data dir →
-      * (key column, tombstone-sidecar dir) pairs to anti-join at
-      * read — pairs may mix key columns (SQL DELETEs target whatever
-      * column the predicate names). Same carry-forward rule — a
-      * rewritten/dropped data dir takes its tombstones with it (the
-      * rewrite already applied them). */
-    def liveTombs: Map[String, Seq[(String, String)]] = {
-      val live = buckets.values.toSet
-      tombs.filter { case (d, _) => live(d) }
-    }
-    /** Any tombstones outstanding? Gates the manifest-served
-      * metadata aggregates: recorded per-dir counts/stats/sketches
-      * describe PHYSICAL rows, which over-count a logically-deleted
-      * snapshot — the shared honest degrade is a scan fallback,
-      * never a wrong number. */
-    def hasTombs: Boolean = liveTombs.nonEmpty
-  }
-
   private val ManifestName = "manifest-(\\d+)\\.txt".r
 
   private def manifestAt(name: String, v: Int): Option[Manifest] = {
-    val dir = tableDir(name)
-    val f = fs(dir)
-    val p = new Path(dir, s"manifest-$v.txt")
+    val p = new Path(tableDir(name), s"manifest-$v.txt")
+    val f = fs(p)
     if (!f.exists(p)) return None
     val in = f.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val entries = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    // a truncated or garbled line fails its own parse — raise it by
-    // table, version and line instead of a bare MatchError
-    def parsed[T](line: String)(f: => T): T =
-      try f catch {
-        case e @ (_: MatchError | _: NumberFormatException) =>
-          throw new CorruptManifestException(name, v, line, e)
-      }
-    val buckets = entries.collect { case s if s.startsWith("bucket:") => parsed(s) {
-      val Array(b, d) = s.stripPrefix("bucket:").split("=", 2)
-      b.toLong -> d
-    }}.toMap
-    val logs = entries.collect { case s if s.startsWith("log:") => s.stripPrefix("log:") }
-    val lastBatch = entries.collectFirst { case s if s.startsWith("batch:") =>
-      parsed(s)(s.stripPrefix("batch:").toLong) }
-    val stats = entries.collect { case s if s.startsWith("stats:") => parsed(s) {
-      val Array(d, cs) = s.stripPrefix("stats:").split("=", 2)
-      d -> cs.split(",").toSeq.map { t =>
-        val Array(c, mn, mx) = t.split(":", 3); (c, mn, mx)
-      }
-    }}.toMap
-    // keys lines: `keys:<dir>=<col>:<base64>,...` — base64's standard
-    // alphabet contains no ':' or ',', column names are [A-Za-z0-9_],
-    // so the same delimiter discipline as stats lines holds
-    val keyLines = entries.collect { case s if s.startsWith("keys:") => parsed(s) {
-      val Array(d, cs) = s.stripPrefix("keys:").split("=", 2)
-      d -> cs.split(",").toSeq.map { t =>
-        val Array(c, b) = t.split(":", 2); (c, b)
-      }
-    }}.toMap
-    // stats format version: absent (pre-versioning manifest) → 1,
-    // whose float-column stats may be float-shortest strings that
-    // underestimate the double-promoted value — [[survives]] widens
-    // v1 bounds by a relative epsilon so a double probe inside the
-    // float-string gap can never wrongly skip a dir
-    val statsVer = entries.collectFirst { case s if s.startsWith("statsver:") =>
-      parsed(s)(s.stripPrefix("statsver:").toInt) }.getOrElse(1)
-    val rowLines = entries.collect { case s if s.startsWith("rows:") => parsed(s) {
-      val Array(d, n) = s.stripPrefix("rows:").split("=", 2)
-      d -> n.toLong
-    }}.toMap
-    // per-dir data-file byte totals (X258) — absent on legacy
-    // manifests, whose scan sizing degrades to a per-dir listing
-    // until any commit (or CALL system.analyze) backfills them
-    val byteLines = entries.collect { case s if s.startsWith("bytes:") => parsed(s) {
-      val Array(d, n) = s.stripPrefix("bytes:").split("=", 2)
-      d -> n.toLong
-    }}.toMap
-    val ndvLines = entries.collect { case s if s.startsWith("ndv:") => parsed(s) {
-      val Array(d, cs) = s.stripPrefix("ndv:").split("=", 2)
-      d -> cs.split(",").toSeq.map { t =>
-        val Array(c, b) = t.split(":", 2); (c, b)
-      }
-    }}.toMap
-    val qskLines = entries.collect { case s if s.startsWith("qsk:") => parsed(s) {
-      val Array(d, cs) = s.stripPrefix("qsk:").split("=", 2)
-      d -> cs.split(",").toSeq.map { t =>
-        val Array(c, b) = t.split(":", 2); (c, b)
-      }
-    }}.toMap
-    // tomb lines: `tomb:<dir>=<k1>:<t1>,<k2>:<t2>` — each sidecar
-    // carries its own key column ([A-Za-z0-9_]+); dir rels carry no
-    // ':' or ',', the same delimiter discipline as stats/keys lines
-    val tombLines = entries.collect { case s if s.startsWith("tomb:") => parsed(s) {
-      val Array(d, rest) = s.stripPrefix("tomb:").split("=", 2)
-      d -> rest.split(",").toSeq.filter(_.nonEmpty).map { t =>
-        val Array(k, rel) = t.split(":", 2); (k, rel)
-      }
-    }}.toMap
-    // commit wall-clock stamp (epoch millis) — absent on legacy
-    // manifests, which time travel then cannot resolve BY TIME (only
-    // by version); never guessed
-    val tsLine = entries.collectFirst { case s if s.startsWith("ts:") =>
-      parsed(s)(s.stripPrefix("ts:").toLong) }
-    // recorded bucket FAN-OUT: the modulus rows were hashed into dirs
-    // with — keyed writes adopt it over the store's configured
-    // numBuckets, so a store opened with a different default can never
-    // silently mis-target buckets (absent on legacy manifests)
-    val fanLine = entries.collectFirst { case s if s.startsWith("fanout:") =>
-      parsed(s)(s.stripPrefix("fanout:").toInt) }
-    // dropped-column marker (X259) — ALWAYS explicit on a parsed
-    // manifest (absent line ≡ nothing dropped), so a restore of a
-    // pre-drop version resurrects the column rather than carrying a
-    // later drop forward
-    val dropLine = Some(entries.collectFirst {
-      case s if s.startsWith("drop:") =>
-        s.stripPrefix("drop:").split(",").toSeq.filter(_.nonEmpty)
-    }.getOrElse(Nil))
-    Some(Manifest(v, buckets, logs, lastBatch, stats, keyLines, statsVer,
-      rowLines, ndvLines, qskLines, tombLines, tsLine, fanLine, byteLines,
-      dropLine))
+    Some(ManifestCodec.parse(name, v, text))
   }
 
   /** The stats version a NEW commit records: stats carried forward
@@ -779,17 +511,8 @@ class SnapshotBucketedStore(
     prev.map(m => math.min(SnapshotBucketedStore.CurrentStatsVersion, m.statsVersion))
       .getOrElse(SnapshotBucketedStore.CurrentStatsVersion)
 
-  private def latestManifest(name: String): Option[Manifest] = {
-    val dir = tableDir(name)
-    val f = fs(dir)
-    if (!f.exists(dir)) return None
-    val versions = f.listStatus(dir).toSeq.flatMap(_.getPath.getName match {
-      case ManifestName(n) => Some(n.toInt)
-      case _ => None
-    })
-    if (versions.isEmpty) return None
-    manifestAt(name, versions.max)
-  }
+  private def latestManifest(name: String): Option[Manifest] =
+    snapshots(name).lastOption.flatMap(manifestAt(name, _))
 
   /** Test seam: crash-injection tests override this to die after data
     * dirs land but BEFORE the manifest rename — the largest window the
@@ -803,6 +526,32 @@ class SnapshotBucketedStore(
     java.nio.file.Files.createLink(dst, src)
     ()
   }
+
+  /** Per-dir data-file byte totals for the manifest (X258): carry
+    * every already-recorded figure forward (generation dirs are
+    * immutable — a recorded size can never go stale), list ONLY the
+    * dirs still missing one (the dirs this very commit just wrote,
+    * plus a one-time backfill of legacy dirs). This is what keeps
+    * plan-time scan sizing a pure manifest fold instead of O(live
+    * dirs) namenode listings per query plan. A dir that fails to
+    * list records nothing — its estimate degrades to the listing
+    * fallback, never fails the commit. */
+  private def bytesFilled(name: String, m: Manifest, prev: Option[Manifest]): Manifest =
+    m.copy(dirs = m.dirs ++ (m.buckets.values ++ m.logs).toSeq.distinct.flatMap { d =>
+      val x = m.meta(d)
+      x.bytes.orElse(prev.flatMap(_.meta(d).bytes)).orElse(listedBytes(name, d))
+        .map(n => d -> x.copy(bytes = Some(n)))
+    })
+
+  /** Data-file bytes of one dir by listing it; None when it fails to list. */
+  private def listedBytes(name: String, d: String): Option[Long] =
+    try {
+      val p = new Path(resolveDir(name, d))
+      Some(fs(p).listStatus(p).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith(".") && !n.startsWith("_")
+      }.map(_.getLen).sum)
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The commit point: stage the manifest text fully, then publish it
     * with a true compare-and-set on the versioned name. A manifest for
@@ -818,38 +567,14 @@ class SnapshotBucketedStore(
     * link(2) fails EEXIST atomically, and the target appears fully
     * written because it aliases the completed staged file — both the
     * CAS and the all-or-nothing visibility survive. */
-  /** Per-dir data-file byte totals for the manifest (X258): carry
-    * every already-recorded figure forward (generation dirs are
-    * immutable — a recorded size can never go stale), list ONLY the
-    * dirs still missing one (the dirs this very commit just wrote,
-    * plus a one-time backfill of legacy dirs). This is what keeps
-    * plan-time scan sizing a pure manifest fold instead of O(live
-    * dirs) namenode listings per query plan. A dir that fails to
-    * list records nothing — its estimate degrades to the listing
-    * fallback, never fails the commit. */
-  private def bytesFilled(name: String, m: Manifest,
-      prev: Option[Manifest]): Map[String, Long] = {
-    val live = (m.buckets.values ++ m.logs).toSeq.distinct
-    val known = prev.map(_.bytes).getOrElse(Map.empty) ++ m.bytes
-    known ++ live.filterNot(known.contains).flatMap { d =>
-      try {
-        val p = new Path(resolveDir(name, d))
-        Some(d -> fs(p).listStatus(p).filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith(".") && !n.startsWith("_")
-        }.map(_.getLen).sum)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-  }
-
   private def commit(name: String, m0: Manifest): Unit = {
     // one previous-manifest read serves both carry-forwards: per-dir
     // byte records (X258, dir-keyed and immutable) and the dropped-
     // column marker (X259, explicit `Some` wins — restore/replace
     // set it; every other commit family carries)
     val prev = latestManifest(name)
-    val m = m0.copy(bytes = bytesFilled(name, m0, prev),
-      dropped = m0.dropped.orElse(prev.flatMap(_.dropped)))
+    val m = bytesFilled(name, m0, prev)
+      .copy(dropped = m0.dropped.orElse(prev.flatMap(_.dropped)))
     val dir = tableDir(name)
     val f = fs(dir)
     // writer-unique staging name: two writers racing to the same
@@ -857,47 +582,13 @@ class SnapshotBucketedStore(
     val tmp = new Path(dir,
       s"manifest-${m.version}-${java.util.UUID.randomUUID}.tmp")
     val out = f.create(tmp, true)
-    try {
-      val lines =
-        m.buckets.toSeq.sortBy(_._1).map { case (b, d) => s"bucket:$b=$d" } ++
-          m.logs.map(l => s"log:$l") ++
-          m.lastBatch.map(b => s"batch:$b").toSeq ++
-          Seq(s"statsver:${m.statsVersion}") ++
-          m.liveStats.toSeq.sortBy(_._1).collect {
-            case (d, cs) if cs.nonEmpty =>
-              s"stats:$d=" +
-                cs.map { case (c, mn, mx) => s"$c:$mn:$mx" }.mkString(",")
-          } ++
-          m.liveKeys.toSeq.sortBy(_._1).collect {
-            case (d, cs) if cs.nonEmpty =>
-              s"keys:$d=" +
-                cs.map { case (c, b) => s"$c:$b" }.mkString(",")
-          } ++
-          m.liveRows.toSeq.sortBy(_._1).map { case (d, n) => s"rows:$d=$n" } ++
-          m.liveBytes.toSeq.sortBy(_._1).map { case (d, n) => s"bytes:$d=$n" } ++
-          m.liveNdv.toSeq.sortBy(_._1).collect {
-            case (d, cs) if cs.nonEmpty =>
-              s"ndv:$d=" + cs.map { case (c, b) => s"$c:$b" }.mkString(",")
-          } ++
-          m.liveQsk.toSeq.sortBy(_._1).collect {
-            case (d, cs) if cs.nonEmpty =>
-              s"qsk:$d=" + cs.map { case (c, b) => s"$c:$b" }.mkString(",")
-          } ++
-          m.liveTombs.toSeq.sortBy(_._1).collect {
-            case (d, ts) if ts.nonEmpty =>
-              s"tomb:$d=" + ts.map { case (k, rel) => s"$k:$rel" }.mkString(",")
-          } ++
-          m.fanout.map(f => s"fanout:$f").toSeq ++
-          m.dropped.map(_.distinct).filter(_.nonEmpty)
-            .map(ds => s"drop:${ds.mkString(",")}").toSeq ++
-          // the commit wall-clock stamp, taken HERE (never carried from
-          // the Manifest the caller built) so every commit family gets
-          // TIMESTAMP AS OF resolution for free; resolution applies a
-          // monotone envelope, so a clock step backwards can never make
-          // a later version resolve earlier than its predecessor
-          Seq(s"ts:${System.currentTimeMillis()}")
-      out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    } finally out.close()
+    // the commit wall-clock stamp, taken HERE (never carried from the
+    // Manifest the caller built) so every commit family gets TIMESTAMP
+    // AS OF resolution for free; resolution applies a monotone
+    // envelope, so a clock step backwards can never make a later
+    // version resolve earlier than its predecessor
+    try out.write(ManifestCodec.render(m, System.currentTimeMillis()).getBytes("UTF-8"))
+    finally out.close()
     beforeCommit()
     val dst = new Path(dir, s"manifest-${m.version}.txt")
     // HDFS-style publish: rename refuses an existing target, so
@@ -992,17 +683,6 @@ class SnapshotBucketedStore(
   private def parsesAsDecimal(sv: String): Boolean =
     scala.util.Try(BigDecimal(sv)).isSuccess
 
-  /** Everything the manifest records about ONE generation dir:
-    * per-column min/max range stats plus per-column key membership
-    * Blooms (base64 of the serialized filter over xxhash64(column)).
-    * All of it comes out of ONE aggregate pass ([[MetaAggs]]). */
-  private final case class DirMeta(
-      stats: Seq[(String, String, String)],
-      keys: Seq[(String, String)],
-      rows: Long,
-      ndv: Seq[(String, String)],
-      qsk: Seq[(String, String)])
-
   /** Key columns eligible for a membership Bloom: equality probing
     * compares xxhash64 of the column's NATIVE value against xxhash64
     * of the probe literal, so any hashable type works — but the probe
@@ -1080,7 +760,7 @@ class SnapshotBucketedStore(
         val keys =
           if (rows == 0L) kCols.map(_ -> encodeBloom(emptyBloomBytes))
           else sketches("kb", kCols)
-        g -> DirMeta(stats, keys, rows, sketches("nv", nCols), sketches("qs", qCols))
+        g -> DirMeta(stats, keys, Some(rows), sketches("nv", nCols), sketches("qs", qCols))
       }
     }
   }
@@ -1135,15 +815,10 @@ class SnapshotBucketedStore(
     bos.toByteArray
   }
 
-  /** A manifest with per-dir metadata merged over its own (entries of
-    * superseded dirs drop at commit via the live-filtered maps). */
+  /** A manifest with per-dir metadata merged over its own
+    * ([[DirMeta.merged]]; records of superseded dirs drop at commit). */
   private def withMeta(m: Manifest, dm: Map[String, DirMeta]): Manifest =
-    m.copy(
-      stats = m.stats ++ dm.collect { case (d, x) if x.stats.nonEmpty => d -> x.stats },
-      keys = m.keys ++ dm.collect { case (d, x) if x.keys.nonEmpty => d -> x.keys },
-      rows = m.rows ++ dm.map { case (d, x) => d -> x.rows },
-      ndv = m.ndv ++ dm.collect { case (d, x) if x.ndv.nonEmpty => d -> x.ndv },
-      qsk = m.qsk ++ dm.collect { case (d, x) if x.qsk.nonEmpty => d -> x.qsk })
+    m.copy(dirs = m.dirs ++ dm.map { case (d, x) => d -> m.meta(d).merged(x) })
 
   /** Quantile-sketch eligibility: declared, present, and NUMERIC —
     * the sketch is over the double promotion, a visible cast
@@ -1159,26 +834,27 @@ class SnapshotBucketedStore(
     * unparseable form) also KEEP the dir: a stat we can't interpret
     * must never exclude data. */
   private def survives(
-      stats: Option[Seq[(String, String, String)]],
+      stats: Seq[(String, String, String)],
       column: String,
       lower: BigDecimal,
       upper: BigDecimal,
       legacyStats: Boolean = false): Boolean =
-    stats.flatMap(_.find(_._1 == column)) match {
-      case None => true
-      case Some((_, mn, mx)) =>
-        (scala.util.Try(BigDecimal(mn)), scala.util.Try(BigDecimal(mx))) match {
-          case (scala.util.Success(lo0), scala.util.Success(hi0)) =>
-            // pre-versioning (v1) manifests may hold float-shortest
-            // strings whose double promotion sits OUTSIDE the string
-            // value — widen the recorded range so those dirs are
-            // conservatively kept, never wrongly skipped
-            val eps = SnapshotBucketedStore.LegacyStatsEps
-            val lo = if (legacyStats) lo0 - lo0.abs * eps else lo0
-            val hi = if (legacyStats) hi0 + hi0.abs * eps else hi0
-            hi >= lower && lo <= upper
-          case _ => true
-        }
+    recordedRange(stats, column, legacyStats).forall { case (lo, hi) => hi >= lower && lo <= upper }
+
+  /** A recorded (min, max) as exact decimals; None when either fails
+    * to parse. */
+  private def rangeOf(stat: (String, String, String)): Option[(BigDecimal, BigDecimal)] =
+    scala.util.Try((BigDecimal(stat._2), BigDecimal(stat._3))).toOption
+
+  /** `column`'s recorded range in `stats`, if recorded and parseable.
+    * Pre-versioning (v1) manifests may hold float-shortest strings
+    * whose double promotion sits OUTSIDE the string value, so their
+    * range widens by [[SnapshotBucketedStore.LegacyStatsEps]]. */
+  private def recordedRange(stats: Seq[(String, String, String)], column: String,
+      legacyStats: Boolean): Option[(BigDecimal, BigDecimal)] =
+    stats.find(_._1 == column).flatMap(rangeOf).map { case (lo, hi) =>
+      val eps = if (legacyStats) SnapshotBucketedStore.LegacyStatsEps else BigDecimal(0)
+      (lo - lo.abs * eps, hi + hi.abs * eps)
     }
 
   /** Range-predicate read with MANIFEST-LEVEL data skipping: returns
@@ -1196,32 +872,14 @@ class SnapshotBucketedStore(
     * Float bounds are promoted to double for the skip comparison —
     * stats record float columns double-promoted (see [[statInput]]),
     * and a float's own shortest string can misorder against them. */
-  def readWhere(name: String, column: String, lower: Any, upper: Any): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    latestManifest(name).flatMap { m =>
-      val all = (m.buckets.values ++ m.logs).toSeq
-      if (all.isEmpty) return None
-      val lo = boundDecimal(lower); val hi = boundDecimal(upper)
-      val kept = all.filter(d => survives(m.stats.get(d), column, lo, hi,
-        m.statsVersion < SnapshotBucketedStore.CurrentStatsVersion))
-      val pred = col(column) >= lit(lower) && col(column) <= lit(upper)
-      if (kept.isEmpty)
-        // every dir provably disjoint: zero rows, schema preserved
-        readManifest(name, m).map(_.limit(0).filter(pred))
-      else Some(readDataDirs(name, m, kept).filter(pred))
-    }
-  }
+  def readWhere(name: String, column: String, lower: Any, upper: Any): Option[DataFrame] =
+    readWhereAll(name, Seq((column, lower, upper)))
 
   /** The skip metric behind [[readWhere]]: (dirs the predicate must
     * scan, total dirs in the snapshot) — the X75-style proof
     * surface: specs assert kept/total ≤ ¼ on a selective range. */
   def pruneStats(name: String, column: String, lower: Any, upper: Any): Option[(Int, Int)] =
-    latestManifest(name).map { m =>
-      val all = (m.buckets.values ++ m.logs).toSeq
-      val lo = boundDecimal(lower); val hi = boundDecimal(upper)
-      (all.count(d => survives(m.stats.get(d), column, lo, hi,
-        m.statsVersion < SnapshotBucketedStore.CurrentStatsVersion)), all.size)
-    }
+    pruneStatsAll(name, Seq((column, lower, upper)))
 
   /** CONJUNCTIVE multi-column data skipping: returns exactly
     * `read(name).filter(AND_i  col_i between lo_i and hi_i)`, pruning
@@ -1240,14 +898,11 @@ class SnapshotBucketedStore(
     latestManifest(name).flatMap { m =>
       val all = (m.buckets.values ++ m.logs).toSeq
       if (all.isEmpty) return None
-      val decs = preds.map { case (c, lo, hi) =>
-        (c, boundDecimal(lo), boundDecimal(hi)) }
-      val kept = all.filter(d =>
-        decs.forall { case (c, lo, hi) => survives(m.stats.get(d), c, lo, hi,
-          m.statsVersion < SnapshotBucketedStore.CurrentStatsVersion) })
+      val kept = keptByRanges(m, all, preds)
       val pred = preds.map { case (c, lo, hi) =>
         col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
       if (kept.isEmpty)
+        // every dir provably disjoint: zero rows, schema preserved
         readManifest(name, m).map(_.limit(0).filter(pred))
       else Some(readDataDirs(name, m, kept).filter(pred))
     }
@@ -1260,13 +915,17 @@ class SnapshotBucketedStore(
       preds: Seq[(String, Any, Any)]): Option[(Int, Int)] =
     latestManifest(name).map { m =>
       val all = (m.buckets.values ++ m.logs).toSeq
-      val decs = preds.map { case (c, lo, hi) =>
-        (c, boundDecimal(lo), boundDecimal(hi)) }
-      (all.count(d =>
-        decs.forall { case (c, lo, hi) => survives(m.stats.get(d), c, lo, hi,
-          m.statsVersion < SnapshotBucketedStore.CurrentStatsVersion) }),
-        all.size)
+      (keptByRanges(m, all, preds).size, all.size)
     }
+
+  /** The dirs of `all` whose recorded ranges survive every conjunct. */
+  private def keptByRanges(m: Manifest, all: Seq[String],
+      preds: Seq[(String, Any, Any)]): Seq[String] = {
+    val decs = preds.map { case (c, lo, hi) => (c, boundDecimal(lo), boundDecimal(hi)) }
+    val legacy = m.statsVersion < SnapshotBucketedStore.CurrentStatsVersion
+    all.filter(d => decs.forall { case (c, lo, hi) =>
+      survives(m.meta(d).stats, c, lo, hi, legacy) })
+  }
 
   /** Exact decimal of a range bound, promoting Float → Double first
     * so the comparison space matches the recorded (double-promoted)
@@ -1379,9 +1038,9 @@ class SnapshotBucketedStore(
     * base64 decode + deserialization per (hash, dir) pair. None
     * means no recorded (or undecodable) Bloom: keep the dir. */
   private def dirBloom(
-      keys: Option[Seq[(String, String)]],
+      keys: Seq[(String, String)],
       column: String): Option[org.apache.spark.util.sketch.BloomFilter] =
-    keys.flatMap(_.find(_._1 == column)).flatMap { case (_, b64) =>
+    keys.find(_._1 == column).flatMap { case (_, b64) =>
       try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(
           java.util.Base64.getDecoder.decode(b64))))
@@ -1408,7 +1067,7 @@ class SnapshotBucketedStore(
       // ([[typedKeyHashes]]); an uncastable/lossy probe keeps every dir
       val hOpt = columnTypeOf(name, m, column).flatMap(typedKeyHashes(value, _))
       val kept = hOpt match {
-        case Some(hs) => all.filter(d => dirBloom(m.keys.get(d), column)
+        case Some(hs) => all.filter(d => dirBloom(m.meta(d).keys, column)
           .forall(bf => hs.exists(bf.mightContainLong)))
         case None => all
       }
@@ -1426,7 +1085,7 @@ class SnapshotBucketedStore(
       val all = (m.buckets.values ++ m.logs).toSeq
       columnTypeOf(name, m, column).flatMap(typedKeyHashes(value, _)) match {
         case Some(hs) =>
-          (all.count(d => dirBloom(m.keys.get(d), column)
+          (all.count(d => dirBloom(m.meta(d).keys, column)
             .forall(bf => hs.exists(bf.mightContainLong))), all.size)
         case None => (all.size, all.size)
       }
@@ -1498,23 +1157,18 @@ class SnapshotBucketedStore(
         else eq match {
           case Some((c, v)) =>
             columnTypeOf(name, m, c).flatMap(typedKeyHashes(v, _)) match {
-              case Some(hs) => all.filter(d => dirBloom(m.keys.get(d), c)
+              case Some(hs) => all.filter(d => dirBloom(m.meta(d).keys, c)
                 .forall(bf => hs.exists(bf.mightContainLong)))
               case None => all
             }
           case None => inSet match {
             case Some((c, vs)) => keptForAny(name, m, all, c, vs)
-            case None if ranges.nonEmpty =>
-              val decs = ranges.map { case (c, lo, hi) =>
-                (c, boundDecimal(lo), boundDecimal(hi)) }
-              all.filter(d => decs.forall { case (c, lo, hi) =>
-                survives(m.stats.get(d), c, lo, hi,
-                  m.statsVersion < SnapshotBucketedStore.CurrentStatsVersion) })
+            case None if ranges.nonEmpty => keptByRanges(m, all, ranges)
             case None => all
           }
         }
       val rows =
-        if (kept.forall(m.rows.contains)) Some(kept.flatMap(m.rows.get).sum)
+        if (kept.forall(m.meta(_).rows.isDefined)) Some(kept.flatMap(m.meta(_).rows).sum)
         else None
       // byte sizing is a MANIFEST FOLD (X258): every commit records
       // its dirs' data-file bytes in the same rename, so plan-time
@@ -1522,16 +1176,7 @@ class SnapshotBucketedStore(
       // legacy dirs (written before bytes recording) fall back to a
       // listing — one ANALYZE (or any commit) backfills them for good.
       val bytes = kept.foldLeft(Option(0L)) { (acc, d) =>
-        acc.flatMap { sum =>
-          m.bytes.get(d).map(sum + _).orElse {
-            val p = new Path(resolveDir(name, d))
-            try Some(sum + fs(p).listStatus(p).filter { st =>
-              val n = st.getPath.getName
-              st.isFile && !n.startsWith(".") && !n.startsWith("_")
-            }.map(_.getLen).sum)
-            catch { case scala.util.control.NonFatal(_) => None }
-          }
-        }
+        acc.flatMap(sum => m.meta(d).bytes.orElse(listedBytes(name, d)).map(sum + _))
       }
       (rows, bytes)
     }
@@ -1547,12 +1192,27 @@ class SnapshotBucketedStore(
     * code) — callers fall back to a scan, the conservative degrade
     * every metadata tier here shares. */
   def metadataCount(name: String): Option[Long] =
-    latestManifest(name).flatMap { m =>
-      if (m.hasTombs) return None // physical counts over-count → scan
-      val live = (m.buckets.values ++ m.logs).toSeq
-      val counts = live.map(m.rows.get)
-      if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
+    latestManifest(name).flatMap(recordedRows)
+
+  /** Σ recorded rows of the live dirs; None while tombstones are
+    * outstanding (physical counts over-count) or a dir lacks a count. */
+  private def recordedRows(m: Manifest): Option[Long] =
+    if (m.hasTombs) None else everyLive(m)(_.rows).map(_.sum)
+
+  /** One recorded figure per live dir, the shared gate of the
+    * metadata-served aggregates: None when a dir that may hold rows
+    * records none (scan fallback); a dir recorded as zero rows
+    * contributes nothing. */
+  private def everyLive[T](m: Manifest)(of: DirMeta => Option[T]): Option[Seq[T]] = {
+    val per = (m.buckets.values ++ m.logs).toSeq.flatMap { d =>
+      val x = m.meta(d)
+      of(x) match {
+        case Some(t) => Seq(Some(t))
+        case None => if (x.rows.contains(0L)) Nil else Seq(None)
+      }
     }
+    if (per.exists(_.isEmpty)) None else Some(per.flatten)
+  }
 
   /** METADATA-ONLY MIN/MAX of a stats column — EXACT, not a bound:
     * per-dir min/max are computed from the data at commit (and
@@ -1572,27 +1232,10 @@ class SnapshotBucketedStore(
       if (m.statsVersion != SnapshotBucketedStore.CurrentStatsVersion) None
       else if (m.hasTombs) None // stats describe physical rows → scan
       else if (m.droppedNames.contains(column)) None // retired name (X259)
-      else {
-        val live = (m.buckets.values ++ m.logs).toSeq
-        // per dir: Some(Some(bounds)) usable, Some(None) blocks
-        // serving, None contributes nothing (provably empty dir)
-        val per: Seq[Option[(BigDecimal, BigDecimal)]] = live.flatMap { d =>
-          m.stats.get(d).flatMap(_.find(_._1 == column)) match {
-            case Some((_, mn, mx)) =>
-              (scala.util.Try(BigDecimal(mn)), scala.util.Try(BigDecimal(mx))) match {
-                case (scala.util.Success(a), scala.util.Success(b)) =>
-                  Seq(Some((a, b)))
-                case _ => Seq(None)
-              }
-            case None =>
-              if (m.rows.get(d).contains(0L)) Nil else Seq(None)
-          }
-        }
-        if (per.exists(_.isEmpty) || per.isEmpty) None
-        else {
-          val vals = per.flatten
-          Some((vals.map(_._1).min, vals.map(_._2).max))
-        }
+      else everyLive(m)(_.stats.find(_._1 == column)).filter(_.nonEmpty).flatMap { ss =>
+        // an unparseable recorded stat blocks serving
+        val rs = ss.flatMap(rangeOf)
+        if (rs.size < ss.size) None else Some((rs.map(_._1).min, rs.map(_._2).max))
       }
     }
 
@@ -1614,27 +1257,19 @@ class SnapshotBucketedStore(
     latestManifest(name).flatMap { m =>
       if (m.hasTombs) return None // sketches describe physical rows → scan
       if (m.droppedNames.contains(column)) return None // retired name (X259)
-      val live = (m.buckets.values ++ m.logs).toSeq
-      val per: Seq[Option[String]] = live.flatMap { d =>
-        m.ndv.get(d).flatMap(_.find(_._1 == column)) match {
-          case Some((_, b64)) => Seq(Some(b64))
-          case None =>
-            if (m.rows.get(d).contains(0L)) Nil else Seq(None)
+      everyLive(m)(_.ndv.find(_._1 == column).map(_._2)).map { per =>
+        if (per.isEmpty) 0L
+        else {
+          import org.apache.spark.sql.functions.{col, hll_sketch_estimate, hll_union_agg}
+          val sketches = per.map(b64 =>
+            org.apache.spark.sql.Row(java.util.Base64.getDecoder.decode(b64)))
+          val df = spark.createDataFrame(
+            spark.sparkContext.parallelize(sketches, 1),
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("s",
+                org.apache.spark.sql.types.BinaryType))))
+          df.agg(hll_sketch_estimate(hll_union_agg(col("s"), false))).head().getLong(0)
         }
-      }
-      if (per.exists(_.isEmpty)) None
-      else if (per.isEmpty) Some(0L)
-      else {
-        import org.apache.spark.sql.functions.{col, hll_sketch_estimate, hll_union_agg}
-        val sketches = per.flatten.map(b64 =>
-          org.apache.spark.sql.Row(java.util.Base64.getDecoder.decode(b64)))
-        val df = spark.createDataFrame(
-          spark.sparkContext.parallelize(sketches, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("s",
-              org.apache.spark.sql.types.BinaryType))))
-        Some(df.agg(hll_sketch_estimate(hll_union_agg(col("s"), false)))
-          .head().getLong(0))
       }
     }
 
@@ -1659,22 +1294,15 @@ class SnapshotBucketedStore(
             m.statsVersion != SnapshotBucketedStore.CurrentStatsVersion)
           return Map.empty
         val live = (m.buckets.values ++ m.logs).toSeq
-        val nonEmpty = live.filterNot(d => m.rows.get(d).contains(0L))
+        val nonEmpty = live.filterNot(d => m.meta(d).rows.contains(0L))
         def minMax(c: String): Option[(BigDecimal, BigDecimal)] = {
           val per = nonEmpty.map(d =>
-            m.stats.get(d).flatMap(_.find(_._1 == c)).flatMap {
-              case (_, mn, mx) =>
-                (scala.util.Try(BigDecimal(mn)).toOption,
-                  scala.util.Try(BigDecimal(mx)).toOption) match {
-                  case (Some(a), Some(b)) => Some((a, b))
-                  case _ => None
-                }
-            })
+            m.meta(d).stats.find(_._1 == c).flatMap(rangeOf))
           if (per.isEmpty || per.exists(_.isEmpty)) None
           else Some((per.flatten.map(_._1).min, per.flatten.map(_._2).max))
         }
         def ndv(c: String): Option[Long] = {
-          val per = nonEmpty.map(d => m.ndv.get(d).flatMap(_.find(_._1 == c)))
+          val per = nonEmpty.map(d => m.meta(d).ndv.find(_._1 == c))
           if (per.isEmpty || per.exists(_.isEmpty)) None
           else try {
             val u = new org.apache.datasketches.hll.Union(SnapshotBucketedStore.NdvLgK)
@@ -1735,17 +1363,8 @@ class SnapshotBucketedStore(
       column: String): Option[org.apache.datasketches.kll.KllDoublesSketch] = {
     if (m.hasTombs) return None // sketches describe physical rows → scan
     if (m.droppedNames.contains(column)) return None // retired name (X259)
-    val live = (m.buckets.values ++ m.logs).toSeq
-    val per: Seq[Option[String]] = live.flatMap { d =>
-      m.qsk.get(d).flatMap(_.find(_._1 == column)) match {
-        case Some((_, b64)) => Seq(Some(b64))
-        case None =>
-          if (m.rows.get(d).contains(0L)) Nil else Seq(None)
-      }
-    }
-    if (per.exists(_.isEmpty)) None
-    else graft.expr.KllSketchAgg.mergeImages(
-      per.flatten.sorted.map(java.util.Base64.getDecoder.decode))
+    everyLive(m)(_.qsk.find(_._1 == column).map(_._2)).flatMap(per =>
+      graft.expr.KllSketchAgg.mergeImages(per.sorted.map(java.util.Base64.getDecoder.decode)))
   }
 
   /** METADATA-ONLY approximate count of rows with `lo <= col <= hi`
@@ -1773,12 +1392,7 @@ class SnapshotBucketedStore(
       // "all-null column" (→ 0) there, which a tombstoned snapshot
       // must not masquerade as
       if (m.hasTombs) return None
-      val live = (m.buckets.values ++ m.logs).toSeq
-      val missing = live.exists { d =>
-        m.qsk.get(d).flatMap(_.find(_._1 == column)).isEmpty &&
-          !m.rows.get(d).contains(0L)
-      }
-      if (missing) None
+      if (everyLive(m)(_.qsk.find(_._1 == column)).isEmpty) None
       else qskMerged(m, column) match {
         case None => Some(0L) // no non-null values anywhere
         case Some(u) =>
@@ -1849,7 +1463,7 @@ class SnapshotBucketedStore(
     if (hashes.exists(_.isEmpty)) all
     else {
       val hs = hashes.flatten.flatten
-      all.filter(d => dirBloom(m.keys.get(d), column)
+      all.filter(d => dirBloom(m.meta(d).keys, column)
         .forall(bf => hs.exists(bf.mightContainLong)))
     }
   }
@@ -1963,14 +1577,10 @@ class SnapshotBucketedStore(
     val vs = snapshots(name)
     if (vs.isEmpty) return None
     val rows = vs.flatMap(manifestAt(name, _)).map { m =>
-      val live = (m.buckets.values ++ m.logs).toSeq
       // outstanding tombstones → recorded physical counts over-count
       // the logical snapshot: null, the shared honest degrade
-      val n: Option[Long] =
-        if (m.hasTombs || !live.forall(m.rows.contains)) None
-        else Some(live.map(m.rows).sum)
       org.apache.spark.sql.Row(m.version, m.lastBatch.map(Long.box).orNull,
-        m.buckets.size, m.logs.size, n.map(Long.box).orNull)
+        m.buckets.size, m.logs.size, recordedRows(m).map(Long.box).orNull)
     }
     import org.apache.spark.sql.types._
     Some(spark.createDataFrame(
@@ -1995,14 +1605,14 @@ class SnapshotBucketedStore(
       val rows =
         m.buckets.toSeq.sortBy(_._1).map { case (b, d) =>
           org.apache.spark.sql.Row(d, "bucket", Long.box(b),
-            m.rows.get(d).map(Long.box).orNull,
+            m.meta(d).rows.map(Long.box).orNull,
             tombsOf.getOrElse(d, Nil).map { case (k, rel) => s"$k:$rel" }
               .mkString(",") match { case "" => null; case s => s },
-            m.bytes.get(d).map(Long.box).orNull)
+            m.meta(d).bytes.map(Long.box).orNull)
         } ++
           m.logs.map(d => org.apache.spark.sql.Row(d, "log", null,
-            m.rows.get(d).map(Long.box).orNull, null,
-            m.bytes.get(d).map(Long.box).orNull))
+            m.meta(d).rows.map(Long.box).orNull, null,
+            m.meta(d).bytes.map(Long.box).orNull))
       import org.apache.spark.sql.types._
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1),
@@ -2071,14 +1681,10 @@ class SnapshotBucketedStore(
       throw new java.util.NoSuchElementException(
         s"$name has no snapshot v$version (vacuumed, or never committed)"))
     val cur = latestManifest(name).get // target existing ⇒ table exists
-    commit(name, Manifest(cur.version + 1, target.buckets, target.logs,
-      cur.lastBatch, target.stats, target.keys, target.statsVersion,
-      target.rows, target.ndv, target.qsk, fanout = target.fanout,
-      tombs =
-      // the restored version's OUTSTANDING tombstones restore with it —
-      // dropping them would silently resurrect merge-on-read deletes
-      target.tombs,
-      bytes = target.bytes,
+    // the restored version's per-dir records restore with it, its
+    // OUTSTANDING tombstones included — dropping them would silently
+    // resurrect merge-on-read deletes
+    commit(name, target.copy(version = cur.version + 1, lastBatch = cur.lastBatch,
       // the restored version's dropped-column marker restores WITH it
       // (explicit, even when empty): rolling back past a DROP COLUMN
       // resurrects the column — the marker is snapshot state like
@@ -2131,23 +1737,14 @@ class SnapshotBucketedStore(
     // it under a different key/bucket shape would be silently wrong
     val srcProps = tableProps(src)
     if (srcProps.nonEmpty) writeTableProps(dst, srcProps)
-    commit(dst, Manifest(0,
-      m.buckets.map { case (b, d) => b -> ref(d) },
-      m.logs.map(ref),
-      m.lastBatch,
-      m.liveStats.map { case (d, s) => ref(d) -> s },
-      m.liveKeys.map { case (d, s) => ref(d) -> s },
-      m.statsVersion,
-      m.liveRows.map { case (d, n) => ref(d) -> n },
-      m.liveNdv.map { case (d, s) => ref(d) -> s },
-      m.liveQsk.map { case (d, s) => ref(d) -> s },
+    commit(dst, m.copy(version = 0,
+      buckets = m.buckets.map { case (b, d) => b -> ref(d) },
+      logs = m.logs.map(ref),
       // outstanding tombstones clone BY REFERENCE like the data dirs
       // they mask — both sides of the (dir, sidecar) pair re-point at
       // the owner, and vacuum's borrow scan protects both
-      m.liveTombs.map { case (d, ts) =>
-        ref(d) -> ts.map { case (k, rel) => (k, ref(rel)) } },
-      fanout = m.fanout,
-      bytes = m.liveBytes.map { case (d, n) => ref(d) -> n },
+      dirs = m.liveDirs.map { case (d, x) =>
+        ref(d) -> x.copy(tombs = x.tombs.map { case (k, rel) => (k, ref(rel)) }) },
       // the clone shows the source's LOGICAL schema: its dropped-
       // column marker copies over (the borrowed dirs still carry the
       // bytes; the name suppression is what makes them one table)
@@ -2294,23 +1891,12 @@ class SnapshotBucketedStore(
     * float-string widening makes the test strictly harder (a widened
     * range inside the bounds implies the true range is). */
   private def engulfedBy(
-      stats: Option[Seq[(String, String, String)]],
+      stats: Seq[(String, String, String)],
       column: String,
       lower: BigDecimal,
       upper: BigDecimal,
       legacyStats: Boolean): Boolean =
-    stats.flatMap(_.find(_._1 == column)) match {
-      case None => false
-      case Some((_, mn, mx)) =>
-        (scala.util.Try(BigDecimal(mn)), scala.util.Try(BigDecimal(mx))) match {
-          case (scala.util.Success(lo0), scala.util.Success(hi0)) =>
-            val eps = SnapshotBucketedStore.LegacyStatsEps
-            val lo = if (legacyStats) lo0 - lo0.abs * eps else lo0
-            val hi = if (legacyStats) hi0 + hi0.abs * eps else hi0
-            lo >= lower && hi <= upper
-          case _ => false
-        }
-    }
+    recordedRange(stats, column, legacyStats).exists { case (lo, hi) => lo >= lower && hi <= upper }
 
   /** Range DELETE with manifest-level classification — the TTL /
     * retention sweep (`DELETE WHERE column BETWEEN lower AND upper`,
@@ -2353,8 +1939,8 @@ class SnapshotBucketedStore(
         m.buckets.toSeq.sortBy(_._1).map { case (b, d) => (Option(b), d) } ++
           m.logs.map(d => (None: Option[Long], d))
       def cls(d: String): Int =
-        if (!survives(m.stats.get(d), column, lo, hi, legacy)) 0
-        else if (engulfedBy(m.stats.get(d), column, lo, hi, legacy)) 1
+        if (!survives(m.meta(d).stats, column, lo, hi, legacy)) 0
+        else if (engulfedBy(m.meta(d).stats, column, lo, hi, legacy)) 1
         else 2
       val byCls = entries.groupBy(e => cls(e._2))
       val disjoint = byCls.getOrElse(0, Nil)
@@ -2400,7 +1986,7 @@ class SnapshotBucketedStore(
           case None => logList = logList.map(x => if (x == d) rel else x)
         }
       }
-      // entries of rewritten/dropped dirs drop via the live filters
+      // records of rewritten/dropped dirs drop at commit (live dirs only)
       commit(name, withMeta(m.copy(version = v, buckets = bucketMap, logs = logList,
         statsVersion = carriedStatsVersion(Some(m))), written.toMap))
       (dropped.size, rewrites.size, disjoint.size)
@@ -2730,7 +2316,7 @@ class SnapshotBucketedStore(
       .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val incomingBytes = incoming.queryExecution.optimizedPlan.stats.sizeInBytes
     val fits = clusterColumn.isEmpty && touched.forall { b =>
-      prev.flatMap(m => m.buckets.get(b).flatMap(m.bytes.get)).getOrElse(0L) +
+      prev.flatMap(m => m.buckets.get(b).flatMap(m.meta(_).bytes)).getOrElse(0L) +
         incomingBytes <= target
     }
     if (!fits)
@@ -3034,9 +2620,8 @@ class SnapshotBucketedStore(
     clusterColumn.foreach(cc => require(!cols.contains(cc),
       s"$name: '$cc' is the cluster column — physical bucket layout " +
         "hangs off it; rebuild() under a new shape instead"))
-    commit(name, Manifest(prev.version + 1, prev.buckets, prev.logs,
-      prev.lastBatch, prev.stats, prev.keys, carriedStatsVersion(Some(prev)),
-      prev.rows, prev.ndv, prev.qsk, prev.tombs, fanout = prev.fanout,
+    commit(name, prev.copy(version = prev.version + 1,
+      statsVersion = carriedStatsVersion(Some(prev)),
       dropped = Some((prev.droppedNames ++ cols).distinct)))
   }
 
@@ -3112,14 +2697,14 @@ class SnapshotBucketedStore(
         // skipping is exact, and keeps the conservative all-bucket path
         // from rewriting (and thereby dropping) zero-row schema
         // generations (addColumns) and empty batch-mark epochs
-        .filterNot { case (_, d) => m.rows.get(d).contains(0L) }
+        .filterNot { case (_, d) => m.meta(d).rows.contains(0L) }
     val touchedDirs =
       if (!typeSafe || !keyColumns.contains(keyCol)) bucketDirs
       else {
         val probe = keyFrame.limit(10001).collect().map(r => keyHash(r.get(0)))
         if (probe.length > 10000) bucketDirs
         else bucketDirs.filter { case (_, d) =>
-          dirBloom(m.keys.get(d), keyCol)
+          dirBloom(m.meta(d).keys, keyCol)
             .forall(bf => probe.exists(bf.mightContainLong))
         }
       }
@@ -3172,9 +2757,9 @@ class SnapshotBucketedStore(
     val touchedDirs =
       if (targetByKeyHash && keyColumns.contains(keyCol)) targeted
       else targeted.filter { case (_, d) =>
-        m.stats.getOrElse(d, Nil).exists(_._1 == keyCol) ||
-          m.keys.getOrElse(d, Nil).exists(_._1 == keyCol) ||
-          m.ndv.getOrElse(d, Nil).exists(_._1 == keyCol) ||
+        m.meta(d).stats.exists(_._1 == keyCol) ||
+          m.meta(d).keys.exists(_._1 == keyCol) ||
+          m.meta(d).ndv.exists(_._1 == keyCol) ||
           (try spark.read.format(fmt).load(resolveDir(name, d))
             .schema.fieldNames.contains(keyCol)
           catch { case scala.util.control.NonFatal(_) => true })
@@ -3183,12 +2768,10 @@ class SnapshotBucketedStore(
     val v = m.version + 1
     val rel = s"data/tomb-g$v"
     writeDir(keyFrame, new Path(tableDir(name), rel).toString)
-    val newTombs = m.tombs ++ touchedDirs.map { case (_, d) =>
-      d -> (m.tombs.getOrElse(d, Nil) :+ (keyCol -> rel))
-    }
-    commit(name, Manifest(v, m.buckets, m.logs, m.lastBatch, m.stats,
-      m.keys, carriedStatsVersion(Some(m)), m.rows, m.ndv, m.qsk, newTombs,
-      fanout = m.fanout))
+    commit(name, m.copy(version = v, statsVersion = carriedStatsVersion(Some(m)),
+      dirs = m.dirs ++ touchedDirs.map { case (_, d) =>
+        d -> m.meta(d).copy(tombs = m.meta(d).tombs :+ (keyCol -> rel))
+      }))
   }
 
   /** Physically apply every outstanding tombstone: each tombstoned
@@ -3220,7 +2803,7 @@ class SnapshotBucketedStore(
       // files: the non-partitioned writer leaves a footer-only file
       // for an empty frame (the same behavior GraftCatalog.createTable
       // relies on), which a file probe would mis-read as live data
-      if (dm.rows == 0L) {
+      if (dm.rows.contains(0L)) {
         f.delete(dst, true)
         buckets -= b
         None
@@ -3260,18 +2843,18 @@ class SnapshotBucketedStore(
         s"graft table '$name' does not exist"))
     val live = (m.buckets.values ++ m.logs).toSeq
     def covered(d: String): Boolean = {
-      val zeroRows = m.rows.get(d).contains(0L)
-      m.rows.contains(d) &&
-        (zeroRows || statsColumns.isEmpty ||
-          m.stats.get(d).exists(_.nonEmpty)) &&
-        (zeroRows || ndvColumns.isEmpty || m.ndv.get(d).exists(_.nonEmpty)) &&
-        (zeroRows || keyColumns.isEmpty || m.keys.get(d).exists(_.nonEmpty))
+      val x = m.meta(d)
+      val zeroRows = x.rows.contains(0L)
+      x.rows.isDefined &&
+        (zeroRows || statsColumns.isEmpty || x.stats.nonEmpty) &&
+        (zeroRows || ndvColumns.isEmpty || x.ndv.nonEmpty) &&
+        (zeroRows || keyColumns.isEmpty || x.keys.nonEmpty)
     }
     val targets = if (onlyMissing) live.filterNot(covered) else live
     // legacy dirs missing a recorded byte size (X258) make every scan
     // estimate pay a per-dir listing — a metadata-only commit here
     // backfills them (commit's bytesFilled lists each exactly once)
-    val bytesMissing = live.exists(d => !m.bytes.contains(d))
+    val bytesMissing = live.exists(m.meta(_).bytes.isEmpty)
     if (targets.isEmpty && !bytesMissing) return 0
     val computed = targets.map(d => d -> metaOf(readDirs(Seq(resolveDir(name, d))))).toMap
     val v = m.version + 1
@@ -3282,24 +2865,24 @@ class SnapshotBucketedStore(
     val statsVer =
       if (full) SnapshotBucketedStore.CurrentStatsVersion
       else carriedStatsVersion(Some(m))
-    // a FULL recompute REPLACES the per-dir maps rather than merging:
-    // a dir holding a legacy entry for a formerly-declared stats
+    // a FULL recompute REPLACES the per-dir stats, keys, rows, NDV and
+    // quantile sketches rather than merging (tombstones and byte sizes
+    // are kept): a dir holding a legacy entry for a formerly-declared stats
     // column (since redeclared; this recompute recorded nothing for
     // it) must not keep that stale entry under the upgraded version —
     // survives() would skip the LegacyStatsEps widening and could
     // wrongly prune the dir. A partial recompute merges (untargeted
     // dirs keep their entries) and the sticky version keeps the
     // read-side widening honest.
+    val base = m.copy(version = v, statsVersion = statsVer)
     val next = withMeta(
-      if (full) Manifest(v, m.buckets, m.logs, m.lastBatch, statsVersion = statsVer,
-        tombs = m.tombs, fanout = m.fanout)
-      else m.copy(version = v, statsVersion = statsVer), computed)
+      if (full) base.copy(dirs = m.dirs.map { case (d, x) =>
+        d -> DirMeta(bytes = x.bytes, tombs = x.tombs) })
+      else base, computed)
     // nothing recomputable changed (e.g. an all-null stats column that
     // can never record): skip the commit instead of minting identical
     // history forever — unless a byte backfill still needs to land
-    if (next.stats == m.stats && next.keys == m.keys && next.rows == m.rows &&
-        next.ndv == m.ndv && next.qsk == m.qsk && statsVer == m.statsVersion &&
-        !bytesMissing)
+    if (next.dirs == m.dirs && statsVer == m.statsVersion && !bytesMissing)
       return 0
     commit(name, next)
     targets.size
@@ -3325,7 +2908,7 @@ class SnapshotBucketedStore(
       // (file:/...), a bare string compare would mark everything dead
       val own = retained
         .flatMap(r => r.buckets.values ++ r.logs ++
-          r.tombs.values.flatten.map(_._2)) // tombstone sidecars are data too
+          r.dirs.values.flatMap(_.tombs).map(_._2)) // tombstone sidecars are data too
         .filterNot(_.startsWith("@")) // borrowed refs live under their owner
         .map(d => f.makeQualified(new Path(dir, d)).toString).toSet
       // dirs of THIS table still referenced by OTHER tables' on-disk
@@ -3341,7 +2924,7 @@ class SnapshotBucketedStore(
         .filterNot(_ == name)
         .flatMap(t => snapshots(t).flatMap(v => manifestAt(t, v)))
         .flatMap(r => r.buckets.values ++ r.logs ++
-          r.tombs.values.flatten.map(_._2)) // cloned tombstone refs too
+          r.dirs.values.flatMap(_.tombs).map(_._2)) // cloned tombstone refs too
         .filter(_.startsWith(marker))
         .map(d => f.makeQualified(new Path(dir, d.stripPrefix(marker))).toString)
         .toSet
@@ -3460,7 +3043,7 @@ class SnapshotBucketedStore(
       .filterNot(_ == name)
       .filter(t => snapshots(t).flatMap(v => manifestAt(t, v))
         .exists(m => (m.buckets.values ++ m.logs ++
-          m.tombs.values.flatten.map(_._2)).exists(_.startsWith(marker))))
+          m.dirs.values.flatMap(_.tombs).map(_._2)).exists(_.startsWith(marker))))
       .sorted
   }
 

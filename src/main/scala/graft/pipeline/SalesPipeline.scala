@@ -149,10 +149,10 @@ object SalesPipeline {
     * every table commit (log append, keyed upsert, summary replace)
     * is ONE manifest rename, so a crash anywhere mid-run leaves the
     * previous complete snapshot serving, never a mixed state. The
-    * plain-layout stores ([[graft.io.ParquetDirStore]],
-    * [[graft.io.BucketedParquetDirStore]]) remain constructible
-    * explicitly for Hive-partition-dir layout compatibility — their
-    * multi-rename swap windows are documented at the class. */
+    * plain-layout [[graft.io.ParquetDirStore]] remains constructible
+    * explicitly for plain-directory layout compatibility — its
+    * replace deletes the live dir before renaming the staged one in,
+    * so it has no single commit point. */
   def defaultStore(warehouseRoot: String)(
       implicit spark: SparkSession): TableStore =
     new graft.io.SnapshotBucketedStore(warehouseRoot)

@@ -7,7 +7,7 @@ class FormatStoreSpec extends SparkSpec {
 
   test("ORC store: roundtrip, append, replace, keyed upsert") {
     implicit val s = spark
-    val store = new OrcDirStore(tmpDir("graft_orc_"))
+    val store = new FileDirStore(tmpDir("graft_orc_"), "orc")
     val df = (0 until 50).map(i => (i.toLong, s"v$i")).toDF("uuid", "v")
     assert(store.read("t").isEmpty)
     store.append("t", df)
@@ -101,7 +101,7 @@ class FormatStoreSpec extends SparkSpec {
   test("pipeline runs unchanged on an ORC warehouse") {
     implicit val s = spark
     val root = tmpDir("graft_orc_pipe_")
-    val store = new OrcDirStore(s"$root/warehouse")
+    val store = new FileDirStore(s"$root/warehouse", "orc")
     val raw = s"$root/in.csv"
     graft.TestSales.writeCsv(raw, 15)
     val result = new graft.pipeline.SalesPipeline(

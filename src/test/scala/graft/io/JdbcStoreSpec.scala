@@ -215,4 +215,21 @@ class JdbcStoreSpec extends SparkSpec {
     val perPart = df.rdd.mapPartitions(it => Iterator(it.size)).collect()
     assert(perPart.forall(_ > 0), s"empty slice in ${perPart.toSeq}")
   }
+
+  test("JdbcStore partitioned-read option plumbing") {
+    implicit val s = spark
+    val props = new java.util.Properties()
+    props.setProperty("user", "u")
+    val store = new JdbcStore(
+      "jdbc:mysql://db:3306/sales", props,
+      Some(JdbcPartitioning("uuid", 0L, 1000000000L, 32)))
+    val opts = store.readOptions("sales_tgt")
+    assert(opts("partitionColumn") == "uuid")
+    assert(opts("numPartitions") == "32")
+    assert(opts("lowerBound") == "0" && opts("upperBound") == "1000000000")
+    assert(opts("dbtable") == "sales_tgt" && opts("user") == "u")
+    // unpartitioned store omits the slicing options entirely
+    val plain = new JdbcStore("jdbc:mysql://db:3306/sales", props)
+    assert(!plain.readOptions("sales").contains("partitionColumn"))
+  }
 }

@@ -53,19 +53,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("*(1)") && p.contains("HashAggregate"), p.take(800))
   }
 
-  test("bucketed table scans prune partitions on the bucket key") {
-    val root = tmpDir("graft_prune_")
-    implicit val s = spark
-    import s.implicits._
-    val store = new graft.io.BucketedParquetDirStore(root, numBuckets = 8)
-    store.upsert("t", (0 until 100).map(i => (i.toLong, s"v$i")).toDF("uuid", "v"), "uuid")
-    val pruned = spark.read.parquet(s"$root/t")
-      .filter(col("graft_bucket").isin(1L, 2L))
-    val p = pruned.queryExecution.executedPlan.toString
-    val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("graft_bucket"), p.take(800))
-  }
-
   test("q53 six-table join: one shuffle join only, dims broadcast, date filter pushed") {
     val df = Catalog.localSupplierVolume.run(spark, sf)
     df.collect() // final adaptive plan (runtime broadcast decisions included)

@@ -4,9 +4,11 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-class CorpusIntakeSpec extends SparkSpec {
+// top-level: a case class nested in the spec makes its encoder fall
+// back from generated code to the interpreter
+case class IntakeDoc(doc_id: Long, ts: Long, text: String)
 
-  private case class Doc(doc_id: Long, ts: Long, text: String)
+class CorpusIntakeSpec extends SparkSpec {
 
   private val B = 1600000000000L // keep event times above the initial watermark
   private val good =
@@ -20,14 +22,14 @@ class CorpusIntakeSpec extends SparkSpec {
     val root = tmpDir("graft_intake_")
     implicit val s = spark
     val store = new graft.io.SnapshotBucketedStore(s"$root/corpus", numBuckets = 4)
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
 
     val docs = input.toDF().withColumn("ts", timestamp_millis(col("ts")))
     input.addData(
-      Doc(1L, B, good),
-      Doc(2L, B + 1000, good),                       // exact content dup → dropped on intake
-      Doc(3L, B + 2000, s"$good contact admin@site.example.org now"),
-      Doc(4L, B + 3000, "too short"),                // quality gate
+      IntakeDoc(1L, B, good),
+      IntakeDoc(2L, B + 1000, good),                       // exact content dup → dropped on intake
+      IntakeDoc(3L, B + 2000, s"$good contact admin@site.example.org now"),
+      IntakeDoc(4L, B + 3000, "too short"),                // quality gate
     )
     CorpusIntake.drainTo(docs, store, "corpus", s"$root/ckpt")
 
@@ -39,8 +41,8 @@ class CorpusIntakeSpec extends SparkSpec {
     // second drain: replayed content (at-least-once transport) within
     // the watermark is dropped; genuinely new content lands
     input.addData(
-      Doc(5L, B + 4000, good),                       // same content resent → dropped
-      Doc(6L, B + 5000, good.replace("fox", "wolf")))
+      IntakeDoc(5L, B + 4000, good),                       // same content resent → dropped
+      IntakeDoc(6L, B + 5000, good.replace("fox", "wolf")))
     CorpusIntake.drainTo(docs, store, "corpus", s"$root/ckpt")
     val ids = store.read("corpus").get.select("doc_id")
       .as[Long].collect().sorted
@@ -54,18 +56,18 @@ class CorpusIntakeSpec extends SparkSpec {
     val root = tmpDir("graft_intake_html_")
     implicit val s = spark
     val store = new graft.io.SnapshotBucketedStore(s"$root/corpus", numBuckets = 4)
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().withColumn("ts", timestamp_millis(col("ts")))
     input.addData(
-      Doc(1L, B, s"<html><body><p>$good</p></body></html>"),
+      IntakeDoc(1L, B, s"<html><body><p>$good</p></body></html>"),
       // same PROSE, different chrome → same post-strip fingerprint →
       // dropped, which raw-byte fingerprinting could never do
-      Doc(2L, B + 1000, s"<div class='x'><span>$good</span><br/></div>"),
+      IntakeDoc(2L, B + 1000, s"<div class='x'><span>$good</span><br/></div>"),
       // entities decode before the PII scrub sees the address
-      Doc(3L, B + 2000,
+      IntakeDoc(3L, B + 2000,
         s"<p>$good contact admin&#39;s desk at admin@site.example.org</p>"),
       // nav chrome only → stripped to junk → quality gate drops it
-      Doc(4L, B + 3000, "<nav><a href='/'>home</a><a href='/x'>x</a></nav>"),
+      IntakeDoc(4L, B + 3000, "<nav><a href='/'>home</a><a href='/x'>x</a></nav>"),
     )
     CorpusIntake.drainTo(docs, store, "corpus", s"$root/ckpt",
       stripMarkup = true)
@@ -103,26 +105,26 @@ class CorpusIntakeSpec extends SparkSpec {
     // baseline gap: once the watermark passes a fingerprint's window,
     // its state evicts and the plain drain re-admits the re-crawl
     val plainStore = new graft.io.SnapshotBucketedStore(s"$root/plain", numBuckets = 4)
-    val p = MemoryStream[Doc]
+    val p = MemoryStream[IntakeDoc]
     val pDocs = p.toDF().withColumn("ts", timestamp_millis(col("ts")))
-    p.addData(Doc(1L, B, good))
+    p.addData(IntakeDoc(1L, B, good))
     CorpusIntake.drainTo(pDocs, plainStore, "c", s"$root/pckpt")
-    p.addData(Doc(2L, B + gap, filler))
+    p.addData(IntakeDoc(2L, B + gap, filler))
     CorpusIntake.drainTo(pDocs, plainStore, "c", s"$root/pckpt")
-    p.addData(Doc(3L, B + gap + 1000, good)) // same content, days later
+    p.addData(IntakeDoc(3L, B + gap + 1000, good)) // same content, days later
     CorpusIntake.drainTo(pDocs, plainStore, "c", s"$root/pckpt")
     assert(plainStore.read("c").get.count() == 3L,
       "watermark dedup alone must miss the late re-crawl (the gap this drain closes)")
 
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().withColumn("ts", timestamp_millis(col("ts")))
-    input.addData(Doc(1L, B, good))
+    input.addData(IntakeDoc(1L, B, good))
     CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
-    input.addData(Doc(2L, B + gap, filler))
+    input.addData(IntakeDoc(2L, B + gap, filler))
     CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
     input.addData(
-      Doc(3L, B + gap + 1000, good),                          // late re-crawl -> historic drop
-      Doc(4L, B + gap + 2000, good.replace("fox", "lynx")))   // genuinely new
+      IntakeDoc(3L, B + gap + 1000, good),                          // late re-crawl -> historic drop
+      IntakeDoc(4L, B + gap + 2000, good.replace("fox", "lynx")))   // genuinely new
     CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
     val ids = store.read("c").get.select("doc_id").as[Long].collect().sorted
     assert(ids.toSeq == Seq(1L, 2L, 4L), ids.mkString(","))
@@ -135,9 +137,9 @@ class CorpusIntakeSpec extends SparkSpec {
     val root = tmpDir("graft_intake_fp_")
     implicit val s = spark
     val store = new graft.io.SnapshotBucketedStore(s"$root/corpus", numBuckets = 4)
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().withColumn("ts", timestamp_millis(col("ts")))
-    input.addData(Doc(1L, B, good), Doc(2L, B + 1000, good.replace("fox", "wolf")))
+    input.addData(IntakeDoc(1L, B, good), IntakeDoc(2L, B + 1000, good.replace("fox", "wolf")))
     CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
 
     // the fingerprint is a persisted column, stamped post-scrub
@@ -158,7 +160,7 @@ class CorpusIntakeSpec extends SparkSpec {
     assert(plan.contains("ReadSchema: struct<_fp:bigint>"), plan)
 
     // and the dedup semantics hold on the stamped table
-    input.addData(Doc(3L, B + 2000, good), Doc(4L, B + 3000, good.replace("fox", "lynx")))
+    input.addData(IntakeDoc(3L, B + 2000, good), IntakeDoc(4L, B + 3000, good.replace("fox", "lynx")))
     CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
     val ids = store.read("c").get.select("doc_id").as[Long].collect().sorted
     assert(ids.toSeq == Seq(1L, 2L, 4L), ids.mkString(","))
@@ -178,21 +180,21 @@ class CorpusIntakeSpec extends SparkSpec {
     // decision identity
     val plain = new graft.io.SnapshotBucketedStore(s"$root/plain", numBuckets = 4)
     def variant(i: Int) = good.replace("fox", s"beast$i")
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().withColumn("ts", timestamp_millis(col("ts")))
-    val pinput = MemoryStream[Doc]
+    val pinput = MemoryStream[IntakeDoc]
     val pdocs = pinput.toDF().withColumn("ts", timestamp_millis(col("ts")))
     // several generations of disjoint content
     (0 until 4).foreach { g =>
-      input.addData(Doc(10L * g, B + g * 1000, variant(g)))
+      input.addData(IntakeDoc(10L * g, B + g * 1000, variant(g)))
       CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
-      pinput.addData(Doc(10L * g, B + g * 1000, variant(g)))
+      pinput.addData(IntakeDoc(10L * g, B + g * 1000, variant(g)))
       CorpusIntake.drainDedupedTo(pdocs, plain, "c", s"$root/pckpt")
     }
     // the probing batch: one historic dup (variant 1) + one new doc
-    input.addData(Doc(100L, B + 9000, variant(1)), Doc(101L, B + 9500, variant(99)))
+    input.addData(IntakeDoc(100L, B + 9000, variant(1)), IntakeDoc(101L, B + 9500, variant(99)))
     CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
-    pinput.addData(Doc(100L, B + 9000, variant(1)), Doc(101L, B + 9500, variant(99)))
+    pinput.addData(IntakeDoc(100L, B + 9000, variant(1)), IntakeDoc(101L, B + 9500, variant(99)))
     CorpusIntake.drainDedupedTo(pdocs, plain, "c", s"$root/pckpt")
     // identical decisions with the prefilter on and off
     val ids = store.read("c").get.select("doc_id").as[Long].collect().sorted.toSeq
@@ -234,10 +236,10 @@ class CorpusIntakeSpec extends SparkSpec {
     // draining onto the legacy table must NOT create a mixed schema:
     // appended rows stay unstamped, and the historic dedup still drops
     // the re-crawl via the derive-from-text path
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().withColumn("ts", timestamp_millis(col("ts")))
-    input.addData(Doc(2L, B + 1000, good),                         // historic dup
-      Doc(3L, B + 2000, good.replace("fox", "crow")))
+    input.addData(IntakeDoc(2L, B + 1000, good),                         // historic dup
+      IntakeDoc(3L, B + 2000, good.replace("fox", "crow")))
     CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
     val afterDrain = store.read("c").get
     assert(!afterDrain.columns.contains(CorpusIntake.FpCol),
@@ -252,8 +254,8 @@ class CorpusIntakeSpec extends SparkSpec {
       .split("== Initial Plan ==").head
     assert(plan.contains("ReadSchema: struct<_fp:bigint>"), plan)
     // post-migration drains append stamped rows and keep dedup exact
-    input.addData(Doc(4L, B + 3000, good),                         // historic dup again
-      Doc(5L, B + 4000, good.replace("fox", "hawk")))
+    input.addData(IntakeDoc(4L, B + 3000, good),                         // historic dup again
+      IntakeDoc(5L, B + 4000, good.replace("fox", "hawk")))
     CorpusIntake.drainDedupedTo(docs, store, "c", s"$root/ckpt")
     val ids = store.read("c").get.select("doc_id").as[Long].collect().sorted
     assert(ids.toSeq == Seq(1L, 3L, 5L), ids.mkString(","))
@@ -277,18 +279,18 @@ class CorpusIntakeSpec extends SparkSpec {
     val (freq, shared) = CorpusStats.fitCorpusStats(ref, "doc_id", "text")
 
     val all = Seq(
-      Doc(1L, B, good.replace("river", "stone")),
-      Doc(2L, B + 1000, Seq.fill(30)("buy now").mkString(" ")), // junk
-      Doc(3L, B + 2000, good.replace("dog", "cat")),
-      Doc(4L, B + 3000, Seq.fill(40)("zz").mkString(" ")),      // junk
+      IntakeDoc(1L, B, good.replace("river", "stone")),
+      IntakeDoc(2L, B + 1000, Seq.fill(30)("buy now").mkString(" ")), // junk
+      IntakeDoc(3L, B + 2000, good.replace("dog", "cat")),
+      IntakeDoc(4L, B + 3000, Seq.fill(40)("zz").mkString(" ")),      // junk
       // the edit must sit mid-text (position ≥ 12): a head-of-text
       // edit leaves most 8-windows shared with the reference and the
       // boilerplate penalty alone sinks the doc — itself correct
       // gate behavior
-      Doc(5L, B + 4000, good.replace("while", "whilst")),
+      IntakeDoc(5L, B + 4000, good.replace("while", "whilst")),
     )
     val (half1, half2) = all.splitAt(2)
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().select(col("doc_id"), col("text"))
     input.addData(half1: _*)
     CorpusIntake.drainScoredTo(docs, store, "corpus", freq, shared, s"$root/ckpt")
@@ -345,14 +347,14 @@ class CorpusIntakeSpec extends SparkSpec {
       Seq("dup_token_frac", "top_token_frac", "shared_frac"), "y")
 
     val all = Seq(
-      Doc(1L, B, good.replace("river", "stone")),
-      Doc(2L, B + 1000, Seq.fill(30)("buy now").mkString(" ")),
-      Doc(3L, B + 2000, good.replace("dog", "cat")),
-      Doc(4L, B + 3000, Seq.fill(40)("zz").mkString(" ")),
-      Doc(5L, B + 4000, good.replace("while", "whilst")),
+      IntakeDoc(1L, B, good.replace("river", "stone")),
+      IntakeDoc(2L, B + 1000, Seq.fill(30)("buy now").mkString(" ")),
+      IntakeDoc(3L, B + 2000, good.replace("dog", "cat")),
+      IntakeDoc(4L, B + 3000, Seq.fill(40)("zz").mkString(" ")),
+      IntakeDoc(5L, B + 4000, good.replace("while", "whilst")),
     )
     val (half1, half2) = all.splitAt(2)
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().select(col("doc_id"), col("text"))
     input.addData(half1: _*)
     CorpusIntake.drainFitGatedTo(docs, store, "corpus", freq, shared, fit,
@@ -397,14 +399,14 @@ class CorpusIntakeSpec extends SparkSpec {
       minSeedCount = 2L, iters = 2).localCheckpoint()
 
     val all = Seq(
-      Doc(1L, B, good.replace("river", "stone")),
-      Doc(2L, B + 1000, Seq.fill(12)("09183 475 2206").mkString(" ")),
-      Doc(3L, B + 2000, good.replace("dog", "cat")),
-      Doc(4L, B + 3000, Seq.fill(15)("$$##@@ %%&&").mkString(" ")),
-      Doc(5L, B + 4000, good),
+      IntakeDoc(1L, B, good.replace("river", "stone")),
+      IntakeDoc(2L, B + 1000, Seq.fill(12)("09183 475 2206").mkString(" ")),
+      IntakeDoc(3L, B + 2000, good.replace("dog", "cat")),
+      IntakeDoc(4L, B + 3000, Seq.fill(15)("$$##@@ %%&&").mkString(" ")),
+      IntakeDoc(5L, B + 4000, good),
     )
     val (half1, half2) = all.splitAt(2)
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().select(col("doc_id"), col("text"))
     input.addData(half1: _*)
     CorpusIntake.drainTokenGatedTo(docs, store, "corpus", model,
@@ -439,14 +441,14 @@ class CorpusIntakeSpec extends SparkSpec {
     val terms = Seq("badger", "rm -rf", "lazy dog")
 
     val all = Seq(
-      Doc(1L, B, good), // contains 'lazy dog' → quarantined
-      Doc(2L, B + 1000, "a clean document about rivers and stones"),
-      Doc(3L, B + 2000, "echo hi; rm -rf / # badger badger"), // two terms
-      Doc(4L, B + 3000, "another clean one"),
-      Doc(5L, B + 4000, "the badgers dig") // 'badger' inside 'badgers' hits
+      IntakeDoc(1L, B, good), // contains 'lazy dog' → quarantined
+      IntakeDoc(2L, B + 1000, "a clean document about rivers and stones"),
+      IntakeDoc(3L, B + 2000, "echo hi; rm -rf / # badger badger"), // two terms
+      IntakeDoc(4L, B + 3000, "another clean one"),
+      IntakeDoc(5L, B + 4000, "the badgers dig") // 'badger' inside 'badgers' hits
     )
     val (half1, half2) = all.splitAt(2)
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().select(col("doc_id"), col("text"))
     input.addData(half1: _*)
     CorpusIntake.drainScreenedTo(docs, store, "corpus", "blocked", terms,
@@ -493,8 +495,8 @@ class CorpusIntakeSpec extends SparkSpec {
 
     // batch 1: same law as the reference → lands
     val okDocs = (0 until 300).map(i =>
-      Doc(i.toLong, B + i, "w " * (20 + rnd.nextInt(30))))
-    val input = MemoryStream[Doc]
+      IntakeDoc(i.toLong, B + i, "w " * (20 + rnd.nextInt(30))))
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().select(col("doc_id"), col("text"))
     def drain(): Unit = CorpusIntake.drainDriftGatedTo(docs, store,
       "corpus", "drifted", refImg, length(col("text")), maxPsi = 0.25,
@@ -506,7 +508,7 @@ class CorpusIntakeSpec extends SparkSpec {
 
     // batch 2: upstream broke — everything arrives 10× longer → diverts
     val longDocs = (1000 until 1200).map(i =>
-      Doc(i.toLong, B + i, "w " * (300 + rnd.nextInt(100))))
+      IntakeDoc(i.toLong, B + i, "w " * (300 + rnd.nextInt(100))))
     input.addData(longDocs: _*)
     drain()
     assert(store.read("corpus").get.count() == 300,
@@ -542,13 +544,13 @@ class CorpusIntakeSpec extends SparkSpec {
     val junkA = Seq.fill(25)("qqq www eee").mkString(" ")
     val junkB = (1 to 60).map(i => s"tok$i").mkString(" ")
     val all = Seq(
-      Doc(1L, B, good),                                // in-distribution
-      Doc(2L, B + 1000, junkA),                        // unseen-token junk
-      Doc(3L, B + 2000, good.replace("dog", "cat")),   // near-reference
-      Doc(4L, B + 3000, junkB),                        // all-unseen junk
+      IntakeDoc(1L, B, good),                                // in-distribution
+      IntakeDoc(2L, B + 1000, junkA),                        // unseen-token junk
+      IntakeDoc(3L, B + 2000, good.replace("dog", "cat")),   // near-reference
+      IntakeDoc(4L, B + 3000, junkB),                        // all-unseen junk
     )
     val (half1, half2) = all.splitAt(2)
-    val input = MemoryStream[Doc]
+    val input = MemoryStream[IntakeDoc]
     val docs = input.toDF().select(col("doc_id"), col("text"))
     input.addData(half1: _*)
     CorpusIntake.drainLmBandTo(docs, store, "corpus", model,
