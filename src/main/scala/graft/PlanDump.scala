@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.cpus
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "scratch")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")

@@ -13,6 +13,9 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     graft.queries.Catalog.oracleSql
 
+  /** Cores (`local[n]`, n shuffle partitions) of the dev mains' sessions. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   /** The queries a dev-time `SPARK_GRAFT_ONLY=q51,q54` list selects,
     * sorted by name (unset → all). An
     * entry names a query in full or by its number: `q5` selects

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Rounds
 import TextOps._
 
 /** Deduplication operators for LLM training corpora: exact content
@@ -237,25 +238,56 @@ object Dedup {
     * Near-dup/boilerplate clusters are hub-shaped with tiny diameters,
     * so small `iters` (3-5) is exact in practice; for adversarial
     * long-chain graphs the O(log n)-round large-star/small-star
-    * variant wins, at the cost of data-dependent convergence. For
-    * large `iters`, checkpoint every ~5 rounds to cut the growing
-    * plan lineage.
+    * variant wins, at the cost of data-dependent convergence. The
+    * rounds add no lineage cut, so the result is one plan.
     *
     * Returns (id, component) for every node incident to an edge. */
   def connectedComponents(pairs: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 1, "at least one propagation round")
+    minLabelRounds(pairs, iters, None).state.withColumnRenamed("lbl", "component")
+  }
+
+  /** Production variant of [[connectedComponents]]: propagate until a
+    * FIXED POINT instead of a fixed round count — exact for any
+    * component diameter up to `maxRounds` (the seed round included),
+    * at the price of a data-dependent round count (so no SQL oracle
+    * can mirror it; the fixed-round form remains the cross-engine-
+    * checked one, and DedupSpec pins their agreement whenever iters
+    * covers the diameter). A budget that runs out before a round
+    * changes no label raises: the labels would not be components.
+    *
+    * Every round runs one driver-side action anyway (the convergence
+    * count against the previous round), so labels are cut per round:
+    * the action materializes the round AND truncates the otherwise
+    * quadratically regrowing plan lineage. Still O(diameter) rounds;
+    * for adversarial long chains the O(log n) star-contraction family
+    * applies, but near-dup/boilerplate graphs converge in a handful
+    * of rounds. */
+  def connectedComponentsConverged(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
+    val r = minLabelRounds(pairs, maxRounds,
+      Some(Rounds.labelsUnchanged(1, "id", "lbl")))
+    require(r.settled,
+      s"min-label propagation did not converge within $maxRounds rounds; " +
+        "raise maxRounds (rounds grow with the largest component diameter)")
+    r.state.withColumnRenamed("lbl", "component")
+  }
+
+  /** The body of [[connectedComponents]] and
+    * [[connectedComponentsConverged]]: `rounds` rounds of min-label
+    * propagation, the first of them the seed. */
+  private def minLabelRounds(pairs: DataFrame, rounds: Int,
+      stop: Option[Rounds.Stop[DataFrame]]): Rounds.Result = {
     // `adj` is referenced by every propagation round (and the label
     // seed); when `pairs` is itself an expensive pipeline (the LSH
     // chain in cleanCC/q39), an unshared subtree would re-run it once
     // per round. localCheckpoint materializes the pair derivation ONCE
     // and truncates its lineage, so every round's plan starts from the
     // cached adjacency blocks instead of re-embedding (and re-codegen-
-    // compiling) the full upstream subtree — the same discipline
-    // [[connectedComponentsConverged]] already applies. Values are
-    // unchanged (only lineage is), so the fixed-round SQL oracle still
-    // mirrors this exactly. The repartition first: `dst` is the join
-    // key each round probes, so the checkpointed blocks arrive
-    // pre-partitioned for every round's join.
-    require(iters >= 1, "at least one propagation round")
+    // compiling) the full upstream subtree. Values are unchanged (only
+    // lineage is), so the fixed-round SQL oracle still mirrors this
+    // exactly. The repartition first: `dst` is the join key each round
+    // probes, so the checkpointed blocks arrive pre-partitioned for
+    // every round's join.
     val adj = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .repartition(col("dst"))
@@ -264,62 +296,17 @@ object Dedup {
     // propagation: lbl(v) = min(v, min of v's neighbors) is ONE
     // aggregate over the adjacency — no separate distinct-nodes pass
     // or label join for the first round.
-    var labels = adj.groupBy(col("src"))
+    val seed = adj.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("lbl"))
       .withColumnRenamed("src", "id")
-    for (_ <- 1 until iters) {
-      val fromNeighbors = adj
-        .join(labels.withColumnsRenamed(Map("id" -> "dst", "lbl" -> "l")), "dst")
-        .select(col("src").as("id"), col("l"))
-      labels = labels.select(col("id"), col("lbl").as("l"))
-        .union(fromNeighbors)
-        .groupBy(col("id"))
-        .agg(min(col("l")).as("lbl"))
-    }
-    labels.withColumnRenamed("lbl", "component")
-  }
-
-  /** Production variant of [[connectedComponents]]: propagate until a
-    * FIXED POINT instead of a fixed round count — exact for any
-    * component diameter, at the price of a data-dependent round count
-    * (so no SQL oracle can mirror it; the fixed-round form remains the
-    * cross-engine-checked one, and ConvergedCcSpec pins their
-    * agreement whenever iters covers the diameter).
-    *
-    * Each round runs one driver-side action anyway (the convergence
-    * count), so labels are `localCheckpoint`ed per round: the action
-    * materializes the round AND truncates the otherwise quadratically
-    * regrowing plan lineage — the standard discipline for iterative
-    * DataFrame algorithms. Still O(diameter) rounds; for adversarial
-    * long chains the O(log n) star-contraction family applies, but
-    * near-dup/boilerplate graphs converge in a handful of rounds. */
-  def connectedComponentsConverged(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val adj = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(col("dst"))
-    var labels = adj.groupBy(col("src"))
-      .agg(least(col("src"), min(col("dst"))).as("lbl"))
-      .withColumnRenamed("src", "id")
-      .localCheckpoint()
-    var round = 1
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val next = labels.select(col("id"), col("lbl").as("l"))
+    Rounds.run(seed, rounds - 1, cutEachRound = false, stop) { labels =>
+      labels.select(col("id"), col("lbl").as("l"))
         .union(
           adj.join(labels.withColumnsRenamed(Map("id" -> "dst", "lbl" -> "l")), "dst")
             .select(col("src").as("id"), col("l")))
         .groupBy(col("id"))
         .agg(min(col("l")).as("lbl"))
-        .localCheckpoint()
-      val changed = next.as("n")
-        .join(labels.as("p"), col("n.id") === col("p.id"))
-        .filter(col("n.lbl") =!= col("p.lbl"))
-        .count()
-      labels = next
-      round += 1
-      converged = changed == 0
     }
-    labels.withColumnRenamed("lbl", "component")
   }
 
   /** O(log n)-ROUND connected components by alternating large-star /
@@ -353,11 +340,25 @@ object Dedup {
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
-    var edges = canon(pairs.select(col("id_a").as("a"), col("id_b").as("b")))
+    // Fixpoint ⟺ the edge set is a star forest, checked directly
+    // (cheaper than edge-set equality): with canonical u > v
+    // orientation, stars mean every child u carries exactly ONE
+    // edge and no child is also a root. Both LS and SS are identity
+    // on such a set (the center's min IS its root), and any chain
+    // or double-parent violates one of the two conditions. The
+    // canonical orientation also makes each root its component's
+    // min: every leaf exceeds its root by construction.
+    val starForest = Rounds.Stop(1, sinceCheck = false) { (_, next) =>
+      val doubleParent = next.groupBy(col("u")).count()
+        .filter(col("count") > 1).head(1).nonEmpty
+      !doubleParent && next.as("a")
+        .join(next.select(col("u").as("v")).distinct().as("b"), Seq("v"), "left_semi")
+        .head(1).isEmpty
+    }
+    val init = canon(pairs.select(col("id_a").as("a"), col("id_b").as("b")))
       .localCheckpoint()
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
+    val r = Rounds.run(init, maxRounds, cutEachRound = true,
+        Some(starForest)) { edges =>
       // large-star over both orientations
       val bidir = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
       val lsMin = bidir.groupBy(col("u")).agg(min(col("v")).as("mn"))
@@ -368,41 +369,24 @@ object Dedup {
       val afterLarge = canon(large)
       // small-star over parent-oriented (u > v) edges
       val ssMin = afterLarge.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = canon(
+      canon(
         afterLarge.join(ssMin, "u")
           .filter(col("v") =!= col("m"))
           .select(col("v").as("a"), col("m").as("b"))
           .union(ssMin.select(col("u").as("a"), col("m").as("b"))))
-        .localCheckpoint()
-      // Fixpoint ⟺ the edge set is a star forest, checked directly
-      // (cheaper than edge-set equality): with canonical u > v
-      // orientation, stars mean every child u carries exactly ONE
-      // edge and no child is also a root. Both LS and SS are identity
-      // on such a set (the center's min IS its root), and any chain
-      // or double-parent violates one of the two conditions. The
-      // canonical orientation also makes each root its component's
-      // min: every leaf exceeds its root by construction.
-      val doubleParent = next.groupBy(col("u")).count()
-        .filter(col("count") > 1).head(1).nonEmpty
-      val chained = !doubleParent && next.as("a")
-        .join(next.select(col("u").as("v")).distinct().as("b"), Seq("v"), "left_semi")
-        .head(1).nonEmpty
-      converged = !doubleParent && !chained
-      edges = next
-      round += 1
     }
     // labels derived from a NON-star edge set would be wrong (multiple
     // or non-minimal components) — an exhausted budget must fail loud,
     // not return garbage; the O(log n) bound makes the default budget
     // generous for any real graph
-    require(converged,
+    require(r.settled,
       s"star-contraction did not converge within $maxRounds rounds; " +
         "raise maxRounds (rounds grow ~log of the largest component)")
     // stars: u -> component v; roots label themselves
-    val labels = edges.select(col("u").as("id"), col("v").as("component"))
-      .union(edges.select(col("v").as("id"), col("v").as("component")))
+    val labels = r.state.select(col("u").as("id"), col("v").as("component"))
+      .union(r.state.select(col("v").as("id"), col("v").as("component")))
       .distinct()
-    (labels, round)
+    (labels, r.rounds)
   }
 
   /** Star edges of the passage-sharing graph: for every passage window

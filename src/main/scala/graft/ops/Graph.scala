@@ -70,36 +70,8 @@ object Graph {
       assumeNoDangling: Boolean = false,
   ): DataFrame = {
     require(iterations >= 1, s"need at least one iteration, got $iterations")
-    require(dampingNum > 0 && dampingNum < dampingDen,
-      s"damping must be in (0,1): $dampingNum/$dampingDen")
-    // a null endpoint would form a phantom node (and never join); a
-    // non-positive weight would zero or negate its edge's
-    // contribution — both carry no rank mass, dropped up front (the
-    // X120 non-positive-weight rule)
-    val e = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(weightCol) > 0L)
-      .select(
-        col(srcCol).as("graft_src_"),
-        col(dstCol).as("graft_dst_"),
-        col(weightCol).cast("long").as("graft_w_"))
-    val out = e.groupBy(col("graft_src_"))
-      .agg(sum(col("graft_w_")).as("graft_outw_"))
-    // weight share of each edge is iteration-invariant — join it once
-    val withOut = e.join(out, Seq("graft_src_"))
-    val nodes = e.select(col("graft_src_").as("node"))
-      .union(e.select(col("graft_dst_").as("node")))
-      .distinct()
-
-    // internal name graft_r_ — `rank` would shadow the SQL function
-    // inside expr() and is reserved in other engines' replays
-    var ranks = nodes.withColumn("graft_r_", lit(scale))
-    val base = (scale * (dampingDen - dampingNum)) / dampingDen
-    for (_ <- 1 to iterations) {
-      ranks = step(withOut, nodes, ranks, base, dampingNum, dampingDen,
-        assumeNoDangling)
-    }
-    ranks.select(col("node"), col("graft_r_").as("rank"))
+    rankRounds(edges, srcCol, dstCol, weightCol, iterations, None,
+      dampingNum, dampingDen, scale, assumeNoDangling)
   }
 
   /** CONVERGENCE-STOP [[pageRank]] for production-length runs: iterate
@@ -142,45 +114,79 @@ object Graph {
   ): DataFrame = {
     require(maxIterations >= 1, s"need at least one iteration, got $maxIterations")
     require(epsilon >= 0L, s"epsilon must be >= 0, got $epsilon")
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
+    val stop = Rounds.Stop(checkEvery, sinceCheck = true) { (last, ranks) =>
+      val d = ranks.as("n")
+        .join(last.as("o"), col("n.node") === col("o.node"))
+        .agg(max(abs(col("n.graft_r_") - col("o.graft_r_"))))
+        .head().get(0)
+      // null max ⇔ empty graph: vacuously converged
+      d == null || d.asInstanceOf[Long] <= epsilon
+    }
+    rankRounds(edges, srcCol, dstCol, weightCol, maxIterations, Some(stop),
+      dampingNum, dampingDen, scale, assumeNoDangling)
+  }
+
+  /** The body of [[pageRank]] and [[pageRankConverged]]. Per round:
+    * ranks ⋈ edges on src, contribution groupBy-sum on dst, damping
+    * applied integrally; no per-round cut, so the fixed form is one
+    * lineage (the q98 replay). */
+  private def rankRounds(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String, rounds: Int, stop: Option[Rounds.Stop[DataFrame]],
+      dampingNum: Long, dampingDen: Long, scale: Long,
+      assumeNoDangling: Boolean): DataFrame = {
     require(dampingNum > 0 && dampingNum < dampingDen,
       s"damping must be in (0,1): $dampingNum/$dampingDen")
-    val e = edges
+    val e = rankEdges(edges, srcCol, dstCol, weightCol)
+    // weight share of each edge is iteration-invariant — join it once
+    val withOut = withOutWeight(e)
+    val nodes = nodesOf(e)
+    val base = (scale * (dampingDen - dampingNum)) / dampingDen
+    // internal name graft_r_ — `rank` would shadow the SQL function
+    // inside expr() and is reserved in other engines' replays
+    Rounds.run(nodes.withColumn("graft_r_", lit(scale)), rounds,
+        cutEachRound = false, stop) { ranks =>
+      val inbound = withOut
+        .join(ranks, col("graft_src_") === col("node"))
+        .select(col("graft_dst_").as("node"),
+          expr("(graft_r_ * graft_w_) div graft_outw_").as("graft_c_"))
+        .groupBy(col("node"))
+        .agg(sum(col("graft_c_")).as("graft_in_"))
+      val joined =
+        if (assumeNoDangling) inbound
+        else nodes.join(inbound, Seq("node"), "left")
+      joined
+        .select(col("node"),
+          (lit(base) +
+            expr(s"($dampingNum * coalesce(graft_in_, 0L)) div $dampingDen")
+          ).as("graft_r_"))
+    }.state.select(col("node"), col("graft_r_").as("rank"))
+  }
+
+  /** PageRank's edge prep: a null endpoint would form a phantom node
+    * (and never join); a non-positive weight would zero or negate its
+    * edge's contribution — both carry no rank mass, dropped up front
+    * (the X120 non-positive-weight rule). */
+  private def rankEdges(
+      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String): DataFrame =
+    edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(weightCol) > 0L)
       .select(
         col(srcCol).as("graft_src_"),
         col(dstCol).as("graft_dst_"),
         col(weightCol).cast("long").as("graft_w_"))
-    val out = e.groupBy(col("graft_src_"))
-      .agg(sum(col("graft_w_")).as("graft_outw_"))
-    val withOut = e.join(out, Seq("graft_src_"))
-    val nodes = e.select(col("graft_src_").as("node"))
+
+  /** Each rank edge with its source's total out-weight `graft_outw_`. */
+  private def withOutWeight(e: DataFrame): DataFrame =
+    e.join(
+      e.groupBy(col("graft_src_")).agg(sum(col("graft_w_")).as("graft_outw_")),
+      Seq("graft_src_"))
+
+  /** Every node on either side of a rank edge. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("graft_src_").as("node"))
       .union(e.select(col("graft_dst_").as("node")))
       .distinct()
-    val base = (scale * (dampingDen - dampingNum)) / dampingDen
-
-    var ranks = nodes.withColumn("graft_r_", lit(scale)).localCheckpoint()
-    var last = ranks
-    var it = 0
-    var converged = false
-    while (it < maxIterations && !converged) {
-      ranks = step(withOut, nodes, ranks, base, dampingNum, dampingDen,
-        assumeNoDangling)
-      it += 1
-      if (it % checkEvery == 0 || it == maxIterations) {
-        ranks = ranks.localCheckpoint() // eager: lineage cut HERE
-        val d = ranks.as("n")
-          .join(last.as("o"), col("n.node") === col("o.node"))
-          .agg(max(abs(col("n.graft_r_") - col("o.graft_r_"))))
-          .head().get(0)
-        // null max ⇔ empty graph: vacuously converged
-        converged = d == null || d.asInstanceOf[Long] <= epsilon
-        last = ranks
-      }
-    }
-    ranks.select(col("node"), col("graft_r_").as("rank"))
-  }
 
   /** PERSONALIZED PageRank (topic-sensitive PageRank, Haveliwala
     * 2002): the teleport mass lands only on `seeds` instead of
@@ -242,19 +248,9 @@ object Graph {
     // (optimization round 22 — the edge table was read twice per
     // iteration). Every other consumer (nodes, the seed semi-join)
     // derives from the same checkpoint.
-    val e0 = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(weightCol) > 0L)
-      .select(
-        col(srcCol).as("graft_src_"),
-        col(dstCol).as("graft_dst_"),
-        col(weightCol).cast("long").as("graft_w_"))
-    val out = e0.groupBy(col("graft_src_"))
-      .agg(sum(col("graft_w_")).as("graft_outw_"))
-    val withOut = e0.join(out, Seq("graft_src_")).localCheckpoint()
-    val nodes = withOut.select(col("graft_src_").as("node"))
-      .union(withOut.select(col("graft_dst_").as("node")))
-      .distinct()
+    val withOut =
+      withOutWeight(rankEdges(edges, srcCol, dstCol, weightCol)).localCheckpoint()
+    val nodes = nodesOf(withOut)
     val seedSet = seeds.toDF("node").na.drop().distinct()
       .join(nodes, Seq("node"), "left_semi")
     val sCount = seedSet.count()
@@ -264,7 +260,7 @@ object Graph {
     val seedBase = ((dampingDen - dampingNum) * scale) / (dampingDen * sCount)
     val flagged = nodes
       .join(seedSet.withColumn("graft_seed_", lit(1)), Seq("node"), "left")
-    var ranks = flagged
+    val ranks0 = flagged
       .select(col("node"),
         when(col("graft_seed_").isNotNull, lit(seedInit))
           .otherwise(lit(0L)).as("graft_r_"))
@@ -276,7 +272,7 @@ object Graph {
     // non-seed zero-inbound nodes may drop: an absent row and an
     // explicit rank 0 contribute identically to the next round
     val seedZero = seedSet.select(col("node"), lit(0L).as("graft_c_"))
-    for (_ <- 1 to iterations) {
+    Rounds.run(ranks0, iterations, cutEachRound = false) { ranks =>
       val contribs = withOut
         .join(ranks, col("graft_src_") === col("node"))
         .select(col("graft_dst_").as("node"),
@@ -288,13 +284,12 @@ object Graph {
       val joined =
         if (assumeNoDangling) inbound.join(broadcast(seedFlag), Seq("node"), "left")
         else flagged.join(inbound, Seq("node"), "left")
-      ranks = joined
+      joined
         .select(col("node"),
           (when(col("graft_seed_").isNotNull, lit(seedBase)).otherwise(lit(0L)) +
             expr(s"($dampingNum * coalesce(graft_in_, 0L)) div $dampingDen")
           ).as("graft_r_"))
-    }
-    ranks.select(col("node"), col("graft_r_").as("rank"))
+    }.state.select(col("node"), col("graft_r_").as("rank"))
   }
 
   /** Per-node triangle counts (the clustering-coefficient numerator —
@@ -388,28 +383,24 @@ object Graph {
       k: Int,
       iterations: Int,
   ): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
     require(iterations >= 1, s"need at least one round, got $iterations")
-    // each round references the edge frame FOUR times (twice in the
-    // degree union, twice in the semi-joins): left unchecked the plan
-    // DAG grows 4^rounds and analysis itself blows up — so the edge
-    // set is eagerly localCheckpoint'ed per round, the X34 CC rule
-    // (results unchanged; the peel is already an action-per-round
-    // shape in every published BSP formulation)
-    var e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    for (_ <- 1 to iterations) e = peelRound(e, k).localCheckpoint()
-    degreesOf(e)
+    peel(edges, srcCol, dstCol, k, iterations, None)
   }
 
   /** CONVERGENCE-STOP [[kCore]]: peel until a round removes no edge
-    * (the true k-core by monotonicity), up to `maxIterations`, with
-    * an eager localCheckpoint every `checkEvery` rounds cutting the
-    * two-joins-per-round lineage — the [[pageRankConverged]] pattern;
-    * the edge count per check is one scalar driver hop. Worst-case
-    * round count is the graph's degeneracy ordering depth (a path
-    * graph peels one layer per round), which is why production runs
-    * want the checkpointing form. Bit-identical to [[kCore]] at
-    * matched round counts (spec-pinned). */
+    * (the true k-core by monotonicity), up to `maxIterations`; the
+    * edge count every `checkEvery` rounds is one scalar driver hop,
+    * and the peel is monotone, so an equal count over a whole check
+    * window means no round in it removed anything. Worst-case round
+    * count is the graph's degeneracy ordering depth (a path graph
+    * peels one layer per round). Bit-identical to [[kCore]] at
+    * matched round counts (spec-pinned).
+    *
+    * A run that reaches `maxIterations` returns the partial peel it
+    * has — a 12-node path at k = 2 with `maxIterations = 2` keeps 8
+    * nodes, though its 2-core is empty. Telling an unsettled last
+    * window from a settled one would take one more job, so the bound
+    * is not checked: size `maxIterations` past the peel depth. */
   def kCoreConverged(
       edges: DataFrame,
       srcCol: String,
@@ -418,27 +409,23 @@ object Graph {
       maxIterations: Int = 100,
       checkEvery: Int = 4,
   ): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
     require(maxIterations >= 1, s"need at least one round, got $maxIterations")
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
-    var e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    var last = e.count()
-    var it = 0
-    var converged = last == 0L
-    while (it < maxIterations && !converged) {
-      // per-round checkpoint for the same 4^rounds plan-DAG reason as
-      // [[kCore]]; checkEvery only paces the COUNT driver hops
-      e = peelRound(e, k).localCheckpoint()
-      it += 1
-      if (it % checkEvery == 0 || it == maxIterations) {
-        val n = e.count()
-        // monotone shrink ⇒ equal count over a full check window means
-        // no round in it removed anything — fixpoint reached
-        converged = n == last
-        last = n
-      }
-    }
-    degreesOf(e)
+    peel(edges, srcCol, dstCol, k, maxIterations,
+      Some(new Rounds.Stop[Long](checkEvery, sinceCheck = true, _.count(), _ == _)))
+  }
+
+  /** The body of [[kCore]] and [[kCoreConverged]]. Each round
+    * references the edge frame FOUR times (twice in the degree union,
+    * twice in the semi-joins): left unchecked the plan DAG grows
+    * 4^rounds and analysis itself blows up — so the edge set is cut
+    * every round, the X34 CC rule (results unchanged; the peel is
+    * already an action-per-round shape in every published BSP
+    * formulation). */
+  private def peel(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
+      rounds: Int, stop: Option[Rounds.Stop[Long]]): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
+    degreesOf(Rounds.run(e, rounds, cutEachRound = true, stop)(peelRound(_, k)).state)
   }
 
   /** COMMUNITY DETECTION by synchronous label propagation (Raghavan
@@ -477,13 +464,7 @@ object Graph {
       iterations: Int,
   ): DataFrame = {
     require(iterations >= 1, s"need at least one round, got $iterations")
-    val adj = adjacencyOf(canonicalEdges(edges, srcCol, dstCol))
-      .localCheckpoint()
-    var labels = adj.select(col("node")).distinct()
-      .withColumn("graft_lbl_", col("node"))
-    for (_ <- 1 to iterations)
-      labels = lpaRound(adj, labels).localCheckpoint()
-    labels.select(col("node"), col("graft_lbl_").as("label"))
+    propagateLabels(edges, srcCol, dstCol, iterations, None)
   }
 
   /** CONVERGENCE-STOP [[labelPropagation]]: iterate until a round
@@ -491,10 +472,10 @@ object Graph {
     * per `checkEvery` rounds off checkpointed tables), up to
     * `maxIterations`. Equal-count checks would be wrong here (labels
     * can churn at constant node count), so the test is an actual
-    * old⋈new diff; synchronous-LPA 2-cycles surface as a never-zero
-    * diff and stop at `maxIterations` — the documented bound. Bit-
-    * identical to [[labelPropagation]] at matched round counts
-    * (spec-pinned). */
+    * old⋈new diff against the PREVIOUS ROUND; synchronous-LPA
+    * 2-cycles surface as a never-zero diff and stop at
+    * `maxIterations` — the documented bound. Bit-identical to
+    * [[labelPropagation]] at matched round counts (spec-pinned). */
   def labelPropagationConverged(
       edges: DataFrame,
       srcCol: String,
@@ -503,27 +484,19 @@ object Graph {
       checkEvery: Int = 2,
   ): DataFrame = {
     require(maxIterations >= 1, s"need at least one round, got $maxIterations")
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
+    propagateLabels(edges, srcCol, dstCol, maxIterations,
+      Some(Rounds.labelsUnchanged(checkEvery, "node", "graft_lbl_")))
+  }
+
+  /** The body of [[labelPropagation]] and [[labelPropagationConverged]]. */
+  private def propagateLabels(edges: DataFrame, srcCol: String, dstCol: String,
+      rounds: Int, stop: Option[Rounds.Stop[DataFrame]]): DataFrame = {
     val adj = adjacencyOf(canonicalEdges(edges, srcCol, dstCol))
       .localCheckpoint()
-    var labels = adj.select(col("node")).distinct()
+    val labels = adj.select(col("node")).distinct()
       .withColumn("graft_lbl_", col("node"))
-      .localCheckpoint()
-    var it = 0
-    var converged = false
-    while (it < maxIterations && !converged) {
-      val next = lpaRound(adj, labels).localCheckpoint()
-      it += 1
-      if (it % checkEvery == 0 || it == maxIterations) {
-        val changed = next.as("n")
-          .join(labels.as("o"), col("n.node") === col("o.node"))
-          .filter(col("n.graft_lbl_") =!= col("o.graft_lbl_"))
-          .count()
-        converged = changed == 0L
-      }
-      labels = next
-    }
-    labels.select(col("node"), col("graft_lbl_").as("label"))
+    Rounds.run(labels, rounds, cutEachRound = true, stop)(lpaRound(adj, _))
+      .state.select(col("node"), col("graft_lbl_").as("label"))
   }
 
   /** Both directions of a canonical edge set: (node, nbr) per
@@ -571,33 +544,6 @@ object Graph {
       .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
   }
 
-  /** One PageRank iteration: ranks ⋈ edges on src, contribution
-    * groupBy-sum on dst, damping applied integrally. */
-  private def step(
-      withOut: DataFrame,
-      nodes: DataFrame,
-      ranks: DataFrame,
-      base: Long,
-      dampingNum: Long,
-      dampingDen: Long,
-      assumeNoDangling: Boolean,
-  ): DataFrame = {
-    val inbound = withOut
-      .join(ranks, col("graft_src_") === col("node"))
-      .select(col("graft_dst_").as("node"),
-        expr("(graft_r_ * graft_w_) div graft_outw_").as("graft_c_"))
-      .groupBy(col("node"))
-      .agg(sum(col("graft_c_")).as("graft_in_"))
-    val joined =
-      if (assumeNoDangling) inbound
-      else nodes.join(inbound, Seq("node"), "left")
-    joined
-      .select(col("node"),
-        (lit(base) +
-          expr(s"($dampingNum * coalesce(graft_in_, 0L)) div $dampingDen")
-        ).as("graft_r_"))
-  }
-
   /** MODULARITY-GREEDY community refinement — a deterministic
     * synchronous Louvain-style move phase (Blondel 2008's local-move
     * step, parallelized the way distributed Louvain implementations
@@ -632,43 +578,46 @@ object Graph {
       nodeCol: String,
       labelCol: String,
       rounds: Int = 1,
-  ): DataFrame = {
-    require(rounds >= 1, s"need at least one round, got $rounds")
-    val e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    val adj = adjacencyOf(e).localCheckpoint()
-    val degs = degreesOf(e).localCheckpoint()
-    val m = e.count()
-    var asg = assignment
-      .select(col(nodeCol).as("node"), col(labelCol).as("graft_lbl_"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds)
-      asg = moveRound(adj, degs, asg, m).localCheckpoint()
-    asg.select(col("node"), col("graft_lbl_").as(labelCol))
-  }
+  ): DataFrame =
+    refine(weightedEdges(edges, srcCol, dstCol, None),
+      assignment, nodeCol, labelCol, rounds)
 
-  /** Plan-audit window into [[moveRound]] (PlanAuditSpec q131). */
+  /** Plan-audit window into [[weightedMoveRound]] on unit weights,
+    * the unweighted surface of [[refineCommunities]] (PlanAuditSpec
+    * q131). */
   private[graft] def moveRoundForAudit(
-      adj: DataFrame, degs: DataFrame, asg: DataFrame, m: Long): DataFrame =
-    moveRound(adj, degs, asg, m)
-
-  /** One synchronous move round of [[refineCommunities]] — the
-    * unweighted surface, delegating to [[weightedMoveRound]] with
-    * unit weights (identical values: Σ1 = count). */
-  private def moveRound(
       adj: DataFrame, degs: DataFrame, asg: DataFrame, m: Long): DataFrame =
     weightedMoveRound(adj.withColumn("graft_w_", lit(1L)), degs, asg, m)
 
   /** One synchronous move round over a WEIGHTED graph — the form the
     * Louvain coarsening levels run, where contracted super-edges
     * carry integer multiplicities: identical exact-integer gain
-    * arithmetic with k_uc = Σ w(u, c) and d/D/m weighted. `adj` is
-    * (node, nbr, graft_w_) WITHOUT self-loops (a self-loop moves with
-    * its node — its contribution to e_c is the same in every
-    * community it could join, so it cancels in ΔQ and must NOT count
-    * toward k_uc); `degs` carries full weighted degrees INCLUDING
-    * 2×self-loop weight; `m` is the total edge weight (self-loops
-    * once). */
+    * arithmetic with k_uc = Σ w(u, c) and d/D/m weighted (unit
+    * weights give the unweighted sweep: Σ1 = count). Every node moves
+    * to its best strictly-improving neighbor community from
+    * [[gainLedger]], ties to the smallest label. */
   private def weightedMoveRound(
+      adj: DataFrame, degs: DataFrame, asg: DataFrame, m: Long): DataFrame = {
+    val best = gainLedger(adj, degs, asg, m)
+      .groupBy(col("node"))
+      .agg(min(struct((-col("graft_dq_")).as("ndq"), col("graft_b_").as("b")))
+        .as("graft_best_"))
+      .select(col("node"), col("graft_best_.b").as("graft_mv_"))
+    asg.join(best, Seq("node"), "left")
+      .select(col("node"),
+        coalesce(col("graft_mv_"), col("graft_lbl_")).as("graft_lbl_"))
+  }
+
+  /** The move-gain ledger of the community operators: every
+    * strictly-improving candidate move (node, graft_b_, graft_dq_)
+    * against the frozen assignment `asg`, with its exact ΔQ_num.
+    * `adj` is (node, nbr, graft_w_) WITHOUT self-loops (a self-loop
+    * moves with its node — its contribution to e_c is the same in
+    * every community it could join, so it cancels in ΔQ and must NOT
+    * count toward k_uc); `degs` carries full weighted degrees
+    * INCLUDING 2×self-loop weight; `m` is the total edge weight
+    * (self-loops once). */
+  private def gainLedger(
       adj: DataFrame, degs: DataFrame, asg: DataFrame, m: Long): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // k_uc: edge weight from u into community c (u's membership frozen)
@@ -693,7 +642,7 @@ object Graph {
         Seq("node", "graft_a_"), "left")
       .withColumn("graft_kua_", coalesce(col("graft_kua_"), lit(0L)))
     // candidate moves: neighbor communities b ≠ a, exact ΔQ_num
-    val cand = own
+    own
       .join(k, Seq("node"))
       .filter(col("graft_c_") =!= col("graft_a_"))
       .join(
@@ -705,15 +654,7 @@ object Graph {
           lit(2L).cast(dec) * col("graft_du_") *
             (col("graft_Db_") - col("graft_Da_") + col("graft_du_")))
           .cast(dec).as("graft_dq_"))
-    val best = cand
       .filter(col("graft_dq_") > 0)
-      .groupBy(col("node"))
-      .agg(min(struct((-col("graft_dq_")).as("ndq"), col("graft_b_").as("b")))
-        .as("graft_best_"))
-      .select(col("node"), col("graft_best_.b").as("graft_mv_"))
-    asg.join(best, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("graft_mv_"), col("graft_lbl_")).as("graft_lbl_"))
   }
 
   /** COMMUNITY-GRAPH CONTRACTION — the coarsening phase that turns
@@ -749,15 +690,12 @@ object Graph {
   }
 
   /** Weighted degrees: Σ incident edge weight, self-loops counting
-    * TWICE (the A_uu = 2·w convention that keeps Σd = 2m). */
-  private def weightedDegreesOf(e: DataFrame): DataFrame = {
-    val ns = e.filter(col("a") =!= col("b"))
-    ns.select(col("a").as("node"), col("graft_w_"))
-      .unionByName(ns.select(col("b").as("node"), col("graft_w_")))
-      .unionByName(e.filter(col("a") === col("b"))
-        .select(col("a").as("node"), (col("graft_w_") * 2L).as("graft_w_")))
+    * TWICE (the A_uu = 2·w convention that keeps Σd = 2m) — a
+    * self-loop row is one incidence through each endpoint column. */
+  private def weightedDegreesOf(e: DataFrame): DataFrame =
+    e.select(col("a").as("node"), col("graft_w_"))
+      .unionByName(e.select(col("b").as("node"), col("graft_w_")))
       .groupBy("node").agg(sum(col("graft_w_")).as("deg"))
-  }
 
   /** [[refineCommunities]] over a WEIGHTED graph — the form a
     * co-occurrence graph actually wants: an edge's multiplicity (how
@@ -779,86 +717,74 @@ object Graph {
       nodeCol: String,
       labelCol: String,
       rounds: Int = 1,
-  ): DataFrame = {
+  ): DataFrame =
+    refine(weightedEdges(edges, srcCol, dstCol, Some(weightCol)),
+      assignment, nodeCol, labelCol, rounds)
+
+  /** The body of [[refineCommunities]] and [[refineCommunitiesWeighted]]
+    * over the [[weightedEdges]] `e`. */
+  private def refine(e: DataFrame, assignment: DataFrame, nodeCol: String,
+      labelCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need at least one round, got $rounds")
-    val e = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol) && col(weightCol).cast("long") > 0L)
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"),
-        col(weightCol).cast("long").as("graft_w_"))
-      .groupBy(col("a"), col("b"))
-      .agg(sum(col("graft_w_")).as("graft_w_"))
-      .localCheckpoint()
-    val adj = weightedAdjacencyOf(e).localCheckpoint()
-    val degs = weightedDegreesOf(e).localCheckpoint()
-    val m = e.agg(sum(col("graft_w_"))).head().getLong(0)
-    var asg = assignment
+    val (adj, degs, m) = moveInputs(e.localCheckpoint())
+    val asg = assignment
       .select(col(nodeCol).as("node"), col(labelCol).as("graft_lbl_"))
       .localCheckpoint()
-    for (_ <- 1 to rounds)
-      asg = weightedMoveRound(adj, degs, asg, m).localCheckpoint()
-    asg.select(col("node"), col("graft_lbl_").as(labelCol))
+    Rounds.run(asg, rounds, cutEachRound = true)(weightedMoveRound(adj, degs, _, m))
+      .state.select(col("node"), col("graft_lbl_").as(labelCol))
   }
 
-  /** One EXACT GREEDY move on a weighted graph: compute every
-    * candidate move's exact integer gain (the [[weightedMoveRound]]
-    * ledger), apply ONLY the single globally-best strictly-positive
-    * one (ΔQ desc, then node asc, then target label asc — total
-    * deterministic order). Returns None at a fixed point. Modularity
-    * STRICTLY increases with every accepted move by construction —
-    * the property the synchronous sweep trades away (simultaneous
-    * moves judged against the frozen state can jointly DECREASE Q:
-    * on a symmetric ring every super-node ties toward the smallest
-    * label and non-adjacent communities merge). One 1-row driver hop
-    * per move — the coarse levels where this runs have ≤ |communities|
+  /** The community operators' edge set (a, b, graft_w_): canonical
+    * a < b, with null endpoints, self-loops and non-positive weights
+    * dropped and parallel or reversed edges summed; without a weight
+    * column every edge of the simple graph weighs 1. */
+  private def weightedEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String]): DataFrame = weightCol match {
+    case Some(wc) => edges
+      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
+        col(srcCol) =!= col(dstCol) && col(wc).cast("long") > 0L)
+      .select(least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"),
+        col(wc).cast("long").as("graft_w_"))
+      .groupBy(col("a"), col("b"))
+      .agg(sum(col("graft_w_")).as("graft_w_"))
+    case None => canonicalEdges(edges, srcCol, dstCol)
+      .withColumn("graft_w_", lit(1L))
+  }
+
+  /** A move sweep's inputs over a weighted edge set: adjacency and
+    * degrees (both cut) and the total weight m — 0 on an empty edge
+    * set, where no move has a candidate. */
+  private def moveInputs(e: DataFrame): (DataFrame, DataFrame, Long) = {
+    val adj = weightedAdjacencyOf(e).localCheckpoint()
+    val degs = weightedDegreesOf(e).localCheckpoint()
+    val m = e.agg(coalesce(sum(col("graft_w_")), lit(0L))).head().getLong(0)
+    (adj, degs, m)
+  }
+
+  /** One EXACT GREEDY move on a weighted graph: from the
+    * [[gainLedger]], apply ONLY the single globally-best
+    * strictly-positive move (ΔQ desc, then node asc, then target
+    * label asc — total deterministic order). Returns `asg` itself at
+    * a fixed point, which ends a [[Rounds]] loop. Modularity STRICTLY
+    * increases with every accepted move by construction — the
+    * property the synchronous sweep trades away (simultaneous moves
+    * judged against the frozen state can jointly DECREASE Q: on a
+    * symmetric ring every super-node ties toward the smallest label
+    * and non-adjacent communities merge). One 1-row driver hop per
+    * move — the coarse levels where this runs have ≤ |communities|
     * nodes, Blondel's own argument for why phase 2 is cheap. */
   private def bestMove(
-      adj: DataFrame, degs: DataFrame, asg: DataFrame, m: Long): Option[DataFrame] = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val k = adj
-      .join(asg.select(col("node").as("nbr"), col("graft_lbl_").as("graft_c_")),
-        Seq("nbr"))
-      .groupBy(col("node"), col("graft_c_"))
-      .agg(sum(col("graft_w_")).as("graft_k_"))
-    val dsum = degs.join(asg, Seq("node"))
-      .groupBy(col("graft_lbl_"))
-      .agg(sum(col("deg")).as("graft_D_"))
-    val own = asg
-      .join(degs, Seq("node"))
-      .join(dsum, Seq("graft_lbl_"))
-      .select(col("node"), col("graft_lbl_").as("graft_a_"),
-        col("deg").as("graft_du_"), col("graft_D_").as("graft_Da_"))
-      .join(
-        k.select(col("node"), col("graft_c_").as("graft_a_"),
-          col("graft_k_").as("graft_kua_")),
-        Seq("node", "graft_a_"), "left")
-      .withColumn("graft_kua_", coalesce(col("graft_kua_"), lit(0L)))
-    val cand = own
-      .join(k, Seq("node"))
-      .filter(col("graft_c_") =!= col("graft_a_"))
-      .join(
-        dsum.select(col("graft_lbl_").as("graft_c_"),
-          col("graft_D_").as("graft_Db_")),
-        Seq("graft_c_"))
-      .select(col("node"), col("graft_c_").as("graft_b_"),
-        (lit(4L).cast(dec) * lit(m) * (col("graft_k_") - col("graft_kua_")) -
-          lit(2L).cast(dec) * col("graft_du_") *
-            (col("graft_Db_") - col("graft_Da_") + col("graft_du_")))
-          .cast(dec).as("graft_dq_"))
-      .filter(col("graft_dq_") > 0)
-    val best = cand
+      adj: DataFrame, degs: DataFrame, asg: DataFrame, m: Long): DataFrame =
+    gainLedger(adj, degs, asg, m)
       .orderBy(col("graft_dq_").desc, col("node"), col("graft_b_"))
-      .limit(1).collect()
-    if (best.isEmpty) None
-    else {
-      val node = best.head.get(0)
-      val target = best.head.get(1)
-      Some(asg.select(col("node"),
-        when(col("node") === lit(node), lit(target))
-          .otherwise(col("graft_lbl_")).as("graft_lbl_")))
+      .limit(1).collect().headOption match {
+      case None => asg
+      case Some(best) =>
+        asg.select(col("node"),
+          when(col("node") === lit(best.get(0)), lit(best.get(1)))
+            .otherwise(col("graft_lbl_")).as("graft_lbl_"))
     }
-  }
 
   /** MULTI-LEVEL LOUVAIN (Blondel/Guillaume/Lambiotte/Lefebvre 2008,
     * both phases): level 1 runs `roundsPerLevel` deterministic
@@ -899,40 +825,21 @@ object Graph {
     // weighted input (the X193 form): parallel edges sum, weights
     // cast to long; unweighted input gets unit weights — either way
     // the level graph is the closed canonical (a, b, graft_w_) form
-    var e = (weightCol match {
-      case Some(wc) => edges
-        .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-          col(srcCol) =!= col(dstCol) && col(wc).cast("long") > 0L)
-        .select(least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"),
-          col(wc).cast("long").as("graft_w_"))
-        .groupBy(col("a"), col("b"))
-        .agg(sum(col("graft_w_")).as("graft_w_"))
-      case None => canonicalEdges(edges, srcCol, dstCol)
-        .withColumn("graft_w_", lit(1L))
-    }).localCheckpoint()
+    var e = weightedEdges(edges, srcCol, dstCol, weightCol).localCheckpoint()
     var asg = assignment
       .select(col(nodeCol).as("node"), col(labelCol).as("graft_lbl_"))
       .localCheckpoint()
     // original node → current-level label (level 1 nodes ARE originals)
     var mapping: DataFrame = null
     for (lvl <- 1 to levels) {
-      val adj = weightedAdjacencyOf(e).localCheckpoint()
-      val degs = weightedDegreesOf(e).localCheckpoint()
-      val m = e.agg(sum(col("graft_w_"))).head().getLong(0)
-      var a2 = asg
-      if (lvl == 1)
-        for (_ <- 1 to roundsPerLevel)
-          a2 = weightedMoveRound(adj, degs, a2, m).localCheckpoint()
-      else {
-        var moves = 0
-        var done = false
-        while (moves < coarseMoves && !done)
-          bestMove(adj, degs, a2, m) match {
-            case Some(next) => a2 = next.localCheckpoint(); moves += 1
-            case None => done = true
-          }
-      }
+      val (adj, degs, m) = moveInputs(e)
+      val a2 =
+        if (lvl == 1)
+          Rounds.run(asg, roundsPerLevel, cutEachRound = true)(
+            weightedMoveRound(adj, degs, _, m)).state
+        else
+          Rounds.run(asg, coarseMoves, cutEachRound = true)(
+            bestMove(adj, degs, _, m)).state
       mapping =
         if (mapping == null) a2.localCheckpoint()
         else mapping.join(

@@ -221,6 +221,18 @@ class DedupSpec extends SparkSpec {
     assert(exact.length == 30 && exact.forall(_._2 == 1L))
   }
 
+  test("converged CC fails loudly when the round budget is exhausted") {
+    // an 8-node path needs the seed and 6 more rounds to reach label 1
+    // everywhere, and one round more to see nothing change
+    val path = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponentsConverged(path, maxRounds = 3)
+    }
+    assert(e.getMessage.contains("did not converge"))
+    assert(Dedup.connectedComponentsConverged(path, maxRounds = 8)
+      .as[(Long, Long)].collect().forall(_._2 == 1L))
+  }
+
   test("decontamination flags exactly the train docs sharing a full n-gram with eval") {
     val evalSet = Seq(
       (100L, "the capital of france is paris obviously"),

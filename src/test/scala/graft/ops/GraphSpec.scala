@@ -67,6 +67,37 @@ class GraphSpec extends SparkSpec {
     assert(df.count() == 3L)
   }
 
+  private def joinsIn(df: org.apache.spark.sql.DataFrame): Int =
+    "Join".r.findAllIn(df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head).length
+
+  test("converged kCore, LPA and CC return checkpoint scans after 30+ rounds") {
+    // an 80-node path peels its two end nodes per round: 30 rounds
+    // (the bound) leave 20 nodes
+    val path = (0 until 79).map(i => (s"N$i", s"N${i + 1}")).toDF("s", "d")
+    val core = Graph.kCoreConverged(path, "s", "d", k = 2, maxIterations = 30)
+    assert(joinsIn(core) == 0, core.queryExecution.executedPlan.toString)
+    assert(core.count() == 20L)
+    // K2,2 oscillates forever: LPA runs all 30 rounds
+    val k22 = Seq(("A", "X"), ("A", "Y"), ("B", "X"), ("B", "Y")).toDF("s", "d")
+    val lpa = Graph.labelPropagationConverged(k22, "s", "d", maxIterations = 30)
+    assert(joinsIn(lpa) == 0, lpa.queryExecution.executedPlan.toString)
+    assert(lpa.count() == 4L)
+    // a 32-node path settles after the seed and 31 more rounds
+    val chain = (1L until 32L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val cc = graft.llm.Dedup.connectedComponentsConverged(chain)
+    assert(joinsIn(cc) == 0, cc.queryExecution.executedPlan.toString)
+    assert(cc.as[(Long, Long)].collect().forall(_._2 == 1L))
+  }
+
+  test("fixed-round PageRank stays one lineage: no checkpoint scan in its plan") {
+    val e = Seq(("A", "B", 1L), ("B", "C", 1L), ("C", "A", 1L), ("A", "C", 1L))
+      .toDF("s", "d", "w")
+    val plan = Graph.pageRank(e, "s", "d", "w", iterations = 3)
+      .queryExecution.analyzed.toString
+    assert(!plan.contains("LogicalRDD"), plan)
+  }
+
   test("symmetrized star: hand-computed integral recurrence, two iterations") {
     // A↔B, A↔C with unit weights: out(A)=2, out(B)=out(C)=1
     val e = Seq(("A", "B", 1L), ("A", "C", 1L), ("B", "A", 1L), ("C", "A", 1L))
@@ -382,6 +413,16 @@ class GraphSpec extends SparkSpec {
     assert(conv.size == 4) // terminated despite never converging
   }
 
+  test("labelPropagationConverged compares each check with the previous round, not the last check") {
+    // on the K2,2 2-cycle, labels two rounds apart are equal: a
+    // check-window rule would stop at round 4; the round rule never
+    // settles and runs to the bound
+    val e = Seq(("A", "X"), ("A", "Y"), ("B", "X"), ("B", "Y")).toDF("s", "d")
+    val conv = labelsOf(Graph.labelPropagationConverged(e, "s", "d",
+      maxIterations = 7, checkEvery = 2))
+    assert(conv == labelsOf(Graph.labelPropagation(e, "s", "d", iterations = 7)))
+  }
+
   test("communityModularity: hand-computed Q on two cliques + bridge; bad split scores lower") {
     def clique(p: String) = for {
       a <- 1 to 3; b <- 1 to 3 if a < b
@@ -534,6 +575,32 @@ class GraphSpec extends SparkSpec {
         init, "node", "community")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(summed == weighted, "parallel edge weights must sum")
+  }
+
+  test("community operators return the assignment unchanged when no edge is left") {
+    val asg = Seq((1L, 1L), (2L, 2L), (3L, 1L)).toDF("node", "community")
+    val want = Map(1L -> 1L, 2L -> 2L, 3L -> 1L)
+    def got(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val noEdge = Seq(
+      "empty" -> Seq.empty[(Option[Long], Option[Long], Long)],
+      "self-loops" -> Seq((Some(1L), Some(1L), 3L), (Some(2L), Some(2L), 1L)),
+      "null endpoints" -> Seq((None, Some(2L), 1L), (Some(1L), None, 1L)),
+      "non-positive weights" -> Seq((Some(1L), Some(2L), 0L), (Some(2L), Some(3L), -4L)))
+    for ((name, rows) <- noEdge) {
+      val e = rows.toDF("s", "d", "w")
+      assert(got(Graph.refineCommunitiesWeighted(e, "s", "d", "w",
+        asg, "node", "community")) == want, name)
+      assert(got(Graph.louvain(e, "s", "d", asg, "node", "community",
+        weightCol = Some("w"))) == want, name)
+      // the unweighted forms ignore weights: only the non-positive
+      // fixture still has edges there
+      if (name != "non-positive weights") {
+        assert(got(Graph.refineCommunities(e, "s", "d", asg, "node", "community"))
+          == want, name)
+        assert(got(Graph.louvain(e, "s", "d", asg, "node", "community")) == want, name)
+      }
+    }
   }
 
   test("louvain with levels=1 is exactly the one-level sweep") {
