@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line for the driver's BENCH_r{N}.json.
@@ -32,17 +31,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = SparkEntry.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as long (epoch ns)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // Untimed warmup: one trivial scan+agg+write so session setup
     // (codegen compiler, parquet reader, committer init) is not
     // charged to whichever query happens to run first. No catalog
@@ -61,12 +50,18 @@ object Bench {
     // sf0.1 on every pass and the old blanket catch mis-reported the
     // failure as a slow query.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
+    // why each failed query failed: its first exception, as
+    // "<ExceptionClass>: <message>"
+    val messages = scala.collection.mutable.LinkedHashMap[String, String]()
     val samples = (1 to Passes).flatMap { _ =>
       ordered.map { case (name, fn) =>
         val t0 = System.nanoTime()
         try
           fn(spark, sfDir).write.mode("overwrite").parquet(s"$sinkRoot/$name")
-        catch { case scala.util.control.NonFatal(_) => failed += name }
+        catch { case scala.util.control.NonFatal(e) =>
+          failed += name
+          messages.getOrElseUpdate(name, e.toString)
+        }
         name -> (System.nanoTime() - t0) / 1e9
       }
     }
@@ -77,8 +72,10 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val why = messages.map { case (k, m) =>
+      SparkEntry.jsonString(k) + ":" + SparkEntry.jsonString(m) }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$Passes,"errors":$errs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$Passes,"errors":$errs,"error_messages":$why}"""
     println(json)
     // Also persist the record: stdout alone gets truncated/interleaved by
     // sbt in the driver's capture (every BENCH_r*.json parsed null), so

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only measurement harness (guide §1): isolates named queries with
   * the noop sink so the computation is timed without the parquet-encode
@@ -17,22 +16,10 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = SparkEntry.cpus
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "scratch")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(sys.env.get("SPARK_GRAFT_MIN_PARTITION_SIZE")
-        .map(v => Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> v))
-        .getOrElse(Map.empty[String, String]))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // same untimed warmup as Bench
     spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()

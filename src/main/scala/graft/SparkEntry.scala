@@ -16,6 +16,36 @@ object SparkEntry {
   /** Cores (`local[n]`, n shuffle partitions) of the dev mains' sessions. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
+  /** The session of the dev mains (Bench, Verify, PlanDump,
+    * StageProf): `local[cpus]` with as many shuffle partitions, UTC,
+    * the graft extensions, no UI, WARN logging, and parquet
+    * TIMESTAMP(NANOS) read as long epoch-ns (events.ts). */
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `s` as a JSON string literal: backslash, quote and ALL control
+    * chars (< 0x20) escaped — a tab or CR in a query's SQL or an
+    * error message would otherwise break the reader's json.load. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The queries a dev-time `SPARK_GRAFT_ONLY=q51,q54` list selects,
     * sorted by name (unset → all). An
     * entry names a query in full or by its number: `q5` selects

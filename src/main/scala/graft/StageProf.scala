@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -15,19 +14,7 @@ import scala.collection.mutable
 object StageProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = SparkEntry.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(sys.env.get("SPARK_GRAFT_MIN_PARTITION_SIZE")
-        .map(v => Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> v))
-        .getOrElse(Map.empty[String, String]))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
     val ordered = SparkEntry.selectedQueries()
@@ -70,8 +57,9 @@ object StageProf {
       catch { case scala.util.control.NonFatal(e) =>
         println(s"RUN_FAIL $name: ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
+      // deliver every event the run posted before the listener goes
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(200) // let straggler listener events drain
       println(f"== $name: $wall%.3f s wall, ${stages.size} stages ==")
       val base = stages.values.map(_.submitted).filter(_ > 0).minOption.getOrElse(0L)
       for ((id, s) <- stages.toSeq.sortBy(_._1)) {

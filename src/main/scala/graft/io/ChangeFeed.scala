@@ -119,9 +119,10 @@ object ChangeFeed {
     *
     * The dim-triggered fact fetch is the 100 TB heart of this: for a
     * driver-bounded dim window (≤ 10k changed keys) the fact side is
-    * read through [[SnapshotBucketedStore.readWhereEqAny]] — per-dir
-    * membership Blooms on the foreign-key column prune every fact
-    * dir that provably holds none of the changed keys, so a
+    * read through [[SnapshotBucketedStore.pruned]] with
+    * [[Prune.EqAny]] — per-dir membership Blooms on the foreign-key
+    * column prune every fact dir that provably holds none of the
+    * changed keys, so a
     * dimension revision costs the MATCHING fact dirs, not a fact
     * scan. (Record the fk column in the fact store's `keyColumns`
     * to arm this; without it the probe keeps all dirs — correct,
@@ -192,8 +193,8 @@ object ChangeFeed {
             val dimTouched: Option[DataFrame] =
               if (probe.isEmpty) None
               else if (probe.size <= 10000)
-                fact.readWhereEqAny(factTable, factDimCol, probe)
-                  .map(_.filter(col(factDimCol).isin(probe: _*)))
+                fact.pruned(factTable, Prune.EqAny(factDimCol, probe))
+                  .flatMap(_.read).map(_.filter(col(factDimCol).isin(probe: _*)))
               else
                 fact.readAt(factTable, fLatest).map(
                   _.join(dimKeys, col(factDimCol) === dimKeys(dimKey),

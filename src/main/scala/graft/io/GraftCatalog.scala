@@ -30,8 +30,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * READ pushdown, the part that matters at 100 TB: the scan builder
   * receives Spark's pushed filters and required columns; equality
   * filters probe the manifest key Blooms, closed ranges the min/max
-  * stats ([[GraftPruning.prunedRead]]) — a selective WHERE opens the
-  * generation dirs that might match, not the table. Reported
+  * stats ([[GraftPruning.predicateOf]] → [[SnapshotBucketedStore.pruned]])
+  * — a selective WHERE opens the generation dirs that might match,
+  * not the table. Reported
   * `pushedFilters` are exactly the subset the pruning paths act on
   * (visible in `explain` as the scan's `PushedFilters`), and EVERY
   * filter is also returned as residual: pruning only EXCLUDES
@@ -720,8 +721,8 @@ private[io] object GraftExternal {
     }
 }
 
-/** The scan: manifest-pruned store read (or a version-pinned
-  * [[SnapshotBucketedStore.readAt]]), bridged to execution via
+/** The scan: one [[SnapshotBucketedStore.pruned]] read of the latest
+  * snapshot (or of the pinned version, unpruned), bridged to execution via
   * [[V1Scan]] (the store's DataFrame already carries parquet pushdown
   * and columnar reads — see [[GraftCatalog]] class doc).
   *
@@ -733,7 +734,7 @@ private[io] object GraftExternal {
   * (effectively "huge") and a dim⋈fact join sort-merge-shuffles both
   * sides at any scale. Figures are whole-dir (pre-residual-filter)
   * upper bounds and degrade to "unknown", never to an understated
-  * size ([[SnapshotBucketedStore.scanEstimate]]). */
+  * size ([[PrunedScan.estimate]]). */
 private[io] class GraftScan(
     store: SnapshotBucketedStore,
     table: String,
@@ -746,8 +747,13 @@ private[io] class GraftScan(
 
   override def readSchema(): StructType = required
 
+  /** The one manifest read behind this scan's statistics, rows and
+    * skip metric (a pinned scan's filters are empty: [[Prune.All]]). */
+  private val prune = GraftPruning.predicateOf(filters)
+  private lazy val scan: Option[PrunedScan] = store.pruned(table, prune, version)
+
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val est = GraftPruning.scanEstimate(store, table, filters, version)
+    val est = scan.map(_.estimate)
     // CBO tier (X254): per-column min/max/NDV from the manifest —
     // whole-table figures, so served only when no pruning filters are
     // in play (a filter-scoped row count under whole-table column
@@ -844,12 +850,10 @@ private[io] class GraftScan(
       override def toString: String = GraftScan.this.description()
       override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
         val df = version match {
-          case Some(v) => store.readAt(table, v).getOrElse(
+          case Some(v) => scan.flatMap(_.read).getOrElse(
             throw new java.util.NoSuchElementException(
               s"graft table '$table' lost v$v (vacuumed)"))
-          case None =>
-            GraftSource.lastPrune = GraftPruning.pruneMetric(store, table, filters)
-            GraftPruning.prunedRead(store, table, filters)
+          case None => GraftPruning.rowsOf(scan, prune, table)
         }
         val projected =
           if (required.isEmpty) df

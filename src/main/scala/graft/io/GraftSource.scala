@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SQLContext}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.{PrunedScan => _, _}
 import org.apache.spark.sql.types.StructType
 
 /** The `graft` DataSource (X224): the snapshot store surfaced through
@@ -21,9 +21,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Reads push MANIFEST-LEVEL pruning through the V1
   * [[PrunedFilteredScan]] seam: equality filters probe the recorded
-  * key Blooms ([[SnapshotBucketedStore.readWhereEq]]) and two-sided
-  * range filters the min/max stats (conjunctive,
-  * [[SnapshotBucketedStore.readWhereAll]]) — a selective SQL WHERE
+  * key Blooms ([[Prune.Eq]]) and two-sided range filters the min/max
+  * stats (conjunctive, [[Prune.Ranges]]), through one
+  * [[SnapshotBucketedStore.pruned]] scan — a selective SQL WHERE
   * over a 100 TB graft table opens the dirs that might match, not
   * the table. Every filter is reported UNHANDLED (`unhandledFilters`
   * returns all): pruning only ever EXCLUDES provably-disjoint dirs,
@@ -352,58 +352,32 @@ object GraftSource {
 
 /** The filter→manifest-pruning translation shared by the V1 relation
   * ([[GraftRelation]]) and the V2 catalog scan
-  * ([[GraftCatalog]]/[[GraftScan]]): one place decides which store
-  * read family a pushed filter set maps onto, so both SQL surfaces
+  * ([[GraftCatalog]]/[[GraftScan]]): one place decides which
+  * [[Prune]] a pushed filter set maps onto, so both SQL surfaces
   * prune identically. Pruning only ever EXCLUDES provably-disjoint
   * dirs — every caller re-applies the exact predicate on survivors. */
 private[io] object GraftPruning {
 
-  /** Equality filters → Bloom membership pruning; two-sided ranges →
-    * conjunctive min/max pruning; anything else → full read. The
-    * chosen path returns rows ⊇ the exact answer (the store's reads
-    * apply their own residual predicate on survivors). */
-  def prunedRead(store: SnapshotBucketedStore, table: String,
-      filters: Array[Filter]): org.apache.spark.sql.DataFrame = {
-    val eqs = filters.collect { case EqualTo(c, v) => (c, v) }
-    val ins = filters.collect { case In(c, vs) => (c, vs.toSeq) }
-    val ranges = rangesOf(filters)
-    val base =
-      if (eqs.nonEmpty) store.readWhereEq(table, eqs.head._1, eqs.head._2)
-      else if (ins.nonEmpty) // multi-probe Bloom: superset, Spark re-filters
-        store.readWhereEqAny(table, ins.head._1, ins.head._2)
-      else if (ranges.nonEmpty) store.readWhereAll(table, ranges)
-      else store.read(table)
-    base.getOrElse(throw new java.util.NoSuchElementException(
+  /** The predicate a pushed filter set prunes by, in precedence
+    * order: the first equality filter probes the key Blooms
+    * ([[Prune.Eq]]), else the first IN list ([[Prune.EqAny]] — a
+    * superset, Spark re-filters), else every two-sided range
+    * ([[Prune.Ranges]], conjunctive min/max), else [[Prune.All]]. */
+  def predicateOf(filters: Array[Filter]): Prune =
+    filters.collectFirst { case EqualTo(c, v) => Prune.Eq(c, v) }
+      .orElse(filters.collectFirst { case In(c, vs) => Prune.EqAny(c, vs.toSeq) })
+      .getOrElse(rangesOf(filters) match {
+        case Seq() => Prune.All
+        case ranges => Prune.Ranges(ranges)
+      })
+
+  /** The rows of `table`'s pruned `scan` under `p`; its skip metric
+    * lands in [[GraftSource.lastPrune]] (None for an unpruned read). */
+  def rowsOf(scan: Option[PrunedScan], p: Prune, table: String)
+      : org.apache.spark.sql.DataFrame = {
+    GraftSource.lastPrune = if (p == Prune.All) None else scan.map(_.counts)
+    scan.flatMap(_.read).getOrElse(throw new java.util.NoSuchElementException(
       s"graft table '$table' does not exist"))
-  }
-
-  /** (dirs kept, total dirs) the same filter set prunes to — the X75
-    * observability twin of [[prunedRead]]. */
-  def pruneMetric(store: SnapshotBucketedStore, table: String,
-      filters: Array[Filter]): Option[(Int, Int)] = {
-    val eqs = filters.collect { case EqualTo(c, v) => (c, v) }
-    val ins = filters.collect { case In(c, vs) => (c, vs.toSeq) }
-    val ranges = rangesOf(filters)
-    if (eqs.nonEmpty) store.pruneEqStats(table, eqs.head._1, eqs.head._2)
-    else if (ins.nonEmpty) store.pruneEqAnyStats(table, ins.head._1, ins.head._2)
-    else if (ranges.nonEmpty) store.pruneStatsAll(table, ranges)
-    else None
-  }
-
-  /** Planning statistics for the dirs [[prunedRead]] would open under
-    * the same filter set (X250) — (rows, bytes), each None when the
-    * manifest can't vouch for it. Same family precedence as
-    * [[prunedRead]], so the estimate describes the actual scan. */
-  def scanEstimate(store: SnapshotBucketedStore, table: String,
-      filters: Array[Filter],
-      version: Option[Int] = None): Option[(Option[Long], Option[Long])] = {
-    val eqs = filters.collect { case EqualTo(c, v) => (c, v) }
-    val ins = filters.collect { case In(c, vs) => (c, vs.toSeq) }
-    store.scanEstimate(table,
-      eq = eqs.headOption,
-      inSet = if (eqs.isEmpty) ins.headOption else None,
-      ranges = if (eqs.isEmpty && ins.isEmpty) rangesOf(filters) else Nil,
-      version = version)
   }
 
   /** The subset of `filters` the pruning paths above can act on —
@@ -461,7 +435,7 @@ class GraftRelation(
     * Spark's default (huge — the safe direction). Unfiltered: V1
     * relations size before filter pushdown. */
   override def sizeInBytes: Long =
-    store.scanEstimate(table).flatMap(_._2).getOrElse(super.sizeInBytes)
+    store.pruned(table, Prune.All).flatMap(_.estimate._2).getOrElse(super.sizeInBytes)
 
   // pruning only excludes provably-disjoint dirs — Spark must still
   // evaluate every predicate on the surviving rows
@@ -469,8 +443,8 @@ class GraftRelation(
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val df = GraftPruning.prunedRead(store, table, filters)
-    GraftSource.lastPrune = GraftPruning.pruneMetric(store, table, filters)
+    val p = GraftPruning.predicateOf(filters)
+    val df = GraftPruning.rowsOf(store.pruned(table, p), p, table)
     // an empty projection (COUNT(*) shape) still needs row multiplicity
     val projected =
       if (requiredColumns.isEmpty) df

@@ -160,6 +160,56 @@ final class AvroDirStore(root: String)(implicit spark: SparkSession)
   }
 }
 
+/** Which generation dirs a snapshot-store read must open
+  * ([[SnapshotBucketedStore.pruned]]). Pruning only ever EXCLUDES
+  * dirs the manifest proves hold no matching row; a dir with no
+  * recorded stat or Bloom for the column is kept. */
+sealed trait Prune
+
+object Prune {
+  /** Every live dir: the plain read. */
+  case object All extends Prune
+
+  /** Conjunctive closed ranges, `lo <= column <= hi` for each entry,
+    * against the recorded per-dir min/max (exact decimals, no double
+    * rounding). Pass bounds in the column's own type (a Long for a
+    * long column) so the residual filter also pushes into the parquet
+    * scan; Float bounds are promoted to double for the comparison,
+    * because stats record float columns double-promoted. */
+  final case class Ranges(preds: Seq[(String, Any, Any)]) extends Prune {
+    require(preds.nonEmpty, "Prune.Ranges needs at least one conjunct")
+  }
+
+  /** One closed range: `Ranges(Seq((column, lo, hi)))`. */
+  def range(column: String, lo: Any, hi: Any): Prune = Ranges(Seq((column, lo, hi)))
+
+  /** `column = value` against the per-dir key Blooms; `value` in the
+    * column's own type. */
+  final case class Eq(column: String, value: Any) extends Prune
+
+  /** `column IN values` against the key Blooms: the read is a
+    * conservative SUPERSET of the matching rows with NO residual
+    * filter — the caller supplies exactness (an anti-join, `isin`). */
+  final case class EqAny(column: String, values: Seq[Any]) extends Prune
+}
+
+/** One snapshot pruned by one [[Prune]]: `kept` of `total` live dirs
+  * (the skip metric), the rows of the kept dirs ([[read]], built on
+  * first use; None when the snapshot has no live dir), and the
+  * planning estimate ([[estimate]]: rows if every kept dir records a
+  * count, file bytes if every kept dir's size is known — whole dirs
+  * before the residual predicate, an upper bound). */
+final class PrunedScan private[io] (
+    val kept: Int,
+    val total: Int,
+    readOf: => Option[DataFrame],
+    estimateOf: => (Option[Long], Option[Long])) {
+  lazy val read: Option[DataFrame] = readOf
+  lazy val estimate: (Option[Long], Option[Long]) = estimateOf
+  /** (kept, total). */
+  def counts: (Int, Int) = (kept, total)
+}
+
 /** Snapshot-isolated key-bucketed parquet store. The reference
   * rewrites the live table in place (lambda.py:172-181), so a crash
   * mid-write leaves readers a MIX of old and new rows. A 100 TB
@@ -188,7 +238,7 @@ final class AvroDirStore(root: String)(implicit spark: SparkSession)
   *
   * DATA SKIPPING (`statsColumns`): each commit records per-generation
   * column min/max IN THE MANIFEST (exact decimal strings, numeric
-  * columns only), and [[readWhere]] prunes provably-disjoint dirs
+  * columns only), and [[pruned]] drops provably-disjoint dirs
   * before the scan — at 100 TB with time-ordered or Z-ordered
   * commits, a selective predicate opens a handful of files instead
   * of every one (the difference between touching 0.1% and 100% of a
@@ -687,7 +737,7 @@ class SnapshotBucketedStore(
     * compares xxhash64 of the column's NATIVE value against xxhash64
     * of the probe literal, so any hashable type works — but the probe
     * must be passed in the column's own type (documented contract,
-    * same discipline as [[readWhere]] bounds). */
+    * same discipline as [[Prune.Ranges]] bounds). */
   private def keyColsOf(df: DataFrame): Seq[String] =
     keyColumns.filter(df.columns.contains)
 
@@ -857,74 +907,79 @@ class SnapshotBucketedStore(
       (lo - lo.abs * eps, hi + hi.abs * eps)
     }
 
-  /** Range-predicate read with MANIFEST-LEVEL data skipping: returns
-    * exactly `read(name).filter(column between lower and upper)`, but
-    * scans ONLY the generation dirs whose recorded [min, max]
-    * intersects the range — on a 100 TB table whose commits arrive
-    * roughly sorted on the column (time-ordered ingest, Z-ordered
-    * layout), a selective predicate touches a handful of files where
-    * the plain read lists and opens every one. Bounds compare as
-    * exact decimals against the recorded strings (no double
-    * rounding), and the residual filter still applies to surviving
-    * dirs — stats only ever EXCLUDE provably-disjoint dirs. Pass
-    * bounds in the column's own type (a Long for a long column) so
-    * the residual filter also pushes down into the parquet scan.
-    * Float bounds are promoted to double for the skip comparison —
-    * stats record float columns double-promoted (see [[statInput]]),
-    * and a float's own shortest string can misorder against them. */
-  def readWhere(name: String, column: String, lower: Any, upper: Any): Option[DataFrame] =
-    readWhereAll(name, Seq((column, lower, upper)))
-
-  /** The skip metric behind [[readWhere]]: (dirs the predicate must
-    * scan, total dirs in the snapshot) — the X75-style proof
-    * surface: specs assert kept/total ≤ ¼ on a selective range. */
-  def pruneStats(name: String, column: String, lower: Any, upper: Any): Option[(Int, Int)] =
-    pruneStatsAll(name, Seq((column, lower, upper)))
-
-  /** CONJUNCTIVE multi-column data skipping: returns exactly
-    * `read(name).filter(AND_i  col_i between lo_i and hi_i)`, pruning
-    * a dir when ANY conjunct's recorded [min, max] is disjoint from
-    * its interval — the intersection of the per-column keep sets, so
-    * a 100 TB table filtered on (date, source_id) skips dirs either
-    * stat alone would have to scan. Same conservative degradation per
-    * column: an unstatted column keeps the dir for ITS conjunct but
-    * the other conjuncts still prune. Bound discipline as
-    * [[readWhere]] (column's own type, Float promoted). */
-  def readWhereAll(
-      name: String,
-      preds: Seq[(String, Any, Any)]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(preds.nonEmpty, "readWhereAll needs at least one conjunct")
-    latestManifest(name).flatMap { m =>
+  /** THE pruned read: which generation dirs of one snapshot (the
+    * latest, or `version`) a predicate must open, from ONE manifest
+    * read. The same kept set serves the rows ([[PrunedScan.read]]),
+    * the skip metric ([[PrunedScan.kept]]/[[PrunedScan.total]]) and
+    * the planning estimate ([[PrunedScan.estimate]]), so the three
+    * can never describe different snapshots. Stats and Blooms only
+    * ever EXCLUDE provably-disjoint dirs: `Ranges` and `Eq` re-apply
+    * the exact predicate on the kept dirs (it also pushes into the
+    * columnar scan), `EqAny` returns a superset with no residual
+    * filter. A prune that keeps nothing reads zero rows with the
+    * snapshot's schema; a snapshot with no live dir reads None. None
+    * when the table (or the pinned version) does not exist. */
+  def pruned(name: String, p: Prune, version: Option[Int] = None): Option[PrunedScan] =
+    version.fold(latestManifest(name))(manifestAt(name, _)).map { m =>
+      import org.apache.spark.sql.functions.{col, lit}
       val all = (m.buckets.values ++ m.logs).toSeq
-      if (all.isEmpty) return None
-      val kept = keptByRanges(m, all, preds)
-      val pred = preds.map { case (c, lo, hi) =>
-        col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
-      if (kept.isEmpty)
-        // every dir provably disjoint: zero rows, schema preserved
-        readManifest(name, m).map(_.limit(0).filter(pred))
-      else Some(readDataDirs(name, m, kept).filter(pred))
-    }
-  }
-
-  /** [[pruneStats]] for the conjunctive form — proves the 2-column
-    * intersection strictly tighter than either single column. */
-  def pruneStatsAll(
-      name: String,
-      preds: Seq[(String, Any, Any)]): Option[(Int, Int)] =
-    latestManifest(name).map { m =>
-      val all = (m.buckets.values ++ m.logs).toSeq
-      (keptByRanges(m, all, preds).size, all.size)
+      val kept = if (all.isEmpty) Nil else keptDirs(name, m, all, p)
+      def read: Option[DataFrame] =
+        if (all.isEmpty) None
+        else {
+          // every dir provably disjoint: zero rows, schema preserved
+          val df = if (kept.isEmpty) readDataDirs(name, m, all).limit(0)
+            else readDataDirs(name, m, kept)
+          Some(p match {
+            case Prune.Ranges(preds) => df.filter(preds.map { case (c, lo, hi) =>
+              col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _))
+            case Prune.Eq(c, v) => df.filter(col(c) === lit(v))
+            case Prune.All | Prune.EqAny(_, _) => df
+          })
+        }
+      // rows/bytes describe whole kept dirs before the residual
+      // predicate, and tombstoned dirs count physical rows: an
+      // OVERestimate keeps a big table from being wrongly broadcast,
+      // never causes one. Bytes are a manifest fold (X258); only a
+      // legacy dir written before bytes recording is listed.
+      def estimate: (Option[Long], Option[Long]) = (
+        if (kept.forall(m.meta(_).rows.isDefined)) Some(kept.flatMap(m.meta(_).rows).sum)
+        else None,
+        kept.foldLeft(Option(0L)) { (acc, d) =>
+          acc.flatMap(sum => m.meta(d).bytes.orElse(listedBytes(name, d)).map(sum + _))
+        })
+      new PrunedScan(kept.size, all.size, read, estimate)
     }
 
-  /** The dirs of `all` whose recorded ranges survive every conjunct. */
-  private def keptByRanges(m: Manifest, all: Seq[String],
-      preds: Seq[(String, Any, Any)]): Seq[String] = {
-    val decs = preds.map { case (c, lo, hi) => (c, boundDecimal(lo), boundDecimal(hi)) }
-    val legacy = m.statsVersion < SnapshotBucketedStore.CurrentStatsVersion
-    all.filter(d => decs.forall { case (c, lo, hi) =>
-      survives(m.meta(d).stats, c, lo, hi, legacy) })
+  /** The dirs of `all` predicate `p` keeps — the read path's one
+    * min/max rule and one Bloom rule. Ranges: a dir goes when ANY
+    * conjunct's recorded [min, max] is disjoint from its interval (an
+    * unstatted column keeps the dir for ITS conjunct only). Eq/EqAny:
+    * a dir goes when its key Bloom contains none of the probes' hashes
+    * ([[typedKeyHashes]]: cast to the column's read type, plus every
+    * narrower widening sibling); a dir without a Bloom stays, and an
+    * unhashable probe keeps every dir. Each Bloom deserializes once. */
+  private def keptDirs(name: String, m: Manifest, all: Seq[String], p: Prune): Seq[String] = {
+    def bloomKept(column: String, values: Seq[Any]): Seq[String] =
+      if (values.isEmpty) Nil
+      else columnTypeOf(name, m, column).flatMap { dt =>
+        val per = values.map(typedKeyHashes(_, dt))
+        if (per.forall(_.isDefined)) Some(per.flatten.flatten) else None
+      } match {
+        case Some(hs) => all.filter(d => dirBloom(m.meta(d).keys, column)
+          .forall(bf => hs.exists(bf.mightContainLong)))
+        case None => all
+      }
+    p match {
+      case Prune.All => all
+      case Prune.Ranges(preds) =>
+        val decs = preds.map { case (c, lo, hi) => (c, boundDecimal(lo), boundDecimal(hi)) }
+        val legacy = m.statsVersion < SnapshotBucketedStore.CurrentStatsVersion
+        all.filter(d => decs.forall { case (c, lo, hi) =>
+          survives(m.meta(d).stats, c, lo, hi, legacy) })
+      case Prune.Eq(c, v) => bloomKept(c, Seq(v))
+      case Prune.EqAny(c, vs) => bloomKept(c, vs)
+    }
   }
 
   /** Exact decimal of a range bound, promoting Float → Double first
@@ -1046,141 +1101,6 @@ class SnapshotBucketedStore(
           java.util.Base64.getDecoder.decode(b64))))
       catch { case scala.util.control.NonFatal(_) => None }
     }
-
-  /** POINT-LOOKUP read with membership skipping: returns exactly
-    * `read(name).filter(column === value)`, scanning ONLY the
-    * generation dirs whose recorded key Bloom might contain the
-    * value. Range min/max helps time-ordered scans; this is its
-    * complement for high-cardinality equality probes — an id lookup
-    * on a 100 TB table touches ~the dirs that ever wrote that id
-    * (Bloom fpp extra dirs at worst), not every file. The residual
-    * equality filter still applies to surviving dirs and pushes into
-    * the columnar scan. `value` must be the column's own type. */
-  def readWhereEq(name: String, column: String, value: Any): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    latestManifest(name).flatMap { m =>
-      val all = (m.buckets.values ++ m.logs).toSeq
-      if (all.isEmpty) return None
-      // probe cast to the column's own type before hashing (xxhash64
-      // is type-tagged), PLUS every narrower widening sibling — old
-      // generations of a widened column recorded narrow-typed Blooms
-      // ([[typedKeyHashes]]); an uncastable/lossy probe keeps every dir
-      val hOpt = columnTypeOf(name, m, column).flatMap(typedKeyHashes(value, _))
-      val kept = hOpt match {
-        case Some(hs) => all.filter(d => dirBloom(m.meta(d).keys, column)
-          .forall(bf => hs.exists(bf.mightContainLong)))
-        case None => all
-      }
-      val pred = col(column) === lit(value)
-      if (kept.isEmpty)
-        readManifest(name, m).map(_.limit(0).filter(pred))
-      else Some(readDataDirs(name, m, kept).filter(pred))
-    }
-  }
-
-  /** The skip metric behind [[readWhereEq]]: (dirs the probe must
-    * scan, total dirs in the snapshot). */
-  def pruneEqStats(name: String, column: String, value: Any): Option[(Int, Int)] =
-    latestManifest(name).map { m =>
-      val all = (m.buckets.values ++ m.logs).toSeq
-      columnTypeOf(name, m, column).flatMap(typedKeyHashes(value, _)) match {
-        case Some(hs) =>
-          (all.count(d => dirBloom(m.meta(d).keys, column)
-            .forall(bf => hs.exists(bf.mightContainLong))), all.size)
-        case None => (all.size, all.size)
-      }
-    }
-
-  /** MULTI-PROBE membership pruning — the history side of a streaming
-    * dedup's anti-join: return the snapshot's rows from ONLY the
-    * generation dirs whose recorded key Bloom might contain AT LEAST
-    * ONE of `values`. The result is a conservative SUPERSET of the
-    * rows whose `column` is in `values`, with NO residual filter —
-    * callers doing an exact anti-join (or isin) supply their own
-    * exactness, which is what makes the conservative direction safe.
-    * At 100 TB a micro-batch of new fingerprints touches ~the dirs
-    * that ever saw a colliding key, not every generation ever
-    * appended. Probes are type-cast like [[readWhereEq]]; a probe
-    * that can't hash safely keeps every dir. */
-  def readWhereEqAny(name: String, column: String,
-      values: Seq[Any]): Option[DataFrame] =
-    latestManifest(name).flatMap { m =>
-      val all = (m.buckets.values ++ m.logs).toSeq
-      if (all.isEmpty) return None
-      val kept = keptForAny(name, m, all, column, values)
-      if (kept.isEmpty) readManifest(name, m).map(_.limit(0))
-      else Some(readDataDirs(name, m, kept))
-    }
-
-  /** The skip metric behind [[readWhereEqAny]]. */
-  def pruneEqAnyStats(name: String, column: String,
-      values: Seq[Any]): Option[(Int, Int)] =
-    latestManifest(name).map { m =>
-      val all = (m.buckets.values ++ m.logs).toSeq
-      (keptForAny(name, m, all, column, values).size, all.size)
-    }
-
-  /** MANIFEST-SERVED PLANNING STATISTICS (X250): (row count if every
-    * surviving dir records one, total file bytes if every surviving
-    * dir lists) for the generation dirs a pushed filter set leaves
-    * after pruning — the numbers a COST-BASED JOIN PLANNER needs to
-    * auto-broadcast the small side of a SQL join over catalog tables.
-    * Without them the V1-bridge scan reports "unknown" and Spark
-    * assumes the worst (`defaultSizeInBytes` = never broadcast), so a
-    * dim⋈fact SQL join over the store sort-merge-shuffles BOTH sides
-    * at any scale. Estimate semantics, biased only in the SAFE
-    * direction: rows/bytes describe whole surviving dirs before the
-    * residual predicate (an OVERestimate keeps a big table from being
-    * wrongly broadcast; it never causes one), tombstoned dirs count
-    * physical rows (same upper bound), and any dir whose row count or
-    * file listing is unavailable yields None for that figure — the
-    * caller reports "unknown" and planning falls back to Spark's
-    * defaults, never to an understated size. The family precedence
-    * (eq, then IN, then closed ranges) mirrors the pruned read
-    * exactly, so the estimate describes the dirs that scan would
-    * open. O(surviving dirs) manifest lookups at plan time — pure
-    * metadata, ZERO filesystem calls on a bytes-covered table
-    * (X258); only legacy dirs degrade to a per-dir listing. */
-  def scanEstimate(name: String,
-      eq: Option[(String, Any)] = None,
-      inSet: Option[(String, Seq[Any])] = None,
-      ranges: Seq[(String, Any, Any)] = Nil,
-      version: Option[Int] = None): Option[(Option[Long], Option[Long])] = {
-    val mOpt = version match {
-      case Some(v) => manifestAt(name, v)
-      case None => latestManifest(name)
-    }
-    mOpt.map { m =>
-      val all = (m.buckets.values ++ m.logs).toSeq
-      val kept: Seq[String] =
-        if (version.isDefined) all // pinned reads serve the full snapshot
-        else eq match {
-          case Some((c, v)) =>
-            columnTypeOf(name, m, c).flatMap(typedKeyHashes(v, _)) match {
-              case Some(hs) => all.filter(d => dirBloom(m.meta(d).keys, c)
-                .forall(bf => hs.exists(bf.mightContainLong)))
-              case None => all
-            }
-          case None => inSet match {
-            case Some((c, vs)) => keptForAny(name, m, all, c, vs)
-            case None if ranges.nonEmpty => keptByRanges(m, all, ranges)
-            case None => all
-          }
-        }
-      val rows =
-        if (kept.forall(m.meta(_).rows.isDefined)) Some(kept.flatMap(m.meta(_).rows).sum)
-        else None
-      // byte sizing is a MANIFEST FOLD (X258): every commit records
-      // its dirs' data-file bytes in the same rename, so plan-time
-      // sizing costs zero filesystem calls on a covered table. Only
-      // legacy dirs (written before bytes recording) fall back to a
-      // listing — one ANALYZE (or any commit) backfills them for good.
-      val bytes = kept.foldLeft(Option(0L)) { (acc, d) =>
-        acc.flatMap(sum => m.meta(d).bytes.orElse(listedBytes(name, d)).map(sum + _))
-      }
-      (rows, bytes)
-    }
-  }
 
   /** METADATA-ONLY COUNT(*) (X214 — the Delta-style numRecords
     * trick): Σ per-dir recorded row counts, answered from the
@@ -1450,23 +1370,6 @@ class SnapshotBucketedStore(
       sa <- qskMerged(ma, column)
       sb <- qskMerged(mb, column)
     } yield graft.expr.KllSketchAgg.psi(sa, sb, buckets)
-
-  /** Dirs surviving an any-of membership probe: each dir's Bloom is
-    * deserialized ONCE and probed with every hash (never per
-    * (hash, dir) pair). Any unhashable probe value → keep all. */
-  private def keptForAny(name: String, m: Manifest, all: Seq[String],
-      column: String, values: Seq[Any]): Seq[String] = {
-    if (values.isEmpty) return Nil
-    val dtOpt = columnTypeOf(name, m, column)
-    val hashes = dtOpt.map(dt => values.map(typedKeyHashes(_, dt)))
-      .getOrElse(Seq(None))
-    if (hashes.exists(_.isEmpty)) all
-    else {
-      val hs = hashes.flatten.flatten
-      all.filter(d => dirBloom(m.meta(d).keys, column)
-        .forall(bf => hs.exists(bf.mightContainLong)))
-    }
-  }
 
   override def read(name: String): Option[DataFrame] =
     latestManifest(name).flatMap(readManifest(name, _))
@@ -2363,10 +2266,10 @@ class SnapshotBucketedStore(
     * commit it as `slabs` LOG GENERATIONS, each a contiguous z-range
     * — so every slab's recorded min/max box is NARROW in EVERY listed
     * dimension and the existing conjunctive stats pruning
-    * ([[readWhereAll]], and the SQL catalog scan through it) skips
-    * most slabs for a predicate on ANY of the columns. A linear sort
-    * can only make ONE column's ranges narrow; time-ordered ingest
-    * makes none. Dimensions are MIN/MAX-NORMALIZED into the z domain
+    * ([[pruned]] with [[Prune.Ranges]], and the SQL catalog scan
+    * through it) skips most slabs for a predicate on ANY of the
+    * columns. A linear sort can only make ONE column's ranges narrow;
+    * time-ordered ingest makes none. Dimensions are MIN/MAX-NORMALIZED into the z domain
     * (decimal-exact affine map — monotone, so locality holds for any
     * integral range; a pmod fold would co-locate values 2^bits apart
     * and scramble the very stats pruning reads). One shuffle

@@ -376,9 +376,9 @@ object Ivf {
       .collect().map(_.getInt(0)).sorted.toSeq
     if (probedCells.isEmpty)
       store.read(table).getOrElse(emptyIndex(df.sparkSession))
-    else store.readWhereAll(table,
-        ("cell", probedCells.head, probedCells.last) +: extraPreds)
-      .map(_.filter(col("cell").isin(probedCells: _*)))
+    else store.pruned(table, graft.io.Prune.Ranges(
+        ("cell", probedCells.head, probedCells.last) +: extraPreds))
+      .flatMap(_.read).map(_.filter(col("cell").isin(probedCells: _*)))
       .getOrElse(emptyIndex(df.sparkSession))
   }
 

@@ -209,11 +209,11 @@ object CorpusIntake {
     // dirs whose recorded fp Bloom might contain ≥ 1 batch fp — a
     // conservative superset of the matchable history (the caller's
     // anti-join supplies exactness); stores without fp keyColumns (or
-    // legacy unstamped tables) degrade to the full read inside
-    // readWhereEqAny's keep-all path
+    // legacy unstamped tables) degrade to the full read through
+    // Prune.EqAny's keep-all path
     val hist = (store, probeFps) match {
       case (s: graft.io.SnapshotBucketedStore, Some(fps)) =>
-        s.readWhereEqAny(table, FpCol, fps)
+        s.pruned(table, graft.io.Prune.EqAny(FpCol, fps)).flatMap(_.read)
       case _ => store.read(table)
     }
     hist.map { existing =>

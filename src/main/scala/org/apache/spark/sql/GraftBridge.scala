@@ -48,6 +48,12 @@ object GraftBridge {
 
   def confOf(box: AnyRef): org.apache.hadoop.conf.Configuration =
     box.asInstanceOf[org.apache.spark.util.SerializableConfiguration].value
+
+  /** Block until every listener event posted so far has been
+    * delivered (the bus is `private[spark]`), so a listener's counts
+    * are complete before it is removed. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
 
 /** Public face of Spark's `private[sql]` marker that lets a streaming

@@ -22,7 +22,7 @@ class AnalyzeSpec extends SparkSpec {
     // reopened with the declared shape: everything refuses pre-analyze
     val shaped = new SnapshotBucketedStore(root, numBuckets = 4,
       statsColumns = Seq("v"), keyColumns = Seq("uuid"), ndvColumns = Seq("v"))
-    assert(shaped.pruneStats("t", "v", 0L, 50L).get._1 == 4,
+    assert(shaped.pruned("t", Prune.range("v", 0L, 50L)).get.counts._1 == 4,
       "no recorded stats → nothing prunes")
     assert(shaped.metadataMinMax("t", "v").isEmpty)
     assert(shaped.metadataApproxDistinct("t", "v").isEmpty)
@@ -38,9 +38,9 @@ class AnalyzeSpec extends SparkSpec {
     assert(out.head.getInt(1) == 4, s"dirs analyzed: ${out.head.getInt(1)}")
 
     // every tier now serves, and the rows never moved
-    assert(shaped.pruneStats("t", "v", 0L, 50L).get._1 <= 1,
+    assert(shaped.pruned("t", Prune.range("v", 0L, 50L)).get.counts._1 <= 1,
       "range pruning must fire after analyze")
-    assert(shaped.pruneEqStats("t", "uuid", 7L).get._1 <= 2,
+    assert(shaped.pruned("t", Prune.Eq("uuid", 7L)).get.counts._1 <= 2,
       "Bloom pruning must fire after analyze")
     assert(shaped.metadataMinMax("t", "v").contains(
       (BigDecimal(0), BigDecimal(398))))
@@ -77,7 +77,7 @@ class AnalyzeSpec extends SparkSpec {
     val oldShape = new SnapshotBucketedStore(root, numBuckets = 4,
       statsColumns = Seq("v"))
     (0 until 3).foreach(g => oldShape.append("t", rows(g * 20 until (g + 1) * 20)))
-    assert(oldShape.pruneStats("t", "v", -100L, -50L).get._1 == 0,
+    assert(oldShape.pruned("t", Prune.range("v", -100L, -50L)).get.counts._1 == 0,
       "v is statted: an out-of-range probe prunes every dir")
 
     // the shape is REDECLARED to uuid; a full recompute must DROP the
@@ -87,9 +87,9 @@ class AnalyzeSpec extends SparkSpec {
     val newShape = new SnapshotBucketedStore(root, numBuckets = 4,
       statsColumns = Seq("uuid"))
     assert(newShape.analyzeTable("t", onlyMissing = false) == 3)
-    assert(newShape.pruneStats("t", "uuid", 0L, 5L).get._1 <= 1,
+    assert(newShape.pruned("t", Prune.range("uuid", 0L, 5L)).get.counts._1 <= 1,
       "the redeclared column prunes")
-    assert(newShape.pruneStats("t", "v", -100L, -50L).get._1 == 3,
+    assert(newShape.pruned("t", Prune.range("v", -100L, -50L)).get.counts._1 == 3,
       "stale v entries must be gone: with no recorded stats every dir " +
         "is conservatively kept")
   }

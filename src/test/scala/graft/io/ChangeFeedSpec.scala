@@ -210,8 +210,7 @@ class ChangeFeedSpec extends SparkSpec {
     assert(jgot(dst) == jexpect(factS, dimS))
     // one dim key changes: only generation 3's customers are touched
     dimS.upsert("cust", dims((3002L, "seg3x")), "cust")
-    val (kept, total) = factS.pruneEqAnyStats("orders", "c_id",
-      Seq(3002L)).get
+    val (kept, total) = factS.pruned("orders", Prune.EqAny("c_id", Seq(3002L))).get.counts
     assert(total >= 8 && kept * 2 <= total,
       s"fk probe must skip >= half the fact dirs: $kept/$total")
     assert(refresh())

@@ -43,7 +43,7 @@ class CloneSpec extends SparkSpec {
     assert(store.metadataApproxDistinct("dst", "tag").contains(1L))
     assert(store.metadataApproxQuantiles("dst", "v", Seq(0.0)).isDefined)
     // Bloom point-lookup prunes through refs too
-    assert(asMap(store.readWhereEq("dst", "uuid", 7L).get
+    assert(asMap(store.pruned("dst", Prune.Eq("uuid", 7L)).get.read.get
       .filter(col("uuid") === 7L)).contains(7L))
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Manifest-level column min/max data skipping
-  * ([[SnapshotBucketedStore]] `statsColumns`/`readWhere`/`pruneStats`):
+  * ([[SnapshotBucketedStore]] `statsColumns`, `pruned` with `Prune.Ranges`):
   * the X75 discipline applied to the store — prove the skip with a
   * dirs-scanned metric, prove the safety with result equality against
   * the unpruned read, and prove the stats commit atomically with the
@@ -30,18 +30,18 @@ class DataSkippingSpec extends SparkSpec {
     // time-ordered ingest: each commit covers a disjoint id range —
     // the layout where file-level min/max skipping shines
     (0 until 8).foreach(g => store.append("log", rows(g * 100 until (g + 1) * 100, s"g$g")))
-    val (kept, total) = store.pruneStats("log", "uuid", 250L, 260L).get
+    val (kept, total) = store.pruned("log", Prune.range("uuid", 250L, 260L)).get.counts
     assert(total == 8, s"total dirs: $total")
     assert(kept <= 2, s"selective range must skip >= 3/4 of the dirs, kept $kept")
-    val pruned = store.readWhere("log", "uuid", 250L, 260L).get
+    val pruned = store.pruned("log", Prune.range("uuid", 250L, 260L)).get.read.get
       .orderBy("uuid").collect().toSeq
     val full = store.read("log").get
       .filter($"uuid" >= 250L && $"uuid" <= 260L).orderBy("uuid").collect().toSeq
     assert(pruned == full && full.size == 11)
     // fully-disjoint range: zero dirs scanned, empty result, schema kept
-    val (kept0, _) = store.pruneStats("log", "uuid", 5000L, 6000L).get
+    val (kept0, _) = store.pruned("log", Prune.range("uuid", 5000L, 6000L)).get.counts
     assert(kept0 == 0)
-    val none = store.readWhere("log", "uuid", 5000L, 6000L).get
+    val none = store.pruned("log", Prune.range("uuid", 5000L, 6000L)).get.read.get
     assert(none.count() == 0 && none.columns.toSeq == Seq("uuid", "val", "m"))
   }
 
@@ -55,7 +55,7 @@ class DataSkippingSpec extends SparkSpec {
     store.upsert("tgt", rows(198 until 203, "v2"), "uuid")
     // mid-range predicate: hash bucketing scatters keys, so EVERY
     // bucket's m-range intersects — all kept, result still equal
-    val pruned = store.readWhere("tgt", "m", 100.0, 120.0).get
+    val pruned = store.pruned("tgt", Prune.range("m", 100.0, 120.0)).get.read.get
       .orderBy("uuid").collect().toSeq
     val full = store.read("tgt").get
       .filter($"m" >= 100.0 && $"m" <= 120.0).orderBy("uuid").collect().toSeq
@@ -63,17 +63,17 @@ class DataSkippingSpec extends SparkSpec {
     // a range only the v2 upsert reaches (m >= 297 ⇔ uuid >= 198):
     // untouched g0 buckets top out at 1.5·197 — only the few touched
     // g1 generations survive the stats check
-    val (kept, totalAll) = store.pruneStats("tgt", "m", 297.0, 310.0).get
+    val (kept, totalAll) = store.pruned("tgt", Prune.range("m", 297.0, 310.0)).get.counts
     assert(totalAll == 8 && kept < totalAll && kept <= 6,
       s"only touched generations must survive: $kept/$totalAll")
-    val hi = store.readWhere("tgt", "m", 297.0, 310.0).get
+    val hi = store.pruned("tgt", Prune.range("m", 297.0, 310.0)).get.read.get
       .orderBy("uuid").collect().toSeq
     val hiFull = store.read("tgt").get
       .filter($"m" >= 297.0 && $"m" <= 310.0).orderBy("uuid").collect().toSeq
     assert(hi == hiFull && hi.map(_.getLong(0)) == (198L to 202L))
     // keyed delete keeps the contract
     store.delete("tgt", "uuid", Seq(105L, 199L).toDF("uuid"))
-    val pruned2 = store.readWhere("tgt", "m", 100.0, 400.0).get
+    val pruned2 = store.pruned("tgt", Prune.range("m", 100.0, 400.0)).get.read.get
       .orderBy("uuid").collect().toSeq
     val full2 = store.read("tgt").get
       .filter($"m" >= 100.0 && $"m" <= 400.0).orderBy("uuid").collect().toSeq
@@ -90,12 +90,12 @@ class DataSkippingSpec extends SparkSpec {
     // pre-crash snapshot: the 100..200 generation is invisible to BOTH
     // the stats index and the reader — no torn state where a stats
     // line references an uncommitted dir or vice versa
-    assert(store.pruneStats("log", "uuid", 150L, 160L).get == ((0, 1)))
-    assert(store.readWhere("log", "uuid", 150L, 160L).get.count() == 0)
+    assert(store.pruned("log", Prune.range("uuid", 150L, 160L)).get.counts == ((0, 1)))
+    assert(store.pruned("log", Prune.range("uuid", 150L, 160L)).get.read.get.count() == 0)
     // retry lands data + stats in one rename
     store.append("log", rows(100 until 200, "v2"))
-    assert(store.pruneStats("log", "uuid", 150L, 160L).get == ((1, 2)))
-    assert(store.readWhere("log", "uuid", 150L, 160L).get.count() == 11)
+    assert(store.pruned("log", Prune.range("uuid", 150L, 160L)).get.counts == ((1, 2)))
+    assert(store.pruned("log", Prune.range("uuid", 150L, 160L)).get.read.get.count() == 11)
   }
 
   test("non-numeric and all-null stats columns degrade to conservative keeps") {
@@ -111,12 +111,12 @@ class DataSkippingSpec extends SparkSpec {
     store.append("log", g1)
     // no stats for gen 0's opt (all null) → it is kept, not skipped;
     // gen 1 has real bounds and prunes normally
-    assert(store.pruneStats("log", "opt", 100L, 200L).get == ((1, 2)))
-    val got = store.readWhere("log", "opt", 5L, 15L).get.collect().toSeq
+    assert(store.pruned("log", Prune.range("opt", 100L, 200L)).get.counts == ((1, 2)))
+    val got = store.pruned("log", Prune.range("opt", 5L, 15L)).get.read.get.collect().toSeq
     assert(got.map(_.getLong(0)) == Seq(3L))
     // a predicate on the string column keeps everything (no stats at
     // all) and still filters correctly
-    assert(store.pruneStats("log", "uuid", 3L, 3L).isDefined)
+    assert(store.pruned("log", Prune.range("uuid", 3L, 3L)).isDefined)
   }
 
   test("conjunctive multi-column pruning is strictly tighter than either single column") {
@@ -136,14 +136,14 @@ class DataSkippingSpec extends SparkSpec {
     }
     // uuid in [0, 1500] keeps g0+g1; m in [8000, 10000] keeps g0+g2;
     // the conjunction keeps ONLY g0
-    val (kU, tot) = store.pruneStats("log", "uuid", 0L, 1500L).get
-    val (kM, _) = store.pruneStats("log", "m", 8000.0, 10000.0).get
-    val (kBoth, _) = store.pruneStatsAll("log",
-      Seq(("uuid", 0L, 1500L), ("m", 8000.0, 10000.0))).get
+    val (kU, tot) = store.pruned("log", Prune.range("uuid", 0L, 1500L)).get.counts
+    val (kM, _) = store.pruned("log", Prune.range("m", 8000.0, 10000.0)).get.counts
+    val (kBoth, _) = store.pruned("log",
+      Prune.Ranges(Seq(("uuid", 0L, 1500L), ("m", 8000.0, 10000.0)))).get.counts
     assert(tot == 4 && kU == 2 && kM == 2 && kBoth == 1,
       s"intersection must be strictly tighter: uuid=$kU m=$kM both=$kBoth/$tot")
-    val pruned = store.readWhereAll("log",
-      Seq(("uuid", 0L, 1500L), ("m", 8000.0, 10000.0))).get
+    val pruned = store.pruned("log",
+      Prune.Ranges(Seq(("uuid", 0L, 1500L), ("m", 8000.0, 10000.0)))).get.read.get
       .orderBy("uuid").collect().toSeq
     val full = store.read("log").get
       .filter($"uuid".between(0L, 1500L) && $"m".between(8000.0, 10000.0))
@@ -151,12 +151,12 @@ class DataSkippingSpec extends SparkSpec {
     assert(pruned == full && full.size == 50)
     // a conjunct on an unstatted column degrades to keep — the OTHER
     // conjunct still prunes
-    val (kVal, _) = store.pruneStatsAll("log",
-      Seq(("uuid", 0L, 500L), ("m", 0.0, 99999.0))).get
+    val (kVal, _) = store.pruned("log",
+      Prune.Ranges(Seq(("uuid", 0L, 500L), ("m", 0.0, 99999.0)))).get.counts
     assert(kVal == 1, s"uuid conjunct must still prune alone: $kVal")
     // fully-disjoint conjunction: zero dirs, empty result, schema kept
-    val none = store.readWhereAll("log",
-      Seq(("uuid", 0L, 500L), ("m", 100.0, 200.0))).get
+    val none = store.pruned("log",
+      Prune.Ranges(Seq(("uuid", 0L, 500L), ("m", 100.0, 200.0)))).get.read.get
     assert(none.count() == 0 && none.columns.toSeq == Seq("uuid", "val", "m"))
   }
 
@@ -165,15 +165,15 @@ class DataSkippingSpec extends SparkSpec {
     implicit val s = spark
     val store = new SnapshotBucketedStore(root, 8, "parquet", Seq("uuid"))
     (0 until 4).foreach(g => store.append("log", rows(g * 10 until (g + 1) * 10, s"g$g")))
-    assert(store.pruneStats("log", "uuid", 35L, 39L).get == ((1, 4)))
+    assert(store.pruned("log", Prune.range("uuid", 35L, 39L)).get.counts == ((1, 4)))
     assert(store.compactLogs("log"))
     // one merged dir now; its stats cover the whole range
-    assert(store.pruneStats("log", "uuid", 35L, 39L).get == ((1, 1)))
-    assert(store.readWhere("log", "uuid", 35L, 39L).get.count() == 5)
-    assert(store.pruneStats("log", "uuid", 500L, 600L).get == ((0, 1)))
+    assert(store.pruned("log", Prune.range("uuid", 35L, 39L)).get.counts == ((1, 1)))
+    assert(store.pruned("log", Prune.range("uuid", 35L, 39L)).get.read.get.count() == 5)
+    assert(store.pruned("log", Prune.range("uuid", 500L, 600L)).get.counts == ((0, 1)))
     store.replace("log", rows(1000 until 1010, "r"))
-    assert(store.pruneStats("log", "uuid", 0L, 999L).get == ((0, 1)))
-    assert(store.readWhere("log", "uuid", 1000L, 2000L).get.count() == 10)
+    assert(store.pruned("log", Prune.range("uuid", 0L, 999L)).get.counts == ((0, 1)))
+    assert(store.pruned("log", Prune.range("uuid", 1000L, 2000L)).get.read.get.count() == 10)
   }
 
   test("pre-versioning (v1) manifests widen float stat bounds — no skip inside the string gap") {
@@ -204,16 +204,16 @@ class DataSkippingSpec extends SparkSpec {
     // the true double promotion of 1.1f sits above the string "1.1" —
     // a v1 reader that trusted the string would skip the dir
     val lo = 1.1f.toDouble // 1.1000000238...
-    assert(store.pruneStats("t", "score", lo, 2.0).get == ((1, 1)),
+    assert(store.pruned("t", Prune.range("score", lo, 2.0)).get.counts == ((1, 1)),
       "v1 stats must widen: the probe inside the float-string gap keeps the dir")
-    assert(store.readWhere("t", "score", lo, 2.0).get.count() == 1)
+    assert(store.pruned("t", Prune.range("score", lo, 2.0)).get.read.get.count() == 1)
     // a CURRENT manifest (statsver:2) does not widen: provably
     // disjoint probes still skip
     val store2root = tmpDir("graft_skip_v2_")
     val store2 = new SnapshotBucketedStore(store2root, 8, "parquet", Seq("score"))
     store2.append("t", spark.read.parquet(s"$root/seed"))
-    assert(store2.pruneStats("t", "score", 1.2, 2.0).get == ((0, 1)))
-    assert(store2.readWhere("t", "score", lo, 2.0).get.count() == 1,
+    assert(store2.pruned("t", Prune.range("score", 1.2, 2.0)).get.counts == ((0, 1)))
+    assert(store2.pruned("t", Prune.range("score", lo, 2.0)).get.read.get.count() == 1,
       "v2 records the double-promoted bound exactly — the in-gap probe matches")
   }
 }

@@ -55,13 +55,13 @@ class DeletionVectorSpec extends SparkSpec {
     assert(l.size == 400 - (0 until 400 by 13).size)
 
     // the pruned read families agree too
-    val lEq = lazyS.readWhereEq("t", "uuid", 26L).get.collect().toSeq
+    val lEq = lazyS.pruned("t", Prune.Eq("uuid", 26L)).get.read.get.collect().toSeq
     assert(lEq.isEmpty, "a tombstoned key must not read back")
-    val live = lazyS.readWhereEq("t", "uuid", 27L).get.collect().toSeq
+    val live = lazyS.pruned("t", Prune.Eq("uuid", 27L)).get.read.get.collect().toSeq
     assert(live.map(_.getLong(0)) == Seq(27L))
-    val lRange = lazyS.readWhere("t", "v", 0L, 100L).get
+    val lRange = lazyS.pruned("t", Prune.range("v", 0L, 100L)).get.read.get
       .orderBy("uuid").collect().toSeq
-    val eRange = eagerS.readWhere("t", "v", 0L, 100L).get
+    val eRange = eagerS.pruned("t", Prune.range("v", 0L, 100L)).get.read.get
       .orderBy("uuid").collect().toSeq
     assert(lRange == eRange)
   }

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.SparkSession
 
 /** Point-lookup data skipping ([[SnapshotBucketedStore]]
-  * `keyColumns`/`readWhereEq`/`pruneEqStats`): per-generation-dir key
+  * `keyColumns`, `pruned` with `Prune.Eq`): per-generation-dir key
   * membership Blooms in the manifest — min/max helps ranges,
   * membership helps the id-probe reads and GDPR delete targeting a
   * 100 TB table actually serves. Proof discipline as X182: a
@@ -29,21 +29,21 @@ class KeyStatsSpec extends SparkSpec {
     val store = new SnapshotBucketedStore(root, 8, "parquet", Nil, Seq("uuid", "name"))
     // disjoint id ranges per commit — each id lives in exactly one dir
     (0 until 8).foreach(g => store.append("log", rows(g * 100 until (g + 1) * 100, s"g$g")))
-    val (kept, total) = store.pruneEqStats("log", "uuid", 250L).get
+    val (kept, total) = store.pruned("log", Prune.Eq("uuid", 250L)).get.counts
     assert(total == 8 && kept <= 2,
       s"an id probe must skip nearly everything: $kept/$total")
-    val got = store.readWhereEq("log", "uuid", 250L).get.collect().toSeq
+    val got = store.pruned("log", Prune.Eq("uuid", 250L)).get.read.get.collect().toSeq
     val want = store.read("log").get.filter($"uuid" === 250L).collect().toSeq
     assert(got == want && got.size == 1)
     // string key column probes the same way
-    val (keptS, _) = store.pruneEqStats("log", "name", "u731").get
+    val (keptS, _) = store.pruned("log", Prune.Eq("name", "u731")).get.counts
     assert(keptS <= 2, s"string probe kept $keptS")
-    assert(store.readWhereEq("log", "name", "u731").get.count() == 1)
+    assert(store.pruned("log", Prune.Eq("name", "u731")).get.read.get.count() == 1)
     // an id that never existed: Bloom has no false negatives, and at
     // this fill rate the probe should scan (almost) nothing
-    val (keptNo, _) = store.pruneEqStats("log", "uuid", 999999L).get
+    val (keptNo, _) = store.pruned("log", Prune.Eq("uuid", 999999L)).get.counts
     assert(keptNo <= 2, s"absent id kept $keptNo dirs")
-    assert(store.readWhereEq("log", "uuid", 999999L).get.count() == 0)
+    assert(store.pruned("log", Prune.Eq("uuid", 999999L)).get.read.get.count() == 0)
   }
 
   test("bucketed upsert: per-bucket Blooms from ONE grouped agg, carried by reference") {
@@ -53,13 +53,13 @@ class KeyStatsSpec extends SparkSpec {
     store.upsert("tgt", rows(0 until 200, "v1"), "uuid")
     store.upsert("tgt", rows(198 until 203, "v2"), "uuid")
     // a live id scans exactly its bucket's dir (+fpp); equality holds
-    val (kept, total) = store.pruneEqStats("tgt", "uuid", 57L).get
+    val (kept, total) = store.pruned("tgt", Prune.Eq("uuid", 57L)).get.counts
     assert(total == 8 && kept <= 2, s"probe kept $kept/$total")
-    val got = store.readWhereEq("tgt", "uuid", 57L).get.collect().toSeq
+    val got = store.pruned("tgt", Prune.Eq("uuid", 57L)).get.read.get.collect().toSeq
     assert(got == store.read("tgt").get.filter($"uuid" === 57L).collect().toSeq)
     // the v2 rewrite updated ONLY its buckets' Blooms — id 202 (new in
     // v2) is found; untouched buckets answer from their g0 Blooms
-    assert(store.readWhereEq("tgt", "uuid", 202L).get
+    assert(store.pruned("tgt", Prune.Eq("uuid", 202L)).get.read.get
       .select("val").as[String].head() == "v2")
   }
 
@@ -79,8 +79,8 @@ class KeyStatsSpec extends SparkSpec {
     // a real delete still works and re-Blooms the rewritten buckets
     store.delete("tgt", "uuid", Seq(57L).toDF("uuid"))
     assert(store.read("tgt").get.count() == 99)
-    assert(store.readWhereEq("tgt", "uuid", 57L).get.count() == 0)
-    assert(store.readWhereEq("tgt", "uuid", 58L).get.count() == 1)
+    assert(store.pruned("tgt", Prune.Eq("uuid", 57L)).get.read.get.count() == 0)
+    assert(store.pruned("tgt", Prune.Eq("uuid", 58L)).get.read.get.count() == 1)
   }
 
   test("Blooms ride the manifest rename: a crash publishes neither dir nor membership") {
@@ -90,11 +90,11 @@ class KeyStatsSpec extends SparkSpec {
     store.append("log", rows(0 until 100, "v1"))
     store.crashNext = true
     intercept[RuntimeException] { store.append("log", rows(100 until 200, "v2")) }
-    assert(store.pruneEqStats("log", "uuid", 150L).get == ((0, 1)))
-    assert(store.readWhereEq("log", "uuid", 150L).get.count() == 0)
+    assert(store.pruned("log", Prune.Eq("uuid", 150L)).get.counts == ((0, 1)))
+    assert(store.pruned("log", Prune.Eq("uuid", 150L)).get.read.get.count() == 0)
     store.append("log", rows(100 until 200, "v2"))
-    assert(store.pruneEqStats("log", "uuid", 150L).get == ((1, 2)))
-    assert(store.readWhereEq("log", "uuid", 150L).get.count() == 1)
+    assert(store.pruned("log", Prune.Eq("uuid", 150L)).get.counts == ((1, 2)))
+    assert(store.pruned("log", Prune.Eq("uuid", 150L)).get.read.get.count() == 1)
   }
 
   test("unconfigured or unBloomed dirs degrade to conservative keeps") {
@@ -107,13 +107,13 @@ class KeyStatsSpec extends SparkSpec {
     plain.append("log", rows(0 until 100, "old"))
     val store = new SnapshotBucketedStore(root, 8, "parquet", Nil, Seq("uuid"))
     store.append("log", rows(100 until 200, "new"))
-    assert(store.pruneEqStats("log", "uuid", 42L).get == ((1, 2)),
+    assert(store.pruned("log", Prune.Eq("uuid", 42L)).get.counts == ((1, 2)),
       "the unBloomed dir is kept; the Bloomed one prunes")
-    assert(store.readWhereEq("log", "uuid", 42L).get.count() == 1)
-    assert(store.readWhereEq("log", "uuid", 142L).get.count() == 1)
+    assert(store.pruned("log", Prune.Eq("uuid", 42L)).get.read.get.count() == 1)
+    assert(store.pruned("log", Prune.Eq("uuid", 142L)).get.read.get.count() == 1)
     // a probe on a column never declared keeps everything, still exact
-    assert(store.pruneEqStats("log", "name", "u5").get == ((2, 2)))
-    assert(store.readWhereEq("log", "name", "u5").get.count() == 1)
+    assert(store.pruned("log", Prune.Eq("name", "u5")).get.counts == ((2, 2)))
+    assert(store.pruned("log", Prune.Eq("name", "u5")).get.read.get.count() == 1)
   }
 
   test("type-mismatched probes are cast to the column type — never a silent empty result") {
@@ -126,17 +126,17 @@ class KeyStatsSpec extends SparkSpec {
     // to Long first, matching read().filter's coercion semantics
     val wantRows = store.read("log").get.filter($"uuid" === 250).collect().toSeq
     assert(wantRows.size == 1)
-    assert(store.readWhereEq("log", "uuid", 250).get.collect().toSeq == wantRows,
+    assert(store.pruned("log", Prune.Eq("uuid", 250)).get.read.get.collect().toSeq == wantRows,
       "Int probe of a Long column must find the row")
     // ...and still PRUNE (the cast probe hashes identically to the Bloom)
-    val (keptInt, totalInt) = store.pruneEqStats("log", "uuid", 250).get
+    val (keptInt, totalInt) = store.pruned("log", Prune.Eq("uuid", 250)).get.counts
     assert(totalInt == 4 && keptInt <= 2, s"cast probe must still skip: $keptInt/$totalInt")
     // a lossless Double probe behaves like the filter's coercion
-    assert(store.readWhereEq("log", "uuid", 250.0).get.collect().toSeq == wantRows)
+    assert(store.pruned("log", Prune.Eq("uuid", 250.0)).get.read.get.collect().toSeq == wantRows)
     // a LOSSY probe (no Long equals 250.5) degrades to keep-all dirs,
     // and the residual filter still returns the coerced-exact answer
-    assert(store.pruneEqStats("log", "uuid", 250.5).get == ((4, 4)))
-    assert(store.readWhereEq("log", "uuid", 250.5).get.count() == 0)
+    assert(store.pruned("log", Prune.Eq("uuid", 250.5)).get.counts == ((4, 4)))
+    assert(store.pruned("log", Prune.Eq("uuid", 250.5)).get.read.get.count() == 0)
   }
 
   test("delete with a type-mismatched keys frame still deletes (never a silent no-op)") {
@@ -165,9 +165,9 @@ class KeyStatsSpec extends SparkSpec {
     (0 until 8).foreach(g => store.append("log", rows(g * 100 until (g + 1) * 100, s"g$g")))
     // two live ids from two different generations + one absent id
     val probes = Seq[Any](50L, 450L, 999999L)
-    val (kept, total) = store.pruneEqAnyStats("log", "uuid", probes).get
+    val (kept, total) = store.pruned("log", Prune.EqAny("uuid", probes)).get.counts
     assert(total == 8 && kept <= 4, s"3 probes must skip most dirs: $kept/$total")
-    val got = store.readWhereEqAny("log", "uuid", probes).get
+    val got = store.pruned("log", Prune.EqAny("uuid", probes)).get.read.get
     // superset contract: every row whose uuid is probed IS present
     val hits = got.filter($"uuid".isin(50L, 450L, 999999L)).collect()
     assert(hits.map(_.getLong(0)).toSet == Set(50L, 450L),
@@ -177,6 +177,6 @@ class KeyStatsSpec extends SparkSpec {
     assert(got.filter($"uuid".isin(probes.map(_.asInstanceOf[Long]): _*)).count() ==
       store.read("log").get.filter($"uuid".isin(probes.map(_.asInstanceOf[Long]): _*)).count())
     // type-mismatched probes keep everything (conservative), still a superset
-    assert(store.pruneEqAnyStats("log", "uuid", Seq(50.5)).get == ((8, 8)))
+    assert(store.pruned("log", Prune.EqAny("uuid", Seq(50.5))).get.counts == ((8, 8)))
   }
 }

@@ -40,19 +40,18 @@ class ScanStatsSpec extends SparkSpec {
       statsColumns = Seq("v"), keyColumns = Seq("uuid"))
     (0 until 8).foreach(g => store.append("t", rows(g * 100 until (g + 1) * 100)))
 
-    val (fullRows, fullBytes) = store.scanEstimate("t").get
+    val (fullRows, fullBytes) = store.pruned("t", Prune.All).get.estimate
     assert(fullRows.contains(800L), s"full estimate: $fullRows")
     assert(fullBytes.exists(_ > 0L))
 
     // a closed range keeps ~2 of 8 generations: rows estimate follows
-    val ranged = store.scanEstimate("t",
-      ranges = Seq(("v", 100L, 198L))).get
+    val ranged = store.pruned("t", Prune.range("v", 100L, 198L)).get.estimate
     assert(ranged._1.exists(r => r >= 50L && r <= 200L),
       s"range estimate must cover only surviving dirs: ${ranged._1}")
     assert(ranged._2.exists(b => b > 0L && b < fullBytes.get))
 
     // an equality probe targets the dirs whose Bloom might hold it
-    val eq = store.scanEstimate("t", eq = Some(("uuid", 123L))).get
+    val eq = store.pruned("t", Prune.Eq("uuid", 123L)).get.estimate
     assert(eq._1.exists(_ <= 200L), s"eq estimate: ${eq._1}")
   }
 
@@ -63,7 +62,7 @@ class ScanStatsSpec extends SparkSpec {
       statsColumns = Seq("v"), keyColumns = Seq("uuid"))
     store.upsert("t", rows(0 until 100), "uuid")
     store.deleteLazy("t", "uuid", Seq(1L, 2L, 3L).toDF("uuid"))
-    val (r, b) = store.scanEstimate("t").get
+    val (r, b) = store.pruned("t", Prune.All).get.estimate
     // logical rows = 97; the estimate reports the physical 100 — an
     // overestimate, the safe planning direction
     assert(r.contains(100L), s"tombstoned estimate: $r")
@@ -82,7 +81,7 @@ class ScanStatsSpec extends SparkSpec {
     val stats = plan.stats
     assert(stats.rowCount.contains(BigInt(200)),
       s"rowCount must come from the manifest: ${stats.rowCount}")
-    val expectBytes = store.scanEstimate("t").get._2.get
+    val expectBytes = store.pruned("t", Prune.All).get.estimate._2.get
     assert(stats.sizeInBytes == BigInt(expectBytes),
       s"sizeInBytes must be the manifest file bytes: ${stats.sizeInBytes} vs $expectBytes")
   }
@@ -179,8 +178,8 @@ class ScanStatsSpec extends SparkSpec {
     }
 
     CountingFileSystem.reset()
-    val est = store.scanEstimate("t").get
-    val estK = store.scanEstimate("kt").get
+    val est = store.pruned("t", Prune.All).get.estimate
+    val estK = store.pruned("kt", Prune.All).get.estimate
     assert(CountingFileSystem.dataDirListings.isEmpty,
       "a bytes-covered table must size its scan from the manifest " +
         s"alone; listed: ${CountingFileSystem.dataDirListings}")
@@ -196,7 +195,7 @@ class ScanStatsSpec extends SparkSpec {
       .linesIterator.filterNot(_.startsWith("bytes:")).mkString("", "\n", "\n")
     java.nio.file.Files.write(mPath, stripped.getBytes("UTF-8"))
     CountingFileSystem.reset()
-    val legacy = store.scanEstimate("t").get
+    val legacy = store.pruned("t", Prune.All).get.estimate
     assert(legacy._2.contains(listedBytes("t")))
     assert(CountingFileSystem.dataDirListings.nonEmpty,
       "a bytes-less manifest must fall back to listing")
@@ -204,7 +203,7 @@ class ScanStatsSpec extends SparkSpec {
     // one ANALYZE backfills the record; sizing goes listing-free again
     assert(store.analyzeTable("t") == 0) // nothing to recompute, bytes only
     CountingFileSystem.reset()
-    val back = store.scanEstimate("t").get
+    val back = store.pruned("t", Prune.All).get.estimate
     assert(back._2.contains(listedBytes("t")))
     assert(CountingFileSystem.dataDirListings.isEmpty,
       "analyze must backfill byte records: " +
@@ -265,10 +264,52 @@ class ScanStatsSpec extends SparkSpec {
     store.append("t", rows(0 until 50))
     val v1 = store.snapshots("t").last
     store.append("t", rows(50 until 300))
-    val pinned = store.scanEstimate("t", version = Some(v1)).get
-    val head = store.scanEstimate("t").get
+    val pinned = store.pruned("t", Prune.All, Some(v1)).get.estimate
+    val head = store.pruned("t", Prune.All).get.estimate
     assert(pinned._1.contains(50L), s"pinned: ${pinned._1}")
     assert(head._1.contains(300L), s"head: ${head._1}")
     assert(pinned._2.get < head._2.get)
+  }
+
+  test("a filtered SQL scan takes rows, skip metric and estimate from one manifest read") {
+    val local = tmpDir("graft_stats_once_")
+    val root = "cntfs:" + local
+    implicit val s = spark
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
+    val store = new SnapshotBucketedStore(root, numBuckets = 4,
+      statsColumns = Seq("v"), keyColumns = Seq("uuid"))
+    (0 until 8).foreach(g => store.append("t", rows(g * 100 until (g + 1) * 100)))
+    val cat = register(root)
+    val v1 = spark.read.format("graft").option("root", root).option("table", "t").load()
+    def v2(where: String) = spark.sql(s"SELECT * FROM $cat.t WHERE $where")
+
+    // table-dir listings (one per manifest lookup) while a resolved
+    // query reports its statistics, plans and runs
+    def tableListings(df: org.apache.spark.sql.DataFrame): Int = {
+      import scala.jdk.CollectionConverters._
+      df.queryExecution.analyzed
+      CountingFileSystem.reset()
+      df.queryExecution.optimizedPlan.stats
+      df.collect()
+      CountingFileSystem.listed.asScala.count(_ == s"$local/t")
+    }
+    // unpruned baselines: V1 sizes the relation (1) and scans (1); V2's
+    // scan builder reads the schema and the table shape (2) and the
+    // scan serves statistics and rows (1)
+    assert(tableListings(v1.where("tag = 'q' OR v > 0")) == 2)
+    assert(tableListings(v2("tag = 'q' OR v > 0")) == 3)
+    Seq(
+      "v >= 100 AND v <= 198" -> Prune.range("v", 100L, 198L),
+      "uuid = 420" -> Prune.Eq("uuid", 420L),
+      "uuid IN (5, 505)" -> Prune.EqAny("uuid", Seq(5L, 505L))).foreach { case (where, p) =>
+      val expected = store.pruned("t", p).get.counts
+      assert(expected._1 < expected._2, s"$where must prune: $expected")
+      // a pruning filter adds no manifest read to either surface
+      assert(tableListings(v1.where(where)) == 2, s"V1 $where")
+      assert(GraftSource.lastPrune.contains(expected), s"V1 $where")
+      assert(tableListings(v2(where)) == 3, s"V2 $where")
+      assert(GraftSource.lastPrune.contains(expected), s"V2 $where")
+    }
   }
 }

@@ -62,14 +62,14 @@ class SchemaEvolutionSpec extends SparkSpec {
       Seq((other, 9000000000L)).toDF("uuid", "tag"), "uuid")
     // probe a tag that lives ONLY in a pre-widening dir: the long-typed
     // probe must still find it (multi-type sibling hashes)
-    val hit = store.readWhereEq("t", "tag", 49L).get.collect()
+    val hit = store.pruned("t", Prune.Eq("tag", 49L)).get.read.get.collect()
     assert(hit.length == 1 && hit.head.getLong(0) == 7L,
       s"widened probe lost the pre-widening row: ${hit.toSeq}")
     // equivalence with the unpruned filter, both probe types
     val all = store.read("t").get.filter(col("tag") === 49L).collect()
     assert(hit.toSeq == all.toSeq)
     // and pruning still does work: an absent tag keeps ~no dirs
-    val (kept, total) = store.pruneEqStats("t", "tag", 123456789L).get
+    val (kept, total) = store.pruned("t", Prune.Eq("tag", 123456789L)).get.counts
     assert(kept < total, s"membership pruning dead after widening: $kept/$total")
   }
 
@@ -101,8 +101,9 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(lazyS.read("t").get.schema("val").dataType ==
       org.apache.spark.sql.types.LongType)
     // the pruned families agree over the composed state too
-    assert(lazyS.readWhereEq("t", "uuid", 10L).get.collect().isEmpty)
-    assert(lazyS.readWhereEq("t", "uuid", 11L).get.collect().map(_.getLong(0)).toSeq == Seq(11L))
+    assert(lazyS.pruned("t", Prune.Eq("uuid", 10L)).get.read.get.collect().isEmpty)
+    assert(lazyS.pruned("t", Prune.Eq("uuid", 11L)).get.read.get
+      .collect().map(_.getLong(0)).toSeq == Seq(11L))
   }
 
   test("non-promotable conflict refuses loudly at read") {

@@ -75,13 +75,13 @@ class UpsertBatchSpec extends SparkSpec {
     // pre-crash snapshot intact: old content, old mark, old stats
     assert(store.lastAppliedBatch("tgt").contains(0L))
     assert(store.read("tgt").get.count() == 50)
-    assert(store.pruneStats("tgt", "uuid", 55L, 58L).isDefined)
-    assert(store.readWhere("tgt", "uuid", 55L, 58L).get.count() == 0)
+    assert(store.pruned("tgt", Prune.range("uuid", 55L, 58L)).isDefined)
+    assert(store.pruned("tgt", Prune.range("uuid", 55L, 58L)).get.read.get.count() == 0)
     // retry: rows + mark + stats in ONE rename
     store.upsertWithBatch("tgt", rows(50 until 60, "b1"), "uuid", 1L)
     assert(store.lastAppliedBatch("tgt").contains(1L))
     assert(store.read("tgt").get.count() == 60)
-    assert(store.readWhere("tgt", "uuid", 55L, 58L).get.count() == 4)
+    assert(store.pruned("tgt", Prune.range("uuid", 55L, 58L)).get.read.get.count() == 4)
   }
 
   test("an EMPTY delta still advances the mark, even with stats columns configured") {
@@ -98,7 +98,7 @@ class UpsertBatchSpec extends SparkSpec {
     val t = store.read("tgt").get
     assert(t.count() == 40 && t.filter($"val" === "none").count() == 0)
     // stats survived the no-op commit: skipping still works
-    assert(store.readWhere("tgt", "uuid", 10L, 12L).get.count() == 3)
+    assert(store.pruned("tgt", Prune.range("uuid", 10L, 12L)).get.read.get.count() == 3)
   }
 
   test("NaN/Infinity values never poison the stats index") {
@@ -115,16 +115,16 @@ class UpsertBatchSpec extends SparkSpec {
     // be unparseable; they must be DROPPED at record time (and a
     // pre-fix manifest's literals KEPT conservatively at read time),
     // so range reads degrade to full scans instead of throwing
-    val got = store.readWhere("tgt", "m", 0.5, 5.0).get
+    val got = store.pruned("tgt", Prune.range("m", 0.5, 5.0)).get.read.get
       .orderBy("uuid").collect().toSeq
     val want = store.read("tgt").get
       .filter($"m" >= 0.5 && $"m" <= 5.0).orderBy("uuid").collect().toSeq
     assert(got == want && got.map(_.getLong(0)) == Seq(1L, 4L))
-    assert(store.pruneStats("tgt", "m", 0.5, 5.0).isDefined)
-    assert(store.readWhere("log2", "m", 0.5, 5.0).get.count() == 2)
+    assert(store.pruned("tgt", Prune.range("m", 0.5, 5.0)).isDefined)
+    assert(store.pruned("log2", Prune.range("m", 0.5, 5.0)).get.read.get.count() == 2)
     // a clean commit on the same table still records usable stats
     store.upsertWithBatch("tgt", Seq((10L, "e", 100.0)).toDF("uuid", "val", "m"), "uuid", 1L)
-    assert(store.readWhere("tgt", "m", 99.0, 101.0).get.count() == 1)
+    assert(store.pruned("tgt", Prune.range("m", 99.0, 101.0)).get.read.get.count() == 1)
   }
 
   test("float columns: a Double bound cannot wrongly skip (double-promoted stats)") {
@@ -136,10 +136,10 @@ class UpsertBatchSpec extends SparkSpec {
     // (≤ the true value) would wrongly skip the dir
     val df = Seq((1L, 1.1f), (2L, 0.5f)).toDF("uuid", "f")
     store.append("log", df)
-    val got = store.readWhere("log", "f", 1.10000001d, 2.0d).get.collect().toSeq
+    val got = store.pruned("log", Prune.range("f", 1.10000001d, 2.0d)).get.read.get.collect().toSeq
     assert(got.map(_.getLong(0)) == Seq(1L), s"float row must survive: $got")
     // and Float bounds promote the same way on the probe side
-    val got2 = store.readWhere("log", "f", 0.4f, 0.6f).get.collect().toSeq
+    val got2 = store.pruned("log", Prune.range("f", 0.4f, 0.6f)).get.read.get.collect().toSeq
     assert(got2.map(_.getLong(0)) == Seq(2L))
   }
 }

@@ -44,8 +44,8 @@ class ZOrderStoreSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
 
     // ingest order: a prunes hard, b not at all
-    val (aKept0, total0) = store.pruneStats("t", "a", 0L, 7L).get
-    val (bKept0, _) = store.pruneStats("t", "b", 0L, 7L).get
+    val (aKept0, total0) = store.pruned("t", Prune.range("a", 0L, 7L)).get.counts
+    val (bKept0, _) = store.pruned("t", Prune.range("b", 0L, 7L)).get.counts
     assert(total0 == 8 && aKept0 == 1, s"linear a-prune: $aKept0/$total0")
     assert(bKept0 == 8, s"linear layout cannot prune b: $bKept0")
 
@@ -53,8 +53,8 @@ class ZOrderStoreSpec extends SparkSpec {
     val out = spark.sql(s"CALL $cat.system.zorder('t', 'a,b', 8)").collect()
     assert(out.head.getInt(1) == 8, s"slabs written: ${out.head.getInt(1)}")
 
-    val (aKept1, total1) = store.pruneStats("t", "a", 0L, 7L).get
-    val (bKept1, _) = store.pruneStats("t", "b", 0L, 7L).get
+    val (aKept1, total1) = store.pruned("t", Prune.range("a", 0L, 7L)).get.counts
+    val (bKept1, _) = store.pruned("t", Prune.range("b", 0L, 7L)).get.counts
     assert(total1 == 8)
     assert(aKept1 <= 5, s"z-layout must still prune a: $aKept1/8")
     assert(bKept1 <= 5, s"z-layout must NOW prune b: $bKept1/8")

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.io.Prune
 import org.apache.spark.sql.functions._
 
 class IvfSpec extends SparkSpec {
@@ -140,7 +141,7 @@ class IvfSpec extends SparkSpec {
     assert(stored == inline, "stored-index search must replay the inline result exactly")
     // the cluster layout makes per-dir cell stats narrow: a one-cell
     // probe prunes most of the table's dirs
-    val (kept, total) = store.pruneStats("vs", "cell", 0, 0).get
+    val (kept, total) = store.pruned("vs", Prune.range("cell", 0, 0)).get.counts
     assert(total >= 4 && kept * 4 <= total,
       s"cell-clustered dirs must prune a point probe: kept $kept/$total")
     // incremental refresh: upsert a delta, search reflects it
@@ -215,9 +216,9 @@ class IvfSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     got.foreach(r => assert((2 to 5).contains(labels(r.getLong(1)))))
     // conjunctive pruning is never worse than the cell conjunct alone
-    val (keptBoth, total) = store.pruneStatsAll("vs",
-      Seq(("cell", 0, 0), ("label", 2, 5))).get
-    val (keptCell, _) = store.pruneStats("vs", "cell", 0, 0).get
+    val (keptBoth, total) = store.pruned("vs",
+      Prune.Ranges(Seq(("cell", 0, 0), ("label", 2, 5)))).get.counts
+    val (keptCell, _) = store.pruned("vs", Prune.range("cell", 0, 0)).get.counts
     assert(keptBoth <= keptCell && total >= 4)
   }
 

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.io.Prune
 import org.apache.spark.sql.functions._
 
 class TextIndexSpec extends SparkSpec {
@@ -33,11 +34,11 @@ class TextIndexSpec extends SparkSpec {
     // membership pruning: the query's terms touch a strict subset of
     // dirs; a term the corpus never saw touches (almost) none
     val qt = Seq("hash", "join", "strategy")
-    val (kept, total) = store.pruneEqAnyStats("t_postings", "term", qt).get
+    val (kept, total) = store.pruned("t_postings", Prune.EqAny("term", qt)).get.counts
     assert(total >= 4 && kept < total,
       s"queried terms must prune some dirs: kept $kept/$total")
     val (keptNone, _) =
-      store.pruneEqAnyStats("t_postings", "term", Seq("graftnosuchterm")).get
+      store.pruned("t_postings", Prune.EqAny("term", Seq("graftnosuchterm"))).get.counts
     assert(keptNone <= total / 2,
       s"an absent term should prune most dirs: kept $keptNone/$total")
     // at-least-once transport: re-sending unchanged docs converges
@@ -118,7 +119,7 @@ class TextIndexSpec extends SparkSpec {
     // own-bucket probe opens a fraction of them
     val b = storedV.headOption.map(_ => vstore.read("t_docvecs").get
       .select("bucket").head.getLong(0)).getOrElse(0L)
-    val (kept, total) = vstore.pruneStats("t_docvecs", "bucket", b, b).get
+    val (kept, total) = vstore.pruned("t_docvecs", Prune.range("bucket", b, b)).get.counts
     assert(total >= 4 && kept * 2 <= total,
       s"bucket probe must prune dirs: kept $kept/$total")
   }

@@ -401,7 +401,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("ObjectHashAggregate") && p.contains("partial_graft_top_k"),
       s"bounded-heap top-k must combine map-side:\n${p.take(800)}")
     // the dir-level pruning proof lives in TextIndexSpec's
-    // pruneEqAnyStats metric (kept < total for queried terms)
+    // Prune.EqAny skip metric (kept < total for queried terms)
   }
 
   test("q157 stored hybrid: no cartesian, equi-join ANN stage, bounded-heap top-k everywhere") {
@@ -836,7 +836,7 @@ class PlanAuditSpec extends SparkSpec {
     noDecodedArrayInExchanges(df, "q149")
     // the pruning proof behind the stored read: a cell-clustered
     // index answers a one-cell probe from ~1/numCells of its dirs
-    // (the IvfSpec persisted-index test asserts the pruneStats
+    // (the IvfSpec persisted-index test asserts the Prune.Ranges skip
     // metric and bit-equality against the inline form)
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.io.Prune
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -206,13 +207,11 @@ class CorpusIntakeSpec extends SparkSpec {
     val dupFp = Seq(good).toDF("text")
       .select(graft.llm.TextOps.fingerprint(
         lit(variant(1))).as("fp")).as[Long].head()
-    val (kept, total) = store.pruneEqAnyStats("c", CorpusIntake.FpCol,
-      Seq(dupFp)).get
+    val (kept, total) = store.pruned("c", Prune.EqAny(CorpusIntake.FpCol, Seq(dupFp))).get.counts
     assert(total >= 4 && kept * 2 <= total,
       s"fp Blooms must skip most generation dirs: kept $kept/$total")
     // an absent fp skips (nearly) everything
-    val (keptNo, _) = store.pruneEqAnyStats("c", CorpusIntake.FpCol,
-      Seq(123456789L)).get
+    val (keptNo, _) = store.pruned("c", Prune.EqAny(CorpusIntake.FpCol, Seq(123456789L))).get.counts
     assert(keptNo <= 1, s"absent fp kept $keptNo dirs")
   }
 
