@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsDelete, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, GreaterThanOrEqual, In, InsertableRelation, LessThanOrEqual, TableScan}
@@ -407,10 +407,15 @@ private[io] class GraftV2Table(store: SnapshotBucketedStore, table: String,
     case _ => None
   })
 
-  private def keyedBucketed: Boolean =
-    store.tableKind(table).exists { case (b, l) => l == 0 && b > 0 }
+  /** (bucket-dir count, log-dir count) of the current snapshot,
+    * resolved once per loaded table. */
+  private lazy val kind: (Int, Int) = store.tableKind(table).getOrElse((0, 0))
 
-  override def schema(): StructType = {
+  private def keyedBucketed: Boolean = kind._2 == 0 && kind._1 > 0
+
+  /** Resolved once per loaded table: the merge-schema read lists
+    * every live data dir and reads their footers. */
+  private lazy val resolvedSchema: StructType = {
     val df = version match {
       case Some(v) => store.readAt(table, v)
       case None => store.read(table)
@@ -426,6 +431,8 @@ private[io] class GraftV2Table(store: SnapshotBucketedStore, table: String,
       case _ => raw
     }
   }
+
+  override def schema(): StructType = resolvedSchema
 
   override def capabilities(): util.Set[TableCapability] =
     if (version.isDefined) util.EnumSet.of(TableCapability.BATCH_READ)
@@ -468,8 +475,7 @@ private[io] class GraftV2Table(store: SnapshotBucketedStore, table: String,
       s"${info.command} needs a keyed graft table: create '$table' with " +
         "TBLPROPERTIES('key'='<column>') (or register the catalog with one " +
         "keycolumns entry) so rows have an identity to merge on"))
-    val (nBuckets, nLogs) = store.tableKind(table).getOrElse((0, 0))
-    require(nLogs == 0 && nBuckets > 0,
+    require(keyedBucketed,
       s"'$table' has append-log generations — row-level SQL writes target " +
         "keyed bucketed tables (CREATE TABLE ... TBLPROPERTIES('key'=...), " +
         "or migrate via rebuild)")
@@ -506,7 +512,6 @@ private[io] class GraftV2Table(store: SnapshotBucketedStore, table: String,
     * this catalog cannot serve it exactly (see class doc). */
   private def deletePlan(filters: Array[Filter]): Option[() => Unit] = {
     if (version.isDefined) return None
-    val (nBuckets, nLogs) = store.tableKind(table).getOrElse((0, 0))
     implicit val spark: SparkSession = SparkSession.active
     def keysFrame(c: String, vs: Seq[Any]): Option[org.apache.spark.sql.DataFrame] =
       schema().fields.find(_.name == c).map { f =>
@@ -515,10 +520,10 @@ private[io] class GraftV2Table(store: SnapshotBucketedStore, table: String,
           StructType(Seq(StructField(c, f.dataType))))
       }
     filters match {
-      case Array(EqualTo(c, v)) if nLogs == 0 && nBuckets > 0 =>
+      case Array(EqualTo(c, v)) if keyedBucketed =>
         keysFrame(c, Seq(v)).map(kf =>
           () => store.deleteLazy(table, c, kf, targetByKeyHash = false))
-      case Array(In(c, vs)) if nLogs == 0 && nBuckets > 0 =>
+      case Array(In(c, vs)) if keyedBucketed =>
         keysFrame(c, vs.toSeq).map(kf =>
           () => store.deleteLazy(table, c, kf, targetByKeyHash = false))
       case _ =>
@@ -585,10 +590,11 @@ private[io] class GraftMetaTable(tableName: String,
   * milliseconds without opening one data file. Aggregate pushdown is
   * accepted ONLY when the manifest can serve it EXACTLY — no pushed
   * filters, no grouping, every live dir statted, no outstanding
-  * merge-on-read tombstones ([[SnapshotBucketedStore.metadataCount]]/
-  * [[SnapshotBucketedStore.metadataMinMax]] enforce those gates and
-  * answer None otherwise, which declines the pushdown and the plain
-  * scan computes the truth). */
+  * merge-on-read tombstones ([[Served.count]]/[[Served.minMax]]
+  * enforce those gates and answer None otherwise, which declines the
+  * pushdown and the plain scan computes the truth). Every figure of
+  * one pushdown comes from one [[SnapshotBucketedStore.served]] read
+  * per builder, so COUNT, MIN and MAX describe the same snapshot. */
 private[io] class GraftScanBuilder(
     store: SnapshotBucketedStore, table: String, full: StructType,
     version: Option[Int] = None,
@@ -600,7 +606,8 @@ private[io] class GraftScanBuilder(
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = full
-  private var served: Option[(StructType, Seq[Any])] = None
+  private var answer: Option[(StructType, Seq[Any])] = None
+  private lazy val served: Option[Served] = store.served(table)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
@@ -623,49 +630,29 @@ private[io] class GraftScanBuilder(
   private def serveFromManifest(agg: Aggregation): Option[(StructType, Seq[Any])] = {
     if (version.isDefined || pushed.nonEmpty || agg.groupByExpressions.nonEmpty)
       return None
+    val sv = served.getOrElse(return None)
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
       e match {
         case nr: NamedReference if nr.fieldNames.length == 1 =>
           full.fields.find(_.name == nr.fieldNames.head)
         case _ => None
       }
-    def asExternal(v: BigDecimal, dt: org.apache.spark.sql.types.DataType): Option[Any] =
-      GraftExternal.convert(v, dt)
-    val fields = Seq.newBuilder[StructField]
-    val values = Seq.newBuilder[Any]
-    agg.aggregateExpressions.zipWithIndex.foreach { case (f: AggregateFunc, i) =>
-      f match {
-        case _: CountStar =>
-          store.metadataCount(table) match {
-            case Some(n) =>
-              fields += StructField(s"agg$i", LongType, nullable = false)
-              values += n
-            case None => return None
-          }
-        case m: Min =>
-          (for {
-            sf <- colOf(m.column)
-            (mn, _) <- store.metadataMinMax(table, sf.name)
-            v <- asExternal(mn, sf.dataType)
-          } yield (sf, v)) match {
-            case Some((sf, v)) =>
-              fields += StructField(s"agg$i", sf.dataType); values += v
-            case None => return None
-          }
-        case m: Max =>
-          (for {
-            sf <- colOf(m.column)
-            (_, mx) <- store.metadataMinMax(table, sf.name)
-            v <- asExternal(mx, sf.dataType)
-          } yield (sf, v)) match {
-            case Some((sf, v)) =>
-              fields += StructField(s"agg$i", sf.dataType); values += v
-            case None => return None
-          }
-        case _ => return None
-      }
+    def bound(i: Int, e: org.apache.spark.sql.connector.expressions.Expression,
+        pick: ((BigDecimal, BigDecimal)) => BigDecimal): Option[(StructField, Any)] =
+      for {
+        sf <- colOf(e)
+        mm <- sv.minMax(sf.name)
+        v <- GraftExternal.convert(pick(mm), sf.dataType)
+      } yield (StructField(s"agg$i", sf.dataType), v)
+    // one (field, value) per aggregate, or decline the whole pushdown
+    val out = agg.aggregateExpressions.toSeq.zipWithIndex.map {
+      case (_: CountStar, i) => sv.count.map(StructField(s"agg$i", LongType, nullable = false) -> _)
+      case (m: Min, i) => bound(i, m.column, _._1)
+      case (m: Max, i) => bound(i, m.column, _._2)
+      case _ => None
     }
-    Some((StructType(fields.result()), values.result()))
+    if (out.exists(_.isEmpty)) None
+    else Some((StructType(out.flatten.map(_._1)), out.flatten.map(_._2)))
   }
 
   override def supportCompletePushDown(agg: Aggregation): Boolean =
@@ -674,11 +661,11 @@ private[io] class GraftScanBuilder(
   override def pushAggregation(agg: Aggregation): Boolean = {
     // complete-or-nothing: when the manifest can't serve exactly the
     // pushdown is declined and the plain scan aggregates the truth
-    served = serveFromManifest(agg)
-    served.isDefined
+    answer = serveFromManifest(agg)
+    answer.isDefined
   }
 
-  override def build(): Scan = served match {
+  override def build(): Scan = answer match {
     case Some((sch, vals)) => new GraftAggServe(table, sch, vals)
     case None => new GraftScan(store, table,
       if (version.isDefined) Array.empty else pushed, required, version,
@@ -767,7 +754,7 @@ private[io] class GraftScan(
       if (version.isEmpty && filters.isEmpty &&
           org.apache.spark.sql.SparkSession.active.conf
             .get("spark.sql.cbo.enabled", "false") == "true") {
-        val served = store.columnStatsServe(table)
+        val served = scan.map(_.served.columnStats).getOrElse(Map.empty)
         val m = new java.util.HashMap[
           org.apache.spark.sql.connector.expressions.NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()

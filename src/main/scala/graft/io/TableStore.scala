@@ -198,16 +198,148 @@ object Prune {
   * first use; None when the snapshot has no live dir), and the
   * planning estimate ([[estimate]]: rows if every kept dir records a
   * count, file bytes if every kept dir's size is known — whole dirs
-  * before the residual predicate, an upper bound). */
+  * before the residual predicate, an upper bound), plus the
+  * metadata-served figures of the same snapshot ([[served]]). */
 final class PrunedScan private[io] (
     val kept: Int,
     val total: Int,
     readOf: => Option[DataFrame],
-    estimateOf: => (Option[Long], Option[Long])) {
+    estimateOf: => (Option[Long], Option[Long]),
+    val served: Served) {
   lazy val read: Option[DataFrame] = readOf
   lazy val estimate: (Option[Long], Option[Long]) = estimateOf
   /** (kept, total). */
   def counts: (Int, Int) = (kept, total)
+}
+
+/** METADATA-ONLY answers of one snapshot ([[SnapshotBucketedStore.served]],
+  * X214/X216/X218/X222/X254 — the Delta numRecords / Iceberg
+  * manifest-stats trick): every figure is a fold over the per-dir
+  * records the manifest commits in the same rename as the dirs, so no
+  * data file is opened and no Spark job runs. All figures of one
+  * `Served` describe the same snapshot.
+  *
+  * Exact-or-refuse: None means "scan instead", never a guess.
+  *   - outstanding merge-on-read tombstones refuse every figure
+  *     (records describe PHYSICAL rows, which over-count);
+  *   - a DROPPED name (X259) refuses every figure for that column;
+  *   - a legacy (v1) stats format refuses min/max, whose float strings
+  *     are approximations ([[SnapshotBucketedStore.LegacyStatsEps]]);
+  *   - a live dir that may hold rows but records no figure (legacy
+  *     dirs, undeclared columns, an all-null or unparseable stat)
+  *     refuses; a dir recorded as zero rows contributes nothing. */
+final class Served private[io] (m: Manifest, declared: Seq[String]) {
+
+  /** One recorded figure per live dir, through the gates above (the
+    * stats-version gate is [[minMax]]'s own). `column` None = a
+    * whole-table figure (the row count). */
+  private def everyLive[T](column: Option[String])(of: DirMeta => Option[T]): Option[Seq[T]] =
+    if (m.hasTombs || column.exists(m.droppedNames.contains)) None
+    else {
+      val per = (m.buckets.values ++ m.logs).toSeq.flatMap { d =>
+        val x = m.meta(d)
+        of(x) match {
+          case Some(t) => Seq(Some(t))
+          case None => if (x.rows.contains(0L)) Nil else Seq(None)
+        }
+      }
+      if (per.exists(_.isEmpty)) None else Some(per.flatten)
+    }
+
+  /** The live dirs' base64 sketch images of `column`. */
+  private def images(column: String, of: DirMeta => Seq[(String, String)]): Option[Seq[String]] =
+    everyLive(Some(column))(of(_).find(_._1 == column).map(_._2))
+
+  /** COUNT(*): Σ recorded per-dir row counts. */
+  def count: Option[Long] = everyLive(None)(_.rows).map(_.sum)
+
+  /** MIN/MAX of a stats column — EXACT, not a bound: per-dir min/max
+    * are computed from the data at commit (rewritten dirs recompute),
+    * so the fold is the true extremum over non-null values (SQL
+    * MIN/MAX semantics). All-empty table → None (SQL's NULL MIN). */
+  def minMax(column: String): Option[(BigDecimal, BigDecimal)] =
+    if (m.statsVersion != SnapshotBucketedStore.CurrentStatsVersion) None
+    else everyLive(Some(column))(_.stats.find(_._1 == column)
+      .flatMap(SnapshotBucketedStore.rangeOf)).filter(_.nonEmpty)
+      .map(rs => (rs.map(_._1).min, rs.map(_._2).max))
+
+  /** Approximate distinct count of an `ndvColumns` column (X216): one
+    * driver-side union of the per-dir HLL sketches (lgK =
+    * [[SnapshotBucketedStore.NdvLgK]], ~1.6% standard error). HLL
+    * registers max-merge, so the union is exactly the sketch of the
+    * whole table. An all-empty table counts 0; an undecodable sketch
+    * refuses. */
+  def approxDistinct(column: String): Option[Long] =
+    images(column, _.ndv).flatMap { per =>
+      try {
+        val u = new org.apache.datasketches.hll.Union(SnapshotBucketedStore.NdvLgK)
+        per.foreach(b64 => u.update(org.apache.datasketches.hll.HllSketch.heapify(
+          java.util.Base64.getDecoder.decode(b64))))
+        Some(Math.round(u.getResult.getEstimate))
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
+
+  /** The live dirs' recorded KLL images (X218) merged in a fixed
+    * sorted order (deterministic given the manifest): None = refused,
+    * Some(None) = every image empty (an all-null column). */
+  private def kll(column: String): Option[Option[org.apache.datasketches.kll.KllDoublesSketch]] =
+    images(column, _.qsk).map(per => graft.expr.KllSketchAgg.mergeImages(
+      per.sorted.map(java.util.Base64.getDecoder.decode)))
+
+  /** Approximate quantiles of a `quantileColumns` column (X218) over
+    * its DOUBLE promotion, from the merged per-dir KLL sketches (k =
+    * [[graft.expr.KllSketchAgg.DefaultK]], ~1.65% normalized rank
+    * error at 99% confidence). KLL compaction is randomized, so the
+    * contract is an error band, not a value. An all-null column has
+    * no order statistic → None. */
+  def quantiles(column: String, probs: Seq[Double]): Option[Seq[Double]] = {
+    require(probs.forall(p => p >= 0.0 && p <= 1.0),
+      s"ranks must be in [0, 1]: ${probs.mkString(", ")}")
+    kll(column).flatten.map(u => probs.map(u.getQuantile))
+  }
+
+  /** Approximate count of rows with `lo <= column <= hi` — range
+    * SELECTIVITY for planners: `n * (rank≤(hi) - rank<(lo))` on the
+    * merged sketch, n its exact non-null count. Counts non-null rows
+    * only (SQL `BETWEEN`); an all-null column has none in range → 0. */
+  def rangeCount(column: String, lo: Double, hi: Double): Option[Long] = {
+    require(lo <= hi, s"empty range: lo=$lo > hi=$hi")
+    kll(column).map {
+      case None => 0L
+      case Some(u) =>
+        import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
+        val below = u.getRank(lo, QuantileSearchCriteria.EXCLUSIVE)
+        val upTo = u.getRank(hi, QuantileSearchCriteria.INCLUSIVE)
+        math.round(u.getN * math.max(0.0, upTo - below))
+    }
+  }
+
+  /** Distribution drift of `column` from this snapshot (the
+    * reference) to `current` (X222): POPULATION STABILITY INDEX over
+    * `buckets` equal-probability bins of the reference's merged KLL
+    * sketch ([[graft.expr.KllSketchAgg.psi]]; < 0.1 stable, > 0.25
+    * shifted). An estimate inheriting the rank-error band; all-null
+    * on either side → None. */
+  def drift(current: Served, column: String, buckets: Int = 10): Option[Double] =
+    for {
+      ref <- kll(column).flatten
+      cur <- current.kll(column).flatten
+    } yield graft.expr.KllSketchAgg.psi(ref, cur, buckets)
+
+  /** Per-column planning statistics (X254, the scan's
+    * `Statistics.columnStats()` under `spark.sql.cbo.enabled`):
+    * ([[minMax]], [[approxDistinct]]) of every declared stats/NDV
+    * column that serves either figure. A legacy stats format refuses
+    * the whole map, and an all-empty table gets no NDV. */
+  def columnStats: Map[String, (Option[(BigDecimal, BigDecimal)], Option[Long])] =
+    if (m.statsVersion != SnapshotBucketedStore.CurrentStatsVersion) Map.empty
+    else {
+      val empty = count.contains(0L)
+      declared.flatMap { c =>
+        val v = (minMax(c), approxDistinct(c).filterNot(_ => empty))
+        if (v._1.isEmpty && v._2.isEmpty) None else Some(c -> v)
+      }.toMap
+    }
 }
 
 /** Snapshot-isolated key-bucketed parquet store. The reference
@@ -269,8 +401,13 @@ object SnapshotBucketedStore {
     * ~1.6% relative standard error, ~4 KB dense per (dir, column) —
     * the Iceberg-puffin operating point. Frozen: sketches with
     * different lgK do not union losslessly, so changing this would
-    * orphan recorded sketches (hll_union_agg would refuse). */
+    * orphan recorded sketches (a union would refuse them). */
   val NdvLgK: Int = 12
+
+  /** A recorded (min, max) as exact decimals; None when either fails
+    * to parse. */
+  private[io] def rangeOf(stat: (String, String, String)): Option[(BigDecimal, BigDecimal)] =
+    scala.util.Try((BigDecimal(stat._2), BigDecimal(stat._3))).toOption
 }
 
 class SnapshotBucketedStore(
@@ -288,7 +425,7 @@ class SnapshotBucketedStore(
     extends TableStore {
 
   import org.apache.hadoop.fs.Path
-  import SnapshotBucketedStore.NdvLgK
+  import SnapshotBucketedStore.{NdvLgK, rangeOf}
   require(statsColumns.forall(_.matches("[A-Za-z0-9_]+")),
     s"stats column names must be [A-Za-z0-9_]+ (manifest line syntax): " +
       statsColumns.mkString(", "))
@@ -563,6 +700,10 @@ class SnapshotBucketedStore(
 
   private def latestManifest(name: String): Option[Manifest] =
     snapshots(name).lastOption.flatMap(manifestAt(name, _))
+
+  /** The pinned snapshot, else the latest. */
+  private def manifestOf(name: String, version: Option[Int]): Option[Manifest] =
+    version.fold(latestManifest(name))(manifestAt(name, _))
 
   /** Test seam: crash-injection tests override this to die after data
     * dirs land but BEFORE the manifest rename — the largest window the
@@ -891,11 +1032,6 @@ class SnapshotBucketedStore(
       legacyStats: Boolean = false): Boolean =
     recordedRange(stats, column, legacyStats).forall { case (lo, hi) => hi >= lower && lo <= upper }
 
-  /** A recorded (min, max) as exact decimals; None when either fails
-    * to parse. */
-  private def rangeOf(stat: (String, String, String)): Option[(BigDecimal, BigDecimal)] =
-    scala.util.Try((BigDecimal(stat._2), BigDecimal(stat._3))).toOption
-
   /** `column`'s recorded range in `stats`, if recorded and parseable.
     * Pre-versioning (v1) manifests may hold float-shortest strings
     * whose double promotion sits OUTSIDE the string value, so their
@@ -920,7 +1056,7 @@ class SnapshotBucketedStore(
     * snapshot's schema; a snapshot with no live dir reads None. None
     * when the table (or the pinned version) does not exist. */
   def pruned(name: String, p: Prune, version: Option[Int] = None): Option[PrunedScan] =
-    version.fold(latestManifest(name))(manifestAt(name, _)).map { m =>
+    manifestOf(name, version).map { m =>
       import org.apache.spark.sql.functions.{col, lit}
       val all = (m.buckets.values ++ m.logs).toSeq
       val kept = if (all.isEmpty) Nil else keptDirs(name, m, all, p)
@@ -948,7 +1084,7 @@ class SnapshotBucketedStore(
         kept.foldLeft(Option(0L)) { (acc, d) =>
           acc.flatMap(sum => m.meta(d).bytes.orElse(listedBytes(name, d)).map(sum + _))
         })
-      new PrunedScan(kept.size, all.size, read, estimate)
+      new PrunedScan(kept.size, all.size, read, estimate, servedOf(m))
     }
 
   /** The dirs of `all` predicate `p` keeps — the read path's one
@@ -1102,274 +1238,17 @@ class SnapshotBucketedStore(
       catch { case scala.util.control.NonFatal(_) => None }
     }
 
-  /** METADATA-ONLY COUNT(*) (X214 — the Delta-style numRecords
-    * trick): Σ per-dir recorded row counts, answered from the
-    * manifest alone — no data file is opened, so the answer costs
-    * milliseconds at ANY table size. Every commit since row counting
-    * records its new dirs' counts in the same manifest rename as the
-    * dirs (counts can never disagree with the data they describe);
-    * None when any live dir lacks one (tables last written by older
-    * code) — callers fall back to a scan, the conservative degrade
-    * every metadata tier here shares. */
-  def metadataCount(name: String): Option[Long] =
-    latestManifest(name).flatMap(recordedRows)
+  /** The metadata-served figures of one snapshot (the latest, or
+    * `version`) from ONE manifest read — COUNT, MIN/MAX, NDV,
+    * quantiles, range counts, drift and CBO column statistics all
+    * answer from the same [[Served]] view, so figures combined by one
+    * caller never mix snapshots. None when the table (or the pinned
+    * version) does not exist. */
+  def served(name: String, version: Option[Int] = None): Option[Served] =
+    manifestOf(name, version).map(servedOf)
 
-  /** Σ recorded rows of the live dirs; None while tombstones are
-    * outstanding (physical counts over-count) or a dir lacks a count. */
-  private def recordedRows(m: Manifest): Option[Long] =
-    if (m.hasTombs) None else everyLive(m)(_.rows).map(_.sum)
-
-  /** One recorded figure per live dir, the shared gate of the
-    * metadata-served aggregates: None when a dir that may hold rows
-    * records none (scan fallback); a dir recorded as zero rows
-    * contributes nothing. */
-  private def everyLive[T](m: Manifest)(of: DirMeta => Option[T]): Option[Seq[T]] = {
-    val per = (m.buckets.values ++ m.logs).toSeq.flatMap { d =>
-      val x = m.meta(d)
-      of(x) match {
-        case Some(t) => Seq(Some(t))
-        case None => if (x.rows.contains(0L)) Nil else Seq(None)
-      }
-    }
-    if (per.exists(_.isEmpty)) None else Some(per.flatten)
-  }
-
-  /** METADATA-ONLY MIN/MAX of a stats column — EXACT, not a bound:
-    * per-dir min/max are computed from the data at commit (and
-    * rewritten dirs recompute), so the fold over live dirs is the
-    * true global extremum over non-null values (SQL MIN/MAX
-    * semantics — nulls never enter dir stats). Served only when the
-    * manifest's stats format is current (v1 float-shortest strings
-    * are approximations — [[SnapshotBucketedStore.LegacyStatsEps]])
-    * and every live dir either records stats for the column or is
-    * provably empty (recorded rows == 0); a dir with rows but no
-    * recorded stats (all-null column, non-stat column, unparseable
-    * NaN stat) makes the answer unknowable from metadata → None,
-    * scan fallback. All-empty table → None (SQL's NULL MIN). */
-  def metadataMinMax(name: String,
-      column: String): Option[(BigDecimal, BigDecimal)] =
-    latestManifest(name).flatMap { m =>
-      if (m.statsVersion != SnapshotBucketedStore.CurrentStatsVersion) None
-      else if (m.hasTombs) None // stats describe physical rows → scan
-      else if (m.droppedNames.contains(column)) None // retired name (X259)
-      else everyLive(m)(_.stats.find(_._1 == column)).filter(_.nonEmpty).flatMap { ss =>
-        // an unparseable recorded stat blocks serving
-        val rs = ss.flatMap(rangeOf)
-        if (rs.size < ss.size) None else Some((rs.map(_._1).min, rs.map(_._2).max))
-      }
-    }
-
-  /** METADATA-ONLY approximate distinct count of an [[ndvColumns]]
-    * column (X216 — the Iceberg-puffin NDV trick): every commit
-    * records a per-dir HLL sketch (Apache DataSketches, lgK =
-    * [[SnapshotBucketedStore.NdvLgK]] — ~1.6% standard error, ~4 KB
-    * per dir) in the same manifest rename as the dir; the answer is
-    * one union-and-estimate over the live dirs' sketches — no data
-    * file opened, and the union is EXACTLY the sketch of the
-    * concatenated streams (HLL registers max-merge), so the estimate
-    * equals sketching the whole table directly. Estimate tier,
-    * stated honestly: this is the planner/monitoring answer (join
-    * sizing, growth dashboards, cardinality regressions); an exact
-    * distinct still scans. None when any live non-empty dir lacks a
-    * recorded sketch (legacy tables, non-ndv column) — scan
-    * fallback, the conservative degrade the metadata tier shares. */
-  def metadataApproxDistinct(name: String, column: String): Option[Long] =
-    latestManifest(name).flatMap { m =>
-      if (m.hasTombs) return None // sketches describe physical rows → scan
-      if (m.droppedNames.contains(column)) return None // retired name (X259)
-      everyLive(m)(_.ndv.find(_._1 == column).map(_._2)).map { per =>
-        if (per.isEmpty) 0L
-        else {
-          import org.apache.spark.sql.functions.{col, hll_sketch_estimate, hll_union_agg}
-          val sketches = per.map(b64 =>
-            org.apache.spark.sql.Row(java.util.Base64.getDecoder.decode(b64)))
-          val df = spark.createDataFrame(
-            spark.sparkContext.parallelize(sketches, 1),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("s",
-                org.apache.spark.sql.types.BinaryType))))
-          df.agg(hll_sketch_estimate(hll_union_agg(col("s"), false))).head().getLong(0)
-        }
-      }
-    }
-
-  /** PER-COLUMN PLANNING STATISTICS from ONE manifest read (X254 —
-    * the CBO tier of X250): for every column the manifest can vouch
-    * for, (min, max) folded from the per-dir stats exactly like
-    * [[metadataMinMax]] and an NDV estimate from a DRIVER-SIDE union
-    * of the recorded per-dir HLL sketches (DataSketches heapify +
-    * union — the same registers `hll_union_agg` merges, without
-    * launching a job at plan time). A column blocked on either figure
-    * simply drops that figure; tombstones or a legacy stats format
-    * drop everything (physical-row figures would mis-estimate a
-    * logically-deleted snapshot — the metadata tier's standing
-    * exact-or-refuse rule). Consumed by the scan's
-    * `Statistics.columnStats()` under `spark.sql.cbo.enabled`. */
-  def columnStatsServe(name: String)
-      : Map[String, (Option[(BigDecimal, BigDecimal)], Option[Long])] =
-    latestManifest(name) match {
-      case None => Map.empty
-      case Some(m) =>
-        if (m.hasTombs ||
-            m.statsVersion != SnapshotBucketedStore.CurrentStatsVersion)
-          return Map.empty
-        val live = (m.buckets.values ++ m.logs).toSeq
-        val nonEmpty = live.filterNot(d => m.meta(d).rows.contains(0L))
-        def minMax(c: String): Option[(BigDecimal, BigDecimal)] = {
-          val per = nonEmpty.map(d =>
-            m.meta(d).stats.find(_._1 == c).flatMap(rangeOf))
-          if (per.isEmpty || per.exists(_.isEmpty)) None
-          else Some((per.flatten.map(_._1).min, per.flatten.map(_._2).max))
-        }
-        def ndv(c: String): Option[Long] = {
-          val per = nonEmpty.map(d => m.meta(d).ndv.find(_._1 == c))
-          if (per.isEmpty || per.exists(_.isEmpty)) None
-          else try {
-            val u = new org.apache.datasketches.hll.Union(SnapshotBucketedStore.NdvLgK)
-            per.flatten.foreach { case (_, b64) =>
-              u.update(org.apache.datasketches.hll.HllSketch.heapify(
-                java.util.Base64.getDecoder.decode(b64)))
-            }
-            Some(Math.round(u.getResult.getEstimate))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }
-        // a DROPPED declared column serves nothing: its recorded
-        // figures describe a name the schema no longer carries (X259)
-        val cols = (statsColumns ++ ndvColumns).distinct
-          .filterNot(m.droppedNames.contains)
-        cols.flatMap { c =>
-          val v = (minMax(c), ndv(c))
-          if (v._1.isEmpty && v._2.isEmpty) None else Some(c -> v)
-        }.toMap
-    }
-
-  /** METADATA-ONLY approximate quantiles of a [[quantileColumns]]
-    * column (X218 — per-dir KLL sketches on the X214/X216 substrate):
-    * every commit records a per-dir Apache DataSketches KLL quantile
-    * sketch (k = [[graft.expr.KllSketchAgg.DefaultK]] — ~1.65%
-    * normalized rank error at 99% confidence, ~3 KB per dir·column)
-    * in the same manifest rename as the dir; the answer is one
-    * driver-side merge over the live dirs' sketch images (KLL merges
-    * losslessly in error bound, so the generation structure only
-    * costs the bound, never correctness of the bound) — no data file
-    * opened. This is the percentile-dashboard / histogram-boundary /
-    * range-partitioner answer a 100 TB table wants in milliseconds;
-    * exact quantiles still cost the X113 distributed rank walk.
-    * Honesty, stated twice: (1) KLL compaction is RANDOMIZED — two
-    * commits of identical data may record different (all valid)
-    * images, so this tier's contract is an error BAND, not a value;
-    * (2) sketches live over the DOUBLE promotion of the column.
-    * Merge order is fixed (sorted images) so the answer is
-    * deterministic GIVEN a manifest. None when any live non-empty
-    * dir lacks a recorded sketch (legacy tables, undeclared or
-    * non-numeric column) — scan fallback, the metadata tier's shared
-    * conservative degrade; an all-null column merges to an empty
-    * union → None (no data, no order statistic). */
-  def metadataApproxQuantiles(
-      name: String,
-      column: String,
-      probs: Seq[Double]): Option[Seq[Double]] = {
-    require(probs.forall(p => p >= 0.0 && p <= 1.0),
-      s"ranks must be in [0, 1]: ${probs.mkString(", ")}")
-    latestManifest(name).flatMap(qskMerged(_, column))
-      .map(u => probs.map(u.getQuantile))
-  }
-
-  /** The live dirs' recorded KLL images of `column`, merged (fixed
-    * sorted order — deterministic GIVEN the manifest). None when any
-    * live non-empty dir lacks an image (the metadata tier's shared
-    * gate) or every image is empty (all-null column). */
-  private def qskMerged(m: Manifest,
-      column: String): Option[org.apache.datasketches.kll.KllDoublesSketch] = {
-    if (m.hasTombs) return None // sketches describe physical rows → scan
-    if (m.droppedNames.contains(column)) return None // retired name (X259)
-    everyLive(m)(_.qsk.find(_._1 == column).map(_._2)).flatMap(per =>
-      graft.expr.KllSketchAgg.mergeImages(per.sorted.map(java.util.Base64.getDecoder.decode)))
-  }
-
-  /** METADATA-ONLY approximate count of rows with `lo <= col <= hi`
-    * (the X218 sketches answering the OTHER planner question —
-    * range-predicate SELECTIVITY): merged-sketch
-    * `n * (rank≤(hi) - rank<(lo))`, where n is the exact non-null
-    * update count the sketch carries and the two ranks share the
-    * recorded ~1.65% normalized-rank-error band. This is the
-    * join-sizing / shuffle-partition-count / skew-probe estimate a
-    * 100 TB planner wants before committing to a plan; the exact
-    * count still scans (or, for whole-dir-contained ranges, prunes
-    * via the exact min/max stats first). Same gates as
-    * [[metadataApproxQuantiles]]: any live non-empty dir without a
-    * sketch → None; an all-null column has no in-range rows → 0.
-    * NOTE the estimate counts NON-NULL rows only (nulls never enter
-    * an order statistic — same as SQL `BETWEEN` semantics). */
-  def metadataRangeCount(
-      name: String,
-      column: String,
-      lo: Double,
-      hi: Double): Option[Long] = {
-    require(lo <= hi, s"empty range: lo=$lo > hi=$hi")
-    latestManifest(name).flatMap { m =>
-      // gate BEFORE the merged-sketch branch: qskMerged's None means
-      // "all-null column" (→ 0) there, which a tombstoned snapshot
-      // must not masquerade as
-      if (m.hasTombs) return None
-      if (everyLive(m)(_.qsk.find(_._1 == column)).isEmpty) None
-      else qskMerged(m, column) match {
-        case None => Some(0L) // no non-null values anywhere
-        case Some(u) =>
-          import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
-          val below = u.getRank(lo, QuantileSearchCriteria.EXCLUSIVE)
-          val upTo = u.getRank(hi, QuantileSearchCriteria.INCLUSIVE)
-          Some(math.round(u.getN * math.max(0.0, upTo - below)))
-      }
-    }
-  }
-
-  /** METADATA-ONLY distribution drift between two tables' numeric
-    * columns (X222 — the monitoring tier's last answer): POPULATION
-    * STABILITY INDEX over `buckets` equal-probability bins whose
-    * boundaries come from the REFERENCE side's merged KLL sketch —
-    * PSI = Σ (pᵢ−qᵢ)·ln(pᵢ/qᵢ), the standard drift score (common
-    * operating points: < 0.1 stable, 0.1–0.25 investigate, > 0.25
-    * shifted). Served from two manifests, no file opened — the
-    * "did this week's corpus shift under the model?" answer at 100 TB
-    * in milliseconds. Bin probabilities are rank differences on each
-    * side's own sketch (clamped at 1e-6 — an empty bin is evidence,
-    * not a division by zero) and inherit the recorded rank-error
-    * band; the score is an ESTIMATE, specs assert separation (same
-    * distribution ≈ 0, planted shift large), never a pinned value.
-    * Gates as [[metadataApproxQuantiles]]; all-null on either side →
-    * None (no distribution, no drift). */
-  def metadataDrift(
-      reference: String,
-      current: String,
-      column: String,
-      buckets: Int = 10): Option[Double] =
-    for {
-      ma <- latestManifest(reference)
-      mb <- latestManifest(current)
-      d <- driftOf(ma, mb, column, buckets)
-    } yield d
-
-  /** [[metadataDrift]] between two RETAINED VERSIONS of one table —
-    * the self-monitoring form (this snapshot vs last week's). */
-  def metadataDriftVersions(
-      name: String,
-      referenceVersion: Int,
-      currentVersion: Int,
-      column: String,
-      buckets: Int = 10): Option[Double] =
-    for {
-      ma <- manifestAt(name, referenceVersion)
-      mb <- manifestAt(name, currentVersion)
-      d <- driftOf(ma, mb, column, buckets)
-    } yield d
-
-  private def driftOf(ma: Manifest, mb: Manifest, column: String,
-      buckets: Int): Option[Double] =
-    for {
-      sa <- qskMerged(ma, column)
-      sb <- qskMerged(mb, column)
-    } yield graft.expr.KllSketchAgg.psi(sa, sb, buckets)
+  private def servedOf(m: Manifest): Served =
+    new Served(m, (statsColumns ++ ndvColumns).distinct)
 
   override def read(name: String): Option[DataFrame] =
     latestManifest(name).flatMap(readManifest(name, _))
@@ -1483,7 +1362,7 @@ class SnapshotBucketedStore(
       // outstanding tombstones → recorded physical counts over-count
       // the logical snapshot: null, the shared honest degrade
       org.apache.spark.sql.Row(m.version, m.lastBatch.map(Long.box).orNull,
-        m.buckets.size, m.logs.size, recordedRows(m).map(Long.box).orNull)
+        m.buckets.size, m.logs.size, servedOf(m).count.map(Long.box).orNull)
     }
     import org.apache.spark.sql.types._
     Some(spark.createDataFrame(

@@ -6360,10 +6360,10 @@ object LlmCatalog {
       store
     }
 
-  /** Metadata-only aggregates (SnapshotBucketedStore.metadataCount/
-    * metadataMinMax, X214 — the Delta numRecords trick): COUNT(*),
-    * MIN, MAX of a 3-generation store table answered from per-dir
-    * row counts and min/max stats recorded in the manifest — no data
+  /** Metadata-only aggregates (SnapshotBucketedStore.served →
+    * Served.count/minMax, X214 — the Delta numRecords trick): COUNT(*),
+    * MIN, MAX of a 3-generation store table answered from one
+    * manifest read of per-dir row counts and min/max stats — no data
     * file is opened (MetadataAggSpec proves it by deleting them).
     * The oracle recomputes the same aggregates from the replicated
     * final state in plain SQL — exactness, not bounds: per-dir stats
@@ -6371,11 +6371,10 @@ object LlmCatalog {
   val metadataAggQ = GraftQuery(
     "q169_metadata_aggregates",
     (s, d) => {
-      val store = metaAggStore(s, d)
-      val cnt = store.metadataCount("t")
-        .getOrElse(sys.error("metadata count must serve"))
-      val (mn, mx) = store.metadataMinMax("t", "nv")
-        .getOrElse(sys.error("metadata min/max must serve"))
+      val sv = metaAggStore(s, d).served("t")
+        .getOrElse(sys.error("table t must exist"))
+      val cnt = sv.count.getOrElse(sys.error("metadata count must serve"))
+      val (mn, mx) = sv.minMax("nv").getOrElse(sys.error("metadata min/max must serve"))
       import s.implicits._
       Seq((cnt, mn.toLongExact, mx.toLongExact)).toDF("cnt", "mn", "mx")
     },

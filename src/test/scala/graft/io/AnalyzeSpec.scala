@@ -24,9 +24,9 @@ class AnalyzeSpec extends SparkSpec {
       statsColumns = Seq("v"), keyColumns = Seq("uuid"), ndvColumns = Seq("v"))
     assert(shaped.pruned("t", Prune.range("v", 0L, 50L)).get.counts._1 == 4,
       "no recorded stats → nothing prunes")
-    assert(shaped.metadataMinMax("t", "v").isEmpty)
-    assert(shaped.metadataApproxDistinct("t", "v").isEmpty)
-    assert(shaped.columnStatsServe("t").isEmpty)
+    assert(shaped.served("t").flatMap(_.minMax("v")).isEmpty)
+    assert(shaped.served("t").flatMap(_.approxDistinct("v")).isEmpty)
+    assert(shaped.served("t").get.columnStats.isEmpty)
 
     val cat = "lakean" + math.abs(root.hashCode).toString
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
@@ -42,11 +42,11 @@ class AnalyzeSpec extends SparkSpec {
       "range pruning must fire after analyze")
     assert(shaped.pruned("t", Prune.Eq("uuid", 7L)).get.counts._1 <= 2,
       "Bloom pruning must fire after analyze")
-    assert(shaped.metadataMinMax("t", "v").contains(
+    assert(shaped.served("t").flatMap(_.minMax("v")).contains(
       (BigDecimal(0), BigDecimal(398))))
-    assert(shaped.metadataCount("t").contains(200L))
-    assert(shaped.metadataApproxDistinct("t", "v").exists(n => n > 180 && n < 220))
-    assert(shaped.columnStatsServe("t").nonEmpty)
+    assert(shaped.served("t").flatMap(_.count).contains(200L))
+    assert(shaped.served("t").flatMap(_.approxDistinct("v")).exists(n => n > 180 && n < 220))
+    assert(shaped.served("t").get.columnStats.nonEmpty)
     assert(shaped.read("t").get.count() == 200)
 
     // covered table: analyze is a no-op, no version minted
@@ -64,9 +64,9 @@ class AnalyzeSpec extends SparkSpec {
     shaped.append("t", rows(0 until 30)) // this one records stats
     val bare = new SnapshotBucketedStore(root, numBuckets = 4)
     bare.append("t", rows(30 until 60)) // this one doesn't
-    assert(shaped.metadataMinMax("t", "v").isEmpty, "one unstatted dir blocks")
+    assert(shaped.served("t").flatMap(_.minMax("v")).isEmpty, "one unstatted dir blocks")
     assert(shaped.analyzeTable("t") == 1, "only the missing dir recomputes")
-    assert(shaped.metadataMinMax("t", "v").contains(
+    assert(shaped.served("t").flatMap(_.minMax("v")).contains(
       (BigDecimal(0), BigDecimal(118))))
   }
 
@@ -115,12 +115,12 @@ class AnalyzeSpec extends SparkSpec {
     // two quantile sets are each held to the exact ranks of the data)
     def agrees(t: String, what: String): Unit = {
       val exact = exactMeta(root, t)
-      val ndv = store.metadataApproxDistinct(t, "v")
+      val ndv = store.served(t).flatMap(_.approxDistinct("v"))
       val probs = Seq(0.1, 0.5, 0.9)
-      val qs = store.metadataApproxQuantiles(t, "v", probs)
+      val qs = store.served(t).flatMap(_.quantiles("v", probs))
       store.analyzeTable(t, onlyMissing = false)
       assert(exactMeta(root, t) == exact, s"$what: rows/stats/keys")
-      (ndv, store.metadataApproxDistinct(t, "v")) match {
+      (ndv, store.served(t).flatMap(_.approxDistinct("v"))) match {
         case (Some(a), Some(b)) => assert(math.abs(a - b) <= 0.05 * b + 2, s"$what: ndv $a vs $b")
         case (a, b) => assert(a == b, s"$what: ndv $a vs $b")
       }
@@ -128,7 +128,7 @@ class AnalyzeSpec extends SparkSpec {
       def rankOk(q: Seq[Double]) = probs.zip(q).forall { case (p, x) =>
         math.abs(vs.count(_ <= x).toDouble / vs.length - p) <= 0.03 + 1.0 / vs.length
       }
-      val recomputed = store.metadataApproxQuantiles(t, "v", probs)
+      val recomputed = store.served(t).flatMap(_.quantiles("v", probs))
       assert(qs.isDefined == recomputed.isDefined, s"$what: quantiles $qs vs $recomputed")
       assert((qs ++ recomputed).forall(rankOk), s"$what: quantiles $qs vs $recomputed")
     }

@@ -38,10 +38,10 @@ class CloneSpec extends SparkSpec {
     assert(dataFilesUnder(s"$root/dst/data").isEmpty, "clone must copy no bytes")
     assert(asMap(store.read("dst").get) == asMap(store.read("src").get))
     // the recorded stats travel with the refs: metadata tiers all serve
-    assert(store.metadataCount("dst").contains(300L))
-    assert(store.metadataMinMax("dst", "v").contains((BigDecimal(0), BigDecimal(897))))
-    assert(store.metadataApproxDistinct("dst", "tag").contains(1L))
-    assert(store.metadataApproxQuantiles("dst", "v", Seq(0.0)).isDefined)
+    assert(store.served("dst").flatMap(_.count).contains(300L))
+    assert(store.served("dst").flatMap(_.minMax("v")).contains((BigDecimal(0), BigDecimal(897))))
+    assert(store.served("dst").flatMap(_.approxDistinct("tag")).contains(1L))
+    assert(store.served("dst").flatMap(_.quantiles("v", Seq(0.0))).isDefined)
     // Bloom point-lookup prunes through refs too
     assert(asMap(store.pruned("dst", Prune.Eq("uuid", 7L)).get.read.get
       .filter(col("uuid") === 7L)).contains(7L))

@@ -110,20 +110,20 @@ class DeletionVectorSpec extends SparkSpec {
     implicit val s = spark
     val store = newStore(tmpDir("dv_meta_"))
     store.upsert("t", rows(0 until 200), "uuid")
-    assert(store.metadataCount("t").contains(200L))
-    assert(store.metadataMinMax("t", "v").isDefined)
-    assert(store.metadataApproxDistinct("t", "tag").isDefined)
-    assert(store.metadataApproxQuantiles("t", "v", Seq(0.5)).isDefined)
-    assert(store.metadataRangeCount("t", "v", 0.0, 100.0).isDefined)
+    assert(store.served("t").flatMap(_.count).contains(200L))
+    assert(store.served("t").flatMap(_.minMax("v")).isDefined)
+    assert(store.served("t").flatMap(_.approxDistinct("tag")).isDefined)
+    assert(store.served("t").flatMap(_.quantiles("v", Seq(0.5))).isDefined)
+    assert(store.served("t").flatMap(_.rangeCount("v", 0.0, 100.0)).isDefined)
     store.deleteLazy("t", "uuid", Seq(5L).toDF("uuid"))
-    assert(store.metadataCount("t").isEmpty, "COUNT must not over-count")
-    assert(store.metadataMinMax("t", "v").isEmpty)
-    assert(store.metadataApproxDistinct("t", "tag").isEmpty)
-    assert(store.metadataApproxQuantiles("t", "v", Seq(0.5)).isEmpty)
-    assert(store.metadataRangeCount("t", "v", 0.0, 100.0).isEmpty)
+    assert(store.served("t").flatMap(_.count).isEmpty, "COUNT must not over-count")
+    assert(store.served("t").flatMap(_.minMax("v")).isEmpty)
+    assert(store.served("t").flatMap(_.approxDistinct("tag")).isEmpty)
+    assert(store.served("t").flatMap(_.quantiles("v", Seq(0.5))).isEmpty)
+    assert(store.served("t").flatMap(_.rangeCount("v", 0.0, 100.0)).isEmpty)
     assert(store.history("t").get.filter($"row_count".isNull).count() >= 1)
     store.applyDeletes("t")
-    assert(store.metadataCount("t").contains(199L), "serving resumes once applied")
+    assert(store.served("t").flatMap(_.count).contains(199L), "serving resumes once applied")
   }
 
   test("time travel, restore, diff, and clone are all tombstone-aware") {
@@ -290,7 +290,7 @@ class DeletionVectorSpec extends SparkSpec {
     // apply clears both sidecar families
     assert(store.applyDeletes("t") > 0)
     assert(store.read("t").get.count() == 44)
-    assert(store.metadataCount("t").contains(44L))
+    assert(store.served("t").flatMap(_.count).contains(44L))
     store.append("log", rows(0 until 10))
     val l = intercept[IllegalArgumentException] {
       store.deleteLazy("log", "uuid", Seq(1L).toDF("uuid"))

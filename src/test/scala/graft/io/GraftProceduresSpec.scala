@@ -29,13 +29,13 @@ class GraftProceduresSpec extends SparkSpec {
       keyColumns = Seq("uuid"))
     store.upsert("t", rows(0 until 100), "uuid")
     store.deleteLazy("t", "uuid", Seq(1L, 2L, 3L).toDF("uuid"))
-    assert(store.metadataCount("t").isEmpty, "tombstones must gate the metadata tier")
+    assert(store.served("t").flatMap(_.count).isEmpty, "tombstones must gate the metadata tier")
     val cat = register(root)
 
     val out = spark.sql(s"CALL $cat.system.apply_deletes('t')").collect()
     assert(out.length == 1 && out.head.getString(0) == "t")
     assert(out.head.getInt(1) >= 1, s"dirs rewritten: ${out.head.getInt(1)}")
-    assert(store.metadataCount("t").contains(97L),
+    assert(store.served("t").flatMap(_.count).contains(97L),
       "after apply_deletes the manifest serves the logical count")
   }
 

@@ -158,7 +158,7 @@ class KeyStatsSpec extends SparkSpec {
     assert(store.read("tgt").get.count() == 98)
   }
 
-  test("readWhereEqAny: multi-probe pruning is a superset, one Bloom decode per dir") {
+  test("Prune.EqAny: multi-probe pruning is a superset, one Bloom decode per dir") {
     val root = tmpDir("graft_keys_any_")
     implicit val s = spark
     val store = new SnapshotBucketedStore(root, 8, "parquet", Nil, Seq("uuid"))

@@ -21,18 +21,18 @@ class MetadataAggSpec extends SparkSpec {
     val store = new SnapshotBucketedStore(root, numBuckets = 4,
       statsColumns = Seq("num"))
     store.upsert("t", rows(0 until 100), "uuid")
-    assert(store.metadataCount("t").contains(100L))
-    assert(store.metadataMinMax("t", "num")
+    assert(store.served("t").flatMap(_.count).contains(100L))
+    assert(store.served("t").flatMap(_.minMax("num"))
       .contains((BigDecimal(0), BigDecimal(198))))
     // upsert: 5 replaced + 2 new
     store.upsert("t", rows(98 until 105), "uuid")
-    assert(store.metadataCount("t").contains(105L))
-    assert(store.metadataMinMax("t", "num")
+    assert(store.served("t").flatMap(_.count).contains(105L))
+    assert(store.served("t").flatMap(_.minMax("num"))
       .contains((BigDecimal(0), BigDecimal(208))))
     // keyed delete, including the current max
     store.delete("t", "uuid", Seq(104L, 0L).toDF("uuid"))
-    assert(store.metadataCount("t").contains(103L))
-    assert(store.metadataMinMax("t", "num")
+    assert(store.served("t").flatMap(_.count).contains(103L))
+    assert(store.served("t").flatMap(_.minMax("num"))
       .contains((BigDecimal(2), BigDecimal(206))))
     // the scan agrees
     val (c, mn, mx) = (store.read("t").get.count(),
@@ -54,8 +54,8 @@ class MetadataAggSpec extends SparkSpec {
       f.delete(): Unit
     }
     wipe(data)
-    assert(store.metadataCount("t").contains(50L))
-    assert(store.metadataMinMax("t", "num")
+    assert(store.served("t").flatMap(_.count).contains(50L))
+    assert(store.served("t").flatMap(_.minMax("num"))
       .contains((BigDecimal(0), BigDecimal(98))))
   }
 
@@ -66,15 +66,15 @@ class MetadataAggSpec extends SparkSpec {
       statsColumns = Seq("num"))
     store.append("log", rows(0 until 30))
     store.append("log", rows(30 until 45))
-    assert(store.metadataCount("log").contains(45L))
+    assert(store.served("log").flatMap(_.count).contains(45L))
     assert(store.compactLogs("log"))
-    assert(store.metadataCount("log").contains(45L))
+    assert(store.served("log").flatMap(_.count).contains(45L))
     store.replace("log", rows(0 until 20))
-    assert(store.metadataCount("log").contains(20L))
+    assert(store.served("log").flatMap(_.count).contains(20L))
     // range delete: num in [0, 18] drops 10 rows (num even, 0..38)
     store.deleteRange("log", "num", 0L, 18L)
-    assert(store.metadataCount("log").contains(10L))
-    assert(store.metadataMinMax("log", "num")
+    assert(store.served("log").flatMap(_.count).contains(10L))
+    assert(store.served("log").flatMap(_.minMax("num"))
       .contains((BigDecimal(20), BigDecimal(38))))
   }
 
@@ -91,7 +91,7 @@ class MetadataAggSpec extends SparkSpec {
     val stripped = txt.linesIterator.filterNot(_.startsWith("rows:"))
       .mkString("", "\n", "\n")
     java.nio.file.Files.writeString(mf.toPath, stripped)
-    assert(store.metadataCount("t").isEmpty)
+    assert(store.served("t").flatMap(_.count).isEmpty)
     // and the data path still reads fine
     assert(store.read("t").get.count() == 10L)
   }
@@ -102,7 +102,7 @@ class MetadataAggSpec extends SparkSpec {
     // no statsColumns declared: counts serve, min/max cannot
     val store = new SnapshotBucketedStore(root, numBuckets = 4)
     store.upsert("t", rows(0 until 10), "uuid")
-    assert(store.metadataCount("t").contains(10L))
-    assert(store.metadataMinMax("t", "num").isEmpty)
+    assert(store.served("t").flatMap(_.count).contains(10L))
+    assert(store.served("t").flatMap(_.minMax("num")).isEmpty)
   }
 }

@@ -21,7 +21,7 @@ class MetadataNdvSpec extends SparkSpec {
       ndvColumns = Seq("grp", "src"))
     store.upsert("t", rows(0 until 500), "uuid")
     store.upsert("t", rows(480 until 600), "uuid") // second generation
-    val est = store.metadataApproxDistinct("t", "grp").get
+    val est = store.served("t").flatMap(_.approxDistinct("grp")).get
     // merged per-dir sketches ≡ one sketch over the whole table
     val direct = store.read("t").get
       .agg(hll_sketch_estimate(hll_sketch_agg(col("grp"),
@@ -29,7 +29,7 @@ class MetadataNdvSpec extends SparkSpec {
     assert(est == direct, s"union-of-dirs $est != direct $direct")
     // and both track the exact answer (37 distinct) within the band
     assert(math.abs(est - 37L) <= 3, s"estimate $est far from 37")
-    assert(store.metadataApproxDistinct("t", "src").exists(e =>
+    assert(store.served("t").flatMap(_.approxDistinct("src")).exists(e =>
       math.abs(e - 11L) <= 2))
   }
 
@@ -47,7 +47,7 @@ class MetadataNdvSpec extends SparkSpec {
       f.delete(): Unit
     }
     wipe(new java.io.File(s"$root/t/data"))
-    val est = store.metadataApproxDistinct("t", "grp").get
+    val est = store.served("t").flatMap(_.approxDistinct("grp")).get
     assert(math.abs(est - exact) <= math.max(2L, exact / 20),
       s"post-delete estimate $est vs exact $exact")
   }
@@ -58,7 +58,7 @@ class MetadataNdvSpec extends SparkSpec {
     val store = new SnapshotBucketedStore(root, numBuckets = 4,
       ndvColumns = Seq("grp"))
     store.upsert("t", rows(0 until 50), "uuid")
-    assert(store.metadataApproxDistinct("t", "src").isEmpty,
+    assert(store.served("t").flatMap(_.approxDistinct("src")).isEmpty,
       "src is not an ndv column")
     // strip the ndv lines → legacy manifest → None
     val dir = new java.io.File(s"$root/t")
@@ -67,8 +67,8 @@ class MetadataNdvSpec extends SparkSpec {
     val txt = scala.io.Source.fromFile(mf).mkString
     java.nio.file.Files.writeString(mf.toPath,
       txt.linesIterator.filterNot(_.startsWith("ndv:")).mkString("", "\n", "\n"))
-    assert(store.metadataApproxDistinct("t", "grp").isEmpty)
+    assert(store.served("t").flatMap(_.approxDistinct("grp")).isEmpty)
     // count still serves (rows lines untouched)
-    assert(store.metadataCount("t").contains(50L))
+    assert(store.served("t").flatMap(_.count).contains(50L))
   }
 }

@@ -41,7 +41,7 @@ class MetadataQuantilesSpec extends SparkSpec {
     store.delete("t", "uuid", (0L until 100L).toDF("uuid"))
     val live = store.read("t").get.select("v").as[Double].collect().toSeq
     val probs = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
-    val served = store.metadataApproxQuantiles("t", "v", probs).get
+    val served = store.served("t").flatMap(_.quantiles("v", probs)).get
     probs.zip(served).foreach { case (p, got) =>
       val (lo, hi) = exactQuantile(live, p)
       assert(got >= lo && got <= hi,
@@ -66,12 +66,12 @@ class MetadataQuantilesSpec extends SparkSpec {
       f.delete(): Unit
     }
     wipe(new java.io.File(s"$root/t/data"))
-    val served = store.metadataApproxQuantiles("t", "v", Seq(0.5)).get.head
+    val served = store.served("t").flatMap(_.quantiles("v", Seq(0.5))).get.head
     val (lo, hi) = exactQuantile(live, 0.5)
     assert(served >= lo && served <= hi,
       s"null-skipping median $served outside [$lo, $hi]")
     // a column that is null EVERYWHERE has no order statistic
-    assert(store.metadataApproxQuantiles("t", "allnull", Seq(0.5)).isEmpty)
+    assert(store.served("t").flatMap(_.quantiles("allnull", Seq(0.5))).isEmpty)
   }
 
   test("range count sits in the rank band; all-null is 0; empty range refused") {
@@ -86,20 +86,20 @@ class MetadataQuantilesSpec extends SparkSpec {
     val live = store.read("t").get.select("v").as[Double].collect().toSeq
     val (lo, hi) = (100.0, 700.0)
     val exact = live.count(v => v >= lo && v <= hi)
-    val got = store.metadataRangeCount("t", "v", lo, hi).get
+    val got = store.served("t").flatMap(_.rangeCount("v", lo, hi)).get
     // both rank estimates carry the k=200 band; allow 2×RankEps of n
     val slack = (2 * RankEps * live.size).ceil.toLong
     assert(math.abs(got - exact) <= slack,
       s"range count $got vs exact $exact (slack $slack)")
     // the whole domain ≡ the non-null row count, within band
-    val all = store.metadataRangeCount("t", "v",
-      Double.NegativeInfinity, Double.PositiveInfinity).get
+    val all = store.served("t").flatMap(_.rangeCount("v",
+      Double.NegativeInfinity, Double.PositiveInfinity)).get
     assert(math.abs(all - live.size) <= slack)
-    assert(store.metadataRangeCount("t", "allnull", 0.0, 1.0).contains(0L))
-    assert(store.metadataRangeCount("t", "uuid", 0.0, 1.0).isEmpty,
+    assert(store.served("t").flatMap(_.rangeCount("allnull", 0.0, 1.0)).contains(0L))
+    assert(store.served("t").flatMap(_.rangeCount("uuid", 0.0, 1.0)).isEmpty,
       "undeclared column refuses to estimate")
     intercept[IllegalArgumentException] {
-      store.metadataRangeCount("t", "v", 2.0, 1.0)
+      store.served("t").flatMap(_.rangeCount("v", 2.0, 1.0))
     }
   }
 
@@ -115,20 +115,25 @@ class MetadataQuantilesSpec extends SparkSpec {
     val shifted = rows(0 until 2000)
       .withColumn("v", col("v") / 2 + 500.0)
     store.upsert("shift", shifted, "uuid")
-    val psiSame = store.metadataDrift("ref", "same", "v").get
-    val psiShift = store.metadataDrift("ref", "shift", "v").get
+    val psiSame = store.served("ref").flatMap(r =>
+      store.served("same").flatMap(r.drift(_, "v"))).get
+    val psiShift = store.served("ref").flatMap(r =>
+      store.served("shift").flatMap(r.drift(_, "v"))).get
     assert(psiSame < 0.05, s"identical law must score stable, got $psiSame")
     assert(psiShift > 0.5, s"planted shift must score large, got $psiShift")
     // version-to-version self-monitoring: a skewed revision drifts
     val v1 = store.snapshots("ref").max
     store.upsert("ref", shifted, "uuid") // full revision to the shifted law
     val v2 = store.snapshots("ref").max
-    val psiVer = store.metadataDriftVersions("ref", v1, v2, "v").get
+    val psiVer = store.served("ref", Some(v1)).flatMap(r =>
+      store.served("ref", Some(v2)).flatMap(r.drift(_, "v"))).get
     assert(psiVer > 0.5, s"version drift must surface, got $psiVer")
     // gates: undeclared column and bad bin count refuse
-    assert(store.metadataDrift("ref", "same", "uuid").isEmpty)
+    assert(store.served("ref").flatMap(r =>
+      store.served("same").flatMap(r.drift(_, "uuid"))).isEmpty)
     intercept[IllegalArgumentException] {
-      store.metadataDrift("ref", "same", "v", buckets = 1)
+      store.served("ref").flatMap(r =>
+        store.served("same").flatMap(r.drift(_, "v", buckets = 1)))
     }
   }
 
@@ -158,9 +163,9 @@ class MetadataQuantilesSpec extends SparkSpec {
     val store = new SnapshotBucketedStore(root, numBuckets = 4,
       quantileColumns = Seq("v", "src"))
     store.upsert("t", rows(0 until 50), "uuid")
-    assert(store.metadataApproxQuantiles("t", "uuid", Seq(0.5)).isEmpty,
+    assert(store.served("t").flatMap(_.quantiles("uuid", Seq(0.5))).isEmpty,
       "uuid is not a quantile column")
-    assert(store.metadataApproxQuantiles("t", "src", Seq(0.5)).isEmpty,
+    assert(store.served("t").flatMap(_.quantiles("src", Seq(0.5))).isEmpty,
       "src is declared but non-numeric — never sketched, must refuse")
     // strip the qsk lines → legacy manifest → None; counts unharmed
     val dir = new java.io.File(s"$root/t")
@@ -169,11 +174,11 @@ class MetadataQuantilesSpec extends SparkSpec {
     val txt = scala.io.Source.fromFile(mf).mkString
     java.nio.file.Files.writeString(mf.toPath,
       txt.linesIterator.filterNot(_.startsWith("qsk:")).mkString("", "\n", "\n"))
-    assert(store.metadataApproxQuantiles("t", "v", Seq(0.5)).isEmpty)
-    assert(store.metadataCount("t").contains(50L))
+    assert(store.served("t").flatMap(_.quantiles("v", Seq(0.5))).isEmpty)
+    assert(store.served("t").flatMap(_.count).contains(50L))
     // out-of-range rank refuses loudly
     intercept[IllegalArgumentException] {
-      store.metadataApproxQuantiles("t", "v", Seq(1.5))
+      store.served("t").flatMap(_.quantiles("v", Seq(1.5)))
     }
   }
 }

@@ -33,7 +33,18 @@ class ScanStatsSpec extends SparkSpec {
     }
   }
 
-  test("scanEstimate: exact rows, positive bytes, filter-scoped to surviving dirs") {
+  /** Table-dir listings (one per manifest lookup) while a resolved
+    * query reports its statistics, plans and runs. */
+  private def tableListings(df: org.apache.spark.sql.DataFrame, dir: String): Int = {
+    import scala.jdk.CollectionConverters._
+    df.queryExecution.analyzed
+    CountingFileSystem.reset()
+    df.queryExecution.optimizedPlan.stats
+    df.collect()
+    CountingFileSystem.listed.asScala.count(_ == dir)
+  }
+
+  test("pruned(...).estimate: exact rows, positive bytes, scoped to surviving dirs") {
     val root = tmpDir("graft_stats_")
     implicit val s = spark
     val store = new SnapshotBucketedStore(root, numBuckets = 4,
@@ -122,7 +133,7 @@ class ScanStatsSpec extends SparkSpec {
     (0 until 4).foreach(g => store.append("t", rows(g * 50 until (g + 1) * 50)))
 
     // the serve itself: exact bounds, HLL estimate near the truth
-    val served = store.columnStatsServe("t")
+    val served = store.served("t").get.columnStats
     val (mm, nd) = served("v")
     assert(mm.contains((BigDecimal(0), BigDecimal(398))), s"v bounds: $mm")
     assert(nd.exists(n => n > 180 && n < 220), s"v ndv ~200: $nd")
@@ -148,9 +159,9 @@ class ScanStatsSpec extends SparkSpec {
     val store = new SnapshotBucketedStore(root, numBuckets = 4,
       statsColumns = Seq("v"), keyColumns = Seq("uuid"), ndvColumns = Seq("v"))
     store.upsert("t", rows(0 until 100), "uuid")
-    assert(store.columnStatsServe("t").nonEmpty)
+    assert(store.served("t").get.columnStats.nonEmpty)
     store.deleteLazy("t", "uuid", Seq(1L).toDF("uuid"))
-    assert(store.columnStatsServe("t").isEmpty,
+    assert(store.served("t").get.columnStats.isEmpty,
       "physical-row figures must not describe a logically-deleted snapshot")
   }
 
@@ -283,22 +294,13 @@ class ScanStatsSpec extends SparkSpec {
     val cat = register(root)
     val v1 = spark.read.format("graft").option("root", root).option("table", "t").load()
     def v2(where: String) = spark.sql(s"SELECT * FROM $cat.t WHERE $where")
-
-    // table-dir listings (one per manifest lookup) while a resolved
-    // query reports its statistics, plans and runs
-    def tableListings(df: org.apache.spark.sql.DataFrame): Int = {
-      import scala.jdk.CollectionConverters._
-      df.queryExecution.analyzed
-      CountingFileSystem.reset()
-      df.queryExecution.optimizedPlan.stats
-      df.collect()
-      CountingFileSystem.listed.asScala.count(_ == s"$local/t")
-    }
-    // unpruned baselines: V1 sizes the relation (1) and scans (1); V2's
-    // scan builder reads the schema and the table shape (2) and the
-    // scan serves statistics and rows (1)
+    def tableListings(df: org.apache.spark.sql.DataFrame): Int =
+      ScanStatsSpec.this.tableListings(df, s"$local/t")
+    // unpruned baselines: V1 sizes the relation (1) and scans (1); the
+    // V2 table resolved its schema and shape at analysis, so only the
+    // scan reads, serving statistics and rows (1)
     assert(tableListings(v1.where("tag = 'q' OR v > 0")) == 2)
-    assert(tableListings(v2("tag = 'q' OR v > 0")) == 3)
+    assert(tableListings(v2("tag = 'q' OR v > 0")) == 1)
     Seq(
       "v >= 100 AND v <= 198" -> Prune.range("v", 100L, 198L),
       "uuid = 420" -> Prune.Eq("uuid", 420L),
@@ -308,8 +310,40 @@ class ScanStatsSpec extends SparkSpec {
       // a pruning filter adds no manifest read to either surface
       assert(tableListings(v1.where(where)) == 2, s"V1 $where")
       assert(GraftSource.lastPrune.contains(expected), s"V1 $where")
-      assert(tableListings(v2(where)) == 3, s"V2 $where")
+      assert(tableListings(v2(where)) == 1, s"V2 $where")
       assert(GraftSource.lastPrune.contains(expected), s"V2 $where")
+    }
+  }
+
+  test("a SQL COUNT/MIN/MAX pushdown and CBO column stats each read one manifest") {
+    val local = tmpDir("graft_stats_agg_once_")
+    val root = "cntfs:" + local
+    implicit val s = spark
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
+    val store = new SnapshotBucketedStore(root, numBuckets = 4,
+      statsColumns = Seq("v"), keyColumns = Seq("uuid"), ndvColumns = Seq("v"))
+    (0 until 4).foreach(g => store.append("t", rows(g * 50 until (g + 1) * 50)))
+    val cat = register(root)
+    spark.conf.set(s"spark.sql.catalog.$cat.ndvcolumns", "v")
+
+    // COUNT, MIN and MAX come from one snapshot in one manifest read
+    val agg = spark.sql(s"SELECT COUNT(*), MIN(v), MAX(v) FROM $cat.t")
+    assert(tableListings(agg, s"$local/t") == 1)
+    assert(agg.queryExecution.executedPlan.toString.contains("GraftAggServe"),
+      agg.queryExecution.executedPlan.toString)
+    import org.apache.spark.sql.functions.{count, lit, max, min}
+    assert(agg.collect().toSeq ==
+      store.read("t").get.agg(count(lit(1)), min("v"), max("v")).collect().toSeq)
+
+    // an unfiltered scan's column stats, estimate and rows share one read
+    withConf("spark.sql.cbo.enabled" -> "true") {
+      val all = spark.sql(s"SELECT * FROM $cat.t")
+      assert(tableListings(all, s"$local/t") == 1)
+      val stats = all.queryExecution.optimizedPlan.stats
+      assert(stats.rowCount.contains(BigInt(200)), s"rowCount: ${stats.rowCount}")
+      assert(stats.attributeStats.exists(_._1.name == "v"),
+        s"column stats for v: ${stats.attributeStats}")
     }
   }
 }

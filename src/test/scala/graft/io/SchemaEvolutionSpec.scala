@@ -266,18 +266,22 @@ class SchemaEvolutionSpec extends SparkSpec {
       ndvColumns = Seq("v"), quantileColumns = Seq("v"))
     store.upsert("t", (0L until 50L).map(i => (i, i * 2, s"x$i"))
       .toDF("uuid", "v", "tag"), "uuid")
-    assert(store.metadataMinMax("t", "v").isDefined)
-    assert(store.metadataApproxDistinct("t", "v").isDefined)
-    assert(store.metadataApproxQuantiles("t", "v", Seq(0.5)).isDefined)
-    assert(store.columnStatsServe("t").contains("v"))
+    assert(store.served("t").flatMap(_.minMax("v")).isDefined)
+    assert(store.served("t").flatMap(_.approxDistinct("v")).isDefined)
+    assert(store.served("t").flatMap(_.quantiles("v", Seq(0.5))).isDefined)
+    assert(store.served("t").flatMap(_.rangeCount("v", 0.0, 100.0)).isDefined)
+    assert(store.served("t").get.columnStats.contains("v"))
 
     store.dropColumns("t", Seq("v"))
     // every metadata tier refuses to describe a name the schema no
     // longer carries — recorded figures for it are hidden state
-    assert(store.metadataMinMax("t", "v").isEmpty)
-    assert(store.metadataApproxDistinct("t", "v").isEmpty)
-    assert(store.metadataApproxQuantiles("t", "v", Seq(0.5)).isEmpty)
-    assert(!store.columnStatsServe("t").contains("v"))
+    assert(store.served("t").flatMap(_.minMax("v")).isEmpty)
+    assert(store.served("t").flatMap(_.approxDistinct("v")).isEmpty)
+    assert(store.served("t").flatMap(_.quantiles("v", Seq(0.5))).isEmpty)
+    // the recorded KLL sketches are still there: a range count over
+    // them must refuse too, not answer "no rows in range"
+    assert(store.served("t").flatMap(_.rangeCount("v", 0.0, 100.0)).isEmpty)
+    assert(!store.served("t").get.columnStats.contains("v"))
     // and a delete predicate on the retired name refuses loudly
     // (silently targeting hidden values would be worse than either
     // serving or failing)
