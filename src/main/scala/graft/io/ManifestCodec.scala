@@ -62,8 +62,8 @@ private[io] final case class Manifest(
     * COLUMN): name-suppressed at read over every generation that
     * still physically carries them; rewrites shed them for real.
     * `None` means "not specified by this commit's builder" — the
-    * commit point carries the previous manifest's marker forward,
-    * so the 17 commit families stay oblivious; a parsed manifest
+    * commit point carries the marker of the base manifest the commit
+    * family read, so the families stay oblivious; a parsed manifest
     * and the few semantics-bearing commits (drop itself, replace/
     * rebuild resetting to the new schema truth, restore) pass an
     * explicit `Some`. */
@@ -71,6 +71,11 @@ private[io] final case class Manifest(
 
   /** The record of dir `d` (empty when none is recorded). */
   def meta(d: String): DirMeta = dirs.getOrElse(d, DirMeta())
+
+  /** This manifest with fresh observations of some of its dirs merged
+    * over their records ([[DirMeta.merged]]). */
+  def withRecords(written: Map[String, DirMeta]): Manifest =
+    copy(dirs = dirs ++ written.map { case (d, x) => d -> meta(d).merged(x) })
 
   /** Records of the dirs this manifest still references — the
     * carry-forward rule every commit applies to its predecessor's

@@ -689,14 +689,8 @@ class SnapshotBucketedStore(
     Some(ManifestCodec.parse(name, v, text))
   }
 
-  /** The stats version a NEW commit records: stats carried forward
-    * from a previous manifest keep that manifest's (possibly older)
-    * version — sticky min, because one v1-recorded float string in
-    * the carried map would otherwise masquerade as current-format.
-    * A table written entirely by this code is always current. */
-  private def carriedStatsVersion(prev: Option[Manifest]): Int =
-    prev.map(m => math.min(SnapshotBucketedStore.CurrentStatsVersion, m.statsVersion))
-      .getOrElse(SnapshotBucketedStore.CurrentStatsVersion)
+  /** The version a commit over `base` publishes (0 for a new table). */
+  private def nextVersion(base: Option[Manifest]): Int = base.fold(0)(_.version + 1)
 
   private def latestManifest(name: String): Option[Manifest] =
     snapshots(name).lastOption.flatMap(manifestAt(name, _))
@@ -744,10 +738,16 @@ class SnapshotBucketedStore(
       }.map(_.getLen).sum)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The commit point: stage the manifest text fully, then publish it
-    * with a true compare-and-set on the versioned name. A manifest for
-    * this version already on disk means another writer won — refuse
-    * loudly ([[ConcurrentCommitException]]), never replace.
+  /** The commit point — every commit family's one write path: publish
+    * `next` (version `base + 1`) over `base`, the latest manifest the
+    * family read (None for a new table), with `written`, the observed
+    * records of the dirs the family wrote, merged in. It reads nothing:
+    * the base carries the byte records and the dropped-column marker
+    * forward. Stage the manifest text fully, then publish it with a
+    * true compare-and-set on the versioned name. A manifest for this
+    * version already on disk means another writer won since the base
+    * was read — refuse loudly ([[ConcurrentCommitException]]), never
+    * replace; the CAS, not a re-read, is what guards a stale base.
     *
     * On HDFS-like filesystems rename refuses an existing target, so
     * stage-then-rename IS the CAS. On a posix local FS rename(2)
@@ -758,14 +758,20 @@ class SnapshotBucketedStore(
     * link(2) fails EEXIST atomically, and the target appears fully
     * written because it aliases the completed staged file — both the
     * CAS and the all-or-nothing visibility survive. */
-  private def commit(name: String, m0: Manifest): Unit = {
-    // one previous-manifest read serves both carry-forwards: per-dir
-    // byte records (X258, dir-keyed and immutable) and the dropped-
-    // column marker (X259, explicit `Some` wins — restore/replace
-    // set it; every other commit family carries)
-    val prev = latestManifest(name)
-    val m = bytesFilled(name, m0, prev)
-      .copy(dropped = m0.dropped.orElse(prev.flatMap(_.dropped)))
+  private def commit(name: String, base: Option[Manifest], next: Manifest,
+      written: Map[String, DirMeta] = Map.empty): Unit = {
+    require(next.version == nextVersion(base),
+      s"$name: commit of v${next.version} over base v${base.fold(-1)(_.version)}")
+    // the family's base serves both carry-forwards: per-dir byte
+    // records (X258, dir-keyed and immutable) and the dropped-column
+    // marker (X259, explicit `Some` wins — drop/restore/replace/
+    // rebuild set it). A family that keeps the base's records keeps
+    // its (possibly older) stats version in `next`, never newer than
+    // current: one carried v1-recorded float string must not
+    // masquerade as current-format
+    val m = bytesFilled(name, next.withRecords(written), base).copy(
+      statsVersion = math.min(next.statsVersion, SnapshotBucketedStore.CurrentStatsVersion),
+      dropped = next.dropped.orElse(base.flatMap(_.dropped)))
     val dir = tableDir(name)
     val f = fs(dir)
     // writer-unique staging name: two writers racing to the same
@@ -1005,11 +1011,6 @@ class SnapshotBucketedStore(
     bf.writeTo(bos)
     bos.toByteArray
   }
-
-  /** A manifest with per-dir metadata merged over its own
-    * ([[DirMeta.merged]]; records of superseded dirs drop at commit). */
-  private def withMeta(m: Manifest, dm: Map[String, DirMeta]): Manifest =
-    m.copy(dirs = m.dirs ++ dm.map { case (d, x) => d -> m.meta(d).merged(x) })
 
   /** Quantile-sketch eligibility: declared, present, and NUMERIC —
     * the sketch is over the double promotion, a visible cast
@@ -1466,7 +1467,7 @@ class SnapshotBucketedStore(
     // the restored version's per-dir records restore with it, its
     // OUTSTANDING tombstones included — dropping them would silently
     // resurrect merge-on-read deletes
-    commit(name, target.copy(version = cur.version + 1, lastBatch = cur.lastBatch,
+    commit(name, Some(cur), target.copy(version = cur.version + 1, lastBatch = cur.lastBatch,
       // the restored version's dropped-column marker restores WITH it
       // (explicit, even when empty): rolling back past a DROP COLUMN
       // resurrects the column — the marker is snapshot state like
@@ -1505,6 +1506,7 @@ class SnapshotBucketedStore(
     * manifest anywhere references them). */
   def cloneTable(src: String, dst: String, version: Option[Int] = None): Unit = {
     require(src != dst, s"cannot clone '$src' onto itself")
+    // the clone target's base: a clone is a new table's first commit
     require(latestManifest(dst).isEmpty, s"clone target '$dst' already exists")
     val m = version match {
       case Some(v) => manifestAt(src, v).getOrElse(
@@ -1519,7 +1521,7 @@ class SnapshotBucketedStore(
     // it under a different key/bucket shape would be silently wrong
     val srcProps = tableProps(src)
     if (srcProps.nonEmpty) writeTableProps(dst, srcProps)
-    commit(dst, m.copy(version = 0,
+    commit(dst, None, m.copy(version = 0,
       buckets = m.buckets.map { case (b, d) => b -> ref(d) },
       logs = m.logs.map(ref),
       // outstanding tombstones clone BY REFERENCE like the data dirs
@@ -1769,8 +1771,8 @@ class SnapshotBucketedStore(
         }
       }
       // records of rewritten/dropped dirs drop at commit (live dirs only)
-      commit(name, withMeta(m.copy(version = v, buckets = bucketMap, logs = logList,
-        statsVersion = carriedStatsVersion(Some(m))), written.toMap))
+      commit(name, Some(m), m.copy(version = v, buckets = bucketMap, logs = logList),
+        written.toMap)
       (dropped.size, rewrites.size, disjoint.size)
     }
   }
@@ -1890,12 +1892,12 @@ class SnapshotBucketedStore(
     require(prev.flatMap(_.lastBatch).forall(_ <= batchId),
       s"$name batch mark would move backwards: " +
         s"${prev.flatMap(_.lastBatch)} → $batchId")
-    val v = prev.map(_.version + 1).getOrElse(0)
+    val v = nextVersion(prev)
     val rel = s"data/log-$v"
     val dm = writeDir(df, new Path(tableDir(name), rel).toString)
-    commit(name, withMeta(Manifest(v, Map.empty, Seq(rel), Some(batchId),
+    commit(name, prev, Manifest(v, Map.empty, Seq(rel), Some(batchId),
       fanout = prev.flatMap(_.fanout),
-      dropped = Some(Nil)), Map(rel -> dm))) // full rewrite = the new schema truth
+      dropped = Some(Nil)), Map(rel -> dm)) // full rewrite = the new schema truth
   }
 
   /** K2 append as a committed log generation: new dir + new manifest.
@@ -1903,30 +1905,29 @@ class SnapshotBucketedStore(
     * appending log dirs into a bucketed upsert target would brick it
     * (every later upsert/delete refuses on the logs-present check). */
   override def append(name: String, df: DataFrame): Unit =
-    appendCommit(name, df, None)
+    appendCommit(name, latestManifest(name), df, None)
 
   /** Exactly-once streaming append: the batch id commits in the SAME
     * manifest rename as the data, so "data landed but marker didn't"
     * cannot exist. A replayed epoch (batchId ≤ recorded high-water
     * mark) is skipped — foreachBatch epochs are monotonic per query. */
   override def appendIfNew(name: String, df: DataFrame, batchId: Long): Boolean = {
-    val applied = latestManifest(name).flatMap(_.lastBatch)
-    if (applied.exists(batchId <= _)) false
-    else { appendCommit(name, df, Some(batchId)); true }
+    val prev = latestManifest(name)
+    if (prev.flatMap(_.lastBatch).exists(batchId <= _)) false
+    else { appendCommit(name, prev, df, Some(batchId)); true }
   }
 
-  private def appendCommit(name: String, df: DataFrame, batchId: Option[Long]): Unit = {
-    val prev = latestManifest(name)
+  private def appendCommit(name: String, prev: Option[Manifest], df: DataFrame,
+      batchId: Option[Long]): Unit = {
     require(prev.forall(_.buckets.isEmpty),
       s"$name has bucketed upsert generations; append targets log tables only")
     refuseDroppedWrite(name, prev, df)
-    val v = prev.map(_.version + 1).getOrElse(0)
+    val v = nextVersion(prev)
     val rel = s"data/log-$v"
     val dm = writeDir(df, new Path(tableDir(name), rel).toString)
     val base = prev.getOrElse(Manifest(v, Map.empty, Nil))
-    commit(name, withMeta(base.copy(version = v, logs = base.logs :+ rel,
-      lastBatch = batchId.orElse(base.lastBatch),
-      statsVersion = carriedStatsVersion(prev)), Map(rel -> dm)))
+    commit(name, prev, base.copy(version = v, logs = base.logs :+ rel,
+      lastBatch = batchId.orElse(base.lastBatch)), Map(rel -> dm))
   }
 
   /** Log-structured compaction for append-mode tables: fold the
@@ -1970,8 +1971,8 @@ class SnapshotBucketedStore(
       // CAS: commit only if nothing advanced the table while we wrote
       if (latestManifest(name).exists(_.version == base.version)) {
         try {
-          commit(name, withMeta(Manifest(v, Map.empty, Seq(rel), base.lastBatch,
-            fanout = base.fanout), Map(rel -> dm)))
+          commit(name, Some(base), Manifest(v, Map.empty, Seq(rel), base.lastBatch,
+            fanout = base.fanout), Map(rel -> dm))
           return true
         } catch { case _: ConcurrentCommitException => () } // lost the race
       }
@@ -1983,7 +1984,7 @@ class SnapshotBucketedStore(
     * snapshot's dirs stay readable until [[vacuum]]. */
   override def replace(name: String, df: DataFrame): Unit = {
     val prev = latestManifest(name)
-    val v = prev.map(_.version + 1).getOrElse(0)
+    val v = nextVersion(prev)
     val rel = s"data/log-$v"
     // A replace source may read this very table (self-overwrite);
     // writing to a fresh generation dir makes that safe by layout.
@@ -1992,13 +1993,13 @@ class SnapshotBucketedStore(
     // commits, and dropping the mark there would let a crash-replayed
     // epoch re-apply after a compact.
     val dm = writeDir(df, new Path(tableDir(name), rel).toString)
-    commit(name, withMeta(Manifest(v, Map.empty, Seq(rel), prev.flatMap(_.lastBatch),
+    commit(name, prev, Manifest(v, Map.empty, Seq(rel), prev.flatMap(_.lastBatch),
       fanout = prev.flatMap(_.fanout),
-      dropped = Some(Nil)), Map(rel -> dm))) // full rewrite = the new schema truth
+      dropped = Some(Nil)), Map(rel -> dm)) // full rewrite = the new schema truth
   }
 
   override def upsert(name: String, incoming: DataFrame, key: String)(implicit s: SparkSession): Unit =
-    upsertCore(name, incoming, key, None)
+    upsertCore(name, latestManifest(name), incoming, key, None)
 
   /** [[upsert]] that also SETS the streaming batch high-water mark —
     * the keyed exactly-once sink: O(touched-buckets) write cost like
@@ -2009,15 +2010,14 @@ class SnapshotBucketedStore(
     * same discipline as [[appendIfNew]]. */
   def upsertWithBatch(name: String, incoming: DataFrame, key: String,
       batchId: Long): Unit = {
-    require(latestManifest(name).flatMap(_.lastBatch).forall(_ <= batchId),
+    val prev = latestManifest(name)
+    require(prev.flatMap(_.lastBatch).forall(_ <= batchId),
       s"$name batch mark would move backwards")
-    upsertCore(name, incoming, key, Some(batchId))
+    upsertCore(name, prev, incoming, key, Some(batchId))
   }
 
-  private def upsertCore(name: String, incoming: DataFrame, key: String,
-      batchId: Option[Long]): Unit = {
-    import org.apache.spark.sql.functions.col
-    val prev = latestManifest(name)
+  private def upsertCore(name: String, prev: Option[Manifest], incoming: DataFrame,
+      key: String, batchId: Option[Long]): Unit = {
     require(prev.forall(_.logs.isEmpty),
       s"$name has append-log generations; bucketed upsert targets are upsert-only")
     refuseDroppedWrite(name, prev, incoming)
@@ -2051,7 +2051,7 @@ class SnapshotBucketedStore(
             "atomic rebuild() at the new type instead")
       }
     }
-    val v = prev.map(_.version + 1).getOrElse(0)
+    val v = nextVersion(prev)
     // the RECORDED fan-out wins over this store's configured default —
     // a mismatched modulus would hash keys into the wrong dirs
     val fan = fanoutFor(prev)
@@ -2072,11 +2072,10 @@ class SnapshotBucketedStore(
       merged(prev, existing, incoming, key, fan, touched), touched, b => s"data/b$b-g$v")
     // untouched buckets keep their metadata and tombstones
     val base = prev.getOrElse(Manifest(v, Map.empty, Nil))
-    commit(name, withMeta(base.copy(version = v,
+    commit(name, prev, base.copy(version = v,
       buckets = base.buckets ++ newBuckets.map { case (b, (rel, _)) => b -> rel },
-      lastBatch = batchId.orElse(base.lastBatch),
-      statsVersion = carriedStatsVersion(prev), fanout = Some(fan)),
-      newBuckets.values.toMap))
+      lastBatch = batchId.orElse(base.lastBatch), fanout = Some(fan)),
+      newBuckets.values.toMap)
   }
 
   /** Keep-last merge of `incoming` over `existing`, bucketed, laid
@@ -2126,17 +2125,17 @@ class SnapshotBucketedStore(
     * the rebuild, same as [[replace]]. */
   def rebuild(name: String, df: DataFrame, key: String): Unit = {
     val prev = latestManifest(name)
-    val v = prev.map(_.version + 1).getOrElse(0)
+    val v = nextVersion(prev)
     // every bucket may fill: the write pass itself says which did
     val newBuckets = writeBuckets(name, v, rebalanced(df, key, numBuckets),
       (0 until numBuckets).map(_.toLong), b => s"data/b$b-g$v")
-    commit(name, withMeta(Manifest(v, newBuckets.map { case (b, (rel, _)) => b -> rel }, Nil,
+    commit(name, prev, Manifest(v, newBuckets.map { case (b, (rel, _)) => b -> rel }, Nil,
       prev.flatMap(_.lastBatch),
       // rebuild is the fan-out MIGRATION point: the whole table was
       // just rehashed under this store's configured modulus
       fanout = Some(numBuckets),
       dropped = Some(Nil)), // full rewrite = the new schema truth
-      newBuckets.values.toMap))
+      newBuckets.values.toMap)
   }
 
   /** Z-ORDER CLUSTERING REWRITE (X253 — the store surface for
@@ -2213,9 +2212,8 @@ class SnapshotBucketedStore(
     // order the layout gave them (no sortColumns re-sort)
     val written = writeBuckets(name, v, clustered, (0 until slabs).map(_.toLong),
       i => s"data/z$i-g$v").toSeq.sortBy(_._1).map(_._2)
-    commit(name, withMeta(Manifest(v, Map.empty, written.map(_._1), prev.lastBatch,
-      statsVersion = carriedStatsVersion(Some(prev)), fanout = prev.fanout),
-      written.toMap))
+    commit(name, Some(prev), Manifest(v, Map.empty, written.map(_._1), prev.lastBatch,
+      statsVersion = prev.statsVersion, fanout = prev.fanout), written.toMap)
     written.size
   }
 
@@ -2256,10 +2254,9 @@ class SnapshotBucketedStore(
     // has no staged dir and simply drops out of the manifest
     val newBuckets = writeBuckets(name, v, remaining, touched, b => s"data/b$b-g$v")
     // rewritten dirs' tombstones drop via liveTombs
-    commit(name, withMeta(prev.get.copy(version = v,
+    commit(name, prev, prev.get.copy(version = v,
       buckets = prev.get.buckets -- touched ++ newBuckets.map { case (b, (rel, _)) => b -> rel },
-      statsVersion = carriedStatsVersion(prev), fanout = Some(fan)),
-      newBuckets.values.toMap))
+      fanout = Some(fan)), newBuckets.values.toMap)
   }
 
   /** ONE-COMMIT row-level delta (X244 — what SQL MERGE INTO / UPDATE
@@ -2305,10 +2302,9 @@ class SnapshotBucketedStore(
     val newBuckets = writeBuckets(name, v,
       merged(Some(prev), kept, upserts, key, fan, touched), touched, b => s"data/b$b-g$v")
     // rewritten dirs' tombstones drop via liveTombs
-    commit(name, withMeta(prev.copy(version = v,
+    commit(name, Some(prev), prev.copy(version = v,
       buckets = prev.buckets -- touched ++ newBuckets.map { case (b, (rel, _)) => b -> rel },
-      statsVersion = carriedStatsVersion(Some(prev)), fanout = Some(fan)),
-      newBuckets.values.toMap))
+      fanout = Some(fan)), newBuckets.values.toMap)
   }
 
   /** ALTER TABLE ADD COLUMNS, metadata-only (X247): commit a ZERO-ROW
@@ -2348,8 +2344,8 @@ class SnapshotBucketedStore(
     val dm = writeDir(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], extended)
       .repartition(1), new Path(tableDir(name), rel).toString)
-    commit(name, withMeta(prev.copy(version = v, buckets = prev.buckets + (SchemaBucket -> rel),
-      statsVersion = carriedStatsVersion(Some(prev))), Map(rel -> dm)))
+    commit(name, Some(prev), prev.copy(version = v,
+      buckets = prev.buckets + (SchemaBucket -> rel)), Map(rel -> dm))
   }
 
   /** The reserved bucket id of zero-row schema generations —
@@ -2402,8 +2398,7 @@ class SnapshotBucketedStore(
     clusterColumn.foreach(cc => require(!cols.contains(cc),
       s"$name: '$cc' is the cluster column — physical bucket layout " +
         "hangs off it; rebuild() under a new shape instead"))
-    commit(name, prev.copy(version = prev.version + 1,
-      statsVersion = carriedStatsVersion(Some(prev)),
+    commit(name, Some(prev), prev.copy(version = prev.version + 1,
       dropped = Some((prev.droppedNames ++ cols).distinct)))
   }
 
@@ -2550,7 +2545,7 @@ class SnapshotBucketedStore(
     val v = m.version + 1
     val rel = s"data/tomb-g$v"
     writeDir(keyFrame, new Path(tableDir(name), rel).toString)
-    commit(name, m.copy(version = v, statsVersion = carriedStatsVersion(Some(m)),
+    commit(name, prev, m.copy(version = v,
       dirs = m.dirs ++ touchedDirs.map { case (_, d) =>
         d -> m.meta(d).copy(tombs = m.meta(d).tombs :+ (keyCol -> rel))
       }))
@@ -2595,8 +2590,7 @@ class SnapshotBucketedStore(
       }
     }
     // all applied dirs left `buckets` → liveTombs drops their tombstones
-    commit(name, withMeta(m.copy(version = v, buckets = buckets,
-      statsVersion = carriedStatsVersion(Some(m))), written.toMap))
+    commit(name, Some(m), m.copy(version = v, buckets = buckets), written.toMap)
     tombed.size
   }
 
@@ -2645,8 +2639,7 @@ class SnapshotBucketedStore(
     // the conservative read-side widening)
     val full = targets.toSet == live.toSet
     val statsVer =
-      if (full) SnapshotBucketedStore.CurrentStatsVersion
-      else carriedStatsVersion(Some(m))
+      if (full) SnapshotBucketedStore.CurrentStatsVersion else m.statsVersion
     // a FULL recompute REPLACES the per-dir stats, keys, rows, NDV and
     // quantile sketches rather than merging (tombstones and byte sizes
     // are kept): a dir holding a legacy entry for a formerly-declared stats
@@ -2657,16 +2650,16 @@ class SnapshotBucketedStore(
     // dirs keep their entries) and the sticky version keeps the
     // read-side widening honest.
     val base = m.copy(version = v, statsVersion = statsVer)
-    val next = withMeta(
+    val next = (
       if (full) base.copy(dirs = m.dirs.map { case (d, x) =>
         d -> DirMeta(bytes = x.bytes, tombs = x.tombs) })
-      else base, computed)
+      else base).withRecords(computed)
     // nothing recomputable changed (e.g. an all-null stats column that
     // can never record): skip the commit instead of minting identical
     // history forever — unless a byte backfill still needs to land
     if (next.dirs == m.dirs && statsVer == m.statsVersion && !bytesMissing)
       return 0
-    commit(name, next)
+    commit(name, Some(m), next)
     targets.size
   }
 
@@ -2777,9 +2770,9 @@ class SnapshotBucketedStore(
         clusterColumn.foreach(cc => require(schema.fieldNames.contains(cc),
           s"cluster column '$cc' is not a column of the declared schema"))
         val prev = latestManifest(name)
-        val v = prev.map(_.version + 1).getOrElse(0)
+        val v = nextVersion(prev)
         val rel = s"data/b0-g$v"
-        writeDir(empty, new Path(tableDir(name), rel).toString)
+        val dm = writeDir(empty, new Path(tableDir(name), rel).toString)
         // On an EXISTING table (the TRUNCATE path — DDL create refuses
         // existing tables upstream) the streaming batch high-water mark
         // and the recorded bucket fan-out CARRY: dropping the mark
@@ -2787,9 +2780,9 @@ class SnapshotBucketedStore(
         // already-committed batch into the truncated table (the same
         // reason replace/compactLogs carry it), and the fan-out is the
         // table's declared shape, which truncation preserves.
-        commit(name, Manifest(v, Map(0L -> rel), Nil,
+        commit(name, prev, Manifest(v, Map(0L -> rel), Nil,
           prev.flatMap(_.lastBatch),
-          fanout = Some(prev.flatMap(_.fanout).getOrElse(numBuckets))))
+          fanout = Some(prev.flatMap(_.fanout).getOrElse(numBuckets))), Map(rel -> dm))
       case None => append(name, empty)
     }
   }

@@ -36,12 +36,11 @@ class ScanStatsSpec extends SparkSpec {
   /** Table-dir listings (one per manifest lookup) while a resolved
     * query reports its statistics, plans and runs. */
   private def tableListings(df: org.apache.spark.sql.DataFrame, dir: String): Int = {
-    import scala.jdk.CollectionConverters._
     df.queryExecution.analyzed
     CountingFileSystem.reset()
     df.queryExecution.optimizedPlan.stats
     df.collect()
-    CountingFileSystem.listed.asScala.count(_ == dir)
+    CountingFileSystem.count("listStatus", dir)
   }
 
   test("pruned(...).estimate: exact rows, positive bytes, scoped to surviving dirs") {
