@@ -270,9 +270,10 @@ class GraftCatalog extends TableCatalog
   }
 
   /** `ALTER TABLE ... ADD COLUMNS (...)` / `DROP COLUMN` — both
-    * metadata-only: ADD commits a zero-row schema generation (X247,
+    * metadata-only, one manifest commit of the new schema and no dir
+    * written: ADD appends the columns (X247,
     * [[SnapshotBucketedStore.addColumns]]) so existing rows read
-    * null there; DROP commits a name-retirement marker (X259,
+    * null there; DROP also records a name-retirement marker (X259,
     * [[SnapshotBucketedStore.dropColumns]]) so every generation
     * serves without the column and rewrites shed it physically.
     * RENAME refuses with guidance: without column ids a rename is
@@ -314,7 +315,7 @@ class GraftCatalog extends TableCatalog
         require(a.fieldNames.length == 1,
           s"ADD COLUMNS adds top-level columns, got nested ${a.fieldNames.mkString(".")}")
         require(a.position() == null,
-          "graft column order is footer-merge order — positions are not served")
+          "graft appends added columns after the recorded ones — positions are not served")
         require(a.isNullable,
           s"added column '${a.fieldNames.head}' must be nullable: existing " +
             "rows have no value for it")
@@ -413,14 +414,10 @@ private[io] class GraftV2Table(store: SnapshotBucketedStore, table: String,
 
   private def keyedBucketed: Boolean = kind._2 == 0 && kind._1 > 0
 
-  /** Resolved once per loaded table: the merge-schema read lists
-    * every live data dir and reads their footers. */
+  /** Resolved once per loaded table, from the manifest's recorded
+    * schema: no data dir is listed and no footer read. */
   private lazy val resolvedSchema: StructType = {
-    val df = version match {
-      case Some(v) => store.readAt(table, v)
-      case None => store.read(table)
-    }
-    val raw = df.map(_.schema).getOrElse(throw new NoSuchTableException(Seq(name())))
+    val raw = store.schema(table, version).getOrElse(throw new NoSuchTableException(Seq(name())))
     // a bucketed keyed table's upsert key is non-null by the store's
     // own contract (rows bucket by xxhash64(key)) — declared, because
     // the row-level rewrite refuses nullable row ids

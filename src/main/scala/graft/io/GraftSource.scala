@@ -57,7 +57,7 @@ class GraftSource
       parameters: Map[String, String]): (String, StructType) = {
     val (store, table) = storeOf(sqlContext, parameters)
     val base = schema.getOrElse(
-      store.read(table).map(_.schema).getOrElse(
+      store.schema(table).getOrElse(
         throw new java.util.NoSuchElementException(
           s"graft table '$table' does not exist (streaming source needs " +
             "an existing table or an explicit schema)")))
@@ -426,7 +426,7 @@ class GraftRelation(
 ) extends BaseRelation with PrunedFilteredScan {
 
   override def schema: StructType =
-    store.read(table).map(_.schema).getOrElse(
+    store.schema(table).getOrElse(
       throw new java.util.NoSuchElementException(
         s"graft table '$table' does not exist"))
 

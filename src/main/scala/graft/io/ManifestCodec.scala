@@ -1,5 +1,7 @@
 package graft.io
 
+import org.apache.spark.sql.types.{DataType, StructType}
+
 /** Everything a snapshot manifest records about ONE generation dir —
   * one record per dir, after the per-file `add` entries of Delta's
   * transaction log. Every field may be absent (legacy dirs, undeclared
@@ -31,12 +33,13 @@ private[io] final case class DirMeta(
 
   /** This record with a fresh observation `n` of the same dir merged
     * over it: a non-empty stats/keys/ndv/qsk entry wins and an empty
-    * one keeps the old entry; rows are taken from `n`; bytes and
-    * tombstones carry. */
+    * one keeps the old entry; rows and bytes are taken from `n` when
+    * it records them; tombstones carry. */
   def merged(n: DirMeta): DirMeta = copy(
     stats = if (n.stats.nonEmpty) n.stats else stats,
     keys = if (n.keys.nonEmpty) n.keys else keys,
     rows = n.rows.orElse(rows),
+    bytes = n.bytes.orElse(bytes),
     ndv = if (n.ndv.nonEmpty) n.ndv else ndv,
     qsk = if (n.qsk.nonEmpty) n.qsk else qsk)
 }
@@ -45,9 +48,20 @@ private[io] final case class DirMeta(
   * append-log dirs, plus the highest streaming batch id applied (rides
   * in the same manifest so data + marker commit in ONE rename — the
   * exactly-once hinge for [[SnapshotBucketedStore.appendIfNew]]), plus
-  * the per-dir records. Records COMMIT IN THE SAME RENAME as the dirs
-  * they describe, so a reader can never see a dir without its stats or
-  * stats without their dir. */
+  * the per-dir records and the table's read schema. Records COMMIT IN
+  * THE SAME RENAME as the dirs they describe, so a reader can never see
+  * a dir without its stats or stats without their dir.
+  *
+  * `schema` is THE answer to "what does this table look like" (the
+  * `metaData` action of Delta's log): every read hands it to the
+  * reader, which widens older generations to it and reads columns a
+  * generation lacks as null, so no footer is ever merged. It never
+  * holds a dropped name. A manifest written before the schema was
+  * recorded parses with `None`; its schema is the fold of its live
+  * dirs' footers ([[SnapshotBucketedStore.schema]]), and the first
+  * commit over it records one. On a commit builder `None` means "start
+  * from the base's schema when any base dir stays live"; a `Some`
+  * replaces that start (ADD/DROP COLUMN, restore, clone). */
 private[io] final case class Manifest(
     version: Int,
     buckets: Map[Long, String],
@@ -57,10 +71,12 @@ private[io] final case class Manifest(
     statsVersion: Int = SnapshotBucketedStore.CurrentStatsVersion,
     commitMillis: Option[Long] = None,
     fanout: Option[Int] = None,
-    dropped: Option[Seq[String]] = None) {
+    dropped: Option[Seq[String]] = None,
+    schema: Option[StructType] = None) {
   /** Columns DROPPED from this snapshot (X259, ALTER TABLE DROP
-    * COLUMN): name-suppressed at read over every generation that
-    * still physically carries them; rewrites shed them for real.
+    * COLUMN): retired names, absent from `schema`, so no read serves
+    * them from the generations that still physically carry them and
+    * every rewrite sheds them.
     * `None` means "not specified by this commit's builder" — the
     * commit point carries the marker of the base manifest the commit
     * family read, so the families stay oblivious; a parsed manifest
@@ -104,9 +120,12 @@ private[io] final case class Manifest(
   * `statsver:<n>`, then per live dir (sorted) `stats:<dir>=<c>:<min>:<max>,…`,
   * `keys:`/`ndv:`/`qsk:<dir>=<c>:<base64>,…`, `rows:`/`bytes:<dir>=<n>`
   * and `tomb:<dir>=<keycol>:<sidecar>,…`, then `fanout:<n>`,
-  * `drop:<c>,…` and `ts:<epoch millis>`. Column names are
-  * [A-Za-z0-9_]+, base64's standard alphabet has no ':' or ',', and dir
-  * rels carry no '=', ':' or ',', so the delimiters never collide.
+  * `drop:<c>,…`, `schema:<StructType JSON>` and `ts:<epoch millis>`.
+  * Column names are [A-Za-z0-9_]+, base64's standard alphabet has no
+  * ':' or ',', and dir rels carry no '=', ':' or ',', so the delimiters
+  * never collide; the tag splits on the FIRST ':', so the one-line
+  * JSON body parses as-is. A manifest with no `schema:` line (written
+  * before the schema was recorded) parses with `schema = None`.
   * Unknown tags are skipped. */
 private[io] object ManifestCodec {
 
@@ -148,6 +167,7 @@ private[io] object ManifestCodec {
     var lastBatch, commitMillis: Option[Long] = None
     var statsVer, fanout: Option[Int] = None
     var dropped: Option[Seq[String]] = None
+    var schema: Option[StructType] = None
     text.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { l =>
       val (tag, body) = l.indexOf(':') match {
         case -1 => ("", l)
@@ -163,6 +183,9 @@ private[io] object ManifestCodec {
         case "ts" if commitMillis.isEmpty => commitMillis = Some(num(l)(body.toLong))
         case "fanout" if fanout.isEmpty => fanout = Some(num(l)(body.toInt))
         case "drop" if dropped.isEmpty => dropped = Some(body.split(",").toSeq.filter(_.nonEmpty))
+        case "schema" if schema.isEmpty =>
+          schema = Some(try DataType.fromJson(body).asInstanceOf[StructType]
+            catch { case scala.util.control.NonFatal(e) => corrupt(l, e) })
         case "stats" =>
           val (d, es) = entries(l, body, 3)
           record(d)(_.copy(stats = es.map(f => (f(0), f(1), f(2)))))
@@ -183,7 +206,7 @@ private[io] object ManifestCodec {
       // always explicit on a parsed manifest (absent ≡ nothing
       // dropped), so restoring a pre-drop version resurrects the
       // column rather than carrying a later drop forward
-      dropped.orElse(Some(Nil)))
+      dropped.orElse(Some(Nil)), schema)
   }
 
   /** `m` as manifest text stamped `ts:<commitMillis>`: records of dirs
@@ -211,6 +234,7 @@ private[io] object ManifestCodec {
         lists("tomb", _.tombs)(pair) ++
         m.fanout.map(f => s"fanout:$f") ++
         m.dropped.map(_.distinct).filter(_.nonEmpty).map(ds => s"drop:${ds.mkString(",")}") ++
+        m.schema.map(s => s"schema:${s.json}") ++
         Seq(s"ts:$commitMillis")
     lines.mkString("", "\n", "\n")
   }

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 /** Thrown when a commit finds its target manifest version already
   * committed by another writer — either a violation of the store's
@@ -32,6 +32,10 @@ trait TableStore {
     * the reference catches the missing-table error and proceeds with
     * an empty frame (lambda.py:175-178). */
   def read(name: String): Option[DataFrame]
+
+  /** The table's schema; None when the table doesn't exist. Stores
+    * that record it answer without reading data. */
+  def schema(name: String): Option[StructType] = read(name).map(_.schema)
 
   /** S6 with the reference's fallback made explicit. */
   def readOrEmpty(name: String, schema: StructType)(implicit spark: SparkSession): DataFrame =
@@ -408,6 +412,44 @@ object SnapshotBucketedStore {
     * to parse. */
   private[io] def rangeOf(stat: (String, String, String)): Option[(BigDecimal, BigDecimal)] =
     scala.util.Try((BigDecimal(stat._2), BigDecimal(stat._3))).toOption
+
+  /** The PROMOTION LATTICE of type-widening schema evolution (X212 —
+    * the Iceberg type-promotion matrix): the one type both `a` and `b`
+    * read as — byte→short→int→long, float→double, decimal precision at
+    * a fixed scale, recursing through array elements and struct fields
+    * (struct fields union by name). None = outside the lattice (int vs
+    * string). */
+  private[io] def promote(a: DataType, b: DataType): Option[DataType] = (a, b) match {
+    case (x, y) if x == y => Some(x)
+    case (x: DecimalType, y: DecimalType) if x.scale == y.scale =>
+      Some(DecimalType(math.max(x.precision, y.precision), x.scale))
+    case (ArrayType(x, n1), ArrayType(y, n2)) => promote(x, y).map(ArrayType(_, n1 || n2))
+    case (x: StructType, y: StructType) =>
+      val shared = x.fields.map(f => y.find(_.name == f.name).fold(Option(f))(g =>
+        promote(f.dataType, g.dataType)
+          .map(t => f.copy(dataType = t, nullable = f.nullable || g.nullable))))
+      if (shared.exists(_.isEmpty)) None
+      else Some(StructType(
+        shared.flatten ++ y.fields.filterNot(g => x.fieldNames.contains(g.name))))
+    case _ =>
+      val rank = Map[DataType, Int](ByteType -> 1, ShortType -> 2, IntegerType -> 3, LongType -> 4)
+      val frac = Map[DataType, Int](FloatType -> 1, DoubleType -> 2)
+      if (rank.contains(a) && rank.contains(b)) Some(if (rank(a) >= rank(b)) a else b)
+      else if (frac.contains(a) && frac.contains(b)) Some(if (frac(a) >= frac(b)) a else b)
+      else None
+  }
+
+  /** `a` widened by `b` through [[promote]]: `a`'s columns in order,
+    * then `b`'s new ones. A shared column outside the lattice refuses
+    * loudly, naming it. */
+  private[io] def widen(a: StructType, b: StructType): StructType =
+    promote(a, b).map(_.asInstanceOf[StructType]).getOrElse {
+      val (f, g) = a.fields.flatMap(f => b.find(_.name == f.name).map(f -> _))
+        .find { case (f, g) => promote(f.dataType, g.dataType).isEmpty }.get
+      throw new IllegalArgumentException(
+        s"cannot widen column '${f.name}': ${f.dataType.simpleString} vs " +
+          s"${g.dataType.simpleString} is outside the numeric promotion lattice")
+    }
 }
 
 class SnapshotBucketedStore(
@@ -453,99 +495,25 @@ class SnapshotBucketedStore(
         "commit lock, or conditional PUTs (docs/SCALE.md §8a); without " +
         "one, racing writers can silently drop a commit")
   }
-  // every generation read goes through the same format seam as
-  // FileDirStore, so the atomic-commit/GDPR-delete machinery is
-  // format-agnostic (both bundled columnar formats honor mergeSchema)
   /** The store's physical bucket fan-out — public so bucket-grain
     * tooling ([[Repair]]) can mirror the layout it will rewrite. */
   def bucketCount: Int = numBuckets
 
-  private def readDirs(dirs: Seq[String]): DataFrame =
-    try spark.read.option("mergeSchema", "true").format(fmt).load(dirs: _*)
-    catch {
-      case scala.util.control.NonFatal(e) if dirs.length > 1 =>
-        readDirsWidened(dirs, e)
-    }
+  /** Generation dirs read through the snapshot's `schema`, the same
+    * format seam as FileDirStore: the reader widens every older
+    * generation's columns to the recorded types (X212 — the Iceberg
+    * promotion matrix, [[SnapshotBucketedStore.promote]]; one scan,
+    * pushdown intact) and reads a column a generation lacks as null, so
+    * no footer is merged and no schema job runs. */
+  private def readDirs(dirs: Seq[String], schema: StructType): DataFrame =
+    spark.read.schema(schema).format(fmt).load(dirs: _*)
 
-  /** NUMERIC TYPE-WIDENING schema evolution at read (X212 — the
-    * Iceberg type-promotion matrix: byte→short→int→long,
-    * float→double, decimal precision at fixed scale; metadata-only,
-    * no rewrite): parquet's own mergeSchema refuses footers whose
-    * column types conflict, so a widening upsert would strand every
-    * pre-widening generation. This fallback (entered only when the
-    * one-scan merge fails — zero cost on the common path) probes
-    * each dir's schema, folds the per-field PROMOTION lattice
-    * (recursing through arrays/structs; a non-promotable conflict —
-    * int vs string — refuses loudly with the merge error attached),
-    * and reads each dir cast to the widened shape, union'd by name
-    * with missing columns null (mergeSchema's add-column semantics
-    * preserved). Honest costs: one plan branch per dir (a heavily
-    * widened table reads through an O(generations) union until the
-    * next [[rebuild]] re-compacts it to one schema — the documented
-    * remedy), and the cast on a filtered column sits between the
-    * filter and the parquet scan, so pushdown on THAT column
-    * degrades to a post-scan filter until rebuild. */
-  private def readDirsWidened(dirs: Seq[String], cause: Throwable): DataFrame =
-    widenedFrames(dirs, cause).map(_._3).reduce(_ unionByName _)
+  /** One dir under its OWN footer schema: tombstone sidecars, the
+    * per-dir [[analyzeTable]] backfill and the legacy schema fold. */
+  private def readOwn(dir: String): DataFrame = spark.read.format(fmt).load(dir)
 
-  /** The per-dir decomposition of [[readDirsWidened]]: each dir's
-    * RAW footer schema plus its frame CAST to the folded promotion
-    * target — exposed so the tombstone-aware read ([[readDataDirs]])
-    * can widen and still anti-join each dir's own sidecars (the
-    * tombstones × widening composition, docs/SCALE.md §8 item 14). */
-  private def widenedFrames(
-      dirs: Seq[String], cause: Throwable): Seq[(String, StructType, DataFrame)] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.types._
-    val loaded = dirs.map(d => d -> spark.read.format(fmt).load(d))
-    def promote(a: DataType, b: DataType): Option[DataType] = (a, b) match {
-      case (x, y) if x == y => Some(x)
-      case (x: DecimalType, y: DecimalType) if x.scale == y.scale =>
-        Some(DecimalType(math.max(x.precision, y.precision), x.scale))
-      case (ArrayType(x, n1), ArrayType(y, n2)) =>
-        promote(x, y).map(ArrayType(_, n1 || n2))
-      case (StructType(fa), StructType(fb))
-          if fa.map(_.name).sameElements(fb.map(_.name)) =>
-        val fs = fa.zip(fb).map { case (x, y) =>
-          promote(x.dataType, y.dataType)
-            .map(t => StructField(x.name, t, x.nullable || y.nullable))
-        }
-        if (fs.forall(_.isDefined)) Some(StructType(fs.map(_.get))) else None
-      case _ =>
-        val rank = Map[DataType, Int](ByteType -> 1, ShortType -> 2,
-          IntegerType -> 3, LongType -> 4)
-        val frac = Map[DataType, Int](FloatType -> 1, DoubleType -> 2)
-        if (rank.contains(a) && rank.contains(b))
-          Some(if (rank(a) >= rank(b)) a else b)
-        else if (frac.contains(a) && frac.contains(b))
-          Some(if (frac(a) >= frac(b)) a else b)
-        else None
-    }
-    // union field names in first-seen order, fold each through the lattice
-    val names = scala.collection.mutable.LinkedHashMap[String, StructField]()
-    loaded.foreach { case (d, df) =>
-      df.schema.fields.foreach { f =>
-        names.get(f.name) match {
-          case None => names(f.name) = f
-          case Some(prev) =>
-            val t = promote(prev.dataType, f.dataType).getOrElse(
-              throw new IllegalArgumentException(
-                s"cannot widen column '${f.name}': ${prev.dataType.simpleString} " +
-                  s"vs ${f.dataType.simpleString} (dir $d) is outside the " +
-                  "numeric promotion lattice", cause))
-            names(f.name) = StructField(f.name, t, prev.nullable || f.nullable)
-        }
-      }
-    }
-    val target = names.values.toSeq
-    loaded.map { case (d, df) =>
-      val have = df.columns.toSet
-      (d, df.schema, df.select(target.map { f =>
-        if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*))
-    }
-  }
+  private def emptyOf(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** WITHIN-FILE sort order ([[sortColumns]] — the Delta
     * OPTIMIZE-style layout knob at write time): rows sort WITHIN
@@ -576,9 +544,11 @@ class SnapshotBucketedStore(
     * staged bucket dir to its immutable home `rel(b)`: `laid` carries
     * [[BucketCol]] and is already laid out (and sorted) for the write,
     * and `ids` are the buckets it may hold, whose metadata the same
-    * pass observes. A bucket the write left empty has no staged dir
-    * and is absent from the result — the stage's directory existence
-    * is the truth a caller drops it from the manifest on. */
+    * pass observes. One listing of the stage (and of each bucket dir
+    * in it) says which buckets the write produced and the data-file
+    * bytes of each (X258, recorded with the rest of the metadata). A
+    * bucket the write left empty has no staged file and is absent from
+    * the result — the caller drops it from the manifest. */
   private def writeBuckets(name: String, v: Int, laid: DataFrame, ids: Seq[Long],
       rel: Long => String): Map[Long, (String, DirMeta)] = {
     if (ids.isEmpty) return Map.empty
@@ -586,19 +556,26 @@ class SnapshotBucketedStore(
     val f = fs(stage)
     val meta = observedWrite(laid, grouped = true)(_.write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol).format(fmt).save(stage.toString))
+    // plain listStatus, not listFiles: a LocatedFileStatus copies the
+    // permissions, which the local filesystem loads by forking a
+    // process per file
+    val Staged = s"$BucketCol=(\\d+)".r
+    val bytes = f.listStatus(stage).toSeq.flatMap(d => d.getPath.getName match {
+      case Staged(b) => Some(b.toLong -> f.listStatus(d.getPath)
+        .filter(st => st.isFile && isDataFile(st.getPath.getName)).map(_.getLen).sum)
+      case _ => None
+    }).toMap
     f.mkdirs(new Path(tableDir(name), "data"))
-    val moved = ids.flatMap { b =>
+    val moved = ids.filter(bytes.contains).map { b =>
       val src = new Path(stage, s"$BucketCol=$b")
-      if (f.exists(src)) {
-        val dst = new Path(tableDir(name), rel(b))
-        // a dir at THIS version can only be an orphan of a crashed
-        // attempt (no committed manifest references version v yet) —
-        // clear it so the rename can't silently fail
-        if (f.exists(dst)) f.delete(dst, true)
-        if (!f.rename(src, dst))
-          throw new java.io.IOException(s"bucket move failed: $src -> $dst")
-        Some(b -> (rel(b), meta(b)))
-      } else None
+      val dst = new Path(tableDir(name), rel(b))
+      // a dir at THIS version can only be an orphan of a crashed
+      // attempt (no committed manifest references version v yet) —
+      // clear it so the rename can't silently fail
+      if (f.exists(dst)) f.delete(dst, true)
+      if (!f.rename(src, dst))
+        throw new java.io.IOException(s"bucket move failed: $src -> $dst")
+      b -> (rel(b), meta(b).copy(bytes = Some(bytes(b))))
     }.toMap
     f.delete(stage, true)
     moved
@@ -715,8 +692,9 @@ class SnapshotBucketedStore(
   /** Per-dir data-file byte totals for the manifest (X258): carry
     * every already-recorded figure forward (generation dirs are
     * immutable — a recorded size can never go stale), list ONLY the
-    * dirs still missing one (the dirs this very commit just wrote,
-    * plus a one-time backfill of legacy dirs). This is what keeps
+    * dirs still missing one (the single-dir writes of this commit —
+    * bucket writes record theirs from the stage listing — plus a
+    * one-time backfill of legacy dirs). This is what keeps
     * plan-time scan sizing a pure manifest fold instead of O(live
     * dirs) namenode listings per query plan. A dir that fails to
     * list records nothing — its estimate degrades to the listing
@@ -732,18 +710,25 @@ class SnapshotBucketedStore(
   private def listedBytes(name: String, d: String): Option[Long] =
     try {
       val p = new Path(resolveDir(name, d))
-      Some(fs(p).listStatus(p).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith(".") && !n.startsWith("_")
-      }.map(_.getLen).sum)
+      Some(fs(p).listStatus(p).filter(st => st.isFile && isDataFile(st.getPath.getName))
+        .map(_.getLen).sum)
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Data files, not the writer's hidden/marker files. */
+  private def isDataFile(n: String): Boolean = !n.startsWith(".") && !n.startsWith("_")
 
   /** The commit point — every commit family's one write path: publish
     * `next` (version `base + 1`) over `base`, the latest manifest the
     * family read (None for a new table), with `written`, the observed
-    * records of the dirs the family wrote, merged in. It reads nothing:
-    * the base carries the byte records and the dropped-column marker
-    * forward. Stage the manifest text fully, then publish it with a
+    * records of the dirs the family wrote, merged in. It reads nothing
+    * but a legacy base's footers: the base carries the byte records
+    * and the dropped-column marker forward, and the recorded schema is
+    * the fold, through [[SnapshotBucketedStore.widen]], of `next`'s own
+    * schema (else the base's, when any base dir stays live) and
+    * `wrote`, the schemas of the frames the family handed its writers —
+    * so a non-promotable write refuses here, before the publish, and
+    * the table keeps serving its last snapshot. Stage the manifest
+    * text fully, then publish it with a
     * true compare-and-set on the versioned name. A manifest for this
     * version already on disk means another writer won since the base
     * was read — refuse loudly ([[ConcurrentCommitException]]), never
@@ -759,9 +744,14 @@ class SnapshotBucketedStore(
     * written because it aliases the completed staged file — both the
     * CAS and the all-or-nothing visibility survive. */
   private def commit(name: String, base: Option[Manifest], next: Manifest,
-      written: Map[String, DirMeta] = Map.empty): Unit = {
+      written: Map[String, DirMeta] = Map.empty, wrote: Seq[StructType] = Nil): Unit = {
     require(next.version == nextVersion(base),
       s"$name: commit of v${next.version} over base v${base.fold(-1)(_.version)}")
+    val live = (next.buckets.values ++ next.logs).toSet
+    val start = next.schema.orElse(base.filter(b => (b.buckets.values ++ b.logs).exists(live))
+      .flatMap(schemaOf(name, _)))
+    val schema = (start.toSeq ++ wrote.map(w => org.apache.spark.sql.GraftBridge.asNullable(
+      StructType(w.filterNot(_.name == BucketCol))))).reduceOption(SnapshotBucketedStore.widen)
     // the family's base serves both carry-forwards: per-dir byte
     // records (X258, dir-keyed and immutable) and the dropped-column
     // marker (X259, explicit `Some` wins — drop/restore/replace/
@@ -771,7 +761,7 @@ class SnapshotBucketedStore(
     // masquerade as current-format
     val m = bytesFilled(name, next.withRecords(written), base).copy(
       statsVersion = math.min(next.statsVersion, SnapshotBucketedStore.CurrentStatsVersion),
-      dropped = next.dropped.orElse(base.flatMap(_.dropped)))
+      dropped = next.dropped.orElse(base.flatMap(_.dropped)), schema = schema)
     val dir = tableDir(name)
     val f = fs(dir)
     // writer-unique staging name: two writers racing to the same
@@ -1065,7 +1055,7 @@ class SnapshotBucketedStore(
         if (all.isEmpty) None
         else {
           // every dir provably disjoint: zero rows, schema preserved
-          val df = if (kept.isEmpty) readDataDirs(name, m, all).limit(0)
+          val df = if (kept.isEmpty) emptyOf(schemaOf(name, m).get)
             else readDataDirs(name, m, kept)
           Some(p match {
             case Prune.Ranges(preds) => df.filter(preds.map { case (c, lo, hi) =>
@@ -1099,8 +1089,8 @@ class SnapshotBucketedStore(
   private def keptDirs(name: String, m: Manifest, all: Seq[String], p: Prune): Seq[String] = {
     def bloomKept(column: String, values: Seq[Any]): Seq[String] =
       if (values.isEmpty) Nil
-      else columnTypeOf(name, m, column).flatMap { dt =>
-        val per = values.map(typedKeyHashes(_, dt))
+      else schemaOf(name, m).flatMap(_.find(_.name == column)).flatMap { f =>
+        val per = values.map(typedKeyHashes(_, f.dataType))
         if (per.forall(_.isDefined)) Some(per.flatten.flatten) else None
       } match {
         case Some(hs) => all.filter(d => dirBloom(m.meta(d).keys, column)
@@ -1215,16 +1205,6 @@ class SnapshotBucketedStore(
       (h +: siblings.flatMap(typedKeyHash(value, _))).distinct)
   }
 
-  /** The read-schema type of `column` for the snapshot `m` describes
-    * (merged across generations — widening upserts make per-dir
-    * schemas differ). None when the table/column is unreadable; the
-    * caller degrades to no pruning and lets the residual filter
-    * raise whatever the plain read would. */
-  private def columnTypeOf(name: String, m: Manifest,
-      column: String): Option[org.apache.spark.sql.types.DataType] =
-    (try readManifest(name, m) catch { case scala.util.control.NonFatal(_) => None })
-      .flatMap(df => df.schema.fields.find(_.name == column).map(_.dataType))
-
   /** The recorded key Bloom of one dir, deserialized ONCE — callers
     * probing many hashes against many dirs must not pay a multi-KB
     * base64 decode + deserialization per (hash, dir) pair. None
@@ -1254,96 +1234,70 @@ class SnapshotBucketedStore(
   override def read(name: String): Option[DataFrame] =
     latestManifest(name).flatMap(readManifest(name, _))
 
-  /** Read generation dirs of snapshot `m` with OUTSTANDING KEY
-    * TOMBSTONES applied (merge-on-read deletes, X234 — the
-    * deletion-vector discipline Delta/Iceberg grew for exactly the
+  override def schema(name: String): Option[StructType] = schema(name, None)
+
+  /** The table's schema at the latest snapshot, or at `version` — the
+    * recorded one, read from the manifest alone. None when the table
+    * (or the pinned version) does not exist, or a snapshot written
+    * before the schema was recorded has no live dir. */
+  def schema(name: String, version: Option[Int]): Option[StructType] =
+    manifestOf(name, version).flatMap(schemaOf(name, _))
+
+  /** Snapshot `m`'s schema: the recorded one, else — a manifest written
+    * before the schema was recorded — the fold of its live dirs'
+    * footer schemas through [[SnapshotBucketedStore.widen]], minus the
+    * dropped names. The fold is the store's only footer read that
+    * learns a table schema; the first commit over such a manifest
+    * records its result. */
+  private def schemaOf(name: String, m: Manifest): Option[StructType] =
+    m.schema.orElse {
+      val dirs = m.buckets.toSeq.sortBy(_._1).map(_._2) ++ m.logs
+      dirs.map(d => readOwn(resolveDir(name, d)).schema).reduceOption(SnapshotBucketedStore.widen)
+        .map(s => StructType(s.filterNot(f => m.droppedNames.contains(f.name))))
+    }
+
+  /** Read generation dirs of snapshot `m` through its schema, with
+    * OUTSTANDING KEY TOMBSTONES applied (merge-on-read deletes, X234 —
+    * the deletion-vector discipline Delta/Iceberg grew for exactly the
     * single-key-delete-on-a-100 TB-table case): dirs without
-    * tombstones read in ONE multi-dir scan exactly as before (zero
-    * cost on the common path); each tombstoned dir anti-joins its
-    * OWN sidecar key set (broadcast — tombstones are delete batches,
-    * driver-small by the [[deleteLazy]] contract). Per-dir — never a
-    * union across dirs — because a key deleted from generation A and
-    * later re-upserted lands in a NEW dir carrying no tombstone; a
-    * union anti-join would kill the resurrected row. A dir whose
-    * footer schema LACKS a sidecar's key column skips that anti-join
-    * — exact, because an absent column reads as NULL and an
-    * equality/IN predicate never matches NULL — so a conservative
-    * all-bucket SQL DELETE cannot strand generations that predate a
-    * later-added column. Tombstones COMPOSE with numeric
-    * type-widening: when the plain assembly hits a cross-generation
-    * type conflict, every dir folds through [[widenedFrames]]'s
-    * promotion lattice and each tombstoned dir anti-joins its own
-    * sidecars on the WIDENED frame (the cast commutes with key
-    * equality — sidecar keys coerce in the join), so a widening
-    * upsert over a tombstoned table reads instead of refusing
-    * (docs/SCALE.md §8 item 14). */
-  /** Dir read + tombstone anti-joins + dropped-column suppression —
-    * every batch read path flows through here, so DROP COLUMN (X259)
-    * is one name-drop at the end: generations that still physically
-    * carry a dropped column serve without it, and any REWRITE that
+    * tombstones read in ONE multi-dir scan (zero cost on the common
+    * path); each tombstoned dir anti-joins its OWN sidecar key set
+    * (broadcast — tombstones are delete batches, driver-small by the
+    * [[deleteLazy]] contract). Per-dir — never a union across dirs —
+    * because a key deleted from generation A and later re-upserted
+    * lands in a NEW dir carrying no tombstone; a union anti-join would
+    * kill the resurrected row. A dir that predates a sidecar's key
+    * column reads it as NULL, which never equals a tombstone key, so a
+    * conservative all-bucket SQL DELETE cannot strand older
+    * generations; a key column dropped since the delete still masks
+    * its rows. Every batch read path flows through here, so the
+    * schema is the whole of DROP COLUMN (X259) and of type widening
+    * (X212) at read: a dropped name is not in it, and any REWRITE that
     * reads through here (upsert merge, applyDeletes, compactLogs,
-    * clustered rewrites) sheds the column physically for free. */
-  private def readDataDirs(name: String, m: Manifest, rels: Seq[String]): DataFrame =
-    dropSuppressed(m, readDataDirsRaw(name, m, rels))
-
-  /** The X259 name suppression: serve a frame without the manifest's
-    * dropped columns. Applied by [[readDataDirs]] (every batch read)
-    * AND by the read paths that go to raw dirs directly — CDC
-    * capture ([[appendsSince]]) and the [[compactLogs]] fold — so no
-    * consumer ever sees a retired name, and every rewrite sheds the
-    * bytes. */
-  private def dropSuppressed(m: Manifest, df: DataFrame): DataFrame = {
-    val gone = m.droppedNames.filter(df.columns.contains)
-    if (gone.isEmpty) df else df.drop(gone: _*)
-  }
-
-  private def readDataDirsRaw(name: String, m: Manifest, rels: Seq[String]): DataFrame = {
-    val tombed = rels.filter(m.liveTombs.contains)
-    if (tombed.isEmpty) return readDirs(dirsOf(name, m, rels))
-    val clean = rels.filterNot(m.liveTombs.contains)
+    * clustered rewrites) sheds the column physically and writes the
+    * widened types. */
+  private def readDataDirs(name: String, m: Manifest, rels: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val schema = schemaOf(name, m).get
+    val (tombed, clean) = rels.partition(m.liveTombs.contains)
     // sidecars group by their key column: one anti-join per column
     // (SQL DELETEs may target different columns), each over the union
     // of that column's sidecar dirs
-    def antiJoined(d: String, df: DataFrame, raw: StructType): DataFrame =
-      m.liveTombs(d).groupBy(_._1).toSeq.sortBy(_._1).foldLeft(df) {
-        case (acc, (k, ts)) =>
-          if (!raw.fieldNames.contains(k)) acc // predates column: exact skip
-          else {
-            val doomed = readDirs(dirsOf(name, m, ts.map(_._2)))
-              .select(k).distinct()
-            acc.join(org.apache.spark.sql.functions.broadcast(doomed),
-              Seq(k), "left_anti")
-          }
+    def masked(d: String): DataFrame = {
+      val doomed = m.liveTombs(d).groupBy(_._1).toSeq.sortBy(_._1).map { case (k, ts) =>
+        k -> ts.map(t => readOwn(resolveDir(name, t._2)).select(k)).reduce(_ union _).distinct()
       }
-    def plain(): DataFrame = {
-      val parts =
-        (if (clean.nonEmpty) Seq(readDirs(dirsOf(name, m, clean))) else Nil) ++
-          tombed.map { d =>
-            val df = readDirs(dirsOf(name, m, Seq(d)))
-            antiJoined(d, df, df.schema)
-          }
-      parts.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+      val hidden = doomed.map(_._2.schema.head).filterNot(f => schema.fieldNames.contains(f.name))
+      doomed.foldLeft(readDirs(dirsOf(name, m, Seq(d)), StructType(schema.fields ++ hidden))) {
+        case (acc, (k, keys)) => acc.join(broadcast(keys), Seq(k), "left_anti")
+      }.select(schema.fieldNames.toIndexedSeq.map(col): _*)
     }
-    try plain()
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        val byRel = rels.map(r => r -> resolveDir(name, r))
-        val widened = widenedFrames(byRel.map(_._2), e)
-          .zip(byRel).map { case ((_, raw, df), (rel, _)) => rel -> (raw, df) }
-          .toMap
-        val parts = clean.map(r => widened(r)._2) ++ tombed.map { d =>
-          val (raw, df) = widened(d)
-          antiJoined(d, df, raw)
-        }
-        parts.reduce(_ unionByName _)
-    }
+    ((if (clean.nonEmpty) Seq(readDirs(dirsOf(name, m, clean), schema)) else Nil) ++
+      tombed.map(masked)).reduce(_ union _)
   }
 
   private def readManifest(name: String, m: Manifest): Option[DataFrame] = {
     val all = (m.buckets.values ++ m.logs).toSeq
-    // generations may differ in schema after a widening upsert —
-    // mergeSchema unions the footers (old-generation rows read null
-    // in later-added columns)
     if (all.isEmpty) None
     else Some(readDataDirs(name, m, all))
   }
@@ -1468,11 +1422,11 @@ class SnapshotBucketedStore(
     // OUTSTANDING tombstones included — dropping them would silently
     // resurrect merge-on-read deletes
     commit(name, Some(cur), target.copy(version = cur.version + 1, lastBatch = cur.lastBatch,
-      // the restored version's dropped-column marker restores WITH it
-      // (explicit, even when empty): rolling back past a DROP COLUMN
-      // resurrects the column — the marker is snapshot state like
-      // everything else here
-      dropped = target.dropped.orElse(Some(Nil))))
+      // the restored version's dropped-column marker and schema restore
+      // WITH it (explicit, even when empty): rolling back past a DROP
+      // or ADD COLUMN resurrects or retires the column — both are
+      // snapshot state like everything else here
+      dropped = target.dropped.orElse(Some(Nil)), schema = schemaOf(name, target)))
   }
 
   /** ZERO-COPY table clone (X221 — Delta's SHALLOW CLONE / Iceberg's
@@ -1529,10 +1483,11 @@ class SnapshotBucketedStore(
       // the owner, and vacuum's borrow scan protects both
       dirs = m.liveDirs.map { case (d, x) =>
         ref(d) -> x.copy(tombs = x.tombs.map { case (k, rel) => (k, ref(rel)) }) },
-      // the clone shows the source's LOGICAL schema: its dropped-
-      // column marker copies over (the borrowed dirs still carry the
-      // bytes; the name suppression is what makes them one table)
-      dropped = m.dropped.orElse(Some(Nil))))
+      // the clone shows the source's LOGICAL schema: its schema and
+      // dropped-column marker copy over (the borrowed dirs still carry
+      // a dropped column's bytes; the schema is what makes them one
+      // table)
+      dropped = m.dropped.orElse(Some(Nil)), schema = schemaOf(src, m)))
   }
 
   /** Keyed diff of two retained snapshots (`added`/`removed`/
@@ -1588,15 +1543,10 @@ class SnapshotBucketedStore(
         case (None, None) =>
           // nothing touched on either side: an empty diff in the
           // canonical (key, change, changed_cols) shape
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              readManifest(name, m2).orElse(readManifest(name, m1))
-                .map(_.schema.fields.filter(_.name == key)).getOrElse(Array.empty).toSeq ++
-                Seq(org.apache.spark.sql.types.StructField("change",
-                    org.apache.spark.sql.types.StringType),
-                  org.apache.spark.sql.types.StructField("changed_cols",
-                    org.apache.spark.sql.types.StringType))))
+          emptyOf(StructType(
+            schemaOf(name, m2).orElse(schemaOf(name, m1))
+              .map(_.fields.filter(_.name == key)).getOrElse(Array.empty).toSeq ++
+              Seq(StructField("change", StringType), StructField("changed_cols", StringType))))
         case (o, n) =>
           val base = o.orElse(n).get
           val old = o.getOrElse(base.limit(0))
@@ -1653,18 +1603,16 @@ class SnapshotBucketedStore(
       val newRels = touched.flatMap(m2.buckets.get(_))
       val neu = if (newRels.isEmpty) None
         else Some(readDataDirs(name, m2, newRels))
-      // payload schema donor for the all-removed edge (no new-side
-      // dirs in any touched bucket): the table's own schema at either
-      // end — planning-time footer reads only, never a data scan
-      val donor = neu
-        .orElse(readManifest(name, m2)).orElse(readManifest(name, m1))
+      // the all-removed edge (no new-side dirs in any touched bucket)
+      // joins an empty payload in the table's own schema at either end
+      val payload = neu.orElse(schemaOf(name, m2).orElse(schemaOf(name, m1)).map(emptyOf))
       val lab = labels.select(col(key), col("change"))
-      donor match {
+      payload match {
         case None => lab // both versions empty ⇒ labels is empty too
-        case Some(d) =>
+        case Some(p) =>
           // reserved-name guard already ran inside diffVersions: the
           // payload cannot carry change/changed_cols columns
-          lab.join(neu.getOrElse(d.limit(0)), Seq(key), "left")
+          lab.join(p, Seq(key), "left")
       }
     }
   }
@@ -1734,7 +1682,7 @@ class SnapshotBucketedStore(
       // narrow scan); only a provably null-free dir may drop
       val nullsByDir: Map[String, Long] =
         if (contained.isEmpty) Map.empty
-        else readDirs(dirsOf(name, m, contained.map(_._2)))
+        else readDirs(dirsOf(name, m, contained.map(_._2)), schemaOf(name, m).get)
           .select(col(column).as("graft_c_"),
             regexp_extract(input_file_name(), "(data/[^/]+)/[^/]+$", 1)
               .as("graft_d_"))
@@ -1806,13 +1754,12 @@ class SnapshotBucketedStore(
           s"v${m2.version} (${rewritten.mkString(",")} superseded); " +
           "dir-level capture is only sound across compaction-free ranges")
       val fresh = m2.logs.filterNot(m1.logs.contains)
-      // suppression rides the CAPTURE-END snapshot's marker: a dir
-      // appended before a drop must not leak the retired column into
-      // the change feed (consumers see the table's current schema)
-      if (fresh.isEmpty)
-        readManifest(name, m2).map(_.limit(0)).getOrElse(
-          dropSuppressed(m2, readDirs(dirsOf(name, m1, m1.logs)).limit(0)))
-      else dropSuppressed(m2, readDirs(dirsOf(name, m2, fresh)))
+      // the capture reads through the CAPTURE-END snapshot's schema: a
+      // dir appended before a drop must not leak the retired column
+      // into the change feed (consumers see the table's current schema)
+      val schema = schemaOf(name, m2).orElse(schemaOf(name, m1)).getOrElse(
+        throw new java.util.NoSuchElementException(s"graft table '$name' has no schema"))
+      if (fresh.isEmpty) emptyOf(schema) else readDirs(dirsOf(name, m2, fresh), schema)
     }
 
   /** The generation format this store reads/writes — the SQL
@@ -1866,10 +1813,8 @@ class SnapshotBucketedStore(
         throw new java.util.NoSuchElementException(
           s"graft table '$name' lost generation dir '$d' needed by the " +
             "stream (vacuum retention must cover the trigger interval)")
-      f.listStatus(p).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith(".") && !n.startsWith("_")
-      }.map(_.getPath.toString)
+      f.listStatus(p).toSeq.filter(st => st.isFile && isDataFile(st.getPath.getName))
+        .map(_.getPath.toString)
     }
 
   /** The streaming/refresh high-water mark: the highest batch id an
@@ -1897,7 +1842,7 @@ class SnapshotBucketedStore(
     val dm = writeDir(df, new Path(tableDir(name), rel).toString)
     commit(name, prev, Manifest(v, Map.empty, Seq(rel), Some(batchId),
       fanout = prev.flatMap(_.fanout),
-      dropped = Some(Nil)), Map(rel -> dm)) // full rewrite = the new schema truth
+      dropped = Some(Nil)), Map(rel -> dm), Seq(df.schema)) // full rewrite = the new schema truth
   }
 
   /** K2 append as a committed log generation: new dir + new manifest.
@@ -1927,7 +1872,7 @@ class SnapshotBucketedStore(
     val dm = writeDir(df, new Path(tableDir(name), rel).toString)
     val base = prev.getOrElse(Manifest(v, Map.empty, Nil))
     commit(name, prev, base.copy(version = v, logs = base.logs :+ rel,
-      lastBatch = batchId.orElse(base.lastBatch)), Map(rel -> dm))
+      lastBatch = batchId.orElse(base.lastBatch)), Map(rel -> dm), Seq(df.schema))
   }
 
   /** Log-structured compaction for append-mode tables: fold the
@@ -1962,17 +1907,16 @@ class SnapshotBucketedStore(
       if (base.logs.size <= 1) return true
       val v = base.version + 1
       val rel = s"data/log-$v"
-      // the fold reads SUPPRESSED (X259): the transform sees the
-      // logical schema, and the compacted generation physically sheds
-      // any dropped column the old log dirs still carried
-      val merged = transform(dropSuppressed(base,
-        readDirs(dirsOf(name, base, base.logs))))
+      // the fold reads through the schema (X259): the transform sees
+      // the logical schema, and the compacted generation physically
+      // sheds any dropped column the old log dirs still carried
+      val merged = transform(readDataDirs(name, base, base.logs))
       val dm = writeDir(merged, new Path(tableDir(name), rel).toString)
       // CAS: commit only if nothing advanced the table while we wrote
       if (latestManifest(name).exists(_.version == base.version)) {
         try {
           commit(name, Some(base), Manifest(v, Map.empty, Seq(rel), base.lastBatch,
-            fanout = base.fanout), Map(rel -> dm))
+            fanout = base.fanout), Map(rel -> dm), Seq(merged.schema))
           return true
         } catch { case _: ConcurrentCommitException => () } // lost the race
       }
@@ -1995,7 +1939,7 @@ class SnapshotBucketedStore(
     val dm = writeDir(df, new Path(tableDir(name), rel).toString)
     commit(name, prev, Manifest(v, Map.empty, Seq(rel), prev.flatMap(_.lastBatch),
       fanout = prev.flatMap(_.fanout),
-      dropped = Some(Nil)), Map(rel -> dm)) // full rewrite = the new schema truth
+      dropped = Some(Nil)), Map(rel -> dm), Seq(df.schema)) // full rewrite = the new schema truth
   }
 
   override def upsert(name: String, incoming: DataFrame, key: String)(implicit s: SparkSession): Unit =
@@ -2029,28 +1973,19 @@ class SnapshotBucketedStore(
     // splits, missed replacements, wrong delete targeting). Value
     // columns widen freely (the read path reconciles); the bucket
     // column must migrate through one atomic [[rebuild]] at the new
-    // type. One footer-schema probe per upsert; an unreadable dir
-    // defers to the loud failure the data read will raise anyway.
-    prev.foreach { m =>
-      val bucketBy = clusterColumn
-        .filter(incoming.columns.contains).getOrElse(key)
-      m.buckets.values.headOption.foreach { d =>
-        val stored =
-          try Some(spark.read.format(fmt)
-            .load(resolveDir(name, d)).schema)
-          catch { case scala.util.control.NonFatal(_) => None }
-        for {
-          sch <- stored
-          f <- sch.fields.find(_.name == bucketBy)
-          in <- incoming.schema.fields.find(_.name == bucketBy)
-        } require(f.dataType == in.dataType,
-          s"$name: bucket column '$bucketBy' type drift " +
-            s"(stored ${f.dataType.simpleString}, incoming " +
-            s"${in.dataType.simpleString}): bucket/Bloom hashes are " +
-            "type-tagged — migrate the bucket column through one " +
-            "atomic rebuild() at the new type instead")
-      }
-    }
+    // type. The recorded schema answers; a table with no bucket dir
+    // has no hashes to split.
+    val bucketBy = clusterColumn.filter(incoming.columns.contains).getOrElse(key)
+    for {
+      m <- prev if m.buckets.nonEmpty
+      f <- schemaOf(name, m).flatMap(_.find(_.name == bucketBy))
+      in <- incoming.schema.find(_.name == bucketBy)
+    } require(f.dataType == in.dataType,
+      s"$name: bucket column '$bucketBy' type drift " +
+        s"(stored ${f.dataType.simpleString}, incoming " +
+        s"${in.dataType.simpleString}): bucket/Bloom hashes are " +
+        "type-tagged — migrate the bucket column through one " +
+        "atomic rebuild() at the new type instead")
     val v = nextVersion(prev)
     // the RECORDED fan-out wins over this store's configured default —
     // a mismatched modulus would hash keys into the wrong dirs
@@ -2065,17 +2000,16 @@ class SnapshotBucketedStore(
     val existingRels = prev.toSeq.flatMap(m =>
       touched.flatMap(b => m.buckets.get(b)))
     val existing =
-      if (existingRels.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], incoming.schema)
+      if (existingRels.isEmpty) emptyOf(incoming.schema)
       else readDataDirs(name, prev.get, existingRels)
-    val newBuckets = writeBuckets(name, v,
-      merged(prev, existing, incoming, key, fan, touched), touched, b => s"data/b$b-g$v")
+    val laid = merged(prev, existing, incoming, key, fan, touched)
+    val newBuckets = writeBuckets(name, v, laid, touched, b => s"data/b$b-g$v")
     // untouched buckets keep their metadata and tombstones
     val base = prev.getOrElse(Manifest(v, Map.empty, Nil))
     commit(name, prev, base.copy(version = v,
       buckets = base.buckets ++ newBuckets.map { case (b, (rel, _)) => b -> rel },
       lastBatch = batchId.orElse(base.lastBatch), fanout = Some(fan)),
-      newBuckets.values.toMap)
+      newBuckets.values.toMap, Seq(laid.schema))
   }
 
   /** Keep-last merge of `incoming` over `existing`, bucketed, laid
@@ -2135,7 +2069,7 @@ class SnapshotBucketedStore(
       // just rehashed under this store's configured modulus
       fanout = Some(numBuckets),
       dropped = Some(Nil)), // full rewrite = the new schema truth
-      newBuckets.values.toMap)
+      newBuckets.values.toMap, Seq(df.schema))
   }
 
   /** Z-ORDER CLUSTERING REWRITE (X253 — the store surface for
@@ -2213,7 +2147,7 @@ class SnapshotBucketedStore(
     val written = writeBuckets(name, v, clustered, (0 until slabs).map(_.toLong),
       i => s"data/z$i-g$v").toSeq.sortBy(_._1).map(_._2)
     commit(name, Some(prev), Manifest(v, Map.empty, written.map(_._1), prev.lastBatch,
-      statsVersion = prev.statsVersion, fanout = prev.fanout), written.toMap)
+      statsVersion = prev.statsVersion, fanout = prev.fanout), written.toMap, Seq(df.schema))
     written.size
   }
 
@@ -2237,10 +2171,9 @@ class SnapshotBucketedStore(
     val v = prev.get.version + 1
     val (keyFrame, touchedDirs) = deleteTargeting(name, prev.get, keyCol, keys)
     if (touchedDirs.isEmpty) return
-    // mergeSchema like read/upsert: after a widening upsert the touched
-    // buckets span generations with different schemas — a single-footer
-    // inference could pick an OLD generation and rewrite the bucket
-    // without the later-added columns, destroying them in the snapshot.
+    // Read through the table's schema like read/upsert: after a
+    // widening upsert the touched buckets span generations with
+    // different footers, and the rewrite must keep every column.
     // Tombstone-aware: the rewrite also applies outstanding
     // merge-on-read sidecars (physical erasure rides along).
     val existing = readDataDirs(name, prev.get, touchedDirs.map(_._2))
@@ -2293,38 +2226,33 @@ class SnapshotBucketedStore(
     val v = prev.version + 1
     val existingRels = touched.flatMap(b => prev.buckets.get(b)).toSeq
     val existing =
-      if (existingRels.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], upserts.schema)
+      if (existingRels.isEmpty) emptyOf(upserts.schema)
       else readDataDirs(name, prev, existingRels)
     val kept = existing.join(delKeys, Seq(key), "left_anti")
     // the merge may empty a bucket: it then drops out
-    val newBuckets = writeBuckets(name, v,
-      merged(Some(prev), kept, upserts, key, fan, touched), touched, b => s"data/b$b-g$v")
+    val laid = merged(Some(prev), kept, upserts, key, fan, touched)
+    val newBuckets = writeBuckets(name, v, laid, touched, b => s"data/b$b-g$v")
     // rewritten dirs' tombstones drop via liveTombs
     commit(name, Some(prev), prev.copy(version = v,
       buckets = prev.buckets -- touched ++ newBuckets.map { case (b, (rel, _)) => b -> rel },
-      fanout = Some(fan)), newBuckets.values.toMap)
+      fanout = Some(fan)), newBuckets.values.toMap, Seq(laid.schema))
   }
 
-  /** ALTER TABLE ADD COLUMNS, metadata-only (X247): commit a ZERO-ROW
-    * "schema generation" — a footer-only dir carrying the EXTENDED
-    * schema — under the reserved bucket id -1 (pmod never produces
-    * it, so no keyed write ever touches or rewrites it). Reads merge
-    * it like any generation: existing rows show the new columns as
-    * null, exactly the add-column semantics a widening upsert already
-    * has — this is the DDL spelling for declaring the column BEFORE
-    * any data carries it. O(one footer write + one manifest rename)
-    * at any table size. Works on bucketed and log tables alike;
-    * [[replace]]/[[rebuild]] supersede it wholesale (a full rewrite
-    * is the new schema truth). New columns are nullable by
-    * construction — existing rows have no value for them. */
+  /** ALTER TABLE ADD COLUMNS, metadata-only (X247): ONE manifest
+    * rename records the extended schema; no data byte moves. Existing
+    * rows read the new columns as null — exactly the add-column
+    * semantics a widening upsert already has — so this is the DDL
+    * spelling for declaring a column BEFORE any data carries it.
+    * O(manifest) at any table size, on bucketed and log tables alike;
+    * [[replace]]/[[rebuild]] supersede it (a full rewrite is the new
+    * schema truth). New columns are nullable by construction —
+    * existing rows have no value for them. */
   def addColumns(name: String,
       cols: Seq[org.apache.spark.sql.types.StructField]): Unit = {
     val prev = latestManifest(name).getOrElse(
       throw new java.util.NoSuchElementException(s"no such table: $name"))
-    val cur = readManifest(name, prev).getOrElse(
-      throw new java.util.NoSuchElementException(s"no such table: $name")).schema
+    val cur = schemaOf(name, prev).getOrElse(
+      throw new java.util.NoSuchElementException(s"no such table: $name"))
     val dup = cols.map(_.name).filter(cur.fieldNames.contains)
     require(dup.isEmpty,
       s"$name already has column(s): ${dup.mkString(", ")}")
@@ -2336,29 +2264,16 @@ class SnapshotBucketedStore(
       s"$name: column name(s) ${retired.mkString(", ")} were dropped and " +
         "are retired — rebuild()/replace() the table to reuse them")
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
-    val extended = StructType(cur.fields ++ cols.map(_.copy(nullable = true)))
-    val v = prev.version + 1
-    val rel = s"data/schema-g$v"
-    // the observed zero-row count is what lets delete targeting skip
-    // this dir and keeps metadata counts exact
-    val dm = writeDir(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], extended)
-      .repartition(1), new Path(tableDir(name), rel).toString)
-    commit(name, Some(prev), prev.copy(version = v,
-      buckets = prev.buckets + (SchemaBucket -> rel)), Map(rel -> dm))
+    commit(name, Some(prev), prev.copy(version = prev.version + 1,
+      schema = Some(StructType(cur.fields ++ cols.map(_.copy(nullable = true))))))
   }
 
-  /** The reserved bucket id of zero-row schema generations —
-    * `pmod(xxhash64(...), fan)` is non-negative, so no keyed write
-    * ever computes it: schema gens are never "touched", never
-    * rewritten, and carry across every keyed commit untouched. */
-  private val SchemaBucket = -1L
-
   /** ALTER TABLE DROP COLUMN, metadata-only (X259 — the inverse of
-    * [[addColumns]]): ONE manifest rename records the dropped names;
-    * no data byte moves. Reads suppress the columns by name over
-    * every generation that still physically carries them
-    * ([[readDataDirs]]); any content rewrite (upsert merge,
+    * [[addColumns]]): ONE manifest rename records the dropped names
+    * and the schema without them; no data byte moves. No read serves
+    * the columns from the generations that still physically carry
+    * them (the schema is what every read hands the reader,
+    * [[readDataDirs]]); any content rewrite (upsert merge,
     * [[applyDeletes]], [[compactLogs]], [[rebuild]]) sheds them
     * physically as a side effect, and [[vacuum]] then reclaims the
     * superseded bytes — the same lazy-then-compact lifecycle as
@@ -2388,8 +2303,8 @@ class SnapshotBucketedStore(
       s"droppable column names are [A-Za-z0-9_]+ (manifest line syntax): $c"))
     val prev = latestManifest(name).getOrElse(
       throw new java.util.NoSuchElementException(s"no such table: $name"))
-    val cur = readManifest(name, prev).getOrElse(
-      throw new java.util.NoSuchElementException(s"no such table: $name")).schema
+    val cur = schemaOf(name, prev).getOrElse(
+      throw new java.util.NoSuchElementException(s"no such table: $name"))
     val missing = cols.filterNot(cur.fieldNames.contains)
     require(missing.isEmpty,
       s"$name has no column(s): ${missing.mkString(", ")}")
@@ -2399,13 +2314,14 @@ class SnapshotBucketedStore(
       s"$name: '$cc' is the cluster column — physical bucket layout " +
         "hangs off it; rebuild() under a new shape instead"))
     commit(name, Some(prev), prev.copy(version = prev.version + 1,
-      dropped = Some((prev.droppedNames ++ cols).distinct)))
+      dropped = Some((prev.droppedNames ++ cols).distinct),
+      schema = Some(StructType(cur.filterNot(f => cols.contains(f.name))))))
   }
 
   /** The ingest-side half of the X259 retirement rule: a frame
     * carrying a dropped column's name must refuse loudly — committing
-    * it would write live data under a name the read path suppresses
-    * (silent data loss), or worse, resurrect hidden values. */
+    * it would write live data under a name the recorded schema leaves
+    * out (silent data loss), or worse, resurrect hidden values. */
   private def refuseDroppedWrite(name: String, prev: Option[Manifest],
       df: DataFrame): Unit =
     prev.map(_.droppedNames).filter(_.nonEmpty).foreach { gone =>
@@ -2443,7 +2359,7 @@ class SnapshotBucketedStore(
       keys: DataFrame, targetByKeyHash: Boolean = true): (DataFrame, Seq[(Long, String)]) = {
     import org.apache.spark.sql.functions.col
     val rawFrame = keys.select(col(keys.columns.head).as(keyCol)).distinct()
-    val tableDt = columnTypeOf(name, m, keyCol)
+    val tableDt = schemaOf(name, m).flatMap(_.find(_.name == keyCol)).map(_.dataType)
     def withOrigType(dt: org.apache.spark.sql.types.DataType) = rawFrame
       .select(col(keyCol).cast(tableDt.get).as(keyCol),
         col(keyCol).as("graft_orig_"))
@@ -2472,8 +2388,8 @@ class SnapshotBucketedStore(
       } else m.buckets.toSeq.sortBy(_._1))
         // a dir RECORDED as zero rows provably holds no doomed key —
         // skipping is exact, and keeps the conservative all-bucket path
-        // from rewriting (and thereby dropping) zero-row schema
-        // generations (addColumns) and empty batch-mark epochs
+        // from rewriting (and thereby dropping) empty batch-mark epochs
+        // and the zero-row schema generations older ADD COLUMNS wrote
         .filterNot { case (_, d) => m.meta(d).rows.contains(0L) }
     val touchedDirs =
       if (!typeSafe || !keyColumns.contains(keyCol)) bucketDirs
@@ -2529,16 +2445,15 @@ class SnapshotBucketedStore(
     // a keyed table's every generation was written BY a keyed upsert,
     // so the upsert-key column is always present. A dir the manifest
     // already stats/Blooms on this column provably has it (no probe);
-    // an unreadable footer conservatively attaches (the read-side skip
-    // in [[readDataDirs]] stays the correctness net either way).
+    // an unreadable footer conservatively attaches ([[readDataDirs]]
+    // reading an absent column as NULL stays the correctness net).
     val touchedDirs =
       if (targetByKeyHash && keyColumns.contains(keyCol)) targeted
       else targeted.filter { case (_, d) =>
         m.meta(d).stats.exists(_._1 == keyCol) ||
           m.meta(d).keys.exists(_._1 == keyCol) ||
           m.meta(d).ndv.exists(_._1 == keyCol) ||
-          (try spark.read.format(fmt).load(resolveDir(name, d))
-            .schema.fieldNames.contains(keyCol)
+          (try readOwn(resolveDir(name, d)).schema.fieldNames.contains(keyCol)
           catch { case scala.util.control.NonFatal(_) => true })
       }
     if (touchedDirs.isEmpty) return
@@ -2632,7 +2547,7 @@ class SnapshotBucketedStore(
     // backfills them (commit's bytesFilled lists each exactly once)
     val bytesMissing = live.exists(m.meta(_).bytes.isEmpty)
     if (targets.isEmpty && !bytesMissing) return 0
-    val computed = targets.map(d => d -> metaOf(readDirs(Seq(resolveDir(name, d))))).toMap
+    val computed = targets.map(d => d -> metaOf(readOwn(resolveDir(name, d)))).toMap
     val v = m.version + 1
     // a full recompute upgrades the stats format; a partial one keeps
     // the sticky minimum (one legacy float-string survivor must keep
@@ -2757,7 +2672,7 @@ class SnapshotBucketedStore(
     * commits as an empty BUCKET generation — the table is keyed from
     * birth: upserts, MERGE and keyed deletes work before the first
     * row lands; keyless it commits an append-log generation. Either
-    * way the schema reads back from a footer-only file, atomically. */
+    * way the manifest records the declared schema, atomically. */
   def createTable(name: String, schema: StructType,
       keyed: Option[String] = None): Unit = {
     val empty = spark.createDataFrame(
@@ -2782,7 +2697,8 @@ class SnapshotBucketedStore(
         // table's declared shape, which truncation preserves.
         commit(name, prev, Manifest(v, Map(0L -> rel), Nil,
           prev.flatMap(_.lastBatch),
-          fanout = Some(prev.flatMap(_.fanout).getOrElse(numBuckets))), Map(rel -> dm))
+          fanout = Some(prev.flatMap(_.fanout).getOrElse(numBuckets))), Map(rel -> dm),
+          Seq(schema))
       case None => append(name, empty)
     }
   }

@@ -6224,14 +6224,14 @@ object LlmCatalog {
     }
 
   /** Numeric type-widening schema evolution at the store
-    * (SnapshotBucketedStore readDirsWidened, X212 — the Iceberg
-    * type-promotion matrix, metadata-only): generation 1 wrote the
-    * value column at INT, generation 2 widened it to LONG without
-    * rewriting untouched buckets; the read reconciles both through
-    * the promotion lattice (parquet's own mergeSchema refuses
-    * conflicting footers). The oracle recomputes the final state in
-    * plain SQL — the hash match proves old-generation values survive
-    * the widening bit-for-bit at the wide type. */
+    * (SnapshotBucketedStore.promote, X212 — the Iceberg type-promotion
+    * matrix, metadata-only): generation 1 wrote the value column at
+    * INT, generation 2 widened it to LONG without rewriting untouched
+    * buckets; the commit records the widened schema and the read hands
+    * it to the reader, which widens the INT generation. The oracle
+    * recomputes the final state in plain SQL — the hash match proves
+    * old-generation values survive the widening bit-for-bit at the
+    * wide type. */
   val schemaEvolutionQ = GraftQuery(
     "q167_schema_evolution",
     (s, d) =>

@@ -147,9 +147,9 @@ object CorpusIntake {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // stamp iff the table is fresh or already stamped — one
-        // schema probe (parquet footer metadata, no column data) per
-        // batch
-        val existingCols = store.read(table).map(_.columns.toSeq)
+        // schema lookup per batch (the snapshot store's is its
+        // manifest's recorded schema)
+        val existingCols = store.schema(table).map(_.fieldNames.toSeq)
         val tableStamped = existingCols.forall(_.contains(FpCol))
         val stamped = batch.withColumn(FpCol, TextOps.fingerprint(col(textCol)))
         // DIR-level prefilter (the tier ABOVE the map-side batch

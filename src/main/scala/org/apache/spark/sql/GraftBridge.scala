@@ -49,6 +49,10 @@ object GraftBridge {
   def confOf(box: AnyRef): org.apache.hadoop.conf.Configuration =
     box.asInstanceOf[org.apache.spark.util.SerializableConfiguration].value
 
+  /** `s` with every field, element and value nullable — the schema a
+    * file-source read reports (`asNullable` is `private[spark]`). */
+  def asNullable(s: StructType): StructType = s.asNullable
+
   /** Block until every listener event posted so far has been
     * delivered (the bus is `private[spark]`), so a listener's counts
     * are complete before it is removed. */

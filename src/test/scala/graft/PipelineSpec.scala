@@ -228,5 +228,5 @@ class PipelineSpec extends SparkSpec {
 
   /** Jobs of one warm 1k-row run (read, validate, lake write, append,
     * upsert, summary replace). A change that moves it must say why. */
-  private val PinnedWarmJobs = 16
+  private val PinnedWarmJobs = 14
 }

@@ -17,10 +17,13 @@ class CommitFamilySpec extends SparkSpec {
     r.map(i => (i.toLong, i * 3L, tag)).toDF("uuid", "v", "tag")
 
   /** One scripted step: the family, the table it commits to, whether
-    * its base manifest existed, the FS calls it made and the manifest
-    * it published (if any). */
+    * its base manifest existed, the FS calls it made, the manifest it
+    * published (if any), and after it the schema of a read of the table
+    * and the recorded one (JSON; None while the table has no rows to
+    * read). */
   private case class Step(family: String, table: String, existed: Boolean,
-      listings: Int, latestOpens: Int, calls: Int, manifest: Option[String])
+      listings: Int, latestOpens: Int, calls: Int, manifest: Option[String],
+      readSchema: Option[String], schema: Option[String])
 
   private def latestOnDisk(local: String, table: String): Option[Int] =
     Option(new java.io.File(local, table).list()).toSeq.flatten
@@ -66,7 +69,8 @@ class CommitFamilySpec extends SparkSpec {
         normalized(new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(local, table, s"manifest-$v.txt")), "UTF-8"))
       }
-      steps += Step(family, table, baseV.isDefined, listings, opens, calls, published)
+      steps += Step(family, table, baseV.isDefined, listings, opens, calls, published,
+        store.read(table).map(_.schema.json), store.schema(table).map(_.json))
     }
 
     // append-log table: every log family
@@ -109,19 +113,32 @@ class CommitFamilySpec extends SparkSpec {
         st.manifest.fold(" (no commit)")("\n" + _)
     }.mkString("", "\n", "\n")
 
-  test("every commit family publishes its golden manifest") {
-    val actual = rendered(script)
-    // the current rendering, for regenerating the golden by copy
-    val out = java.nio.file.Paths.get("target", "commit-goldens.actual.txt")
+  /** `actual` against the golden resource `graft/io/<file>`, section
+    * by section; the actual text lands in `target/` for regenerating
+    * the golden by copy. */
+  private def matchesGolden(file: String, actual: String): Unit = {
+    val out = java.nio.file.Paths.get("target", file.replace(".txt", ".actual.txt"))
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, actual.getBytes("UTF-8"))
-    val in = getClass.getResourceAsStream("/graft/io/commit-goldens.txt")
-    assert(in != null, "missing golden resource graft/io/commit-goldens.txt")
+    val in = getClass.getResourceAsStream(s"/graft/io/$file")
+    assert(in != null, s"missing golden resource graft/io/$file")
     val golden = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     def sections(t: String) = t.split("(?m)^(?=== )").toSeq
     sections(golden).zipAll(sections(actual), "", "").foreach { case (g, a) =>
-      assert(a == g, s"manifest differs from the golden (actual in $out)")
+      assert(a == g, s"$file: a section differs from the golden (actual in $out)")
     }
+  }
+
+  test("every commit family publishes its golden manifest") {
+    matchesGolden("commit-goldens.txt", rendered(script))
+  }
+
+  test("every commit family keeps the golden read schema") {
+    script.foreach(st => assert(st.schema == st.readSchema,
+      s"${st.family} on ${st.table}: the recorded schema is not the read's"))
+    matchesGolden("read-schema-goldens.txt", script.zipWithIndex.map { case (st, i) =>
+      f"== ${i + 1}%02d ${st.family} ${st.table}\n" + st.readSchema.getOrElse("(no rows)")
+    }.mkString("", "\n", "\n"))
   }
 
   test("every commit family reads its base manifest once") {

@@ -106,6 +106,22 @@ class ManifestCodecSpec extends AnyFunSuite {
       statsVersion = 1, dropped = Some(Nil)))
   }
 
+  test("a schema: line round-trips a nested StructType; every cut of it parses or is corrupt") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("uuid", LongType),
+      StructField("vec", ArrayType(DoubleType)),
+      StructField("p", StructType(Seq(StructField("a:b,c", DecimalType(10, 2)))))))
+    val m = samples.head.copy(schema = Some(schema))
+    val text = ManifestCodec.render(m, m.commitMillis.get)
+    assert(ManifestCodec.parse("t", m.version, text) == m, text)
+    val line = text.linesIterator.filter(_.startsWith("schema:")).toSeq
+    assert(line.size == 1, text)
+    (0 to line.head.length).foreach { at =>
+      try ManifestCodec.parse("t", 1, line.head.take(at))
+      catch { case e: CorruptManifestException => assert(e.line == line.head.take(at).trim) }
+    }
+  }
+
   test("render refuses tombstones on a log dir") {
     val m = Manifest(0, Map.empty, Seq("data/log-0"),
       dirs = Map("data/log-0" -> DirMeta(tombs = Seq("uuid" -> "data/tomb-g0"))))

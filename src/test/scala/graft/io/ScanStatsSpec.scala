@@ -314,6 +314,48 @@ class ScanStatsSpec extends SparkSpec {
     }
   }
 
+  /** An 8-log-dir table on the counting filesystem, registered in a
+    * catalog, shared by the reads-touch-only-kept-dirs tests below. */
+  private lazy val eightDirs: (String, String, SnapshotBucketedStore) = {
+    val local = tmpDir("graft_stats_kept_")
+    val root = "cntfs:" + local
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
+    val store = new SnapshotBucketedStore(root, numBuckets = 4,
+      statsColumns = Seq("v"), keyColumns = Seq("uuid"))(spark)
+    (0 until 8).foreach(g => store.append("t", rows(g * 100 until (g + 1) * 100)))
+    (local, register(root), store)
+  }
+
+  test("a point lookup lists and opens only the dir its Bloom keeps") {
+    val (local, _, store) = eightDirs
+    val kept = s"$local/t/data/log-4"
+    CountingFileSystem.reset()
+    val scan = store.pruned("t", Prune.Eq("uuid", 420L)).get
+    assert(scan.read.get.collect().map(_.getLong(0)).toSeq == Seq(420L))
+    assert(CountingFileSystem.dataDirListings == Seq(kept),
+      s"listed: ${CountingFileSystem.dataDirListings}")
+    val opened = CountingFileSystem.log.collect { case ("open", f) if f.contains("/data/") => f }
+    assert(opened.nonEmpty && opened.forall(_.startsWith(kept + "/")), s"opened: $opened")
+  }
+
+  test("a filtered SQL SELECT lists no data dir at plan time") {
+    val (_, cat, _) = eightDirs
+    CountingFileSystem.reset()
+    spark.sql(s"SELECT * FROM $cat.t WHERE uuid = 420").queryExecution.optimizedPlan
+    assert(CountingFileSystem.dataDirListings.isEmpty,
+      s"listed: ${CountingFileSystem.dataDirListings}")
+  }
+
+  test("SQL ADD COLUMNS writes no data dir") {
+    val (local, cat, _) = eightDirs
+    def dataDirs = new java.io.File(local, "t/data").list().toSet
+    val before = dataDirs
+    spark.sql(s"ALTER TABLE $cat.t ADD COLUMNS (note STRING)")
+    assert(dataDirs == before, s"new dirs: ${dataDirs -- before}")
+    assert(spark.table(s"$cat.t").columns.toSeq == Seq("uuid", "v", "tag", "note"))
+  }
+
   test("a SQL COUNT/MIN/MAX pushdown and CBO column stats each read one manifest") {
     val local = tmpDir("graft_stats_agg_once_")
     val root = "cntfs:" + local

@@ -106,17 +106,36 @@ class SchemaEvolutionSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq == Seq(11L))
   }
 
-  test("non-promotable conflict refuses loudly at read") {
+  test("non-promotable conflict refuses at upsert; the table keeps serving") {
     val root = tmpDir("graft_evo_bad_")
     implicit val s = spark
     val store = new SnapshotBucketedStore(root, numBuckets = 4)
     store.upsert("t", Seq((1L, 5)).toDF("uuid", "val"), "uuid")
     val other = (2L until 50L).find(k => bucketOf(k, 4) != bucketOf(1L, 4)).get
-    store.upsert("t", Seq((other, "five")).toDF("uuid", "val"), "uuid")
     val e = intercept[IllegalArgumentException] {
-      store.read("t").get.collect()
+      store.upsert("t", Seq((other, "five")).toDF("uuid", "val"), "uuid")
     }
     assert(e.getMessage.contains("cannot widen column 'val'"), e.getMessage)
+    assert(store.read("t").get.as[(Long, Int)].collect().toSeq == Seq((1L, 5)))
+  }
+
+  test("a widening upsert over a legacy manifest records the schema") {
+    val root = tmpDir("graft_evo_legacy_")
+    implicit val s = spark
+    val store = new SnapshotBucketedStore(root, numBuckets = 4)
+    store.upsert("t", (0L until 20L).map(i => (i, i.toInt)).toDF("uuid", "val"), "uuid")
+    def manifest = java.nio.file.Paths.get(root, "t", s"manifest-${store.snapshots("t").last}.txt")
+    def text = new String(java.nio.file.Files.readAllBytes(manifest), "UTF-8")
+    // the manifest a store wrote before it recorded the schema
+    java.nio.file.Files.write(manifest, text.linesIterator.filterNot(_.startsWith("schema:"))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    assert(store.schema("t").map(_.fieldNames.toSeq).contains(Seq("uuid", "val")))
+    assert(store.read("t").get.count() == 20)
+    store.upsert("t", Seq((5L, 5000000000L)).toDF("uuid", "val"), "uuid")
+    assert(text.linesIterator.exists(_.startsWith("schema:")), text)
+    assert(store.schema("t").get("val").dataType == org.apache.spark.sql.types.LongType)
+    assert(store.read("t").get.orderBy("uuid").as[(Long, Long)].collect().toSeq ==
+      (0L until 20L).map(i => (i, if (i == 5L) 5000000000L else i)))
   }
 
   test("bucket-column type drift refused; rebuild migrates and upserts resume") {
@@ -297,6 +316,19 @@ class SchemaEvolutionSpec extends SparkSpec {
     // the surviving key column still deletes fine
     store.deleteLazy("t", "uuid", Seq(7L).toDF("uuid"))
     assert(store.read("t").get.count() == 49)
+  }
+
+  test("DROP COLUMN after a delete on that column keeps the delete") {
+    val root = tmpDir("graft_evo_droptomb_")
+    implicit val s = spark
+    val store = new SnapshotBucketedStore(root, numBuckets = 4)
+    store.upsert("t", (0L until 20L).map(i => (i, s"x${i % 5}")).toDF("uuid", "tag"), "uuid")
+    // a non-key delete leaves tombstones keyed on `tag` outstanding
+    store.deleteLazy("t", "tag", Seq("x3").toDF("tag"), targetByKeyHash = false)
+    store.dropColumns("t", Seq("tag"))
+    val got = store.read("t").get
+    assert(got.columns.toSeq == Seq("uuid"))
+    assert(got.as[Long].collect().sorted.toSeq == (0L until 20L).filter(_ % 5 != 3))
   }
 
   test("SQL ALTER TABLE DROP COLUMN; RENAME and key-drop refuse with guidance") {
